@@ -22,8 +22,9 @@ import org.apache.spark.util.SerializableConfiguration
   * A directory of `part-*.xlsx` files is one dataset (Spark-idiomatic; a
   * single .xlsx is a single ZIP and therefore a single writer stream — see
   * SURVEY §7.4). Reading accepts a file, a directory, or a glob; every
-  * (file × selected sheet) pair becomes one input partition, so a
-  * 1000-executor cluster scans a 10k-file dataset fully in parallel.
+  * file becomes one input partition (every selected sheet, when there are
+  * fewer files than task slots), so a 1000-executor cluster scans a
+  * 10k-file dataset fully in parallel.
   *
   * Replaces the reference's reader/writer pairs for local disk
   * (ref: src/streaming_reader.rs, src/fast_writer/zero_temp_workbook.rs),
@@ -182,16 +183,20 @@ object XlsxTable {
     * with allSheets + sheetNameColumn, which is lossless. An explicit
     * `sheet` / `sheetIndex` selection stays single-sheet: naming one
     * sheet is an explicit request for that sheet only. */
-  def selectSheets(reader: XlsxReader, opts: XlsxOptions): Seq[String] = {
+  def selectSheets(
+      reader: XlsxReader,
+      sheet: Option[String],
+      sheetIndex: Option[Int],
+      allSheets: Boolean): Seq[String] = {
     val names = reader.sheetNames
     if (names.isEmpty) Seq.empty
-    else if (opts.allSheets) names
-    else opts.sheet match {
+    else if (allSheets) names
+    else sheet match {
       case Some(s) =>
         if (!names.contains(s))
           throw new IllegalArgumentException(s"sheet '$s' not found; sheets: ${names.mkString(", ")}")
         Seq(s)
-      case None if opts.sheetIndex.isDefined => Seq(names(opts.sheetIndex.get))
+      case None if sheetIndex.isDefined => Seq(names(sheetIndex.get))
       case None =>
         val base = names.head
         if (!reader.application.contains("graft")) Seq(base)
@@ -237,7 +242,7 @@ object XlsxTable {
       // skip logic ever runs; at least one file must still sample
       try {
         val reader = openReader(file, conf)
-        val sheets = selectSheets(reader, opts)
+        val sheets = selectSheets(reader, opts.sheet, opts.sheetIndex, opts.allSheets)
         if (first) require(sheets.nonEmpty, s"workbook has no sheets: $file")
         first = false
         val sheetIt = sheets.iterator

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import java.util.OptionalLong
 
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -15,8 +16,12 @@ import org.apache.spark.util.SerializableConfiguration
   * (`SupportsPushDownRequiredColumns`) skips Catalyst conversion for unread
   * columns — the reference always materializes every cell
   * (ref: src/streaming_reader.rs:593-724); we decode only what the plan
-  * needs. One InputPartition per (file, sheet): parallel across files —
-  * the unit of parallelism a directory-of-xlsx dataset is designed around.
+  * needs. A listing with at least as many files as the session's default
+  * parallelism plans one InputPartition per file (parallel across files,
+  * no driver-side open); a smaller one resolves sheets on the driver and
+  * plans one per selected sheet, in sheet order, so a stitched or
+  * multi-sheet workbook reads in parallel too. Sheets larger than
+  * `splitBytes` additionally split into row ranges.
   */
 final class XlsxScanBuilder(
     fullSchema: StructType,
@@ -88,18 +93,22 @@ final class XlsxScan(
   }
   override def estimateStatistics(): Statistics = stats
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new XlsxScanMetrics.Rows, new XlsxScanMetrics.Bytes)
+
   override def planInputPartitions(): Array[InputPartition] = {
-    // Default: one partition per file; the sheet *spec* (not resolved
+    // Many files: one partition per file; the sheet *spec* (not resolved
     // names) rides along and executors resolve it when they open the file
     // anyway. Resolving here would open every ZIP on the driver — 10k
     // files = 10k driver-side opens before the first task launches.
     //
-    // Large files additionally split each selected sheet into positional
-    // row ranges, so a single multi-GB sheet fans out over the cluster
-    // instead of serializing into one task (the reference is single-
-    // threaded here, ref: src/streaming_reader.rs:523-590). The driver-side
-    // cost is paid ONLY for files above the split threshold, and is one
-    // central-directory read + one bounded row-density sample per file.
+    // Fewer files than task slots: that parallelism would go unused, so
+    // resolve the sheets here and plan one task per sheet (one central-
+    // directory and metadata read per file). Large sheets additionally
+    // split into positional row ranges, so a single multi-GB sheet fans out
+    // over the cluster instead of serializing into one task (the reference
+    // is single-threaded here, ref: src/streaming_reader.rs:523-590).
+    val resolve = listing.size < org.apache.spark.SparkContext.getOrCreate().defaultParallelism
     listing.flatMap { case (f, zipSize) =>
       val whole = Seq(XlsxInputPartition(f, opts.sheet, opts.sheetIndex, opts.allSheets))
       // cheap pre-filter on the compressed size so small files never cost
@@ -107,7 +116,7 @@ final class XlsxScan(
       // bound (numeric-heavy sheet XML compresses 10-20x) — files past it
       // get their TRUE decompressed sizes from the central directory in
       // planSplits, which makes the final split decision
-      if (!opts.splitSheets || zipSize * 20L <= opts.splitBytes) whole
+      if (!resolve && (!opts.splitSheets || zipSize * 20L <= opts.splitBytes)) whole
       else scala.util.Try(planSplits(f)).getOrElse(whole)
       // a corrupt file is NOT dropped here even under ignoreCorruptFiles:
       // planning only ever falls back to the unsplit partition, and the
@@ -115,19 +124,20 @@ final class XlsxScan(
     }.toArray
   }
 
-  /** Split plan for one large file: resolve sheets, split any sheet whose
-    * decompressed XML exceeds splitBytes into contiguous row ranges sized
-    * from a sampled rows-per-byte density. Ranges partition [0, ∞) — the
-    * last is open-ended — so a density misestimate skews range sizes but
-    * can never lose or duplicate a row. */
+  /** Sheet plan for one file: resolve sheets, one partition each; with
+    * splitSheets, split any sheet whose decompressed XML exceeds splitBytes
+    * into contiguous row ranges sized from a sampled rows-per-byte density.
+    * Ranges partition [0, ∞) — the last is open-ended — so a density
+    * misestimate skews range sizes but can never lose or duplicate a row. */
   private def planSplits(f: String): Seq[XlsxInputPartition] = {
     val reader = XlsxTable.openReader(f, conf.value)
-    val sheets = XlsxTable.selectSheets(reader, opts)
+    val sheets = XlsxTable.selectSheets(reader, opts.sheet, opts.sheetIndex, opts.allSheets)
     val byName = reader.sheetCatalog.toMap
     val sizes = XlsxTable.entrySizes(f, conf.value)
     sheets.flatMap { s =>
       val entryBytes = byName.get(s).flatMap(sizes.get).getOrElse(0L)
-      val nSplits = math.min(entryBytes / opts.splitBytes + 1, 4096L).toInt
+      val nSplits =
+        if (!opts.splitSheets) 1 else math.min(entryBytes / opts.splitBytes + 1, 4096L).toInt
       val estRows = if (nSplits > 1) reader.estimateRows(s, entryBytes).getOrElse(0L) else 0L
       if (nSplits <= 1 || estRows < 2L * nSplits)
         Seq(XlsxInputPartition(f, opts.sheet, opts.sheetIndex, allSheets = false,
@@ -161,8 +171,8 @@ final class XlsxScan(
 
 /** One read task. Default = every selected sheet of one file. When
   * `resolvedSheet` is set the task reads exactly that sheet, restricted to
-  * physical row indexes `[rowStart, rowEnd)` — the split form planned for
-  * large sheets. */
+  * physical row indexes `[rowStart, rowEnd)` — the form planned for small
+  * listings (one task per sheet) and for large sheets (row ranges). */
 final case class XlsxInputPartition(
     file: String,
     sheet: Option[String],
@@ -187,9 +197,9 @@ final case class XlsxReaderFactory(
   }
 }
 
-/** Streams the selected sheets of one file as InternalRows — constant
-  * memory, same profile as the reference's RowIterator
-  * (ref: src/streaming_reader.rs:523-590). */
+/** Streams the selected sheets of one file (or one resolved sheet) as
+  * InternalRows — constant memory, same profile as the reference's
+  * RowIterator (ref: src/streaming_reader.rs:523-590). */
 final class XlsxPartitionReader(
     partition: XlsxInputPartition,
     required: StructType,
@@ -204,24 +214,19 @@ final class XlsxPartitionReader(
   // ZIP/XML streams when Spark stops early (LIMIT, task kill) — relying on
   // exhaustion alone would leak a file descriptor per truncated read.
   private var openIter: graft.xlsx.XlsxReader.RowIter = _
+  // rows decoded and sheet bytes inflated by the sheets already finished
+  private var doneRows, doneBytes = 0L
 
   private def buildRows(): Iterator[Vector[CellValue]] = {
     val reader = XlsxTable.openReader(partition.file, conf)
     val sheets = partition.resolvedSheet match {
-      case Some(s) => Seq(s) // split partitions resolved sheets at planning
+      case Some(s) => Seq(s) // resolved at planning
       case None =>
-        val opts = XlsxOptions(
-          sheet = partition.sheet, sheetIndex = partition.sheetIndex,
-          allSheets = partition.allSheets, header = header, compression = 6,
-          inferSchemaRows = 0, maxRowsPerSheet = XlsxOptions.ExcelMaxRows,
-          protection = None, columnWidths = Seq.empty, columnStyles = Seq.empty,
-          sheetColumn = None, formulaPrefix = None, sheetNameColumn = None,
-          splitSheets = false, splitBytes = XlsxOptions.DefaultSplitBytes,
-          rowHeight = None, singleFile = false, ignoreCorruptFiles = false)
-        XlsxTable.selectSheets(reader, opts)
+        XlsxTable.selectSheets(reader, partition.sheet, partition.sheetIndex, partition.allSheets)
     }
     sheets.iterator.flatMap { s =>
       val it = reader.rows(s, partition.rowStart, partition.rowEnd)
+      if (openIter != null) { doneRows += openIter.rowsRead; doneBytes += openIter.bytesRead }
       openIter = it
       currentSheet = UTF8String.fromString(s)
       // the header row is physical row 0, so only the range containing it
@@ -235,8 +240,9 @@ final class XlsxPartitionReader(
   // XlsxOptions): the partition's file is skipped — rows already emitted
   // stay emitted, the remainder is dropped with one executor-log warning,
   // matching spark.sql.files.ignoreCorruptFiles semantics for the built-in
-  // sources. Granularity is the FILE: xlsx is one ZIP, so a truncated
-  // upload or bad central directory loses that workbook, not the job.
+  // sources. Granularity is the partition: xlsx is one ZIP, so a truncated
+  // upload or bad central directory loses that workbook (or, when planning
+  // gave each sheet its own task, that sheet's remainder), not the job.
   private val rows: Iterator[Vector[CellValue]] =
     if (!ignoreCorruptFiles) buildRows()
     else {
@@ -336,6 +342,37 @@ final class XlsxPartitionReader(
 
   override def get(): InternalRow = current
   override def close(): Unit = if (openIter != null) openIter.close()
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = {
+    val open = Option(openIter)
+    Array(
+      XlsxScanMetrics.task(XlsxScanMetrics.RowsRead, doneRows + open.fold(0L)(_.rowsRead)),
+      XlsxScanMetrics.task(XlsxScanMetrics.SheetBytes, doneBytes + open.fold(0L)(_.bytesRead)))
+  }
+}
+
+/** Scan metrics, shown on the scan node in Spark's SQL UI and readable from
+  * `BatchScanExec.metrics`: rows the sheet scanner decoded (header rows and
+  * rows later dropped by pushed filters included) and inflated sheet XML
+  * bytes. */
+object XlsxScanMetrics {
+  val RowsRead = "xlsxRowsRead"
+  val SheetBytes = "xlsxSheetBytes"
+
+  final class Rows extends CustomSumMetric {
+    override def name(): String = RowsRead
+    override def description(): String = "xlsx rows read"
+  }
+
+  final class Bytes extends CustomSumMetric {
+    override def name(): String = SheetBytes
+    override def description(): String = "xlsx sheet bytes inflated"
+  }
+
+  def task(metric: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = v
+  }
 }
 
 object XlsxPartitionReader {

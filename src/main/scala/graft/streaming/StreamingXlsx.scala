@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.xlsx.{CellValue, ExcelDate}
-import graft.sources.xlsx.{XlsxOptions, XlsxTable}
+import graft.sources.xlsx.XlsxTable
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -43,10 +43,7 @@ object StreamingXlsx {
     val sheetOpt = sheet // avoid capturing `this`-adjacent state in the closure
     val parse = (content: Array[Byte]) => {
       val reader = graft.xlsx.XlsxReader.forBytes(content)
-      val m = new java.util.HashMap[String, String]()
-      m.put("header", header.toString)
-      sheetOpt.foreach(m.put("sheet", _))
-      val sheets = XlsxTable.selectSheets(reader, XlsxOptions.fromMap(m))
+      val sheets = XlsxTable.selectSheets(reader, sheetOpt, sheetIndex = None, allSheets = false)
       sheets.iterator.flatMap { s =>
         val it = reader.rows(s)
         val data = if (header && it.hasNext) { it.next(); it } else it

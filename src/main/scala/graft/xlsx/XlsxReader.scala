@@ -8,12 +8,13 @@ import scala.collection.mutable.ArrayBuffer
 /** Streaming XLSX reader: shared-strings table and sheet catalog are loaded
   * up front (they are the file's "dictionary" + metadata, ref:
   * src/streaming_reader.rs:181-205), then each sheet is scanned row-at-a-time
-  * with a pull parser — constant memory in the number of rows.
+  * — constant memory in the number of rows.
   *
-  * Where the reference hand-scans XML substrings in 32 KB chunks
-  * (ref: src/streaming_reader.rs:523-724), we use the JDK's StAX pull
-  * parser: the same streaming profile, robust to attribute order, and
-  * zero new dependencies.
+  * Sheet parts go through [[SheetScanner]], a byte-level scan of the
+  * inflated XML in chunks like the reference's
+  * (ref: src/streaming_reader.rs:523-724), robust to attribute order,
+  * prefixes, entities and CDATA. The small metadata parts (workbook, rels,
+  * styles, shared strings) use the JDK's StAX pull parser.
   *
   * `openStream` must produce a fresh stream over the whole .xlsx ZIP on
   * every call; this makes the reader work identically over local files and
@@ -34,11 +35,15 @@ final class XlsxReader(
 
   /** Sheet names in workbook order, resolved to their part paths
     * (ref: src/streaming_reader.rs:422-514). */
-  lazy val sheetCatalog: Seq[(String, String)] = {
+  lazy val sheetCatalog: Seq[(String, String)] = workbook._1
+
+  /** One pass over xl/workbook.xml: the sheet catalog and the date1904 flag. */
+  private lazy val workbook: (Seq[(String, String)], Boolean) = {
     val rels = withEntry("xl/_rels/workbook.xml.rels")(parseRels)
       .getOrElse(Map.empty)
     withEntry("xl/workbook.xml") { xr =>
       val sheets = ArrayBuffer.empty[(String, String)]
+      var flag1904 = false
       while (xr.hasNext) {
         if (xr.next() == XMLStreamConstants.START_ELEMENT && xr.getLocalName == "sheet") {
           val name = attr(xr, "name").getOrElse("")
@@ -46,10 +51,11 @@ final class XlsxReader(
           val target = rels.getOrElse(rid, s"worksheets/sheet${sheets.size + 1}.xml")
           val path = if (target.startsWith("/")) target.substring(1) else s"xl/$target"
           sheets += ((name, path))
-        }
+        } else if (xr.isStartElement && xr.getLocalName == "workbookPr")
+          flag1904 = attr(xr, "date1904").exists(v => v == "1" || v == "true")
       }
-      sheets.toSeq
-    }.getOrElse(Seq.empty)
+      (sheets.toSeq, flag1904)
+    }.getOrElse((Seq.empty, false))
   }
 
   def sheetNames: Seq[String] = sheetCatalog.map(_._1)
@@ -134,14 +140,7 @@ final class XlsxReader(
     * sees one epoch. Beyond-reference robustness: the reference ignores
     * the flag and mis-dates foreign Mac files by four years
     * (no `date1904` handling anywhere in its src/). */
-  lazy val date1904: Boolean = withEntry("xl/workbook.xml") { xr =>
-    var flag = false
-    while (xr.hasNext) {
-      if (xr.next() == XMLStreamConstants.START_ELEMENT && xr.getLocalName == "workbookPr")
-        flag = attr(xr, "date1904").exists(v => v == "1" || v == "true")
-    }
-    flag
-  }.getOrElse(false)
+  lazy val date1904: Boolean = workbook._2
 
   /** Full SST load including rich-text runs — every <t> inside an <si> is
     * concatenated (ref: src/streaming_reader.rs:363-416). With an
@@ -188,9 +187,9 @@ final class XlsxReader(
 
   /** Stream a positional row range `[startRow, endRow)` of one sheet
     * (0-based physical `<row>` index, header included). Rows before
-    * `startRow` are skimmed at the XML-token level — no cell parse, no SST
-    * lookups, no allocation — and the stream closes as soon as `endRow` is
-    * reached, so a task reading an early slice never inflates the tail.
+    * `startRow` are scanned without decoding a cell, and the stream closes
+    * as soon as `endRow` is reached, so a task reading an early slice never
+    * inflates the tail.
     * This is what lets one large sheet fan out across many Spark tasks:
     * each task pays inflate+tokenize for its prefix but full decode only
     * for its own slice. */
@@ -216,53 +215,28 @@ final class XlsxReader(
   }
 
   private def rowsAt(path: String, startRow: Long, endRow: Long): XlsxReader.RowIter = {
-    val sst = sharedStrings
-    openEntry(path) match {
-      case None => XlsxReader.RowIter.empty
-      case Some(in) if startRow <= 0 =>
-        val xr = factory.createXMLStreamReader(in)
-        new RowIterator(xr, in, sst, date1904, dateStyleIds, 0L, endRow)
-      case Some(in) =>
-        // Byte-level skip to the startRow-th <row> boundary (~decompress
-        // speed), then StAX-parse only this task's slice behind a synthetic
-        // document prolog. An XML-token-level skim was measured ~6x slower:
-        // tokenizing the prefix costs nearly as much as parsing it.
-        // Non-UTF-8-compatible sheets can't match the pattern and land in
-        // None — but such sheets also estimate 0 rows at planning (same
-        // byte scan), so they are never given split partitions.
-        ByteSkim.skipToRow(in, startRow) match {
-          case None => XlsxReader.RowIter.empty
-          case Some(positioned) =>
-            // non-namespace-aware parse: the synthetic prolog carries no
-            // xmlns declarations, and Excel-authored rows have prefixed
-            // ATTRIBUTES (x14ac:dyDescent) that a namespace-aware parser
-            // would reject as unbound. Prefixed ELEMENTS (<x:row>) never
-            // reach here — the byte pattern wouldn't match them, so such
-            // sheets estimate 0 rows and are never given split partitions.
-            val xr = factoryRaw.createXMLStreamReader(positioned)
-            new RowIterator(xr, positioned, sst, date1904, dateStyleIds,
-              0L, if (endRow == Long.MaxValue) Long.MaxValue else endRow - startRow)
-        }
-    }
+    // metadata first: a failure loading it must not leave the entry open
+    val (sst, d1904, styles) = (sharedStrings, date1904, dateStyleIds)
+    openEntry(path).fold(XlsxReader.RowIter.empty)(
+      new SheetScanner(_, sst, d1904, styles, startRow, endRow))
   }
 
   /** Planning aid for sheet splitting: estimate the number of `<row>`
     * elements from a bounded sample of the decompressed sheet XML. Reads at
     * most `sampleBytes`; if the whole entry fits in the sample the count is
     * exact, otherwise it extrapolates by `entrySize` (the decompressed size
-    * from the ZIP central directory). Raw-byte scan, no XML parse — `<row`
-    * as markup can't appear inside text content (it would be escaped) and
-    * ASCII never occurs inside UTF-8 multi-byte sequences. */
+    * from the ZIP central directory). Counts with the same scanner the
+    * reader positions with, so planning counts and read-time row positions
+    * can never disagree. */
   def estimateRows(sheetName: String, entrySize: Long, sampleBytes: Int = 256 * 1024): Option[Long] = {
     val path = sheetCatalog.collectFirst { case (n, p) if n == sheetName => p }
     path.flatMap(openEntry).map { in =>
+      val sc = new SheetScanner(in, Vector.empty, false, Set.empty, sampleBytes = sampleBytes)
       try {
-        // same comment/CDATA-aware scanner the split reader positions with,
-        // so planning counts and read-time offsets can never disagree
-        val (count, read, exhausted) = ByteSkim.countRows(in, sampleBytes)
-        if (exhausted || read == 0) count
-        else math.max(count, count * entrySize / read)
-      } finally in.close()
+        val count = sc.countRows()
+        if (sc.exhausted || sc.bytesRead == 0) count
+        else math.max(count, count * entrySize / sc.bytesRead)
+      } finally sc.close()
     }
   }
 
@@ -302,152 +276,6 @@ final class XlsxReader(
   }
 }
 
-/** Raw-byte positioning inside decompressed sheet XML: find the n-th
-  * `<row` element start without XML parsing. Safe because markup can't
-  * appear escaped-free inside text content, ASCII never occurs inside
-  * UTF-8 multi-byte sequences, the only other `<row...` element in a
-  * worksheet (`<rowBreaks>`, after sheetData) fails the 5th-byte check,
-  * and `<row` bytes inside comments / CDATA sections are excluded by the
-  * scanner's state machine (both entry points share it, so planning-time
-  * counts and read-time positions can never disagree about what a row is). */
-private[xlsx] object ByteSkim {
-
-  private val Prolog = "<worksheet><sheetData>"
-    .getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-
-  private val Chunk = 256 * 1024
-  // carry 8 bytes across chunk boundaries: the longest token that must not
-  // be split undetected is "<![CDATA[" (9 bytes, 8 may dangle)
-  private val Carry = 8
-
-  /** Comment/CDATA/PI-aware scan state. */
-  private final class State { var mode: Int = 0 } // 0 text, 1 comment, 2 cdata, 3 PI
-
-  private def startsWith(b: Array[Byte], i: Int, tok: String): Boolean = {
-    if (i + tok.length > b.length) return false
-    var k = 0
-    while (k < tok.length) { if (b(i + k) != tok.charAt(k)) return false; k += 1 }
-    true
-  }
-
-  /** Scan `win` up to index `limit` (exclusive start positions), calling at
-    * most ONE action: returns the index of the row-start whose 0-based
-    * ordinal equals `stopAt`, or -1 when not found in this window. `seen`
-    * is read/updated via the returned count in `seenOut(0)`. */
-  private def scanWindow(win: Array[Byte], limit: Int, st: State,
-      seen0: Long, stopAt: Long, seenOut: Array[Long]): Int = {
-    var seen = seen0
-    var i = 0
-    while (i < limit) {
-      st.mode match {
-        case 0 =>
-          // every token this mode cares about starts with '<'; gating on it
-          // keeps the per-byte cost of ordinary content to one compare
-          if (win(i) != '<') i += 1
-          else if (startsWith(win, i, "<!--")) { st.mode = 1; i += 4 }
-          else if (startsWith(win, i, "<![CDATA[")) { st.mode = 2; i += 9 }
-          // processing instructions may legally contain literal '<row ' in
-          // their content (e.g. '<?gen <row v2?>') — without this state the
-          // byte-level row count desyncs from the XML parser's view
-          else if (startsWith(win, i, "<?")) { st.mode = 3; i += 2 }
-          else if (i + 5 <= win.length &&
-              win(i + 1) == 'r' && win(i + 2) == 'o' && win(i + 3) == 'w' &&
-              (win(i + 4) == ' ' || win(i + 4) == '>' || win(i + 4) == '/')) {
-            if (seen == stopAt) { seenOut(0) = seen; return i }
-            seen += 1
-            i += 4
-          } else i += 1
-        case 1 =>
-          if (startsWith(win, i, "-->")) { st.mode = 0; i += 3 } else i += 1
-        case 2 =>
-          if (startsWith(win, i, "]]>")) { st.mode = 0; i += 3 } else i += 1
-        case 3 =>
-          if (startsWith(win, i, "?>")) { st.mode = 0; i += 2 } else i += 1
-      }
-    }
-    seenOut(0) = seen
-    -1
-  }
-
-  /** Consume `in` up to the start of row index `target` (0-based `<row`
-    * occurrence outside comments/CDATA). Returns a stream that parses as a
-    * well-formed worksheet whose first row is that row (the sheet's own
-    * closing tags match the synthetic prolog). None = fewer than target+1
-    * rows; `in` is closed. */
-  def skipToRow(in: InputStream, target: Long): Option[InputStream] = {
-    val st = new State
-    val seenOut = new Array[Long](1)
-    var seen = 0L
-    var prev = Array.emptyByteArray
-    while (true) {
-      val chunk = new Array[Byte](Chunk)
-      val m = in.read(chunk, 0, Chunk)
-      if (m < 0) { in.close(); return None }
-      // read()==0 violates the InputStream contract (we never pass len 0);
-      // returning None here would silently empty a split partition, so
-      // fail loudly instead of losing rows
-      if (m == 0) {
-        in.close()
-        throw new java.io.IOException("stream returned 0 bytes mid-skip (non-conforming InputStream)")
-      }
-      val win = new Array[Byte](prev.length + m)
-      System.arraycopy(prev, 0, win, 0, prev.length)
-      System.arraycopy(chunk, 0, win, prev.length, m)
-      // positions in the final Carry bytes may start a token that needs the
-      // next chunk to complete; defer them (state changes there would be
-      // re-applied — scanWindow never advances mode on a partial token)
-      val limit = math.max(0, win.length - Carry)
-      val hit = scanWindow(win, limit, st, seen, target, seenOut)
-      if (hit >= 0) {
-        val rest = new java.io.ByteArrayInputStream(win, hit, win.length - hit)
-        val parts = java.util.List.of[InputStream](
-          new java.io.ByteArrayInputStream(Prolog), rest, in)
-        return Some(new java.io.SequenceInputStream(
-          java.util.Collections.enumeration(parts)))
-      }
-      seen = seenOut(0)
-      prev = java.util.Arrays.copyOfRange(win, limit, win.length)
-    }
-    None // unreachable
-  }
-
-  /** Count row starts in at most `sampleBytes` of `in` (same state machine
-    * as [[skipToRow]]). Returns (rows counted, bytes consumed, exhausted). */
-  def countRows(in: InputStream, sampleBytes: Int): (Long, Long, Boolean) = {
-    val st = new State
-    val seenOut = new Array[Long](1)
-    var seen = 0L
-    var read = 0L
-    var prev = Array.emptyByteArray
-    var m = 1
-    // m == 0 (contract-violating stream) exits too: for an ESTIMATE an
-    // undercount is harmless, and looping forever on no progress is not
-    while (read < sampleBytes && m > 0) {
-      val chunk = new Array[Byte](Chunk)
-      m = in.read(chunk, 0, math.min(Chunk.toLong, sampleBytes - read).toInt)
-      if (m > 0) {
-        read += m
-        val win = new Array[Byte](prev.length + m)
-        System.arraycopy(prev, 0, win, 0, prev.length)
-        System.arraycopy(chunk, 0, win, prev.length, m)
-        // final window: no more bytes will complete a dangling token, so
-        // scan to the end when the budget is reached or EOF follows
-        val limit = if (read >= sampleBytes) win.length else math.max(0, win.length - Carry)
-        scanWindow(win, limit, st, seen, -1L, seenOut)
-        seen = seenOut(0)
-        prev = java.util.Arrays.copyOfRange(win, limit, win.length)
-      }
-    }
-    // drain check: exhausted when EOF arrived within budget
-    val exhausted = m < 0 || (read < sampleBytes)
-    if (prev.nonEmpty && exhausted) {
-      scanWindow(prev, prev.length, st, seen, -1L, seenOut)
-      seen = seenOut(0)
-    }
-    (seen, read, exhausted)
-  }
-}
-
 /** Process-wide SST cache: soft references let the GC reclaim tables under
   * pressure; keys carry file length + modification time so a rewritten
   * file can never serve a stale table. */
@@ -476,8 +304,12 @@ private[xlsx] object SstCache {
 object XlsxReader {
 
   /** Row iterator owning its ZIP/XML streams; close() is idempotent and
-    * called automatically on exhaustion. */
-  trait RowIter extends Iterator[Vector[CellValue]] with AutoCloseable
+    * called automatically on exhaustion. `rowsRead` counts the rows decoded
+    * and `bytesRead` the inflated sheet bytes pulled, so far. */
+  trait RowIter extends Iterator[Vector[CellValue]] with AutoCloseable {
+    def rowsRead: Long = 0L
+    def bytesRead: Long = 0L
+  }
 
   object RowIter {
     val empty: RowIter = new RowIter {
@@ -529,17 +361,6 @@ object XlsxReader {
     f
   }
 
-  /** Non-namespace-aware twin of [[factory]], for ByteSkim-positioned split
-    * streams whose synthetic prolog carries no xmlns declarations. */
-  private val factoryRaw: XMLInputFactory = {
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.setProperty(XMLInputFactory.IS_COALESCING, true)
-    f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
-    f
-  }
-
   private def attr(xr: XMLStreamReader, localName: String): Option[String] = {
     var i = 0
     while (i < xr.getAttributeCount) {
@@ -574,168 +395,4 @@ object XlsxReader {
       bare.exists(ch => ch == 'y' || ch == 'Y' || ch == 'm' || ch == 'M'
         || ch == 'd' || ch == 'D' || ch == 'h' || ch == 'H' || ch == 's' || ch == 'S')
     }
-
-  /** Pull-parse `<row>` elements into CellValue vectors with A1-gap
-    * back-fill (ref: src/streaming_reader.rs:593-724). `[startRow, endRow)`
-    * bounds by 0-based physical row index: earlier rows are skimmed without
-    * cell parsing, and the stream closes the moment `endRow` is reached. */
-  private final class RowIterator(
-      xr: XMLStreamReader,
-      underlying: java.io.Closeable,
-      sst: Vector[String],
-      date1904: Boolean,
-      dateStyles: Set[Int],
-      startRow: Long = 0L,
-      endRow: Long = Long.MaxValue
-  ) extends RowIter {
-
-    private var nextRow: Vector[CellValue] = _
-    private var done = false
-    private var rowIdx = -1L
-    advance()
-
-    override def close(): Unit = finish()
-
-    override def hasNext: Boolean = !done
-    override def next(): Vector[CellValue] = {
-      if (done) throw new NoSuchElementException
-      val r = nextRow
-      advance()
-      r
-    }
-
-    private def advance(): Unit = {
-      try {
-        while (xr.hasNext) {
-          if (xr.next() == XMLStreamConstants.START_ELEMENT && xr.getLocalName == "row") {
-            rowIdx += 1
-            if (rowIdx >= endRow) { finish(); return }
-            if (rowIdx >= startRow) { nextRow = parseRow(); return }
-            skipRow() // before the range: skim the subtree, no cell decode
-          }
-        }
-        finish()
-      } catch {
-        case e: Exception => finish(); throw e
-      }
-    }
-
-    /** Consume the current `<row>` subtree without materializing cells. */
-    private def skipRow(): Unit = {
-      var depth = 1
-      while (depth > 0) {
-        xr.next() match {
-          case XMLStreamConstants.START_ELEMENT => depth += 1
-          case XMLStreamConstants.END_ELEMENT   => depth -= 1
-          case _ =>
-        }
-      }
-    }
-
-    private var closed = false
-    private def finish(): Unit = {
-      done = true
-      if (!closed) {
-        closed = true
-        try xr.close() finally underlying.close()
-      }
-    }
-
-    private def parseRow(): Vector[CellValue] = {
-      val cells = ArrayBuffer.empty[CellValue]
-      var ev = xr.next()
-      while (!(ev == XMLStreamConstants.END_ELEMENT && xr.getLocalName == "row")) {
-        if (ev == XMLStreamConstants.START_ELEMENT && xr.getLocalName == "c") {
-          val ref = attr(xr, "r")
-          val t = attr(xr, "t").getOrElse("")
-          val styleId = attr(xr, "s").flatMap(_.toIntOption)
-          val colIdx = ref.map(A1.parseColumnIndex).getOrElse(cells.size)
-          while (cells.size < colIdx) cells += CellValue.Empty // sparse back-fill
-          cells += parseCell(t, styleId)
-        }
-        ev = xr.next()
-      }
-      cells.toVector
-    }
-
-    /** Collects <v>, inline <is><t>, and <f> children of the current <c>,
-      * then decodes per the reference's type dispatch
-      * (ref: src/streaming_reader.rs:636-717). */
-    private def parseCell(t: String, styleId: Option[Int]): CellValue = {
-      var v: String = null
-      // Inline rich text is one <t> per run (<is><r><t>a</t></r><r><t>b</t>
-      // </r></is>) — concatenate runs like the SST path does
-      // (ref: src/streaming_reader.rs:766-815); keeping only the last run
-      // loses data on foreign-authored files.
-      var inlineText: StringBuilder = null
-      var formula: String = null
-      var inRPh = false // skip phonetic runs, as in the SST path
-      var ev = xr.next()
-      while (!(ev == XMLStreamConstants.END_ELEMENT && xr.getLocalName == "c")) {
-        if (ev == XMLStreamConstants.START_ELEMENT) {
-          xr.getLocalName match {
-            case "v" => v = xr.getElementText
-            case "rPh" => inRPh = true
-            case "t" if !inRPh =>
-              if (inlineText == null) inlineText = new StringBuilder
-              inlineText ++= xr.getElementText
-            case "f" => formula = xr.getElementText
-            case _ =>
-          }
-        } else if (ev == XMLStreamConstants.END_ELEMENT && xr.getLocalName == "rPh") {
-          inRPh = false
-        }
-        ev = xr.next()
-      }
-      t match {
-        case "inlineStr" =>
-          if (inlineText != null) CellValue.Str(inlineText.result()) else CellValue.Empty
-        case "s" =>
-          v match {
-            case null => CellValue.Empty
-            case s => s.toIntOption.flatMap(sst.lift)
-              .map(CellValue.Str(_): CellValue).getOrElse(CellValue.Empty)
-          }
-        case "b" =>
-          if (v == null) CellValue.Empty else CellValue.BoolVal(v == "1")
-        case "e" =>
-          if (v == null) CellValue.Empty else CellValue.Error(v)
-        case "str" =>
-          if (v != null) CellValue.Str(v)
-          else if (formula != null) CellValue.Formula(formula)
-          else CellValue.Empty
-        case _ => // untyped numeric / date / formula
-          val isDateStyle = styleId.exists(dateStyles.contains)
-          if (v == null) {
-            if (formula != null) CellValue.Formula(formula) else CellValue.Empty
-          } else v.toLongOption match {
-            // Exact long parse first: the reference routes every numeric
-            // through f64 (ref: src/streaming_reader.rs:687) and silently
-            // corrupts integers beyond 2^53 — deviation, fixed here.
-            case Some(l) =>
-              // normalize to the 1900 epoch BEFORE the range gate: 1904
-              // serial 0 (= 1904-01-01) is a valid date at 1462, and the
-              // shifted value must also respect the upper bound
-              val adjL = if (date1904) l + 1462L else l
-              if (isDateStyle && adjL >= 1L && adjL <= 2958465L)
-                CellValue.DateTime(adjL.toDouble)
-              else CellValue.IntVal(l)
-            case None => v.toDoubleOption match {
-              case Some(num) =>
-                // Timestamp styles accept fractional serials (the reference's
-                // integral-only heuristic at src/streaming_reader.rs:699 loses
-                // the time part it wrote itself — deviation, fixed here).
-                val adj = if (date1904) num + 1462.0d else num
-                if (isDateStyle && adj >= ExcelDate.MinSerial && adj <= ExcelDate.MaxSerial)
-                  CellValue.DateTime(adj)
-                else if (num == math.rint(num) && !num.isInfinite &&
-                         num >= Long.MinValue.toDouble && num <= Long.MaxValue.toDouble)
-                  CellValue.IntVal(num.toLong)
-                else CellValue.FloatVal(num)
-              case None => CellValue.Str(v)
-            }
-          }
-      }
-    }
-  }
 }

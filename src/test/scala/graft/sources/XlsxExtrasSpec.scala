@@ -11,10 +11,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Test-only filesystem: local storage behind a non-"file" scheme, so the
   * DSv2's Hadoop streaming branch (the s3a:// shape) is exercised without
-  * network. */
+  * network. Counts file opens, so specs can assert what planning reads. */
 class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("mockfs:///")
   override def checkPath(path: org.apache.hadoop.fs.Path): Unit = ()
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    MockFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object MockFs {
+  val opens = new java.util.concurrent.atomic.AtomicInteger
 }
 
 /** Column widths (<cols>) and in-memory workbook/CSV builders. */

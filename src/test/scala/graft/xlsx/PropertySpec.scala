@@ -107,8 +107,8 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("row-range slicing: arbitrary cut points + hostile cell text partition the sheet exactly") {
-    // strings engineered to look like row markers once XML-escaped they
-    // cannot match ByteSkim's raw-byte pattern — the law must hold anyway
+    // strings engineered to look like row markers (XML-escaped on write,
+    // so they are text, not markup) — the law must hold anyway
     val hostile = Gen.oneOf("<row>", "</row>", "<row r=\"9\">", "plain",
       "a<row b", "]]>", "<!--", "-->", "x" * 50)
     val nRows = 257 // crosses no chunk boundary; cuts do the work

@@ -155,7 +155,7 @@ class RoundtripSpec extends AnyFunSuite {
     val r = foreignWorkbook(100)
     val all = r.rows("Data").toVector
     assert(all.size == 100)
-    // a mid-sheet range exercises ByteSkim + the non-namespace-aware parser;
+    // a mid-sheet range skips rows with the same scanner that parses them;
     // the <!-- <row> --> comment must not shift positions
     val slice = r.rows("Data", 40, 45).toVector
     assert(slice.size == 5)
@@ -372,9 +372,9 @@ class RoundtripSpec extends AnyFunSuite {
       DateTime(100.0), DateTime(200.0), IntVal(300L), IntVal(400L)))
   }
 
-  test("ByteSkim: '<row ' inside a processing instruction is not a row") {
-    // a PI may legally contain literal '<row ' in its content; without a PI
-    // state the byte scanner would desync from the XML parser's row view
+  test("SheetScanner: '<row ' inside a processing instruction is not a row") {
+    // a PI may legally contain literal '<row ' in its content; the scanner
+    // must skip it both when counting rows and when positioning a range
     val xml = """<?xml version="1.0"?><worksheet><sheetData>""" +
       """<?gen <row v2?>""" +
       """<row r="1"><c r="A1" t="n"><v>1</v></c></row>""" +
@@ -382,12 +382,12 @@ class RoundtripSpec extends AnyFunSuite {
       """<row r="2"><c r="A2" t="n"><v>2</v></c></row>""" +
       """</sheetData></worksheet>"""
     val bytes = xml.getBytes("UTF-8")
-    val (count, _, exhausted) =
-      ByteSkim.countRows(new java.io.ByteArrayInputStream(bytes), bytes.length + 16)
-    assert(exhausted && count === 2, s"PI content miscounted as rows: $count")
-    val in = ByteSkim.skipToRow(new java.io.ByteArrayInputStream(bytes), 1L).get
-    val text = new String(in.readAllBytes(), "UTF-8")
-    assert(text.contains("<row r=\"2\"") && !text.contains("<row r=\"1\""))
+    def scanner(start: Long, sample: Long) = new SheetScanner(new java.io.ByteArrayInputStream(bytes),
+      Vector.empty, false, Set.empty, startRow = start, sampleBytes = sample)
+    val counter = scanner(0L, bytes.length + 16L)
+    assert(counter.countRows() === 2L, "PI content miscounted as rows")
+    assert(counter.exhausted)
+    assert(scanner(1L, -1L).toVector === Vector(Vector[CellValue](IntVal(2L))))
   }
 
   test("rollover stamp: continuation indices survive the write/read cycle") {
