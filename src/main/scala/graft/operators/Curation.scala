@@ -642,10 +642,12 @@ object Curation {
     * tie-break — spec-pinned parity, oracle-gated by the same DuckDB
     * replay).
     *
-    * Writes are bucket-aligned with bounded intra-bucket fan-out (the
-    * [[Similarity.cellSpread]] shape): zipf head terms skew bucket
-    * volumes, so the salt bounds the biggest bucket's write without
-    * scattering small buckets across many files. */
+    * Writes are bucket-aligned with bounded intra-bucket fan-out
+    * ([[Similarity.cellSpread]] keyed on `bucket`): zipf head terms skew
+    * bucket volumes, so the salt bounds the biggest bucket's write
+    * without scattering small buckets across many files; `spreadFiles >
+    * 0` pins the per-bucket fan-out so layouts reproduce across
+    * differently-sized sessions. */
   def writeBm25Index(df: DataFrame, idCol: String, textCol: String,
       path: String, buckets: Int = 64, spreadFiles: Int = 0,
       metaCols: Seq[String] = Nil): Unit = {
@@ -671,7 +673,7 @@ object Curation {
     val toks = tokenized(df, idCol, textCol, metaCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      bucketSpread(postingsOf(toks, buckets, metaCols), buckets, spreadFiles)
+      Bm25Family.spread(buckets, spreadFiles)(postingsOf(toks, buckets, metaCols))
         .withColumn("ingest_batch", lit(-1L))
         .write.mode("overwrite").partitionBy("bucket", "ingest_batch")
         .parquet(s"$path/postings")
@@ -739,22 +741,6 @@ object Curation {
       s"metaCols collide with the lexical index layout's columns: ${bad.mkString(", ")}")
   }
 
-  /** Bucket-aligned exchange with bounded intra-bucket fan-out — the
-    * lexical [[Similarity.cellSpread]]. `spreadFiles > 0` PINS the
-    * per-bucket fan-out S explicitly so layouts reproduce across
-    * differently-sized sessions (r17 — the knob the ANN writers got in
-    * r15); 0 derives S from this session's parallelism. */
-  private def bucketSpread(postings: DataFrame, buckets: Int,
-      spreadFiles: Int = 0): DataFrame = {
-    require(spreadFiles >= 0, s"spreadFiles must be >= 0 (0 = derive): $spreadFiles")
-    val par = postings.sparkSession.sparkContext.defaultParallelism
-    val s = if (spreadFiles > 0) spreadFiles
-      else math.max(1, (2 * par + buckets - 1) / buckets)
-    if (s <= 1) postings.repartition(col("bucket"))
-    else postings.repartition(buckets * s, col("bucket"),
-      pmod(xxhash64(col("id")), lit(s)))
-  }
-
   /** Atomic-enough single-row stats write: write aside, delete, rename
     * — the delete→rename window is the only crash exposure and
     * [[statsRecover]] rolls it forward (the aside copy is complete
@@ -784,28 +770,148 @@ object Curation {
     (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4))
   }
 
-  /** Heal a crashed [[writeStats]] rename window: a complete aside copy
-    * with no live table rolls FORWARD; a leftover aside beside a live
-    * table is residue and is removed. Returns what was repaired. */
+  /** Heal a crashed [[writeStats]] rename window
+    * ([[IndexMaintenance.recoverAside]]). */
   private def statsRecover(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/stats_tmp")
     val live = new org.apache.hadoop.fs.Path(s"$path/stats")
-    if (!fs.exists(tmp)) None
-    else if (!fs.exists(live) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      require(fs.rename(tmp, live), s"stats recover: could not publish $live")
-      Some(s"installed the staged stats row at $live")
-    } else {
-      fs.delete(tmp, true)
-      Some(s"removed stale stats staging beside $live")
-    }
+    IndexMaintenance.recoverAside(
+      live.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$path/stats_tmp"), live)
   }
 
-  private val bm25LayoutGuard =
-    new IndexMaintenance.TwoLevelLayoutGuard("Rebuild the index with writeBm25Index.")
+  /** The lexical index as a lifecycle family: one `postings` table under
+    * `bucket=` first-level dirs, the bucket count read from the stats
+    * row. The overrides add what is BM25's own around the shared table
+    * ops — the stats row with its `last_manual` stats-watermark lane
+    * (in place of the ANN watermark file), the doclen sidecar, and the
+    * ledger fold inside the purge. */
+  private[graft] object Bm25Family extends IndexMaintenance.Family(
+      Seq("postings"), "bucket", "id", "Rebuild the index with writeBm25Index.") {
+    def cells(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+      readStats(spark, path)._3
+
+    /** Heals an interrupted ledger fold (before any stats write, r18
+      * review) and an unhealed manual-lane stats delta first — folding
+      * an orphan lane would otherwise erase the lag's detectability. */
+    override def fold(spark: org.apache.spark.sql.SparkSession, path: String,
+        committedBatchId: Long, spreadFiles: Int): Unit = {
+      ledgerFoldRecover(spark, path)
+      manualLaneRecover(spark, path)
+      super.fold(spark, path, committedBatchId, spreadFiles)
+    }
+
+    override def compactResident(spark: org.apache.spark.sql.SparkSession,
+        path: String, maxFilesPerCell: Int, spreadFiles: Int): Seq[Int] =
+      compactResident(spark, path, maxFilesPerCell, spreadFiles, maxDoclenFiles = 64)
+
+    /** The postings compaction plus the doclen sidecar's accrual bound. */
+    def compactResident(spark: org.apache.spark.sql.SparkSession, path: String,
+        maxFilesPerCell: Int, spreadFiles: Int, maxDoclenFiles: Int): Seq[Int] = {
+      val n = super.compactResident(spark, path, maxFilesPerCell, spreadFiles)
+      consolidateDoclens(spark, path, maxDoclenFiles)
+      n
+    }
+
+    /** The ledger's ids net of the r17 `_purged_through` rerun counter. */
+    override def pendingTombstones(spark: org.apache.spark.sql.SparkSession,
+        path: String): Long = {
+      val counter = new org.apache.hadoop.fs.Path(s"$path/_purged_through")
+      val fs = counter.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      math.max(0L, super.pendingTombstones(spark, path) -
+        IndexMaintenance.readCounterFile(fs, counter))
+    }
+
+    override def advice(spark: org.apache.spark.sql.SparkSession, path: String,
+        driftTripped: Boolean, maxFilesPerCell: Int, foldLeavesPerCell: Int,
+        spreadFiles: Int, maxTombstones: Long): MaintenanceAdvice =
+      advice(spark, path, driftTripped, maxFilesPerCell, foldLeavesPerCell,
+        spreadFiles, maxTombstones, maxDoclenFiles = 64)
+
+    /** The shared advice plus DOCLEN-SIDECAR accrual (r19): every append
+      * lands one small file and no fold covers the sidecar, so a
+      * long-lived ingest grows it one file per trigger forever unless
+      * something consolidates — a cost the delete path pays (it lists
+      * and reads every file). Tracked at the compact-resident tier (the
+      * action whose implementation consolidates the sidecar), so an
+      * operator following advice — or the streaming loop's
+      * self-maintenance — bounds it without knowing the knob. One
+      * file-count listing; lower-priority signals never mask fold/purge
+      * verdicts. */
+    def advice(spark: org.apache.spark.sql.SparkSession, path: String,
+        driftTripped: Boolean, maxFilesPerCell: Int, foldLeavesPerCell: Int,
+        spreadFiles: Int, maxTombstones: Long, maxDoclenFiles: Int): MaintenanceAdvice = {
+      val base = super.advice(spark, path, driftTripped, maxFilesPerCell,
+        foldLeavesPerCell, spreadFiles, maxTombstones)
+      val doclenFiles = bm25DoclenFileCount(spark, path)
+      if (base.action == "none" && doclenFiles > maxDoclenFiles)
+        MaintenanceAdvice("compact-resident",
+          s"the doclen sidecar holds $doclenFiles files (> $maxDoclenFiles) — " +
+            "append accrual; compactBm25Resident consolidates it in one " +
+            "narrow pass", base.layout)
+      else base
+    }
+
+    override def recover(spark: org.apache.spark.sql.SparkSession,
+        path: String): Option[String] =
+      IndexMaintenance.report(recoverTables(spark, path) ++
+        statsRecover(spark, path).toSeq ++
+        doclensRecover(spark, path).toSeq ++
+        ledgerFoldRecover(spark, path).toSeq ++
+        manualLaneRecover(spark, path).toSeq)
+
+    /** See [[purgeBm25Deletes]]: the shared table rewrite, then the
+      * doclen rewrite and the ledger fold into the stats row. */
+    override def purge(spark: org.apache.spark.sql.SparkSession, path: String,
+        spreadFiles: Int): Seq[Int] = {
+      // finish an interrupted previous fold first: its marker pins the
+      // exact snapshot it was folding, which must not mix with this run's
+      ledgerFoldRecover(spark, path)
+      doclensRecover(spark, path)
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val deletesP = new org.apache.hadoop.fs.Path(IndexMaintenance.deletesDir(path))
+      // snapshot the ledger FILES: the fold's commit deletes exactly these
+      // (anything appended later — a contract breach under the
+      // single-writer rule — survives rather than vanishing unfolded)
+      val ledgerFiles =
+        if (!fs.exists(deletesP)) Seq.empty[String]
+        else fs.listStatus(deletesP)
+          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+          .map(_.getPath.getName).toSeq
+      if (ledgerFiles.isEmpty) return Seq(0)
+      // read distributed, never collected: the purge is the remedy the
+      // probes' driver-rows cap points at, so it must run past the cap
+      val ledger = spark.read.parquet(
+        ledgerFiles.map(f => s"${deletesP.toString}/$f"): _*).distinct()
+      // 1. postings rewrite (marker-staged; a read-only semi-join probe
+      //    skips it on a rerun after a crash later in the sequence)
+      val n = purgeTables(spark, path, ledger, spreadFiles)
+      // 2. drop the purged ids from the doclen sidecar — without this, a
+      //    post-purge re-delete of the same id would find its dl again
+      //    and subtract a doc the stats no longer count
+      swapDoclens(spark, path)(_.join(ledger.select("id"), Seq("id"), "left_anti"))
+      // 3. the ledger fold: marker -> stats -> file deletes -> marker off.
+      //    ONE row per id (max dl), as [[ledgerAgg]] counts it, as one
+      //    distributed aggregate row
+      val agg = ledger.groupBy("id").agg(max(col("dl")).as("dl"))
+        .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).collect()(0)
+      val (oldN, oldSum, buckets, lastBatch, lastManual) = readStats(spark, path)
+      val (expN, expSum) = (oldN - agg.getLong(0), oldSum - agg.getLong(1))
+      IndexMaintenance.writeMarker(fs,
+        new org.apache.hadoop.fs.Path(s"$path/._ledger_fold.tmp"),
+        new org.apache.hadoop.fs.Path(s"$path/_ledger_fold"),
+        s"$expN $expSum" +: ledgerFiles)
+      writeStats(spark, path, expN, expSum, buckets, lastBatch, lastManual)
+      ledgerFiles.foreach(f =>
+        fs.delete(new org.apache.hadoop.fs.Path(deletesP, f), false))
+      // the r17 rerun watermark is subsumed by the fold (the ledger is
+      // gone); drop it so a later rebuild-reset has one less stale file
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_purged_through"), false)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/_ledger_fold"), false)
+      n
+    }
+  }
 
   /** Grow a stored [[writeBm25Index]] with NEW documents — the lexical
     * twin of the ANN indexes' model-reusing append, and IDEMPOTENT ON
@@ -840,11 +946,11 @@ object Curation {
   def appendBm25Index(batch: DataFrame, idCol: String, textCol: String,
       path: String, spreadFiles: Int = 0, metaCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
-    bm25LayoutGuard.require(spark, s"$path/postings", level1 = "bucket")
+    Bm25Family.requireLayout(spark, path)
     val lastManual = readStats(spark, path)._5
-    val orphans = manualOrphanLanes(spark, path, lastManual)
+    val orphans = Bm25Family.orphanLanes(spark, path, lastManual)
     val lane =
-      if (orphans.isEmpty) math.max(lastManual + 1, ManualLaneFloor)
+      if (orphans.forall(_.isEmpty)) math.max(lastManual + 1, ManualLaneFloor)
       else {
         // zero-token docs have no postings rows on either side, so both
         // fingerprints see the same id set. EVERY orphan is fingerprinted
@@ -852,12 +958,8 @@ object Curation {
         // OWN lane; the r17 size==1 gate wrote a retried batch twice
         // whenever more than one orphan existed): a match IS the
         // documented retry and reuses that lane.
-        val batchFp = idSetFingerprint(
-          tokenized(batch, idCol, textCol).filter(size(col("ts")) > 0).select("id"))
-        def laneFp(l: Long) = idSetFingerprint(
-          spark.read.option("basePath", s"$path/postings").parquet(s"$path/postings")
-            .filter(col("ingest_batch") === l).select("id"))
-        orphans.sorted.find(l => laneFp(l) == batchFp) match {
+        Bm25Family.retryLane(spark, path, orphans,
+          tokenized(batch, idCol, textCol).filter(size(col("ts")) > 0).select("id")) match {
           case Some(l) => // the documented retry
             // orphans BELOW the reused lane would be implicitly committed
             // by this append's final stats write (last_manual -> l) with
@@ -876,9 +978,6 @@ object Curation {
       spreadFiles = spreadFiles, metaCols = metaCols)
   }
 
-  private def idSetFingerprint(ids: DataFrame): (Long, Long) =
-    IndexMaintenance.idSetFingerprint(ids)
-
   /** Replay-idempotent keyed append — [[Similarity.appendIvfIndexIdempotent]]'s
     * lexical twin for exactly-once streaming ingest: the batch's
     * postings land under `bucket=<b>/ingest_batch=<batchId>` leaves via
@@ -894,10 +993,7 @@ object Curation {
   def appendBm25IndexIdempotent(batch: DataFrame, idCol: String,
       textCol: String, path: String, batchId: Long, spreadFiles: Int = 0,
       metaCols: Seq[String] = Nil): Unit = {
-    require(batchId >= 0, s"batchId must be >= 0 (got $batchId): -1 marks resident rows")
-    require(batchId < ManualLaneFloor,
-      s"batchId $batchId is in the manual-append lane (>= $ManualLaneFloor)")
-    bm25LayoutGuard.require(batch.sparkSession, s"$path/postings", level1 = "bucket")
+    Bm25Family.requireKeyedLane(batch.sparkSession, path, batchId)
     appendBm25Parts(batch, idCol, textCol, path, batchId, manual = false,
       spreadFiles, metaCols)
   }
@@ -924,12 +1020,10 @@ object Curation {
     // already hides its rows; without the escape, deleting an id from an
     // uncheckpointed batch would throw on every restart (r18). The
     // manual lane keeps the loud refusal (operator-driven retries).
-    val postingsT = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val postingsFs = postingsT.getFileSystem(spark.sparkContext.hadoopConfiguration)
     IndexMaintenance.requireNotTombstoned(spark, path,
       batch.select(col(idCol).as("id")),
       isCommittedReplay = () => !manual && (batchId <= lastBatch ||
-        IndexMaintenance.laneExists(postingsFs, postingsT, batchId, level1 = "bucket")))
+        Bm25Family.laneLanded(spark, path, batchId)))
     // one tokenize pass feeds the empty-check, the postings write, and
     // the stats delta
     val toks = tokenized(batch, idCol, textCol, metaCols)
@@ -937,7 +1031,7 @@ object Curation {
     try {
       val t = toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("s")).collect()(0)
       if (t.getLong(0) == 0) return // empty batch: nothing to append
-      bucketSpread(postingsOf(toks, buckets, metaCols), buckets, spreadFiles)
+      Bm25Family.spread(buckets, spreadFiles)(postingsOf(toks, buckets, metaCols))
         .withColumn("ingest_batch", lit(batchId))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -958,26 +1052,18 @@ object Curation {
     } finally { toks.unpersist(false); () }
   }
 
-  /** Incremental compaction of a streamed-into lexical index —
-    * [[Similarity.compactIvfIndex]]'s twin over the postings table:
-    * fold every `0 ≤ ingest_batch ≤ committedBatchId` leaf into the
-    * resident `-1` layer (batch-priced; resident files untouched).
-    * Stats need no folding — appends already folded their deltas into
-    * the single row at append time; an UNHEALED manual-lane delta (a
-    * crash between a manual append's two writes) is healed here first,
-    * since folding an orphan lane would otherwise erase the lag's
-    * detectability. Folding manual lanes (ids ≥ [[ManualLaneFloor]])
-    * requires passing a watermark at or above them — only do that when
-    * no stream is attached or every stream batch is committed. Same
-    * markers, recovery, and single-writer contract as the ANN folds. */
+  /** Incremental compaction of a streamed-into lexical index: fold
+    * every checkpoint-committed postings leaf into the resident `-1`
+    * layer ([[IndexMaintenance.Family.fold]]). Stats need no folding —
+    * appends already folded their deltas into the single row at append
+    * time; an UNHEALED manual-lane delta (a crash between a manual
+    * append's two writes) is healed here first. Folding manual lanes
+    * (ids ≥ [[ManualLaneFloor]]) requires passing a watermark at or
+    * above them — only do that when no stream is attached or every
+    * stream batch is committed. */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, committedBatchId: Long, spreadFiles: Int = 0): Unit = {
-    ledgerFoldRecover(spark, path) // before any stats write (r18 review)
-    manualLaneRecover(spark, path)
-    val buckets = readStats(spark, path)._3
-    IndexMaintenance.foldCommitted(spark, s"$path/postings", committedBatchId,
-      bucketSpread(_, buckets, spreadFiles), level1 = "bucket")
-  }
+      path: String, committedBatchId: Long, spreadFiles: Int = 0): Unit =
+    Bm25Family.fold(spark, path, committedBatchId, spreadFiles)
 
   /** Detect and heal a manual append that crashed between its postings
     * write and its stats write: any manual-lane leaf id above the
@@ -986,17 +1072,9 @@ object Curation {
     * (id, dl) pairs — dl is functionally dependent on id). One FS walk
     * + one lane-sized scan. Docs with ZERO tokens are invisible here
     * (they have no postings rows — they also can never match a query;
-    * only n_docs undercounts by their number, a documented epsilon). */
-  /** Manual-lane leaf ids above the watermark — each one an append whose
-    * postings landed but whose stats delta never applied. One FS walk. */
-  private def manualOrphanLanes(spark: org.apache.spark.sql.SparkSession,
-      path: String, lastManual: Long): Seq[Long] = {
-    val postings = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IndexMaintenance.manualLanes(fs, postings, lastManual, level1 = "bucket")
-  }
-
-  /** `below` (r18) restricts the heal to orphan lanes STRICTLY under it —
+    * only n_docs undercounts by their number, a documented epsilon).
+    *
+    * `below` (r18) restricts the heal to orphan lanes STRICTLY under it —
     * the retry-reuse path's partial adoption: when a retried batch is
     * about to reuse lane `l`, lanes under `l` must be adopted (the final
     * stats write advances `last_manual` past them) while `l` itself must
@@ -1010,7 +1088,8 @@ object Curation {
     // applied here — r18 review); idempotent and two fs.exists when clean
     ledgerFoldRecover(spark, path)
     val (oldN, oldSum, buckets, lastBatch, lastManual) = readStats(spark, path)
-    val orphanLanes = manualOrphanLanes(spark, path, lastManual).filter(_ < below)
+    val orphanLanes = Bm25Family.orphanLanes(spark, path, lastManual).flatten
+      .filter(_ < below)
     if (orphanLanes.isEmpty) return None
     val rows = spark.read.option("basePath", s"$path/postings")
       .parquet(s"$path/postings": String)
@@ -1024,20 +1103,16 @@ object Curation {
       s"interrupted manual append(s) at $path (lanes ${orphanLanes.sorted.mkString(",")})")
   }
 
-  /** Minor compaction of the lexical resident layer —
-    * [[Similarity.compactIvfResident]]'s twin: rewrite only buckets
-    * whose `-1` file count exceeds the bound (0 = 2× the derived
-    * spread bound). Returns buckets compacted. */
+  /** Minor compaction of the lexical resident layer
+    * ([[IndexMaintenance.Family.compactResident]]: buckets whose `-1`
+    * file count exceeds the bound, 0 = 2× the derived spread bound),
+    * plus the doclen sidecar's accrual bound. Returns buckets
+    * compacted. */
   def compactBm25Resident(spark: org.apache.spark.sql.SparkSession,
       path: String, maxFilesPerBucket: Int = 0, spreadFiles: Int = 0,
-      maxDoclenFiles: Int = 64): Int = {
-    val buckets = readStats(spark, path)._3
-    val bound = Similarity.residentBound(spark, buckets, maxFilesPerBucket, spreadFiles)
-    val n = IndexMaintenance.compactResident(spark, s"$path/postings", bound,
-      bucketSpread(_, buckets, spreadFiles), level1 = "bucket")
-    consolidateDoclens(spark, path, maxDoclenFiles)
-    n
-  }
+      maxDoclenFiles: Int = 64): Int =
+    Bm25Family.compactResident(spark, path, maxFilesPerBucket, spreadFiles,
+      maxDoclenFiles).head
 
   /** Bound the doclen sidecar's file accrual (r18): every append adds
     * one small file and no fold covers the sidecar, so a long-lived
@@ -1075,65 +1150,26 @@ object Curation {
     * (detected via the manual-lane watermark, recomputed from the
     * orphan lane's own rows). Idempotent. */
   def recoverBm25Index(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] = {
-    val msgs = IndexMaintenance.recover(spark, s"$path/postings").toSeq ++
-      statsRecover(spark, path).toSeq ++
-      doclensRecover(spark, path).toSeq ++
-      ledgerFoldRecover(spark, path).toSeq ++
-      manualLaneRecover(spark, path).toSeq
-    if (msgs.isEmpty) None else Some(msgs.mkString("; "))
-  }
+      path: String): Option[String] =
+    Bm25Family.recover(spark, path)
 
   /** Layout health of the postings table ([[IndexLayoutStats]] with
     * buckets as cells) — feed it the same way as the ANN layouts. */
   def bm25IndexLayout(spark: org.apache.spark.sql.SparkSession,
       path: String): IndexLayoutStats =
-    IndexMaintenance.layoutStats(spark, s"$path/postings", level1 = "bucket")
+    Bm25Family.layouts(spark, path).head
 
-  /** [[Similarity.maintenanceAdvice]]'s lexical twin (drift does not
-    * apply — BM25 has no trained model to go stale, so the verdict is
-    * layout-only: fold ≻ compact-resident ≻ none). */
+  /** One recommendation for the lexical index (drift does not apply —
+    * BM25 has no trained model to go stale, so the verdict is layout,
+    * tombstones and doclen-sidecar accrual; see
+    * [[IndexMaintenance.Family.advice]]). */
   def bm25MaintenanceAdvice(spark: org.apache.spark.sql.SparkSession,
       path: String, maxFilesPerBucket: Int = 0,
       foldLeavesPerBucket: Int = 2, spreadFiles: Int = 0,
       maxTombstones: Long = 100000L,
-      maxDoclenFiles: Int = 64): MaintenanceAdvice = {
-    val buckets = readStats(spark, path)._3
-    // one ledger read serves both signals (it materializes driver-side)
-    val ledger = IndexMaintenance.readDeletes(spark, path, enforceCap = false)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pending = math.max(0L, ledger.map(
-        _.select("id").distinct().count()).getOrElse(0L) -
-      IndexMaintenance.readCounterFile(fs,
-        new org.apache.hadoop.fs.Path(s"$path/_purged_through")))
-    // the precise fold-first signal, priced only when over threshold
-    val unfolded = pending > maxTombstones &&
-      ledger.exists(d =>
-        IndexMaintenance.tombstonesUnfolded(spark, s"$path/postings", d, "id",
-          level1 = "bucket"))
-    val base = IndexMaintenance.advise(bm25IndexLayout(spark, path),
-      driftTripped = false,
-      Similarity.residentBound(spark, buckets, maxFilesPerBucket, spreadFiles),
-      foldLeavesPerBucket, pending, maxTombstones, unfolded)
-    // DOCLEN-SIDECAR accrual (r19): every append lands one small file
-    // and no fold covers the sidecar, so a long-lived ingest grows it
-    // one file per trigger forever unless something consolidates — a
-    // cost the delete path pays (it lists and reads every file). The
-    // advice now tracks it at the compact-resident tier (the action
-    // whose implementation, [[compactBm25Resident]], consolidates the
-    // sidecar), so an operator following advice — or the streaming
-    // loop's self-maintenance — bounds it without knowing the knob.
-    // One file-count listing; lower-priority signals never mask fold/
-    // purge verdicts.
-    val doclenFiles = bm25DoclenFileCount(spark, path)
-    if (base.action == "none" && doclenFiles > maxDoclenFiles)
-      MaintenanceAdvice("compact-resident",
-        s"the doclen sidecar holds $doclenFiles files (> $maxDoclenFiles) — " +
-          "append accrual; compactBm25Resident consolidates it in one " +
-          "narrow pass", base.layout)
-    else base
-  }
+      maxDoclenFiles: Int = 64): MaintenanceAdvice =
+    Bm25Family.advice(spark, path, driftTripped = false, maxFilesPerBucket,
+      foldLeavesPerBucket, spreadFiles, maxTombstones, maxDoclenFiles)
 
   /** Data files in the doclen sidecar — the accrual metric
     * [[bm25MaintenanceAdvice]] tracks (one FS listing; 0 = no sidecar,
@@ -1281,74 +1317,13 @@ object Curation {
     * marker so a probe landing INSIDE the window (stats folded, files
     * not yet deleted) never subtracts twice. delN >= 1 whenever a
     * ledger exists, so pre- and post-fold stats can never collide.
+    * The ledger is read, joined and aggregated distributed — never
+    * collected — so the purge runs past the probes' driver-rows cap.
     * Returns buckets rewritten. Single-writer contract (deletes count
     * as writes here). */
   def purgeBm25Deletes(spark: org.apache.spark.sql.SparkSession,
-      path: String, spreadFiles: Int = 0): Int = {
-    // finish an interrupted previous fold first: its marker pins the
-    // exact snapshot it was folding, which must not mix with this run's
-    ledgerFoldRecover(spark, path)
-    doclensRecover(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deletesP = new org.apache.hadoop.fs.Path(IndexMaintenance.deletesDir(path))
-    // snapshot the ledger FILES: the fold's commit deletes exactly these
-    // (anything appended later — a contract breach under the
-    // single-writer rule — survives rather than vanishing unfolded)
-    val ledgerFiles =
-      if (!fs.exists(deletesP)) Seq.empty[String]
-      else fs.listStatus(deletesP)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).toSeq
-    if (ledgerFiles.isEmpty) return 0
-    val stored = spark.read.parquet(
-      ledgerFiles.map(f => s"${deletesP.toString}/$f"): _*).distinct()
-    // deliberately UNCAPPED (r20): the purge is the REMEDIATION the
-    // r20 ledger cap's exception directs operators to — capping it too
-    // would wedge an over-cap index with no exit (the same reason the
-    // readDeletes remediation paths pass enforceCap = false). A purge
-    // is a one-shot operator action over the exact snapshot it retires.
-    val rows = stored.collect()
-    val ledger = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), stored.schema)
-    require(!IndexMaintenance.tombstonesUnfolded(
-        spark, s"$path/postings", ledger, "id", level1 = "bucket"),
-      s"index at $path has tombstoned rows in unfolded batch lanes — " +
-        "fold past them first (compactBm25Index at a covering watermark): " +
-        "a deleted row in an unfolded lane would survive the purge and " +
-        "resurface once the ledger retired")
-    // 1. postings rewrite (marker-staged; a read-only semi-join probe
-    //    skips it on a rerun after a crash later in the sequence)
-    val matches = spark.read.parquet(s"$path/postings")
-      .join(broadcast(ledger.select("id")), Seq("id"), "left_semi")
-      .limit(1).count()
-    val n = if (matches == 0) 0 else {
-      val buckets = readStats(spark, path)._3
-      IndexMaintenance.rewriteResident(spark, s"$path/postings", 0,
-        df => df.join(broadcast(ledger.select("id")), Seq("id"), "left_anti"),
-        bucketSpread(_, buckets, spreadFiles), level1 = "bucket")
-    }
-    // 2. drop the purged ids from the doclen sidecar — without this, a
-    //    post-purge re-delete of the same id would find its dl again
-    //    and subtract a doc the stats no longer count
-    rewriteDoclens(spark, path, ledger)
-    // 3. the ledger fold: marker -> stats -> file deletes -> marker off
-    val (delN, delDl) = ledgerAgg(ledger)
-    val (oldN, oldSum, buckets, lastBatch, lastManual) = readStats(spark, path)
-    val (expN, expSum) = (oldN - delN, oldSum - delDl)
-    IndexMaintenance.writeMarker(fs,
-      new org.apache.hadoop.fs.Path(s"$path/._ledger_fold.tmp"),
-      new org.apache.hadoop.fs.Path(s"$path/_ledger_fold"),
-      s"$expN $expSum" +: ledgerFiles)
-    writeStats(spark, path, expN, expSum, buckets, lastBatch, lastManual)
-    ledgerFiles.foreach(f =>
-      fs.delete(new org.apache.hadoop.fs.Path(deletesP, f), false))
-    // the r17 rerun watermark is subsumed by the fold (the ledger is
-    // gone); drop it so a later rebuild-reset has one less stale file
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_purged_through"), false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/_ledger_fold"), false)
-    n
-  }
+      path: String, spreadFiles: Int = 0): Int =
+    Bm25Family.purge(spark, path, spreadFiles).head
 
   /** Roll an interrupted [[purgeBm25Deletes]] ledger fold FORWARD: the
     * `_ledger_fold` marker pins the expected post-fold stats and the
@@ -1385,11 +1360,12 @@ object Curation {
     * changed between attempts) — counting both would subtract the doc
     * from n_docs twice. max(dl) is the deterministic pick.
     *
-    * Computed in DRIVER memory: the ledger is driver-small by contract
-    * and arrives as a local relation ([[IndexMaintenance.readDeletes]]
-    * collects), so a Spark groupBy here costs a full shuffle stage per
-    * probe for rows already sitting on the driver — measured as part of
-    * the with-ledger probe tax at 21 M (19c). */
+    * The probes' form, computed in DRIVER memory: their ledger arrives
+    * as a capped local relation ([[IndexMaintenance.readDeletes]]), so a
+    * Spark groupBy here would cost a full shuffle stage per probe for
+    * rows already sitting on the driver — measured as part of the
+    * with-ledger probe tax at 21 M (19c). The purge computes the same
+    * aggregate distributed. */
   private def ledgerAgg(ledger: DataFrame): (Long, Long) = {
     val best = scala.collection.mutable.HashMap.empty[Long, Int]
     ledger.select("id", "dl").collect().foreach { r =>
@@ -1402,19 +1378,10 @@ object Curation {
     (best.size.toLong, best.valuesIterator.foldLeft(0L)(_ + _))
   }
 
-  /** Rewrite the doclen sidecar with `ledger`'s ids removed — aside +
-    * delete + rename like the stats row; [[doclensRecover]] heals the
-    * rename window. A missing sidecar (pre-r18 index) is a no-op.
-    * Idempotent while the ledger persists (the anti-join of already-
-    * removed ids removes nothing). */
-  private def rewriteDoclens(spark: org.apache.spark.sql.SparkSession,
-      path: String, ledger: DataFrame): Unit =
-    swapDoclens(spark, path)(
-      _.join(broadcast(ledger.select("id")), Seq("id"), "left_anti"))
-
   /** The ONE doclen-sidecar staged swap (aside + delete + rename —
     * [[doclensRecover]] heals the window) shared by the purge's
-    * anti-join rewrite and the accrual consolidation, so the
+    * anti-join rewrite (idempotent while the ledger persists — removing
+    * already-removed ids removes nothing) and the accrual consolidation, so the
     * crash-sensitive protocol lives in a single place. No-op on a
     * missing/empty sidecar. */
   private def swapDoclens(spark: org.apache.spark.sql.SparkSession,
@@ -1451,24 +1418,14 @@ object Curation {
     true
   }
 
-  /** Heal a crashed [[rewriteDoclens]] window, [[statsRecover]]-style:
-    * a complete aside copy with no live sidecar rolls forward; a
-    * leftover aside beside a live one is residue and is removed. */
+  /** Heal a crashed [[swapDoclens]] window
+    * ([[IndexMaintenance.recoverAside]]). */
   private def doclensRecover(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[String] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/doclens_tmp")
     val live = new org.apache.hadoop.fs.Path(s"$path/doclens")
-    if (!fs.exists(tmp)) None
-    else if (!fs.exists(live) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      require(fs.rename(tmp, live), s"doclens recover: could not publish $live")
-      Some(s"installed the staged doclen sidecar at $live")
-    } else {
-      fs.delete(tmp, true)
-      Some(s"removed stale doclen staging beside $live")
-    }
+    IndexMaintenance.recoverAside(
+      live.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(s"$path/doclens_tmp"), live)
   }
 
   /** Effective corpus stats + tombstone set for the stored-postings
@@ -1536,7 +1493,11 @@ object Curation {
           if (led.isEmpty) Left(s1) // raced an emptying purge: s1 is post-fold
           else Right((m0, s0, led, s1, m1, l0, l1))
         }
-      }.toOption
+      } match {
+        // the driver-rows cap's refusal is a verdict, not a purge race
+        case scala.util.Failure(e: IndexMaintenance.LedgerCapExceeded) => throw e
+        case t => t.toOption
+      }
       read match {
         case Some(Left((nDocs, sumDl, nBuckets, _, _))) =>
           return bm25EffectiveFrom(nDocs, sumDl, nBuckets, None, path)

@@ -3,10 +3,16 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared maintenance machinery for the persisted ANN index layouts
-  * (`cell=<c>/ingest_batch=<b>` two-level partitioning — IVF corpus,
-  * IVFPQ codes + vectors): the incremental leaf fold that compaction is
-  * built on, its crash recovery, and the staging-debris guard.
+/** The ONE lifecycle of the three persisted index families, all laid out
+  * with two-level `<level1>=<c>/ingest_batch=<b>` partitioning — IVF
+  * `corpus`, IVFPQ `codes` + `vectors` (level1 `cell`), BM25 `postings`
+  * (level1 `bucket`). A [[Family]] descriptor names a family's tables
+  * and columns; every maintenance op (fold, resident compaction, layout
+  * stats, advice, purge, recover, manual-lane resolution, append guards,
+  * delete, rebuild input, metadata backfill) is implemented once over
+  * its tables. Underneath sit the table-level primitives: the
+  * incremental leaf fold that compaction is built on, its crash
+  * recovery, and the staging-debris guard.
   *
   * ## Why an incremental fold, not a rewrite
   *
@@ -25,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Each fold ADDS at most one cell-spread bound's worth of files per
   * cell to the `-1` layer, so `-1` accrues `folds × bound` files over a
   * stream's lifetime (vs `batches` per cell unfolded). When that
-  * accrual itself warrants flattening, [[compactResident]] rewrites
+  * accrual itself warrants flattening, [[Family.compactResident]] rewrites
   * just the over-bound cells back under the bound (the STATIONARY
   * stream's remedy — a stationary corpus never trips the drift
   * trigger, so nothing else would ever flatten it); a DRIFTED corpus
@@ -111,36 +117,6 @@ private[graft] object IndexMaintenance {
       legacyTmp(table) -> "a pre-r15 compaction's staging dir",
       legacyOld(table) -> "a pre-r15 compaction's renamed-aside table"))
 
-  /** Reader-side consistency gate. Readers are NOT under the
-    * single-writer contract, so a marker may belong to a LIVE fold, not
-    * a crash — and the only phase where a reader could see inconsistent
-    * data (a folded batch twice) is the marker-bracketed move+delete
-    * window, which a healthy fold clears in well under a second (file
-    * renames + leaf deletes; the expensive tmp WRITE happens before any
-    * marker exists and is invisible to readers). So: ignore the tmp dir
-    * entirely, and on a staged/commit marker WAIT briefly for it to
-    * clear — a live fold finishes and the read proceeds consistently; a
-    * marker still present after the wait is crash debris and fails with
-    * the remedy. Legacy rename-swap debris fails immediately (never
-    * live — that code is gone).
-    *
-    * This gate alone is point-in-time; index probes therefore take
-    * their FILE LISTING through [[consistentListing]], which validates
-    * the (marker, epoch) pair on both sides of the listing and retries
-    * when a maintenance window overlapped it — so a captured listing is
-    * a consistent snapshot and a folded batch can never be transiently
-    * visible twice (the r15 KNOWN LIMIT's silent half, closed in r16).
-    *
-    * KNOWN LIMIT (remaining, loud-only): a task reading a file that a
-    * maintenance op deleted AFTER the snapshot was captured fails with
-    * FileNotFoundException mid-execution — retry the query (the
-    * standard contract for reading any directory a writer may rewrite;
-    * full mid-EXECUTION isolation needs snapshot metadata, an MVCC
-    * table format, out of scope for a directory-layout index).
-    * Operators needing strict isolation serialize retrieval with
-    * maintenance — the in-stream shape already does (folds run on the
-    * ingest thread), and `compactEvery` schedules folds, so a
-    * maintenance window is one trigger away. */
   /** How long [[requireReadConsistent]] waits for a live fold's marker
     * window to clear before declaring it crash debris. A seam (not a
     * per-call knob) so specs can pin the crash path without 15 s stalls;
@@ -241,6 +217,36 @@ private[graft] object IndexMaintenance {
     false
   }
 
+  /** Reader-side consistency gate. Readers are NOT under the
+    * single-writer contract, so a marker may belong to a LIVE fold, not
+    * a crash — and the only phase where a reader could see inconsistent
+    * data (a folded batch twice) is the marker-bracketed move+delete
+    * window, which a healthy fold clears in well under a second (file
+    * renames + leaf deletes; the expensive tmp WRITE happens before any
+    * marker exists and is invisible to readers). So: ignore the tmp dir
+    * entirely, and on a staged/commit marker WAIT briefly for it to
+    * clear — a live fold finishes and the read proceeds consistently; a
+    * marker still present after the wait is crash debris and fails with
+    * the remedy. Legacy rename-swap debris fails immediately (never
+    * live — that code is gone).
+    *
+    * This gate alone is point-in-time; index probes therefore take
+    * their FILE LISTING through [[consistentListing]], which validates
+    * the (marker, epoch) pair on both sides of the listing and retries
+    * when a maintenance window overlapped it — so a captured listing is
+    * a consistent snapshot and a folded batch can never be transiently
+    * visible twice (the r15 KNOWN LIMIT's silent half, closed in r16).
+    *
+    * KNOWN LIMIT (remaining, loud-only): a task reading a file that a
+    * maintenance op deleted AFTER the snapshot was captured fails with
+    * FileNotFoundException mid-execution — retry the query (the
+    * standard contract for reading any directory a writer may rewrite;
+    * full mid-EXECUTION isolation needs snapshot metadata, an MVCC
+    * table format, out of scope for a directory-layout index).
+    * Operators needing strict isolation serialize retrieval with
+    * maintenance — the in-stream shape already does (folds run on the
+    * ingest thread), and `compactEvery` schedules folds, so a
+    * maintenance window is one trigger away. */
   private[graft] def requireReadConsistent(fs: FileSystem, table: Path): Unit = {
     val waitMs = readGateWaitMs
     failOnDebris(fs, table, Seq(
@@ -364,25 +370,15 @@ private[graft] object IndexMaintenance {
   // ledger's aggregate from the stored stats, so idf/avgdl match an
   // index built without those docs); `purge*Deletes` later reclaims the
   // bytes by rewriting the resident layer through [[rewriteResident]]'s
-  // marker protocol. The ledger is driver-small by contract (it
-  // broadcasts); when deletions outgrow that, the remedy is a rebuild —
-  // which starts from the tombstone-filtered rows and resets the ledger.
+  // marker protocol. Probes and appends read the ledger driver-side
+  // ([[readDeletes]], capped); the remediation paths — purge, advice,
+  // rebuild — read it distributed ([[ledger]]), so an over-cap ledger
+  // never blocks its own remedy.
   // ---------------------------------------------------------------------
 
   private[operators] def deletesDir(indexPath: String): String =
     s"$indexPath/deletes"
 
-  /** The deduplicated tombstone ledger, or None when nothing was ever
-    * deleted. Dedup makes a re-appended tombstone harmless.
-    *
-    * Two deliberate hardenings (r17 self-review): a `deletes` dir with
-    * NO committed data files (a delete crashed before its job commit)
-    * reads as None instead of bricking every probe on schema inference;
-    * and the ledger is MATERIALIZED to the driver and re-created as a
-    * local frame — it is driver-small by contract (every consumer
-    * broadcasts it), and a local frame holds no lazy file references,
-    * so a concurrent purge deleting the ledger files mid-query cannot
-    * fail a probe that already read it. */
   /** Whether `dir` exists and holds at least one committed parquet data
     * file — the shared "crashed first write reads as absent" predicate
     * for the ledger, the doclen sidecar, and their staging dirs. */
@@ -390,51 +386,62 @@ private[graft] object IndexMaintenance {
     fs.exists(dir) && fs.listStatus(dir)
       .exists(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
 
+  /** The deduplicated tombstone ledger as a DISTRIBUTED frame over its
+    * parquet files, or None when nothing was ever deleted (dedup makes a
+    * re-appended tombstone harmless). A `deletes` dir with NO committed
+    * data files (a delete crashed before its job commit) reads as None
+    * instead of failing on schema inference. This is the remediation
+    * paths' read — purge, advice and rebuild join or count it in
+    * executors and never collect it, so the driver-rows cap that
+    * refuses probes does not wedge the purge that retires the ledger. */
+  private[operators] def ledger(spark: SparkSession,
+      indexPath: String): Option[DataFrame] = {
+    val p = new Path(deletesDir(indexPath))
+    if (!hasCommittedData(fsOf(spark, p), p)) None
+    else Some(spark.read.parquet(p.toString).distinct())
+  }
+
   /** Fail-loud cap on tombstone-ledger rows materialized to the driver
-    * (r20, the r19 verdict's ledgerAgg guard): every ledger consumer —
-    * probe anti-joins (broadcast), [[Curation]]'s driver-memory
-    * ledgerAgg, the purge fold — relies on the ledger being driver-small
-    * "by contract", but nothing enforced the contract: an unbounded
-    * delete stream silently grew a driver OOM. The default sits 10× past
-    * the default purge-advice gate (`maxTombstones` = 100 000 — advice
-    * fires long before the cap), ~tens of MB of driver rows; deployments
-    * with a larger bound set `spark.graft.ledger.maxDriverRows`. */
+    * (r20, the r19 verdict's ledgerAgg guard): the probe anti-joins
+    * (broadcast) and [[Curation]]'s driver-memory ledgerAgg rely on the
+    * ledger being driver-small "by contract", but nothing enforced the
+    * contract: an unbounded delete stream silently grew a driver OOM.
+    * The default sits 10× past the default purge-advice gate
+    * (`maxTombstones` = 100 000 — advice fires long before the cap),
+    * ~tens of MB of driver rows; deployments with a larger bound set
+    * `spark.graft.ledger.maxDriverRows`. */
   private[operators] def maxLedgerDriverRows(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.ledger.maxDriverRows")
       .map(_.toInt).getOrElse(1000000)
 
-  /** `enforceCap = false` is reserved for the REMEDIATION paths — purge,
-    * rebuild, maintenance advice, fold preconditions: the cap's whole
-    * point is that probes and appends fail loudly and direct the
-    * operator to purge, so the purge (and the advice that recommends
-    * it) must still be able to read an over-cap ledger; capping them
-    * too would wedge the index with no exit short of a conf override.
-    * A remediation read is a deliberate one-shot operator action, and
-    * the r18 fold/purge protocol bounds how often it runs. */
+  /** [[readDeletes]]' refusal past the cap — its own type so a probe's
+    * snapshot retry loop passes it straight through instead of retrying
+    * a verdict that cannot change. */
+  private[operators] final class LedgerCapExceeded(msg: String)
+      extends IllegalStateException(msg)
+
+  /** The [[ledger]] MATERIALIZED to the driver for probes and appends,
+    * refused loudly past [[maxLedgerDriverRows]]. The rows are
+    * re-created as a local frame: it holds no lazy file references, so
+    * a concurrent purge deleting the ledger files mid-query cannot fail
+    * a probe that already read it. */
   private[operators] def readDeletes(spark: SparkSession,
-      indexPath: String, enforceCap: Boolean = true): Option[DataFrame] = {
-    val p = new Path(deletesDir(indexPath))
-    val fs = fsOf(spark, p)
-    if (!hasCommittedData(fs, p)) return None
-    val cap = maxLedgerDriverRows(spark)
-    val stored = spark.read.parquet(p.toString).distinct()
-    if (!enforceCap)
-      return Some(spark.createDataFrame(
-        java.util.Arrays.asList(stored.collect(): _*), stored.schema))
-    // limit(cap+1) bounds driver memory even when the ledger is over
-    // the cap — the failure is a loud exception, not an OOM mid-collect
-    val rows = stored.limit(cap + 1).collect() // driver-small, enforced
-    if (rows.length > cap)
-      throw new IllegalStateException(
-        s"tombstone ledger at ${deletesDir(indexPath)} exceeds " +
-          s"$cap distinct rows — the ledger is materialized to the driver " +
-          "and broadcast by every probe, so an unbounded ledger is a " +
-          "driver/executor OOM. Purge (purge advice has been firing since " +
-          "maxTombstones) or rebuild to retire it, or raise " +
-          "spark.graft.ledger.maxDriverRows if the driver truly has the memory.")
-    Some(spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), stored.schema))
-  }
+      indexPath: String): Option[DataFrame] =
+    ledger(spark, indexPath).map { stored =>
+      val cap = maxLedgerDriverRows(spark)
+      // limit(cap+1) bounds driver memory even when the ledger is over
+      // the cap — the failure is a loud exception, not an OOM mid-collect
+      val rows = stored.limit(cap + 1).collect()
+      if (rows.length > cap)
+        throw new LedgerCapExceeded(
+          s"tombstone ledger at ${deletesDir(indexPath)} exceeds " +
+            s"$cap distinct rows — the ledger is materialized to the driver " +
+            "and broadcast by every probe, so an unbounded ledger is a " +
+            "driver/executor OOM. Purge (purge advice has been firing since " +
+            "maxTombstones) or rebuild to retire it, or raise " +
+            "spark.graft.ledger.maxDriverRows if the driver truly has the memory.")
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), stored.schema)
+    }
 
   private[operators] def clearDeletes(spark: SparkSession, indexPath: String): Unit = {
     val p = new Path(deletesDir(indexPath))
@@ -515,7 +522,8 @@ private[graft] object IndexMaintenance {
     * is always unfolded) — so the advice's purge signal was
     * structurally un-actionable in-stream. Cost: one FS listing plus a
     * scan of the batch lanes ONLY (resident files are never listed into
-    * the read); free when no lanes exist. */
+    * the read); free when no lanes exist. The ledger joins as given —
+    * a distributed [[ledger]] stays in executors. */
   private[operators] def tombstonesUnfolded(spark: SparkSession,
       tablePath: String, ledgerIds: DataFrame, idColInTable: String,
       level1: String = "cell"): Boolean = {
@@ -534,10 +542,10 @@ private[graft] object IndexMaintenance {
       if leaf.getPath.getName.stripPrefix("ingest_batch=").toLong >= 0
     } yield s"${cellDir.getPath.getName}/${leaf.getPath.getName}"
     leafRels.nonEmpty && {
-      import org.apache.spark.sql.functions.{broadcast, col}
+      import org.apache.spark.sql.functions.col
       spark.read.option("basePath", tablePath)
         .parquet(leafRels.map(r => s"$tablePath/$r"): _*)
-        .join(broadcast(ledgerIds.select(col("id").as(idColInTable))),
+        .join(ledgerIds.select(col("id").as(idColInTable)),
           Seq(idColInTable), "left_semi")
         .limit(1).count() > 0
     }
@@ -582,6 +590,21 @@ private[graft] object IndexMaintenance {
         "or rebuild the index with the new column set.")
   }
 
+  /** Heal an interrupted write-aside + delete + rename publish: a
+    * COMPLETE (`_SUCCESS`-gated) aside with no live copy rolls forward;
+    * an aside beside a live copy is residue and is removed. Returns what
+    * was repaired. */
+  private[operators] def recoverAside(fs: FileSystem, aside: Path,
+      live: Path): Option[String] =
+    if (!fs.exists(aside)) None
+    else if (!fs.exists(live) && fs.exists(new Path(aside, "_SUCCESS"))) {
+      require(fs.rename(aside, live), s"recover: could not publish $live")
+      Some(s"installed the staged copy at $live")
+    } else {
+      fs.delete(aside, true)
+      Some(s"removed stale staging beside $live")
+    }
+
   /** The shared table rewrite behind the metadata UPGRADE path (r19,
     * `backfillMetaCols`): join `meta`'s columns onto every row of ONE
     * index table and republish it — the column-join remedy for a
@@ -611,17 +634,14 @@ private[graft] object IndexMaintenance {
     * purge removes them). */
   private[operators] def backfillTableMetaCols(spark: SparkSession,
       indexRoot: String, table: String, meta: org.apache.spark.sql.DataFrame,
-      joinCol: String, metaCols: Seq[String]): Boolean = {
+      joinCol: String, metaCols: Seq[String], level1: String = "cell"): Boolean = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val live = new Path(s"$indexRoot/$table")
     val fs = fsOf(spark, live)
     val aside = new Path(s"$indexRoot/${table}_backfill")
-    if (fs.exists(aside)) {
-      if (!fs.exists(live) && fs.exists(new Path(aside, "_SUCCESS"))) {
-        require(fs.rename(aside, live), s"backfill recover: could not publish $live")
-        bumpEpoch(fs, live)
-        invalidateGuards(live.toString)
-      } else fs.delete(aside, true)
+    if (recoverAside(fs, aside, live).exists(_.startsWith("installed"))) {
+      bumpEpoch(fs, live)
+      invalidateGuards(live.toString)
     }
     require(fs.exists(live), s"no $table table at $indexRoot — nothing to backfill")
     requireReadConsistent(fs, live)
@@ -647,76 +667,13 @@ private[graft] object IndexMaintenance {
         "metadata and filtered probes would silently drop them. Cover every " +
         "live id (tombstoned ids are exempt).")
     current.join(meta, Seq(joinCol), "left")
-      .write.mode("overwrite").partitionBy("cell", "ingest_batch")
+      .write.mode("overwrite").partitionBy(level1, "ingest_batch")
       .parquet(aside.toString)
     fs.delete(live, true)
     require(fs.rename(aside, live), s"could not publish backfilled $live")
     bumpEpoch(fs, live)
     invalidateGuards(live.toString)
     true
-  }
-
-  /** The FAMILY half of the metadata upgrade (r19 review): validation,
-    * staging, contract update and the per-table rewrites, shared by
-    * [[Similarity.backfillMetaCols]] and [[Pq.backfillMetaCols]] so the
-    * contract checks cannot drift between families.
-    *
-    * Ordering is deliberate:
-    *  1. STAGE the caller's meta frame to `<index>/_backfill_meta` and
-    *     validate one-row-per-id on the staged copy — the caller's plan
-    *     executes exactly ONCE (a meta frame derived from the index's
-    *     own tables would otherwise die when the first table swap
-    *     invalidates its captured listing — observed at 20 M; and a
-    *     non-deterministic frame could pass validation on one execution
-    *     yet join different rows on another);
-    *  2. write `_meta_cols` (the union) BEFORE the table rewrites: a
-    *     crash between rewrite and contract write would otherwise let a
-    *     meta-less append PASS the contract and land rows whose new
-    *     metadata reads as NULL — silently dropped by filtered probes,
-    *     the exact seam the contract exists to close. Contract-first
-    *     makes every post-crash failure LOUD instead: appends must
-    *     carry the union, and the rerun completes the rewrites. A
-    *     clash with stored columns is therefore legal exactly when it
-    *     is our own interrupted upgrade — some table still missing the
-    *     clashed columns — and refused otherwise.
-    * Table rewrites are per-table resumable ([[backfillTableMetaCols]]
-    * skips a table already carrying every column). */
-  private[operators] def backfillMetaColsFamily(spark: SparkSession,
-      path: String, meta: org.apache.spark.sql.DataFrame, idCol: String,
-      metaCols: Seq[String], tables: Seq[String]): Boolean = {
-    import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
-    require(metaCols.nonEmpty, "pass the metadata columns to backfill")
-    require(meta.columns.contains(idCol) && metaCols.forall(meta.columns.contains),
-      s"metadata frame must carry '$idCol' and ${metaCols.mkString(", ")}; " +
-        s"got ${meta.columns.mkString(", ")}")
-    val fs = fsOf(spark, new Path(path))
-    val stored = readMetaColsFile(fs, path)
-    val clash = metaCols.intersect(stored)
-    if (clash.nonEmpty) {
-      val unfinished = tables.exists { t =>
-        val cols = scala.util.Try(
-          spark.read.parquet(s"$path/$t").columns.toSet).getOrElse(Set.empty)
-        !clash.forall(cols.contains)
-      }
-      require(unfinished,
-        s"index at $path already stores metaCols [${clash.mkString(", ")}] — " +
-          "backfill only ADDS columns; rebuild to change existing ones")
-    }
-    val scratch = new Path(s"$path/_backfill_meta")
-    meta.select(col(idCol).as("corpus_id") +: metaCols.map(col): _*)
-      .write.mode("overwrite").parquet(scratch.toString)
-    try {
-      val m = spark.read.parquet(scratch.toString)
-      val mAgg = m.agg(count(lit(1)), count_distinct(col("corpus_id"))).collect()(0)
-      require(mAgg.getLong(0) == mAgg.getLong(1),
-        s"metadata frame must hold ONE row per id: ${mAgg.getLong(0)} rows over " +
-          s"${mAgg.getLong(1)} distinct ids — a duplicated id would multiply " +
-          "index rows through the join")
-      writeMetaColsFile(fs, path, (stored ++ metaCols).distinct)
-      tables.map(t =>
-        backfillTableMetaCols(spark, path, t, m, "corpus_id", metaCols))
-        .reduce(_ || _)
-    } finally { fs.delete(scratch, true); () }
   }
 
   /** Order-independent fingerprint of a frame's distinct `id` set —
@@ -794,20 +751,25 @@ private[graft] object IndexMaintenance {
     true
   }
 
-  /** Rewrite the `ingest_batch=-1` resident layer of every cell whose
-    * `-1` file count EXCEEDS `maxFiles` back to one spread-bound's worth
-    * of files — the minor compaction that bounds resident-file accrual
-    * for STATIONARY streams. [[foldCommitted]] adds ≤ spread-bound files
-    * per cell per fold and its documented flattening remedy is a
-    * rebuild, justified by "the drift trigger has usually asked for one
-    * by then" — but a stationary corpus (the common ingest case) never
-    * drifts, so a year-long ingest at `compactEvery=N` accrues
-    * folds × bound files per cell with only an O(corpus + retraining)
-    * rebuild as remedy that nothing ever demands. This is the
-    * batch-priced answer: per-cell, it reads and rewrites ONLY the
-    * accrued (over-bound) cells' resident files — under-bound cells'
-    * files are never read, never listed into the scan, never touched —
-    * so cost scales with the accrued cells' data, not the index.
+  /** The marker-staged resident-layer rewrite behind resident
+    * compaction ([[Family.compactResident]]) and the delete purges:
+    * select cells whose `-1` file count exceeds `minFilesExclusive`
+    * (0 = every non-empty cell), run their rows through `transform`
+    * (identity for a compaction; the tombstone anti-join for a purge),
+    * re-spread, and swap the files in.
+    *
+    * As a compaction it is the minor compaction that bounds
+    * resident-file accrual for STATIONARY streams: [[foldCommitted]]
+    * adds ≤ spread-bound files per cell per fold and its documented
+    * flattening remedy is a rebuild, justified by "the drift trigger has
+    * usually asked for one by then" — but a stationary corpus (the
+    * common ingest case) never drifts, so a year-long ingest at
+    * `compactEvery=N` accrues folds × bound files per cell with only an
+    * O(corpus + retraining) rebuild as remedy that nothing ever demands.
+    * This is the batch-priced answer: it reads and rewrites ONLY the
+    * selected cells' resident files — other cells' files are never
+    * read, never listed into the scan, never touched — so cost scales
+    * with the accrued cells' data, not the index.
     *
     * Same marker protocol as the fold (`_fold_staged`/`_fold_commit`,
     * with `DF <file>` delete-file entries next to the fold's
@@ -817,22 +779,7 @@ private[graft] object IndexMaintenance {
     * (delete the staged replacement files; the originals were never
     * touched), after commit rolls FORWARD (delete the listed originals;
     * every replacement is in place by construction). Single-writer
-    * contract, like the fold.
-    *
-    * Returns the number of cells compacted (0 = nothing over bound). */
-  def compactResident(spark: SparkSession, tablePath: String, maxFiles: Int,
-      spread: DataFrame => DataFrame, level1: String = "cell"): Int = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    rewriteResident(spark, tablePath, maxFiles, identity, spread, level1)
-  }
-
-  /** The marker-staged resident-layer rewrite [[compactResident]] and
-    * the delete purges share: select cells whose `-1` file count
-    * exceeds `minFilesExclusive` (0 = every non-empty cell), run their
-    * rows through `transform` (identity for a compaction; the
-    * tombstone anti-join for a purge), re-spread, and swap the files
-    * in under the fold marker protocol — crash at any point rolls back
-    * or forward through the existing [[recover]]. */
+    * contract, like the fold. Returns the number of cells rewritten. */
   private[operators] def rewriteResident(spark: SparkSession, tablePath: String,
       minFilesExclusive: Int, transform: DataFrame => DataFrame,
       spread: DataFrame => DataFrame, level1: String = "cell"): Int = {
@@ -897,7 +844,7 @@ private[graft] object IndexMaintenance {
     } yield (f.getPath, cellDir.getPath.getName, f.getPath.getName)
 
   /** Deterministic crash recovery for [[foldCommitted]] and
-    * [[compactResident]] (and for the pre-r15 rename-swap's debris).
+    * [[rewriteResident]] (and for the pre-r15 rename-swap's debris).
     * Idempotent; safe to call on a clean table (returns None). Returns a
     * human-readable account of what was repaired. */
   def recover(spark: SparkSession, tablePath: String): Option[String] = {
@@ -1024,9 +971,9 @@ private[graft] object IndexMaintenance {
 
   /** The shared advice rule over one table's [[IndexLayoutStats]] — see
     * [[MaintenanceAdvice]] for the precedence contract. `residentBound`
-    * is the per-cell `-1` file threshold (the index family's
-    * [[Similarity.residentBound]] derivation); `foldLeavesPerCell` is
-    * how many unfolded batches' worth of leaves to tolerate;
+    * is the per-cell `-1` file threshold ([[residentBound]]);
+    * `foldLeavesPerCell` is how many unfolded batches' worth of leaves
+    * to tolerate;
     * `pendingTombstones` is the family's count of deleted ids not yet
     * physically purged (0 when deletion is unused), advised against
     * `maxTombstones` — the default 100 000 sits where the measured
@@ -1039,11 +986,10 @@ private[graft] object IndexMaintenance {
     * pending is over threshold). r17 used batchLeaves > 0 as the proxy,
     * which a live stream never clears (its current batch is always
     * unfolded), so the purge advice could never fire in-stream. */
-  private[operators] def advise(layout: IndexLayoutStats,
+  private def advise(layout: IndexLayoutStats,
       driftTripped: Boolean, residentBound: Int,
-      foldLeavesPerCell: Int, pendingTombstones: Long = 0L,
-      maxTombstones: Long = 100000L,
-      unfoldedTombstones: Boolean = false): MaintenanceAdvice = {
+      foldLeavesPerCell: Int, pendingTombstones: Long,
+      maxTombstones: Long, unfoldedTombstones: Boolean): MaintenanceAdvice = {
     val foldThreshold = foldLeavesPerCell.toLong * layout.cells
     if (driftTripped) MaintenanceAdvice("rebuild",
       "the drift verdict tripped — retrain on the current corpus " +
@@ -1119,6 +1065,423 @@ private[graft] object IndexMaintenance {
           "appending batch-keyed rows would mix partition depths and break " +
           s"partition discovery. $rebuildRemedy")
       verified.add(tablePath)
+    }
+  }
+
+  // ---------------------------------------------------------------------
+  // The LIFECYCLE — every maintenance op of every index family, once.
+  // ---------------------------------------------------------------------
+
+  /** The per-cell `-1` file threshold a resident compaction flattens
+    * against. Must be AT LEAST the spread the rewrite itself produces —
+    * a threshold below it would rewrite the same cells forever without
+    * ever getting them under bound — so an explicit `maxFilesPerCell`
+    * is validated against the effective spread. */
+  private def residentBound(spark: SparkSession, nlist: Int,
+      maxFilesPerCell: Int, spreadFiles: Int): Int = {
+    val spread = if (spreadFiles > 0) spreadFiles
+      else Similarity.cellSpreadBound(spark, nlist)
+    if (maxFilesPerCell <= 0) 2 * spread
+    else {
+      require(maxFilesPerCell >= spread,
+        s"maxFilesPerCell ($maxFilesPerCell) is below the rewrite's own " +
+          s"per-cell fan-out ($spread files) — compaction could never " +
+          "converge; raise the threshold or pin spreadFiles lower")
+      maxFilesPerCell
+    }
+  }
+
+  /** The layout a family is advised on: the table worst on both accrual
+    * signals when one is, else the per-field maximum. Tables normally
+    * move together; a divergence means a crash landed between two table
+    * writes or folds, and the worse side is the one needing the remedy. */
+  private def worstLayout(ls: Seq[IndexLayoutStats]): IndexLayoutStats =
+    ls.find(a => ls.forall(b => a.batchLeaves >= b.batchLeaves &&
+        a.maxResidentFilesPerCell >= b.maxResidentFilesPerCell))
+      .getOrElse(IndexLayoutStats(ls.map(_.cells).max, ls.map(_.batchLeaves).max,
+        ls.map(_.maxBatchId).max, ls.map(_.residentFiles).max,
+        ls.map(_.maxResidentFilesPerCell).max, ls.map(_.batchFiles).max))
+
+  /** What a recover repaired, joined; None when it found nothing. */
+  private[operators] def report(msgs: Seq[String]): Option[String] =
+    if (msgs.isEmpty) None else Some(msgs.mkString("; "))
+
+  /** One persisted index family: its `tables` under the index path,
+    * their first-level partition column `level1` (`cell` | `bucket`),
+    * the id column the tables carry, where the first-level count comes
+    * from ([[cells]]: the centroids' nlist, or the BM25 stats row's
+    * bucket count) and the rebuild remedy its layout guard names.
+    *
+    * Each op below is the family's public maintenance entry point,
+    * implemented once over `tables` in order. IVF is the one-table case
+    * (`corpus`); IVFPQ writes `codes` before `vectors`, so a crash
+    * between two tables leaves the later one behind — benign for folds,
+    * compactions and purge rewrites (answers never change under them;
+    * the next call completes the lagging table) and resolved by the
+    * manual-lane rule for appends. BM25 (`postings`, level1 `bucket`)
+    * overrides the ops that also touch what is its own — the stats row
+    * and its stats-watermark manual lane, the doclen sidecar, the ledger
+    * fold inside its purge — around these table ops. Single-writer
+    * contract throughout: no concurrent append during maintenance
+    * (in-stream maintenance runs on the ingest thread). */
+  private[graft] abstract class Family(val tables: Seq[String],
+      val level1: String, val idCol: String, rebuildRemedy: String) {
+    import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
+
+    /** The first-level partition count (nlist, or BM25 buckets). */
+    def cells(spark: SparkSession, path: String): Int
+
+    /** Memoized layout + debris guard over every table; its counters are
+      * the families' `layoutChecksCount` / `resetLayoutCheckCache`
+      * test seams. */
+    private[graft] val guard = new TwoLevelLayoutGuard(rebuildRemedy)
+
+    private def tablePaths(path: String): Seq[Path] =
+      tables.map(t => new Path(s"$path/$t"))
+
+    /** The bounded, first-level-aligned write exchange
+      * ([[Similarity.cellSpread]]) every write of this family uses. */
+    def spread(nlist: Int, spreadFiles: Int): DataFrame => DataFrame =
+      Similarity.cellSpread(_, nlist, idCol, spreadFiles, level1)
+
+    /** Refuse, before any append or backfill, a table in the flat
+      * pre-two-level `partitionBy(level1)` layout (appending would mix
+      * partition depths and break partition discovery with an
+      * unrelated-looking error) or carrying unrecovered fold debris.
+      * Memoized per (JVM, table) — see [[TwoLevelLayoutGuard]]. */
+    def requireLayout(spark: SparkSession, path: String): Unit =
+      tables.foreach(t => guard.require(spark, s"$path/$t", level1))
+
+    /** Fold every `0 <= ingest_batch <= committedBatchId` leaf of every
+      * table into its resident `-1` layer ([[foldCommitted]] —
+      * batch-priced, resident files untouched). Pass only a
+      * checkpoint-COMMITTED batch id: a keyed append's exactly-once
+      * replay overwrites its own leaves, so folding a batch that could
+      * still replay would duplicate it. Manual lanes (ids >=
+      * [[ManualLaneFloor]]) fold only when the watermark passes them —
+      * do that only when no retry of them can follow. */
+    def fold(spark: SparkSession, path: String, committedBatchId: Long,
+        spreadFiles: Int = 0): Unit = {
+      val spr = spread(cells(spark, path), spreadFiles)
+      tables.foreach(t => foldCommitted(spark, s"$path/$t", committedBatchId, spr, level1))
+    }
+
+    /** Minor compaction of every table's resident layer: rewrite only
+      * the cells whose `-1` file count exceeds `maxFilesPerCell` (0 = 2×
+      * the spread bound — one fold's accrual tolerated) back under the
+      * bound ([[rewriteResident]]). Returns cells compacted per table. */
+    def compactResident(spark: SparkSession, path: String,
+        maxFilesPerCell: Int = 0, spreadFiles: Int = 0): Seq[Int] = {
+      val nlist = cells(spark, path)
+      val bound = residentBound(spark, nlist, maxFilesPerCell, spreadFiles)
+      tables.map(t => rewriteResident(spark, s"$path/$t", bound, identity,
+        spread(nlist, spreadFiles), level1))
+    }
+
+    /** [[layoutStats]] of every table, in table order. */
+    def layouts(spark: SparkSession, path: String): Seq[IndexLayoutStats] =
+      tables.map(t => layoutStats(spark, s"$path/$t", level1))
+
+    /** Deleted ids not yet physically purged — a distributed count. */
+    def pendingTombstones(spark: SparkSession, path: String): Long =
+      ledger(spark, path).map(_.select("id").distinct().count()).getOrElse(0L)
+
+    /** One recommendation ([[MaintenanceAdvice]]) from the worst table's
+      * layout, the caller's drift verdict, the pending tombstones and —
+      * only when those are over `maxTombstones` — whether any still has
+      * rows in an unfolded lane (fold before purge). Layout-stats-priced
+      * plus one distributed ledger count when a ledger exists. */
+    def advice(spark: SparkSession, path: String, driftTripped: Boolean = false,
+        maxFilesPerCell: Int = 0, foldLeavesPerCell: Int = 2, spreadFiles: Int = 0,
+        maxTombstones: Long = 100000L): MaintenanceAdvice = {
+      val pending = pendingTombstones(spark, path)
+      val unfolded = pending > maxTombstones &&
+        ledger(spark, path).exists(tombstonesUnfoldedIn(spark, path, _))
+      advise(worstLayout(layouts(spark, path)), driftTripped,
+        residentBound(spark, cells(spark, path), maxFilesPerCell, spreadFiles),
+        foldLeavesPerCell, pending, maxTombstones, unfolded)
+    }
+
+    private def tombstonesUnfoldedIn(spark: SparkSession, path: String,
+        tombstones: DataFrame): Boolean =
+      tables.exists(t => tombstonesUnfolded(spark, s"$path/$t", tombstones, idCol, level1))
+
+    /** Tombstone `ids` (column `idColumn`): one tiny ledger append — no
+      * index rewrite, crash-safe by construction (the append lands or it
+      * doesn't; the ledger dedups a re-append). Probes anti-join the
+      * ledger from the next query on; [[purge]] reclaims the bytes. */
+    def delete(ids: DataFrame, path: String, idColumn: String): Unit =
+      ids.select(col(idColumn).as("id")).distinct()
+        .coalesce(1).write.mode("append").parquet(deletesDir(path))
+
+    /** Physically remove tombstoned rows from every table, then clear the
+      * ledger. Probes stay correct throughout — before the rewrite the
+      * anti-join hides the rows, after it they are gone; a crash before
+      * the clear leaves a no-op anti-join. Returns cells rewritten per
+      * table (all 0 without a ledger). */
+    def purge(spark: SparkSession, path: String, spreadFiles: Int = 0): Seq[Int] =
+      ledger(spark, path) match {
+        case None => tables.map(_ => 0)
+        case Some(d) =>
+          val n = purgeTables(spark, path, d, spreadFiles)
+          clearDeletes(spark, path)
+          n
+      }
+
+    /** The table half of a purge: refuse while a TOMBSTONED row sits in
+      * an unfolded lane (the rewrite covers only the resident layer, so
+      * it would survive and resurface once the ledger retired — the
+      * precise gate, [[tombstonesUnfolded]]), then rewrite each table's
+      * resident layer with the tombstones anti-joined out. A table with
+      * no tombstoned row (a rerun after a crash between the rewrite and
+      * the ledger retire) costs one read-only semi-join probe instead of
+      * a rewrite. The ledger is joined distributed, never collected. */
+    protected final def purgeTables(spark: SparkSession, path: String,
+        tombstones: DataFrame, spreadFiles: Int): Seq[Int] = {
+      require(!tombstonesUnfoldedIn(spark, path, tombstones),
+        s"index at $path has tombstoned rows in unfolded batch lanes — fold " +
+          "past them first (compact the index at a covering watermark): a " +
+          "deleted row in an unfolded lane would survive the purge and " +
+          "resurface once the ledger retired")
+      val ids = tombstones.select(col("id").as(idCol))
+      lazy val spr = spread(cells(spark, path), spreadFiles)
+      tables.map { t =>
+        val matches = spark.read.parquet(s"$path/$t")
+          .join(ids, Seq(idCol), "left_semi").limit(1).count()
+        if (matches == 0) 0
+        else rewriteResident(spark, s"$path/$t", 0,
+          _.join(ids, Seq(idCol), "left_anti"), spr, level1)
+      }
+    }
+
+    /** Deterministic crash recovery: roll each table's interrupted
+      * maintenance op back or forward ([[IndexMaintenance.recover]]),
+      * then settle the orphan manual lanes. Recovery and retry are
+      * ALTERNATIVE remedies — an adopted batch is in the index, so do
+      * not retry it. Idempotent; None when clean. */
+    def recover(spark: SparkSession, path: String): Option[String] =
+      report(recoverTables(spark, path) ++ settleManualLanes(spark, path))
+
+    protected final def recoverTables(spark: SparkSession, path: String): Seq[String] =
+      tables.flatMap(t => IndexMaintenance.recover(spark, s"$path/$t"))
+
+    // The manual-lane watermark file lives on the FIRST table: it is
+    // written first, so a lane that reached any table reached it.
+    private def watermarkTable(path: String) = new Path(s"$path/${tables.head}")
+
+    /** Each table's orphan manual lanes — lanes above the watermark `w`.
+      * One FS walk per table. */
+    def orphanLanes(spark: SparkSession, path: String, w: Long): Seq[Set[Long]] =
+      tablePaths(path).map(p => manualLanes(fsOf(spark, p), p, w, level1).toSet)
+
+    private def dropLane(fs: FileSystem, path: String, lane: Long): Unit =
+      tables.foreach(t => deleteLane(fs, new Path(s"$path/$t"), lane, level1))
+
+    /** The manual-lane rule for orphans (lanes above the watermark — an
+      * append that wrote and never advanced it): a lane present in EVERY
+      * table fully landed and is adopted (the watermark advances past
+      * it; its rows are already probe-visible); a lane missing from some
+      * table never landed — its call never returned success — and is
+      * deleted, so retrying that batch lands it whole. */
+    private def settleManualLanes(spark: SparkSession, path: String): Seq[String] = {
+      val head = watermarkTable(path)
+      val fs = fsOf(spark, head)
+      val byTable = orphanLanes(spark, path, readManualWatermark(fs, head))
+      val (complete, half) = byTable.flatten.distinct.sorted
+        .partition(l => byTable.forall(_(l)))
+      half.foreach(dropLane(fs, path, _))
+      if (complete.nonEmpty) writeManualWatermark(fs, head, complete.max)
+      (if (complete.isEmpty) Nil
+      else Seq(s"adopted ${complete.size} fully-landed manual append(s) at $path " +
+        s"(lanes ${complete.mkString(",")}) — their rows are already " +
+        "index-visible; do NOT retry those batches")) ++
+        (if (half.isEmpty) Nil
+        else Seq(s"deleted ${half.size} half-landed manual lane(s) at $path " +
+          s"(lanes ${half.mkString(",")}) — those batches never landed; " +
+          "retry them to land them whole"))
+    }
+
+    /** The lane a keyless append writes. No orphan: the next lane. With
+      * orphans, EVERY one is fingerprinted against the batch's id set
+      * (r18 — two crashed appends then a retry of either must find its
+      * OWN lane): a match IS the documented retry and reuses that lane
+      * (a half-landed one heals, the write overwrites what landed and
+      * writes what didn't); half-landed lanes below it are deleted first
+      * (the final watermark advance would otherwise commit them with a
+      * table missing), complete ones below it adopt through that advance,
+      * lanes above it stay for the next call. No match: the operator
+      * moved on, so the orphans settle and the batch takes a fresh lane. */
+    private def manualLane(spark: SparkSession, path: String,
+        batchIds: DataFrame): Long = {
+      val head = watermarkTable(path)
+      val fs = fsOf(spark, head)
+      val w = readManualWatermark(fs, head)
+      val byTable = orphanLanes(spark, path, w)
+      if (byTable.forall(_.isEmpty)) return w + 1
+      retryLane(spark, path, byTable, batchIds) match {
+        case Some(l) =>
+          byTable.flatten.distinct.filter(o => o < l && !byTable.forall(_(o)))
+            .foreach(dropLane(fs, path, _))
+          l
+        case None =>
+          settleManualLanes(spark, path)
+          readManualWatermark(fs, head) + 1
+      }
+    }
+
+    /** The orphan lane (lowest first) holding exactly the batch's id set
+      * — the documented retry — by [[idSetFingerprint]], read from a
+      * table that has the lane; None when the batch is a different one.
+      * Decisive because batch ids must be NEW to the index, so two
+      * distinct batches cannot share an id set. `byTable` is
+      * [[orphanLanes]]. */
+    def retryLane(spark: SparkSession, path: String, byTable: Seq[Set[Long]],
+        batchIds: DataFrame): Option[Long] = {
+      val batchFp = idSetFingerprint(batchIds)
+      byTable.flatten.distinct.sorted.find { l =>
+        val t = s"$path/${tables(byTable.indexWhere(_(l)))}"
+        idSetFingerprint(spark.read.option("basePath", t).parquet(t)
+          .filter(col("ingest_batch") === l).select(col(idCol).as("id"))) == batchFp
+      }
+    }
+
+    /** The keyless append, RETRY-IDEMPOTENT: the guards, then `write`
+      * lands the batch under its manual lane (ids from
+      * [[ManualLaneFloor]] up, disjoint from foreachBatch ids) by
+      * dynamic partition overwrite, and the watermark advances only
+      * AFTER the write — a failed append retried with the same batch
+      * reuses its lane and overwrites its own leaves, so a row can never
+      * land twice. `batchIds` is the batch's `id` column; batch ids must
+      * be NEW to the index. */
+    def appendManual(batchIds: DataFrame, path: String,
+        metaCols: Seq[String])(write: Long => Unit): Unit = {
+      val spark = batchIds.sparkSession
+      requireLayout(spark, path)
+      requireSameMetaCols(spark, path, metaCols)
+      requireNotTombstoned(spark, path, batchIds)
+      val lane = manualLane(spark, path, batchIds)
+      write(lane)
+      val head = watermarkTable(path)
+      writeManualWatermark(fsOf(spark, head), head, lane)
+    }
+
+    /** A keyed (foreachBatch) batch id must be >= 0 (-1 marks resident
+      * rows, which a replay must never overwrite) and below
+      * [[ManualLaneFloor]]; the tables must pass [[requireLayout]]. */
+    def requireKeyedLane(spark: SparkSession, path: String, batchId: Long): Unit = {
+      require(batchId >= 0, s"batchId must be >= 0 (got $batchId): -1 marks resident rows")
+      require(batchId < ManualLaneFloor,
+        s"batchId $batchId is in the manual-append lane (>= $ManualLaneFloor); " +
+          "that lane belongs to the keyless append")
+      requireLayout(spark, path)
+    }
+
+    /** Every guard before a keyed (replay-idempotent) append: the lane,
+      * the layout, the metadata contract, and the tombstone refusal —
+      * with the committed-replay escape (r18): a re-delivered batch whose
+      * write (even partially) landed is a harmless self-overwrite the
+      * ledger already hides, and refusing it would throw on every
+      * restart so the stream could never progress. */
+    def requireKeyedAppend(batchIds: DataFrame, path: String, batchId: Long,
+        metaCols: Seq[String]): Unit = {
+      val spark = batchIds.sparkSession
+      requireKeyedLane(spark, path, batchId)
+      requireSameMetaCols(spark, path, metaCols)
+      requireNotTombstoned(spark, path, batchIds,
+        isCommittedReplay = () => laneLanded(spark, path, batchId))
+    }
+
+    /** Whether any table holds a leaf of `lane` ([[laneExists]]). */
+    def laneLanded(spark: SparkSession, path: String, lane: Long): Boolean =
+      tablePaths(path).exists(p => laneExists(fsOf(spark, p), p, lane, level1))
+
+    /** The rows a rebuild starts from: `table` with the tombstones
+      * anti-joined out (distributed) — the rebuild IS the ledger reset,
+      * so without the filter it would resurrect every deleted row. Every
+      * table is gated like any reader, and the rebuild refuses while the
+      * tables' batch layers diverge: a writer that crashed between two
+      * table writes left a batch some tables lack, and rebuilding from
+      * `table` then could omit it permanently once readers flip. */
+    def liveRows(spark: SparkSession, path: String, table: String): DataFrame = {
+      val ls = layouts(spark, path)
+      if (ls.map(l => (l.batchLeaves, l.maxBatchId)).distinct.size > 1)
+        throw new IllegalStateException(
+          s"index at $path has diverged batch layers: " +
+            tables.zip(ls).map { case (t, l) =>
+              s"$t has ${l.batchLeaves} batch leaves (maxBatchId ${l.maxBatchId})"
+            }.mkString(" vs ") +
+            ". A writer crashed between two table writes or folds; rebuilding " +
+            s"from $table now could permanently omit a batch it lacks. Remedy: " +
+            "resume the ingest stream so the interrupted batch replays (keyed " +
+            "appends overwrite their own leaves), retry the interrupted manual " +
+            "append (it reuses its lane and heals), or rerun the fold at the " +
+            "committed batch id to complete an interrupted fold — then rebuild " +
+            "once the layouts agree.")
+      val rows = spark.read.parquet(s"$path/$table")
+      ledger(spark, path).fold(rows)(d =>
+        rows.join(d.select(col("id").as(idCol)), Seq(idCol), "left_anti"))
+    }
+
+    /** Backfill METADATA columns onto every table (r19): the id-keyed
+      * column-join upgrade for filtered search, instead of a full
+      * rebuild. `meta` holds ONE row per id (column `metaIdCol`) covering
+      * every live row. Ordering is deliberate:
+      *  1. [[requireLayout]] on every table — a flat pre-two-level table
+      *     cannot be rewritten into the two-level layout, so it refuses
+      *     with the rebuild remedy before anything is written;
+      *  2. STAGE the meta frame to `<index>/_backfill_meta` and validate
+      *     one-row-per-id on the staged copy — the caller's plan executes
+      *     exactly ONCE (a frame derived from the index's own tables
+      *     would otherwise die when the first table swap invalidates its
+      *     captured listing — observed at 20 M; and a non-deterministic
+      *     frame could pass validation yet join different rows);
+      *  3. write `_meta_cols` (the union) BEFORE the table rewrites: a
+      *     crash between rewrite and contract write would otherwise let a
+      *     meta-less append PASS the contract and land rows whose new
+      *     metadata reads as NULL — silently dropped by filtered probes.
+      *     Contract-first makes every post-crash failure LOUD instead:
+      *     appends must carry the union, and the rerun completes the
+      *     rewrites. A clash with stored columns is therefore legal
+      *     exactly when it is our own interrupted upgrade — some table
+      *     still missing the clashed columns — and refused otherwise.
+      * Table rewrites are per-table resumable ([[backfillTableMetaCols]]
+      * skips a table already carrying every column). Returns true when
+      * rows were rewritten. */
+    def backfillMetaCols(spark: SparkSession, path: String, meta: DataFrame,
+        metaIdCol: String, metaCols: Seq[String]): Boolean = {
+      requireLayout(spark, path)
+      require(metaCols.nonEmpty, "pass the metadata columns to backfill")
+      require(meta.columns.contains(metaIdCol) && metaCols.forall(meta.columns.contains),
+        s"metadata frame must carry '$metaIdCol' and ${metaCols.mkString(", ")}; " +
+          s"got ${meta.columns.mkString(", ")}")
+      val fs = fsOf(spark, new Path(path))
+      val stored = readMetaColsFile(fs, path)
+      val clash = metaCols.intersect(stored)
+      if (clash.nonEmpty) {
+        val unfinished = tables.exists { t =>
+          val cols = scala.util.Try(
+            spark.read.parquet(s"$path/$t").columns.toSet).getOrElse(Set.empty)
+          !clash.forall(cols.contains)
+        }
+        require(unfinished,
+          s"index at $path already stores metaCols [${clash.mkString(", ")}] — " +
+            "backfill only ADDS columns; rebuild to change existing ones")
+      }
+      val scratch = new Path(s"$path/_backfill_meta")
+      meta.select(col(metaIdCol).as(idCol) +: metaCols.map(col): _*)
+        .write.mode("overwrite").parquet(scratch.toString)
+      try {
+        val m = spark.read.parquet(scratch.toString)
+        val mAgg = m.agg(count(lit(1)), count_distinct(col(idCol))).collect()(0)
+        require(mAgg.getLong(0) == mAgg.getLong(1),
+          s"metadata frame must hold ONE row per id: ${mAgg.getLong(0)} rows over " +
+            s"${mAgg.getLong(1)} distinct ids — a duplicated id would multiply " +
+            "index rows through the join")
+        writeMetaColsFile(fs, path, (stored ++ metaCols).distinct)
+        tables.map(t =>
+          backfillTableMetaCols(spark, path, t, m, idCol, metaCols, level1))
+          .reduce(_ || _)
+      } finally { fs.delete(scratch, true); () }
     }
   }
 }

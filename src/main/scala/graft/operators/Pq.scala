@@ -611,54 +611,17 @@ object Pq {
     require(newPath != path,
       s"rebuild is build-aside: newPath must differ from the live index ($path); " +
         "flip readers to newPath after the rebuild, then delete the old index")
-    // a rebuild reads BOTH live tables (vectors here, codes untouched but
-    // the layouts must be consistent) — gate like any reader
-    val hconf = spark.sparkContext.hadoopConfiguration
-    for (t <- Seq("codes", "vectors")) {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-      IndexMaintenance.requireReadConsistent(p.getFileSystem(hconf), p)
-    }
-    // ... and gate on the crash state the fold markers CANNOT see: an
-    // append that died between the codes write and the vectors write
-    // (writeRows emits codes first) leaves a codes-only batch leaf —
-    // keyed and manual appends alike (r17 moved manual appends from
-    // blind `-1` writes into their own lanes, so their half-landed
-    // state is now visible here too). This rebuild reads ONLY vectors,
-    // so rebuilding from the diverged pair would silently omit that
-    // batch — and once readers flip and the old index is deleted
-    // before the batch is retried/replayed, the gap is permanent. A
-    // batch-leaf divergence is one driver-side FS walk to detect;
-    // refuse with the remedy instead of baking in the gap. (A
-    // fold-crash divergence — codes folded, vectors not — also trips
-    // this; its remedy is the same line's compactPqIndex, and erring
-    // loud on a state two crash modes share beats guessing.)
-    val codesL = IndexMaintenance.layoutStats(spark, s"$path/codes")
-    val vecsL = IndexMaintenance.layoutStats(spark, s"$path/vectors")
-    if (codesL.batchLeaves != vecsL.batchLeaves || codesL.maxBatchId != vecsL.maxBatchId)
-      throw new IllegalStateException(
-        s"IVFPQ index at $path has diverged batch layers: codes has " +
-          s"${codesL.batchLeaves} batch leaves (maxBatchId ${codesL.maxBatchId}) " +
-          s"vs vectors ${vecsL.batchLeaves} (maxBatchId ${vecsL.maxBatchId}). " +
-          "A writer crashed between the two table writes or folds; rebuilding " +
-          "from the vectors table now could permanently omit a codes-only batch. " +
-          "Remedy: resume the ingest stream so the interrupted batch replays " +
-          "(appendPqIndexIdempotent overwrites its own leaves), retry the " +
-          "interrupted manual appendPqIndex (it reuses its lane and heals), " +
-          "or run compactPqIndex(committedBatchId) to complete an interrupted " +
-          "fold — then rebuild once the layouts agree.")
+    // the live, tombstone-filtered vectors, read behind the reader gate
+    // on BOTH tables; refused while their batch layers diverge — a
+    // codes-only batch (a writer that died between writeRows' two table
+    // writes, keyed or manual) would be silently omitted from a rebuild
+    // that reads only vectors ([[IndexMaintenance.Family.liveRows]])
+    val corpus = PqFamily.liveRows(spark, path, "vectors")
+      .drop("cn", "cell", "ingest_batch")
     val (oldCents, oldModel) = loadModel(spark, path)
     val nl = if (nlist > 0) nlist else oldCents.length
     val mm = if (m > 0) m else oldModel.m
     val ks = if (ksub > 0) ksub else oldModel.ksub
-    // keep stored metadata columns (r18 filtered probes) — only the
-    // derived layout columns are recomputed by the rebuild
-    val corpus0 = spark.read.parquet(s"$path/vectors")
-      .drop("cn", "cell", "ingest_batch")
-    // the rebuild IS the ledger reset — start from the tombstone-
-    // filtered rows so deleted vectors never resurrect (r17 review)
-    val corpus = IndexMaintenance.readDeletes(spark, path, enforceCap = false).map(d =>
-      corpus0.join(broadcast(d.select(col("id").as("corpus_id"))),
-        Seq("corpus_id"), "left_anti")).getOrElse(corpus0)
     val both = Similarity.hashSpreadVecsById(corpus, "corpus_id", "cv", 2 * maxSample)
     val (train, ref) = Similarity.heldOutSplit(both, maxSample)
     val cents = Similarity.trainIvfCentroidsFromSample(train, nl, iters)
@@ -667,214 +630,75 @@ object Pq {
       spreadFiles, metaCols = corpus.columns.filterNot(Set("corpus_id", "cv")).toSeq)
   }
 
-  /** Compact a streamed-into IVFPQ index — INCREMENTALLY, the
-    * [[Similarity.compactIvfIndex]] twin over BOTH tables: fold every
-    * `0 ≤ ingest_batch ≤ committedBatchId` leaf of `codes/` and
-    * `vectors/` into their `ingest_batch=-1` layers, never reading or
-    * rewriting the resident `-1` files — fold cost scales with the
-    * folded batches, not the index (the r14 version rewrote both whole
-    * tables per fold). Same replay contract: only fold batch ids the
-    * stream's checkpoint has committed, so
-    * [[appendPqIndexIdempotent]]'s overwrite-on-replay still converges.
-    * Manual [[appendPqIndex]] lanes (ids ≥
-    * [[IndexMaintenance.ManualLaneFloor]]) fold only when the watermark
-    * passes them — do that only when no retry of them can follow.
-    *
-    * Crash safety: marker-staged per table ([[IndexMaintenance]]);
-    * [[recoverPqFold]] repairs an interruption, and readers/appenders
-    * refuse until it has. The two tables fold one after the other — a
-    * crash between them leaves codes folded and vectors not, which is
-    * benign (answers never change under a fold; the vectors fold
-    * completes on the next compact). Single-writer contract. */
+  /** Compact a streamed-into IVFPQ index incrementally: fold every
+    * checkpoint-committed batch leaf of `codes/` and `vectors/` into
+    * their resident `-1` layers ([[IndexMaintenance.Family.fold]]).
+    * [[recoverPqFold]] repairs an interruption. */
   def compactPqIndex(spark: SparkSession, path: String,
-      committedBatchId: Long, spreadFiles: Int = 0): Unit = {
-    // loop-invariant: one centroid count serves both tables
-    val nlist = spark.read.parquet(s"$path/model/centroids").count().toInt
-    for (table <- Seq("codes", "vectors"))
-      IndexMaintenance.foldCommitted(spark, s"$path/$table", committedBatchId,
-        Similarity.cellSpread(_, nlist, spreadFiles = spreadFiles))
-  }
+      committedBatchId: Long, spreadFiles: Int = 0): Unit =
+    PqFamily.fold(spark, path, committedBatchId, spreadFiles)
 
-  /** Minor compaction of both IVFPQ tables' RESIDENT (`ingest_batch=-1`)
-    * layers — [[Similarity.compactIvfResident]]'s twin: per cell, rewrite
-    * only cells whose `-1` file count exceeds `maxFilesPerCell` (0 =
-    * derive 2× the spread bound), leaving under-bound cells untouched;
-    * cost scales with the accrued cells' data, not the index. The two
-    * tables compact one after the other — a crash between them is benign
-    * exactly as for the fold (answers never change under a resident
-    * compaction; the second table's pass completes on the next call).
-    * Marker-staged; [[recoverPqFold]] repairs a crash. Returns cells
-    * compacted in (codes, vectors) order. Single-writer contract. */
+  /** Minor compaction of both IVFPQ tables' resident layers
+    * ([[IndexMaintenance.Family.compactResident]]). Returns cells
+    * compacted in (codes, vectors) order. */
   def compactPqResident(spark: SparkSession, path: String,
-      maxFilesPerCell: Int = 0, spreadFiles: Int = 0): (Int, Int) = {
-    val nlist = spark.read.parquet(s"$path/model/centroids").count().toInt
-    val bound = Similarity.residentBound(spark, nlist, maxFilesPerCell, spreadFiles)
-    def one(table: String) =
-      IndexMaintenance.compactResident(spark, s"$path/$table", bound,
-        Similarity.cellSpread(_, nlist, spreadFiles = spreadFiles))
-    (one("codes"), one("vectors"))
-  }
+      maxFilesPerCell: Int = 0, spreadFiles: Int = 0): (Int, Int) =
+    pair(PqFamily.compactResident(spark, path, maxFilesPerCell, spreadFiles))
 
-  /** Backfill METADATA columns onto a stored IVFPQ index (r19) —
-    * [[Similarity.backfillMetaCols]]'s twin over BOTH tables: the r18
-    * design stores metaCols in codes (so the ADC stage filters and
-    * non-matching rows never consume shortlist budget) AND vectors (so
-    * the saturation path, which never reads codes, filters too), so
-    * the upgrade joins the same metadata into both. Each table's
-    * rewrite is independently resumable — a crash between them reruns
-    * to completion, the already-backfilled table returning untouched.
-    * Everything else (one row per id, live-row coverage, contract-file
-    * update, tombstones, single-writer) as the IVF twin. The id-keyed
-    * column join replaces the full rebuild — for PQ a complete
-    * re-ENCODE (160 s at the 20 M rung, SCALE.md 18a) for what is two
-    * joins. */
+  /** Backfill METADATA columns onto a stored IVFPQ index (r19)
+    * ([[IndexMaintenance.Family.backfillMetaCols]]). The r18 design
+    * stores metaCols in codes (so the ADC stage filters and non-matching
+    * rows never consume shortlist budget) AND vectors (so the saturation
+    * path, which never reads codes, filters too), so the upgrade joins
+    * the same metadata into both — an id-keyed column join instead of a
+    * complete re-ENCODE (160 s at the 20 M rung, SCALE.md 18a). */
   def backfillMetaCols(spark: SparkSession, path: String, meta: DataFrame,
       idCol: String = "id", metaCols: Seq[String]): Boolean = {
     Similarity.requireMetaCols(metaCols)
     requirePqMetaCols(metaCols)
-    requireBatchKeyedLayout(spark, path)
-    IndexMaintenance.backfillMetaColsFamily(spark, path, meta, idCol,
-      metaCols, tables = Seq("codes", "vectors"))
+    PqFamily.backfillMetaCols(spark, path, meta, idCol, metaCols)
   }
 
-  /** DELETE vectors from a stored IVFPQ index (r17) —
-    * [[Similarity.deleteFromIvfIndex]]'s twin: one tiny ledger append;
-    * every [[pqTopKIndexed]] probe anti-joins the ledger out of BOTH
-    * stages (codes, so deleted docs stop consuming ADC shortlist
+  /** DELETE vectors from a stored IVFPQ index (r17): one tiny ledger
+    * append; every [[pqTopKIndexed]] probe anti-joins the ledger out of
+    * BOTH stages (codes, so deleted docs stop consuming ADC shortlist
     * budget, and vectors); [[purgePqDeletes]] reclaims the bytes. */
   def deleteFromPqIndex(ids: DataFrame, path: String,
       idCol: String = "id"): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .coalesce(1).write.mode("append")
-      .parquet(IndexMaintenance.deletesDir(path))
+    PqFamily.delete(ids, path, idCol)
 
-  /** Physically remove tombstoned vectors from BOTH tables (r17) —
-    * [[Similarity.purgeIvfDeletes]]'s twin: marker-staged per table
-    * (codes then vectors — a crash between them is benign, the ledger
-    * still hides the remaining rows and a rerun completes), then the
-    * ledger clears. Requires every tombstoned row folded in both
-    * tables — the precise gate (r18,
-    * [[IndexMaintenance.tombstonesUnfolded]]), same rationale as the
-    * IVF twin. Returns cells rewritten per table. */
+  /** Physically remove tombstoned vectors from BOTH tables, then clear
+    * the ledger ([[IndexMaintenance.Family.purge]]). Returns cells
+    * rewritten per table. */
   def purgePqDeletes(spark: SparkSession, path: String,
       spreadFiles: Int = 0): (Int, Int) =
-    IndexMaintenance.readDeletes(spark, path, enforceCap = false) match {
-      case None => (0, 0)
-      case Some(ledger) =>
-        require(!IndexMaintenance.tombstonesUnfolded(
-            spark, s"$path/codes", ledger, "corpus_id") &&
-          !IndexMaintenance.tombstonesUnfolded(
-            spark, s"$path/vectors", ledger, "corpus_id"),
-          s"index at $path has tombstoned rows in unfolded batch lanes — " +
-            "fold past them first (compactPqIndex at a covering watermark): " +
-            "a deleted row in an unfolded lane would survive the purge and " +
-            "resurface once the ledger cleared")
-        val nlist = spark.read.parquet(s"$path/model/centroids").count().toInt
-        val d = ledger.select(col("id").as("corpus_id"))
-        // nothing-to-remove fast path, per table (a rerun after a crash
-        // between the table rewrites and the ledger clear finishes only
-        // the table that still carries tombstoned rows)
-        def one(table: String) = {
-          val matches = spark.read.parquet(s"$path/$table")
-            .join(broadcast(d), Seq("corpus_id"), "left_semi").limit(1).count()
-          if (matches == 0) 0
-          else IndexMaintenance.rewriteResident(spark, s"$path/$table", 0,
-            df => df.join(broadcast(d), Seq("corpus_id"), "left_anti"),
-            Similarity.cellSpread(_, nlist, spreadFiles = spreadFiles))
-        }
-        val out = (one("codes"), one("vectors"))
-        IndexMaintenance.clearDeletes(spark, path)
-        out
-    }
+    pair(PqFamily.purge(spark, path, spreadFiles))
 
   /** Deterministic recovery after a crashed [[compactPqIndex]] /
-    * [[compactPqResident]] (or a crash under the pre-r15 rename-swap),
-    * covering both tables. Also resolves orphan MANUAL lanes (r17 — a
-    * crashed [[appendPqIndex]]): a lane present in BOTH tables fully
-    * landed and is adopted (watermark advances; do NOT retry that
-    * batch — it is in the index); a lane present in only one table
-    * never landed — its call never returned success — and is deleted
-    * (DO retry that batch to land it whole). Idempotent; returns what
-    * was repaired, None when clean. */
-  def recoverPqFold(spark: SparkSession, path: String): Option[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val codesT = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val vecsT = new org.apache.hadoop.fs.Path(s"$path/vectors")
-    val fs = codesT.getFileSystem(hconf)
-    val msgs = Seq("codes", "vectors")
-      .flatMap(t => IndexMaintenance.recover(spark, s"$path/$t")) ++ {
-      val w = IndexMaintenance.readManualWatermark(fs, codesT)
-      val inCodes = IndexMaintenance.manualLanes(fs, codesT, w).toSet
-      val inVecs = IndexMaintenance.manualLanes(fs, vecsT, w).toSet
-      val (complete, half) = (inCodes ++ inVecs).toSeq.partition(l =>
-        inCodes(l) && inVecs(l))
-      half.foreach { l =>
-        IndexMaintenance.deleteLane(fs, codesT, l)
-        IndexMaintenance.deleteLane(fs, vecsT, l)
-      }
-      if (complete.nonEmpty)
-        IndexMaintenance.writeManualWatermark(fs, codesT, complete.max)
-      (if (complete.nonEmpty)
-        Seq(s"adopted ${complete.size} fully-landed manual append(s) at $path " +
-          s"(lanes ${complete.sorted.mkString(",")}) — do NOT retry those batches")
-      else Seq.empty) ++
-        (if (half.nonEmpty)
-          Seq(s"deleted ${half.size} half-landed manual lane(s) at $path " +
-            s"(lanes ${half.sorted.mkString(",")}) — those batches never landed; " +
-            "retry them to land them whole")
-        else Seq.empty)
-    }
-    if (msgs.isEmpty) None else Some(msgs.mkString("; "))
-  }
+    * [[compactPqResident]] / [[purgePqDeletes]] over both tables, and
+    * the manual-lane rule for a crashed [[appendPqIndex]]: a lane in
+    * both tables is adopted (do NOT retry it), a lane in only one is
+    * deleted (DO retry it) — [[IndexMaintenance.Family.recover]]. */
+  def recoverPqFold(spark: SparkSession, path: String): Option[String] =
+    PqFamily.recover(spark, path)
 
-  /** Layout health of both IVFPQ tables — [[Similarity.ivfIndexLayout]]'s
-    * twin, one [[IndexLayoutStats]] per table in (codes, vectors) order.
-    * The two normally move together (every writer writes both); a codes/
-    * vectors divergence in `batchLeaves` means a crash landed between
-    * the two table writes or folds — benign (heals on replay / next
-    * compact), but visible here before it heals. */
+  /** Layout health of both IVFPQ tables, in (codes, vectors) order. The
+    * two normally move together; a divergence in `batchLeaves` means a
+    * crash landed between the two table writes or folds — benign (heals
+    * on replay / next compact), but visible here before it heals. */
   def pqIndexLayout(spark: SparkSession,
       path: String): (IndexLayoutStats, IndexLayoutStats) =
-    (IndexMaintenance.layoutStats(spark, s"$path/codes"),
-      IndexMaintenance.layoutStats(spark, s"$path/vectors"))
+    pair(PqFamily.layouts(spark, path))
 
-  /** [[Similarity.maintenanceAdvice]]'s IVFPQ twin: one recommendation
-    * over BOTH tables — each signal takes the worse of codes/vectors
-    * (they normally move together; a divergence means a crash landed
-    * between the two table writes and the worse side is the one that
-    * needs the remedy). Layout-stats-priced; pass `driftTripped` from
-    * the ingest loop's [[shouldRetrain]] verdict. */
+  /** One recommendation over both tables, judged on the worse one
+    * ([[IndexMaintenance.Family.advice]]); pass `driftTripped` from the
+    * ingest loop's [[shouldRetrain]] verdict. */
   def maintenanceAdvice(spark: SparkSession, path: String,
       driftTripped: Boolean = false, maxFilesPerCell: Int = 0,
       foldLeavesPerCell: Int = 2, spreadFiles: Int = 0,
-      maxTombstones: Long = 100000L): MaintenanceAdvice = {
-    val nlist = spark.read.parquet(s"$path/model/centroids").count().toInt
-    val (codes, vectors) = pqIndexLayout(spark, path)
-    val worse =
-      if (codes.batchLeaves >= vectors.batchLeaves &&
-        codes.maxResidentFilesPerCell >= vectors.maxResidentFilesPerCell) codes
-      else if (vectors.batchLeaves >= codes.batchLeaves &&
-        vectors.maxResidentFilesPerCell >= codes.maxResidentFilesPerCell) vectors
-      else IndexLayoutStats(
-        math.max(codes.cells, vectors.cells),
-        math.max(codes.batchLeaves, vectors.batchLeaves),
-        math.max(codes.maxBatchId, vectors.maxBatchId),
-        math.max(codes.residentFiles, vectors.residentFiles),
-        math.max(codes.maxResidentFilesPerCell, vectors.maxResidentFilesPerCell),
-        math.max(codes.batchFiles, vectors.batchFiles))
-    // one ledger read serves both signals (it materializes driver-side)
-    val ledger = IndexMaintenance.readDeletes(spark, path, enforceCap = false)
-    val pending = ledger.map(_.count()).getOrElse(0L)
-    // the precise fold-first signal (either table), priced only when
-    // over threshold
-    val unfolded = pending > maxTombstones &&
-      ledger.exists(d =>
-        IndexMaintenance.tombstonesUnfolded(spark, s"$path/codes", d, "corpus_id") ||
-          IndexMaintenance.tombstonesUnfolded(spark, s"$path/vectors", d, "corpus_id"))
-    IndexMaintenance.advise(worse, driftTripped,
-      Similarity.residentBound(spark, nlist, maxFilesPerCell, spreadFiles),
-      foldLeavesPerCell, pending, maxTombstones, unfolded)
-  }
+      maxTombstones: Long = 100000L): MaintenanceAdvice =
+    PqFamily.advice(spark, path, driftTripped, maxFilesPerCell,
+      foldLeavesPerCell, spreadFiles, maxTombstones)
 
   /** The retrain TRIGGER the drift monitor feeds: quantization health of
     * `batch` under the stored model vs the build-time reference row.
@@ -1009,114 +833,49 @@ object Pq {
     require(!metaCols.contains("codes") && !metaCols.contains("s"),
       "metaCols collide with the PQ layout's columns: codes/s are reserved")
 
-  /** r15 changed the stored layout from `partitionBy(cell)` to
-    * `partitionBy(cell, ingest_batch)` (for replay-idempotent streaming
-    * appends + incremental compaction). Appending the two-level layout
-    * into a flat pre-r15 index would mix partition depths and break
-    * partition discovery with an unrelated-looking error — detect it up
-    * front with the remedy. Memoized per (JVM, path) like the IVF guard;
-    * the check visits the codes table (both tables are written
-    * together) and also refuses on unrecovered fold debris. */
-  private val layoutGuard = new IndexMaintenance.TwoLevelLayoutGuard(
-    "Rebuild the index with writePqIndex.")
-  private def requireBatchKeyedLayout(spark: SparkSession, path: String): Unit = {
-    layoutGuard.require(spark, s"$path/codes")
-    layoutGuard.require(spark, s"$path/vectors")
+  /** IVFPQ as a lifecycle family: `codes` (written first, so it also
+    * carries the manual-lane watermark) and `vectors`. r15 changed the
+    * stored layout from `partitionBy(cell)` to `partitionBy(cell,
+    * ingest_batch)`, so the layout guard refuses a flat pre-r15 index
+    * with the rebuild remedy. */
+  private[graft] object PqFamily extends IndexMaintenance.Family(
+      Seq("codes", "vectors"), "cell", "corpus_id", "Rebuild the index with writePqIndex.") {
+    def cells(spark: SparkSession, path: String): Int =
+      spark.read.parquet(s"$path/model/centroids").count().toInt
   }
-  private[graft] def layoutChecksCount: Long = layoutGuard.count
-  private[graft] def resetLayoutCheckCache(): Unit = layoutGuard.reset()
+
+  private def pair[T](s: Seq[T]): (T, T) = (s(0), s(1))
+
+  private[graft] def layoutChecksCount: Long = PqFamily.guard.count
+  private[graft] def resetLayoutCheckCache(): Unit = PqFamily.guard.reset()
 
   /** Incremental append: assign + encode the batch against the STORED
     * model (no retrain — same drift contract as
-    * [[Similarity.appendIvfIndex]]) and write it into both layouts under
-    * the next MANUAL lane id, RETRY-IDEMPOTENT (r17 — the
-    * [[Similarity.appendIvfIndex]] shape over two tables): the lane
-    * lands via dynamic partition overwrite in codes then vectors, and
-    * the `_manual_watermark` file (kept on the codes table — written
-    * first, so it sees every lane) advances only after BOTH writes. A
-    * failed append retried with the same batch reuses its lane,
-    * overwriting its own codes leaves and writing the missing vectors
-    * leaves — a crash BETWEEN the two table writes heals exactly the
-    * same way the keyed replay does. A crash followed by a DIFFERENT
-    * batch resolves by the orphan's shape: a lane present in both
-    * tables fully landed and is adopted (watermark advances past it); a
-    * codes-only lane never landed — its call never returned — and is
-    * deleted before the new batch takes a fresh lane (pre-r17 those
-    * orphan codes rows sat in `-1` forever, wasting ADC shortlist
-    * slots). The id-set fingerprint decides retry vs different; batch
-    * ids must be NEW to the index. For exactly-once streaming ingest
-    * use [[appendPqIndexIdempotent]]. */
+    * [[Similarity.appendIvfIndex]]) and write it into both tables under
+    * the next MANUAL lane, RETRY-IDEMPOTENT
+    * ([[IndexMaintenance.Family.appendManual]]): a failed append retried
+    * with the same batch reuses its lane, overwriting its own codes
+    * leaves and writing the missing vectors leaves — a crash BETWEEN the
+    * two table writes heals the same way the keyed replay does. A
+    * codes-only orphan lane followed by a DIFFERENT batch is deleted
+    * (pre-r17 those orphan codes rows sat in `-1` forever, wasting ADC
+    * shortlist slots). Batch ids must be NEW to the index. For
+    * exactly-once streaming ingest use [[appendPqIndexIdempotent]]. */
   def appendPqIndex(batch: DataFrame, cId: String, cVec: String, path: String,
-      spreadFiles: Int = 0, metaCols: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    requireBatchKeyedLayout(spark, path)
-    IndexMaintenance.requireSameMetaCols(spark, path, metaCols)
-    IndexMaintenance.requireNotTombstoned(spark, path,
-      batch.select(col(cId).as("id")))
-    val (cents, model) = loadModel(spark, path)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val codesT = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val vecsT = new org.apache.hadoop.fs.Path(s"$path/vectors")
-    val fs = codesT.getFileSystem(hconf)
-    val w = IndexMaintenance.readManualWatermark(fs, codesT)
-    val inCodes = IndexMaintenance.manualLanes(fs, codesT, w).toSet
-    val inVecs = IndexMaintenance.manualLanes(fs, vecsT, w).toSet
-    val orphans = (inCodes ++ inVecs).toSeq
-    val lane =
-      if (orphans.isEmpty) w + 1
-      else {
-        // EVERY orphan is fingerprinted (r18 — two crashed appends then a
-        // retry of either must find its OWN lane; the r17 size==1 gate
-        // wrote a retried batch twice whenever more than one orphan
-        // existed). Fingerprint from whichever table has the lane (codes
-        // is written first, so it always does unless hand-damaged); a
-        // matched HALF-landed lane heals on reuse — writeRows overwrites
-        // its codes leaves and writes the missing vectors leaves.
-        val batchFp = IndexMaintenance.idSetFingerprint(batch.select(col(cId).as("id")))
-        def laneFp(l: Long): (Long, Long) = {
-          val src = if (inCodes(l)) "codes" else "vectors"
-          IndexMaintenance.idSetFingerprint(
-            spark.read.option("basePath", s"$path/$src").parquet(s"$path/$src")
-              .filter(col("ingest_batch") === l)
-              .select(col("corpus_id").as("id")))
-        }
-        orphans.sorted.find(l => laneFp(l) == batchFp) match {
-          case Some(l) => // the documented retry
-            // half-landed lanes BELOW the reused lane would be implicitly
-            // committed by the final watermark advance with one table
-            // missing — delete them first (their calls never returned
-            // success, so nothing confirmed is lost); complete lanes
-            // below l adopt implicitly, lanes above l stay orphaned for
-            // the next call to resolve
-            orphans.filter(o => o < l && !(inCodes(o) && inVecs(o))).foreach { o =>
-              IndexMaintenance.deleteLane(fs, codesT, o)
-              IndexMaintenance.deleteLane(fs, vecsT, o)
-            }
-            l
-          case None =>
-            val (complete, half) = orphans.partition(l => inCodes(l) && inVecs(l))
-            half.foreach { l =>
-              IndexMaintenance.deleteLane(fs, codesT, l)
-              IndexMaintenance.deleteLane(fs, vecsT, l)
-            }
-            if (complete.nonEmpty)
-              IndexMaintenance.writeManualWatermark(fs, codesT, complete.max)
-            IndexMaintenance.readManualWatermark(fs, codesT) + 1
-        }
-      }
-    writeRows(batch, cId, cVec, path, cents, model, "dynamic", lane, spreadFiles,
-      metaCols)
-    IndexMaintenance.writeManualWatermark(fs, codesT, lane)
-  }
+      spreadFiles: Int = 0, metaCols: Seq[String] = Nil): Unit =
+    PqFamily.appendManual(batch.select(col(cId).as("id")), path, metaCols) { lane =>
+      val (cents, model) = loadModel(batch.sparkSession, path)
+      writeRows(batch, cId, cVec, path, cents, model, "dynamic", lane, spreadFiles,
+        metaCols)
+    }
 
-  /** Replay-idempotent append — [[Similarity.appendIvfIndexIdempotent]]'s
-    * PQ twin: the batch lands under `cell=<c>/ingest_batch=<batchId>`
-    * leaves of BOTH tables via dynamic partition overwrite, so a
-    * re-delivered foreachBatch id overwrites its own leaves instead of
-    * appending twice. A crash BETWEEN the two table writes also heals on
-    * replay: the re-delivered batch rewrites its codes leaves and writes
-    * the missing vectors leaves, converging both tables to the
-    * exactly-once state. Fold committed leaves with [[compactPqIndex]]. */
+  /** Replay-idempotent append: the batch lands under
+    * `cell=<c>/ingest_batch=<batchId>` leaves of BOTH tables via dynamic
+    * partition overwrite, so a re-delivered foreachBatch id overwrites
+    * its own leaves instead of appending twice. A crash BETWEEN the two
+    * table writes also heals on replay: the re-delivered batch rewrites
+    * its codes leaves and writes the missing vectors leaves. Fold
+    * committed leaves with [[compactPqIndex]]. */
   def appendPqIndexIdempotent(batch: DataFrame, cId: String, cVec: String,
       path: String, batchId: Long, spreadFiles: Int = 0,
       metaCols: Seq[String] = Nil): Unit = {
@@ -1131,25 +890,7 @@ object Pq {
   def appendPqIndexIdempotent(batch: DataFrame, cId: String, cVec: String,
       path: String, cents: Array[Array[Double]], model: PqModel, batchId: Long,
       spreadFiles: Int, metaCols: Seq[String]): Unit = {
-    require(batchId >= 0, s"batchId must be >= 0 (got $batchId): -1 marks resident rows")
-    require(batchId < IndexMaintenance.ManualLaneFloor,
-      s"batchId $batchId is in the manual-append lane " +
-        s"(>= ${IndexMaintenance.ManualLaneFloor}); that lane belongs to appendPqIndex")
-    requireBatchKeyedLayout(batch.sparkSession, path)
-    IndexMaintenance.requireSameMetaCols(batch.sparkSession, path, metaCols)
-    // a re-delivered batch whose write (even partially: codes land
-    // first) committed is a harmless self-overwrite — the ledger hides
-    // its rows in BOTH probe stages; without the escape, deleting an id
-    // from an uncheckpointed batch would throw on every restart (r18)
-    val codesTbl = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val vecsTbl = new org.apache.hadoop.fs.Path(s"$path/vectors")
-    val tblFs = codesTbl.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    IndexMaintenance.requireNotTombstoned(batch.sparkSession, path,
-      batch.select(col(cId).as("id")),
-      isCommittedReplay = () =>
-        IndexMaintenance.laneExists(tblFs, codesTbl, batchId) ||
-          IndexMaintenance.laneExists(tblFs, vecsTbl, batchId))
+    PqFamily.requireKeyedAppend(batch.select(col(cId).as("id")), path, batchId, metaCols)
     writeRows(batch, cId, cVec, path, cents, model, "dynamic", batchId, spreadFiles,
       metaCols)
   }

@@ -455,22 +455,11 @@ object Similarity {
     require(newPath != path,
       s"rebuild is build-aside: newPath must differ from the live index ($path); " +
         "flip readers to newPath after the rebuild, then delete the old index")
-    // a rebuild is a reader of the live index: a live fold's sub-second
-    // marker window just delays it; crash debris fails with the remedy
-    val corpusPath = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    IndexMaintenance.requireReadConsistent(
-      corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration), corpusPath)
-    // keep stored metadata columns (r18 filtered probes) — only the
-    // derived layout columns are recomputed by the rebuild
-    val corpus0 = spark.read.parquet(s"$path/corpus")
+    // the live, tombstone-filtered rows (the retrain sample included),
+    // read behind the reader gate; stored metadata columns (r18 filtered
+    // probes) are kept — only the derived layout columns are recomputed
+    val corpus = IvfFamily.liveRows(spark, path, "corpus")
       .drop("cn", "cell", "ingest_batch")
-    // the rebuild IS the ledger reset: it starts from the
-    // tombstone-filtered rows (the retrain sample included), and the
-    // fresh index at newPath carries no ledger — without this filter a
-    // rebuild would silently resurrect every deleted vector (r17 review)
-    val corpus = IndexMaintenance.readDeletes(spark, path, enforceCap = false).map(d =>
-      corpus0.join(broadcast(d.select(col("id").as("corpus_id"))),
-        Seq("corpus_id"), "left_anti")).getOrElse(corpus0)
     val nl = if (nlist > 0) nlist else loadIvfCentroids(spark, path).length
     val both = hashSpreadVecsById(corpus, "corpus_id", "cv", 2 * maxSample)
     val (train, ref) = heldOutSplit(both, maxSample)
@@ -491,14 +480,14 @@ object Similarity {
     * appends must carry the union from here on. Crash-recoverable
     * (rerun completes — [[IndexMaintenance.backfillTableMetaCols]]),
     * tombstones respected (rows keep riding the ledger; coverage is
-    * live-rows-only). Returns true when rows were rewritten. Offline
-    * maintenance under the single-writer contract. */
+    * live-rows-only). A flat pre-r12 corpus refuses with the rebuild
+    * remedy before anything is written. Returns true when rows were
+    * rewritten. Offline maintenance under the single-writer contract. */
   def backfillMetaCols(spark: org.apache.spark.sql.SparkSession,
       path: String, meta: DataFrame, idCol: String = "id",
       metaCols: Seq[String]): Boolean = {
     requireMetaCols(metaCols)
-    IndexMaintenance.backfillMetaColsFamily(spark, path, meta, idCol,
-      metaCols, tables = Seq("corpus"))
+    IvfFamily.backfillMetaCols(spark, path, meta, idCol, metaCols)
   }
 
   /** The IVF retrain RULE itself — fit fell more than the tolerance
@@ -590,39 +579,18 @@ object Similarity {
     * the lane a retry would overwrite). */
   def appendIvfIndex(batch: DataFrame, cId: String, cVec: String, path: String,
       cents: Array[Array[Double]], spreadFiles: Int = 0,
-      metaCols: Seq[String] = Nil): Unit = {
-    val spark = batch.sparkSession
-    requireBatchKeyedLayout(spark, path)
-    IndexMaintenance.requireSameMetaCols(spark, path, metaCols)
-    IndexMaintenance.requireNotTombstoned(spark, path,
-      batch.select(col(cId).as("id")))
-    val table = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val w = IndexMaintenance.readManualWatermark(fs, table)
-    val orphans = IndexMaintenance.manualLanes(fs, table, w)
-    val lane =
-      if (orphans.isEmpty) w + 1
-      else {
-        // EVERY orphan is fingerprinted (r18 — two crashed appends then a
-        // retry of either must find its OWN lane; the r17 size==1 gate
-        // wrote a retried batch twice under a fresh lane whenever more
-        // than one orphan existed): a match IS the documented retry and
-        // reuses that lane. Orphans BELOW the reused lane are implicitly
-        // adopted by the final watermark advance (their rows are complete
-        // and probe-visible, exactly like the explicit adoption); orphans
-        // ABOVE it stay orphaned for the next call to resolve.
-        val batchFp = IndexMaintenance.idSetFingerprint(batch.select(col(cId).as("id")))
-        def laneFp(l: Long) = IndexMaintenance.idSetFingerprint(
-          spark.read.option("basePath", s"$path/corpus").parquet(s"$path/corpus")
-            .filter(col("ingest_batch") === l)
-            .select(col("corpus_id").as("id")))
-        orphans.sorted.find(l => laneFp(l) == batchFp) match {
-          case Some(l) => l // the documented retry
-          case None => // adopt all: the orphans' rows are complete and already served
-            IndexMaintenance.writeManualWatermark(fs, table, orphans.max)
-            orphans.max + 1
-        }
-      }
+      metaCols: Seq[String] = Nil): Unit =
+    IvfFamily.appendManual(batch.select(col(cId).as("id")), path, metaCols)(
+      writeLane(batch, cId, cVec, path, cents, _, spreadFiles, metaCols))
+
+  /** Assign the batch against `cents` and land it under the
+    * `cell=<c>/ingest_batch=<lane>` leaves by DYNAMIC partition
+    * overwrite — a lane written again overwrites its own leaves. The
+    * overwrite mode is a WRITER option, not a session config, so
+    * concurrent static-overwrite users are unaffected. */
+  private def writeLane(batch: DataFrame, cId: String, cVec: String,
+      path: String, cents: Array[Array[Double]], lane: Long,
+      spreadFiles: Int, metaCols: Seq[String]): Unit =
     assigned(batch, cId, cVec, cents, metaCols)
       .withColumn("ingest_batch", lit(lane))
       // bounded files per cell, not tasks × nlist
@@ -631,40 +599,21 @@ object Similarity {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cell", "ingest_batch")
       .parquet(s"$path/corpus")
-    IndexMaintenance.writeManualWatermark(fs, table, lane)
+
+  /** IVF as a lifecycle family: the one-table case. The corpus layout
+    * went from `partitionBy(cell)` to `partitionBy(cell, ingest_batch)`
+    * in r12 (for replay-idempotent streaming appends), so the layout
+    * guard refuses a pre-r12 corpus with the rebuild remedy. */
+  private[graft] object IvfFamily extends IndexMaintenance.Family(
+      Seq("corpus"), "cell", "corpus_id", "Rebuild the index with writeIvfIndex.") {
+    def cells(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+      spark.read.parquet(s"$path/centroids").count().toInt
   }
-
-  /** r12 changed the stored-corpus layout from `partitionBy(cell)` to
-    * `partitionBy(cell, ingest_batch)` (for replay-idempotent streaming
-    * appends). Appending the two-level layout into a pre-r12 single-level
-    * directory would mix partition depths, and Spark's partition
-    * discovery then fails on the whole index with an unrelated-looking
-    * "conflicting directory structures" error at read time — so detect
-    * the old layout up front (data files directly under a `cell=` dir)
-    * and fail with the actual remedy: rebuild via [[writeIvfIndex]].
-    *
-    * The verdict is MEMOIZED per index path per JVM: a pre-r12 layout
-    * cannot appear after a check has passed (every writer in this module
-    * writes the two-level layout, and a pass on a fresh path stays valid
-    * because the first append creates that layout), so a streaming sink
-    * appending every trigger pays ONE FS listing instead of per-batch
-    * namenode chatter. A failed check is NOT cached — the caller's
-    * remedy (rebuild) changes the on-disk state, so a retry must re-look.
-    * The same memoized visit also refuses when an interrupted fold's
-    * staging debris exists ([[IndexMaintenance.requireNoDebris]]) —
-    * appending around unrecovered debris would double-count a folded
-    * batch; [[recoverIvfFold]] is the remedy. */
-  private val layoutGuard = new IndexMaintenance.TwoLevelLayoutGuard(
-    "Rebuild the index with writeIvfIndex.")
-
-  private[operators] def requireBatchKeyedLayout(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    layoutGuard.require(spark, s"$path/corpus")
 
   /** Test seam: count of FS-listing layout checks actually performed —
     * lets a spec prove a multi-batch stream listed the layout once. */
-  private[graft] def layoutChecksCount: Long = layoutGuard.count
-  private[graft] def resetLayoutCheckCache(): Unit = layoutGuard.reset()
+  private[graft] def layoutChecksCount: Long = IvfFamily.guard.count
+  private[graft] def resetLayoutCheckCache(): Unit = IvfFamily.guard.reset()
 
   /** Replay-idempotent append for exactly-once streaming ingest: the
     * batch lands under `cell=<c>/ingest_batch=<batchId>` leaf directories
@@ -684,30 +633,8 @@ object Similarity {
   def appendIvfIndexIdempotent(batch: DataFrame, cId: String, cVec: String,
       path: String, cents: Array[Array[Double]], batchId: Long,
       spreadFiles: Int = 0, metaCols: Seq[String] = Nil): Unit = {
-    require(batchId >= 0, s"batchId must be >= 0 (got $batchId): -1 marks resident rows")
-    require(batchId < IndexMaintenance.ManualLaneFloor,
-      s"batchId $batchId is in the manual-append lane " +
-        s"(>= ${IndexMaintenance.ManualLaneFloor}); that lane belongs to appendIvfIndex")
-    requireBatchKeyedLayout(batch.sparkSession, path)
-    IndexMaintenance.requireSameMetaCols(batch.sparkSession, path, metaCols)
-    // a re-delivered batch whose write committed is a harmless
-    // self-overwrite (the ledger already hides its rows) — without the
-    // escape, deleting an id from an uncheckpointed batch would throw on
-    // every restart and the stream could never progress (r18)
-    val corpusT = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val corpusFs = corpusT.getFileSystem(
-      batch.sparkSession.sparkContext.hadoopConfiguration)
-    IndexMaintenance.requireNotTombstoned(batch.sparkSession, path,
-      batch.select(col(cId).as("id")),
-      isCommittedReplay = () => IndexMaintenance.laneExists(corpusFs, corpusT, batchId))
-    assigned(batch, cId, cVec, cents, metaCols)
-      .withColumn("ingest_batch", lit(batchId))
-      // bounded files per cell per batch
-      .transform(cellSpread(_, cents.length, spreadFiles = spreadFiles))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "ingest_batch")
-      .parquet(s"$path/corpus")
+    IvfFamily.requireKeyedAppend(batch.select(col(cId).as("id")), path, batchId, metaCols)
+    writeLane(batch, cId, cVec, path, cents, batchId, spreadFiles, metaCols)
   }
 
   /** Compact a streamed-into IVF index — INCREMENTALLY: fold every batch
@@ -741,11 +668,8 @@ object Similarity {
     * append during the fold (in-stream use runs it on the ingest
     * thread, which satisfies this by construction). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      committedBatchId: Long, spreadFiles: Int = 0): Unit = {
-    val nlist = spark.read.parquet(s"$path/centroids").count().toInt
-    IndexMaintenance.foldCommitted(spark, s"$path/corpus", committedBatchId,
-      cellSpread(_, nlist, spreadFiles = spreadFiles))
-  }
+      committedBatchId: Long, spreadFiles: Int = 0): Unit =
+    IvfFamily.fold(spark, path, committedBatchId, spreadFiles)
 
   /** Minor compaction of a stored IVF index's RESIDENT (`ingest_batch=-1`)
     * layer: rewrite each cell whose resident file count exceeds
@@ -766,12 +690,8 @@ object Similarity {
     * `spreadFiles` should pass `2 * spreadFiles` explicitly. Returns
     * the number of cells compacted. Single-writer contract. */
   def compactIvfResident(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxFilesPerCell: Int = 0, spreadFiles: Int = 0): Int = {
-    val nlist = spark.read.parquet(s"$path/centroids").count().toInt
-    val bound = residentBound(spark, nlist, maxFilesPerCell, spreadFiles)
-    IndexMaintenance.compactResident(spark, s"$path/corpus", bound,
-      cellSpread(_, nlist, spreadFiles = spreadFiles))
-  }
+      path: String, maxFilesPerCell: Int = 0, spreadFiles: Int = 0): Int =
+    IvfFamily.compactResident(spark, path, maxFilesPerCell, spreadFiles).head
 
   /** DELETE vectors from a stored IVF index (r17) — tombstone-first:
     * the ids land in the index's `deletes` ledger, every
@@ -784,9 +704,7 @@ object Similarity {
     * probe time. `ids` must carry one column named by `idCol`. */
   def deleteFromIvfIndex(ids: DataFrame, path: String,
       idCol: String = "id"): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .coalesce(1).write.mode("append")
-      .parquet(IndexMaintenance.deletesDir(path))
+    IvfFamily.delete(ids, path, idCol)
 
   /** Physically remove tombstoned vectors (r17): rewrite every resident
     * cell with the ledger anti-joined out (marker-staged through the
@@ -800,54 +718,13 @@ object Similarity {
     * could not run in-stream at all. Probes stay correct the whole time
     * — before the purge the anti-join hides the rows, after it the rows
     * are gone; a crash between the rewrite and the ledger clear just
-    * leaves a no-op anti-join in place. Returns cells rewritten
-    * (0 = no ledger). Single-writer contract. */
+    * leaves a no-op anti-join in place. The ledger is read and joined
+    * distributed, so a purge runs even past the probes' driver-rows
+    * cap. Returns cells rewritten (0 = no ledger). Single-writer
+    * contract. */
   def purgeIvfDeletes(spark: org.apache.spark.sql.SparkSession,
       path: String, spreadFiles: Int = 0): Int =
-    IndexMaintenance.readDeletes(spark, path, enforceCap = false) match {
-      case None => 0
-      case Some(ledger) =>
-        require(!IndexMaintenance.tombstonesUnfolded(
-            spark, s"$path/corpus", ledger, "corpus_id"),
-          s"index at $path has tombstoned rows in unfolded batch lanes — " +
-            "fold past them first (compactIvfIndex at a covering watermark): " +
-            "a deleted row in an unfolded lane would survive the purge and " +
-            "resurface once the ledger cleared")
-        val nlist = spark.read.parquet(s"$path/centroids").count().toInt
-        val d = ledger.select(col("id").as("corpus_id"))
-        // nothing-to-remove fast path (a rerun after a crash between the
-        // rewrite and the ledger clear, or tombstones that never had
-        // rows): one read-only semi-join probe instead of a full rewrite
-        val matches = spark.read.parquet(s"$path/corpus")
-          .join(broadcast(d), Seq("corpus_id"), "left_semi").limit(1).count()
-        if (matches == 0) { IndexMaintenance.clearDeletes(spark, path); 0 }
-        else {
-          val n = IndexMaintenance.rewriteResident(spark, s"$path/corpus", 0,
-            df => df.join(broadcast(d), Seq("corpus_id"), "left_anti"),
-            cellSpread(_, nlist, spreadFiles = spreadFiles))
-          IndexMaintenance.clearDeletes(spark, path)
-          n
-        }
-    }
-
-  /** The per-cell `-1` file threshold a resident compaction flattens
-    * against. Must be AT LEAST the spread the rewrite itself produces —
-    * a threshold below it would rewrite the same cells forever without
-    * ever getting them under bound — so an explicit `maxFilesPerCell`
-    * is validated against the effective spread. */
-  private[operators] def residentBound(
-      spark: org.apache.spark.sql.SparkSession, nlist: Int,
-      maxFilesPerCell: Int, spreadFiles: Int): Int = {
-    val spread = if (spreadFiles > 0) spreadFiles else cellSpreadBound(spark, nlist)
-    if (maxFilesPerCell <= 0) 2 * spread
-    else {
-      require(maxFilesPerCell >= spread,
-        s"maxFilesPerCell ($maxFilesPerCell) is below the rewrite's own " +
-          s"per-cell fan-out ($spread files) — compaction could never " +
-          "converge; raise the threshold or pin spreadFiles lower")
-      maxFilesPerCell
-    }
-  }
+    IvfFamily.purge(spark, path, spreadFiles).head
 
   /** One maintenance recommendation for a stored IVF index — the three
     * signals ("fold when leaves accrue, compact when files accrue,
@@ -866,19 +743,9 @@ object Similarity {
   def maintenanceAdvice(spark: org.apache.spark.sql.SparkSession,
       path: String, driftTripped: Boolean = false,
       maxFilesPerCell: Int = 0, foldLeavesPerCell: Int = 2,
-      spreadFiles: Int = 0, maxTombstones: Long = 100000L): MaintenanceAdvice = {
-    val nlist = spark.read.parquet(s"$path/centroids").count().toInt
-    // one ledger read serves both signals (it materializes driver-side)
-    val ledger = IndexMaintenance.readDeletes(spark, path, enforceCap = false)
-    val pending = ledger.map(_.count()).getOrElse(0L)
-    // the precise fold-first signal, priced only when over threshold
-    val unfolded = pending > maxTombstones &&
-      ledger.exists(d =>
-        IndexMaintenance.tombstonesUnfolded(spark, s"$path/corpus", d, "corpus_id"))
-    IndexMaintenance.advise(ivfIndexLayout(spark, path), driftTripped,
-      residentBound(spark, nlist, maxFilesPerCell, spreadFiles), foldLeavesPerCell,
-      pending, maxTombstones, unfolded)
-  }
+      spreadFiles: Int = 0, maxTombstones: Long = 100000L): MaintenanceAdvice =
+    IvfFamily.advice(spark, path, driftTripped, maxFilesPerCell,
+      foldLeavesPerCell, spreadFiles, maxTombstones)
 
   /** Deterministic recovery after a crashed [[compactIvfIndex]] /
     * [[compactIvfResident]] (or a crash under the pre-r15 rename-swap):
@@ -893,22 +760,8 @@ object Similarity {
     * of it would duplicate). Idempotent; returns what was repaired,
     * None when clean. */
   def recoverIvfFold(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] = {
-    val table = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val msgs = IndexMaintenance.recover(spark, s"$path/corpus").toSeq ++ {
-      val w = IndexMaintenance.readManualWatermark(fs, table)
-      val orphans = IndexMaintenance.manualLanes(fs, table, w)
-      if (orphans.isEmpty) Seq.empty
-      else {
-        IndexMaintenance.writeManualWatermark(fs, table, orphans.max)
-        Seq(s"adopted ${orphans.size} interrupted manual append(s) at $path " +
-          s"(lanes ${orphans.sorted.mkString(",")}) — their rows were already " +
-          "index-visible; do NOT retry those batches")
-      }
-    }
-    if (msgs.isEmpty) None else Some(msgs.mkString("; "))
-  }
+      path: String): Option[String] =
+    IvfFamily.recover(spark, path)
 
   /** Layout health of a stored IVF index ([[IndexLayoutStats]] over its
     * corpus table) — the maintenance loop's third signal, next to the
@@ -919,7 +772,7 @@ object Similarity {
     * (the same enumeration a fold performs), no data read. */
   def ivfIndexLayout(spark: org.apache.spark.sql.SparkSession,
       path: String): IndexLayoutStats =
-    IndexMaintenance.layoutStats(spark, s"$path/corpus")
+    IvfFamily.layouts(spark, path).head
 
   private def assigned(batch: DataFrame, cId: String, cVec: String,
       cents: Array[Array[Double]], metaCols: Seq[String] = Nil): DataFrame = {
@@ -962,13 +815,14 @@ object Similarity {
     * layout reproducible ACROSS environments too (the derived S depends
     * on the writing session's parallelism). */
   private[operators] def cellSpread(df: DataFrame, nlist: Int,
-      idCol: String = "corpus_id", spreadFiles: Int = 0): DataFrame = {
+      idCol: String = "corpus_id", spreadFiles: Int = 0,
+      keyCol: String = "cell"): DataFrame = {
     require(spreadFiles >= 0, s"spreadFiles must be >= 0 (0 = derive): $spreadFiles")
     val par = df.sparkSession.sparkContext.defaultParallelism
     val s = if (spreadFiles > 0) spreadFiles
       else math.max(1, (2 * par + nlist - 1) / nlist)
-    if (s <= 1) df.repartition(col("cell"))
-    else df.repartition(nlist * s, col("cell"), pmod(xxhash64(col(idCol)), lit(s)))
+    if (s <= 1) df.repartition(col(keyCol))
+    else df.repartition(nlist * s, col(keyCol), pmod(xxhash64(col(idCol)), lit(s)))
   }
 
   /** The bound on files per cell a [[cellSpread]] write may produce on

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.operators.{MaintenanceAdvice, Pq, Similarity}
-import org.apache.spark.sql.DataFrame
+import graft.operators.{IndexMaintenance, MaintenanceAdvice, Pq, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming ANN — online retrieval against a persisted IVF index
   * ([[graft.operators.Similarity.writeIvfIndex]]): each micro-batch of
@@ -251,21 +251,13 @@ object StreamingAnn {
       purgeWhenAdvised: Boolean = false, maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       monitor: (DataFrame, Long, Array[Array[Double]], Pq.PqModel) => Unit): (DataFrame, Long) => Unit =
-    ingestLoop[(Array[Array[Double]], Pq.PqModel)](compactEvery)(
-      recover = s => Pq.recoverPqFold(s, path),
+    ingestLoop[(Array[Array[Double]], Pq.PqModel)](Pq.PqFamily, path, compactEvery,
+        onAdvice, driftTripped, purgeWhenAdvised, maxTombstones)(
       load = s => Pq.loadPqIndexModel(s, path),
       append = (batch, m, batchId) => Pq.appendPqIndexIdempotent(
         batch, idCol, vecCol, path, m._1, m._2, batchId, spreadFiles = 0,
         metaCols = metaCols),
-      monitor = (batch, batchId, m) => monitor(batch, batchId, m._1, m._2),
-      compact = (s, wm) => Pq.compactPqIndex(s, path, wm),
-      compactResident = s => { val (c, v) = Pq.compactPqResident(s, path); c + v },
-      advise = s => Pq.maintenanceAdvice(s, path, driftTripped(),
-        maxTombstones = maxTombstones),
-      onAdvice = onAdvice,
-      purge = if (purgeWhenAdvised)
-        Some(s => { val (c, v) = Pq.purgePqDeletes(s, path); c + v })
-      else None)
+      monitor = (batch, batchId, m) => monitor(batch, batchId, m._1, m._2))
 
   private def ingest(
       path: String, idCol: String, vecCol: String, compactEvery: Int,
@@ -274,74 +266,67 @@ object StreamingAnn {
       purgeWhenAdvised: Boolean = false, maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       monitor: (DataFrame, Long, Array[Array[Double]]) => Unit): (DataFrame, Long) => Unit =
-    ingestLoop[Array[Array[Double]]](compactEvery)(
-      recover = s => Similarity.recoverIvfFold(s, path),
+    ingestLoop[Array[Array[Double]]](Similarity.IvfFamily, path, compactEvery,
+        onAdvice, driftTripped, purgeWhenAdvised, maxTombstones)(
       load = s => Similarity.loadIvfCentroids(s, path),
       append = (batch, cents, batchId) => Similarity.appendIvfIndexIdempotent(
         batch, idCol, vecCol, path, cents, batchId, metaCols = metaCols),
-      monitor = monitor,
-      compact = (s, wm) => Similarity.compactIvfIndex(s, path, wm),
-      compactResident = s => Similarity.compactIvfResident(s, path),
-      advise = s => Similarity.maintenanceAdvice(s, path, driftTripped(),
-        maxTombstones = maxTombstones),
-      onAdvice = onAdvice,
-      purge = if (purgeWhenAdvised) Some(s => Similarity.purgeIvfDeletes(s, path))
-        else None)
+      monitor = monitor)
 
-  /** The ONE ingest skeleton both index families ride — any change to
+  /** The ONE ingest skeleton every index family rides — any change to
     * the ordering (recover before first append, model loaded once per
-    * stream, fold watermark `batchId - 1`, skip-empty) lands in both
-    * twins by construction. `M` is the family's immutable-between-
-    * rebuilds model.
+    * stream, fold watermark `batchId - 1`, skip-empty) lands in all of
+    * them by construction. The family's own maintenance ops
+    * ([[IndexMaintenance.Family]]: recover, fold, resident compaction,
+    * advice, purge) run against `path`; the caller passes only what is
+    * family-specific per batch — `load` (the immutable-between-rebuilds
+    * model `M`), `append` and `monitor`.
     *
     * After each in-stream fold the RESIDENT layer self-maintains (r16):
-    * `compactResident` rewrites any cell whose `-1` file count exceeded
-    * the default bound (2× the spread bound — one fold's accrual
-    * tolerated). On a healthy layout it is one FS walk and a no-op; at
-    * the compact-every-other-fold cadence this keeps each compaction in
-    * the accrued-cells-only shape (SCALE.md 16a: 4.4 s vs 171.7 s at
-    * 20 M), and a STATIONARY stream — which never trips the drift
-    * verdict, so no rebuild would ever flatten it — now has bounded
+    * the family's resident compaction rewrites any cell whose `-1` file
+    * count exceeded the default bound (2× the spread bound — one fold's
+    * accrual tolerated). On a healthy layout it is one FS walk and a
+    * no-op; at the compact-every-other-fold cadence this keeps each
+    * compaction in the accrued-cells-only shape (SCALE.md 16a: 4.4 s vs
+    * 171.7 s at 20 M), and a STATIONARY stream — which never trips the
+    * drift verdict, so no rebuild would ever flatten it — has bounded
     * resident files by construction. Runs on the ingest thread like the
     * fold, so the single-writer contract holds without coordination.
     *
     * At each maintenance point (r17) the family's [[MaintenanceAdvice]]
-    * is computed BEFORE the remedies run — the observable threshold
-    * transition (SCALE.md 16a: `fold`/`compact-resident` at accrual,
-    * `none` after) — logged, and handed to `onAdvice` with the batch id
-    * so a production monitor sees WHY the loop acted, not just that it
-    * did. One layout-stats walk per maintenance point, not per batch;
-    * at-least-once on replay like the drift rows.
+    * (with `driftTripped()` as its drift axis) is computed BEFORE the
+    * remedies run — the observable threshold transition (SCALE.md 16a:
+    * `fold`/`compact-resident` at accrual, `none` after) — logged, and
+    * handed to `onAdvice` with the batch id so a production monitor sees
+    * WHY the loop acted, not just that it did. One layout-stats walk per
+    * maintenance point, not per batch; at-least-once on replay like the
+    * drift rows.
     *
-    * `purge` (r18) closes the one advice signal the loop previously
-    * only REPORTED: when wired (the families' `purgeWhenAdvised` knob),
-    * the loop re-advises AFTER the fold — the purge requires the folded
-    * index the fold just produced, and the fold-first precedence means
-    * the pre-fold advice can never say purge while leaves exist — and
-    * if the verdict is `purge-deletes`, runs the family's physical
-    * purge on the ingest thread (single-writer holds, like the fold).
-    * The post-fold advice is handed to `onAdvice` too, so the monitor
-    * sees the purge-deletes transition and then its disappearance. */
-  private[streaming] def ingestLoop[M](compactEvery: Int)(
-      recover: org.apache.spark.sql.SparkSession => Option[String],
-      load: org.apache.spark.sql.SparkSession => M,
+    * `purgeWhenAdvised` (r18) closes the one advice signal the loop
+    * would otherwise only REPORT: the loop re-advises AFTER the fold —
+    * the purge requires the folded index the fold just produced, and
+    * the fold-first precedence means the pre-fold advice can never say
+    * purge while leaves exist — and if the verdict is `purge-deletes`,
+    * runs the family's physical purge on the ingest thread
+    * (single-writer holds, like the fold). The post-fold advice is
+    * handed to `onAdvice` too, so the monitor sees the purge-deletes
+    * transition and then its disappearance. */
+  private[streaming] def ingestLoop[M](family: IndexMaintenance.Family,
+      path: String, compactEvery: Int, onAdvice: (MaintenanceAdvice, Long) => Unit,
+      driftTripped: () => Boolean, purgeWhenAdvised: Boolean, maxTombstones: Long)(
+      load: SparkSession => M,
       append: (DataFrame, M, Long) => Unit,
-      monitor: (DataFrame, Long, M) => Unit,
-      compact: (org.apache.spark.sql.SparkSession, Long) => Unit,
-      compactResident: org.apache.spark.sql.SparkSession => Int,
-      advise: org.apache.spark.sql.SparkSession => MaintenanceAdvice = _ =>
-        MaintenanceAdvice("none", "no advice wired for this family",
-          graft.operators.IndexLayoutStats(0, 0, -1L, 0L, 0, 0L)),
-      onAdvice: (MaintenanceAdvice, Long) => Unit = (_, _) => (),
-      purge: Option[org.apache.spark.sql.SparkSession => Int] = None): (DataFrame, Long) => Unit = {
+      monitor: (DataFrame, Long, M) => Unit): (DataFrame, Long) => Unit = {
     var loaded: Option[M] = None
     var appended = 0L
     var recovered = false
+    def advise(spark: SparkSession) =
+      family.advice(spark, path, driftTripped(), maxTombstones = maxTombstones)
     (batch, batchId) => {
       if (!batch.isEmpty) {
         val spark = batch.sparkSession
         if (!recovered) {
-          recover(spark).foreach(msg =>
+          family.recover(spark, path).foreach(msg =>
             org.slf4j.LoggerFactory.getLogger(getClass)
               .warn(s"StreamingAnn: recovered interrupted compaction — $msg"))
           recovered = true
@@ -356,18 +341,18 @@ object StreamingAnn {
             .info(s"StreamingAnn: maintenance point at batch $batchId — " +
               s"advice ${a.action} (${a.reason})")
           onAdvice(a, batchId)
-          compact(spark, batchId - 1)
-          val cells = compactResident(spark)
+          family.fold(spark, path, batchId - 1)
+          val cells = family.compactResident(spark, path).sum
           if (cells > 0)
             org.slf4j.LoggerFactory.getLogger(getClass)
               .info(s"StreamingAnn: resident compaction flattened $cells over-bound cells")
-          purge.foreach { p =>
+          if (purgeWhenAdvised) {
             // re-advise on the just-folded layout: pending tombstones
             // that redirected to `fold` above are now actionable
             val a2 = advise(spark)
             if (a2.action == "purge-deletes") {
               onAdvice(a2, batchId)
-              val rewritten = p(spark)
+              val rewritten = family.purge(spark, path).sum
               org.slf4j.LoggerFactory.getLogger(getClass)
                 .info(s"StreamingAnn: advice-driven purge at batch $batchId " +
                   s"rewrote $rewritten partitions (${a2.reason})")

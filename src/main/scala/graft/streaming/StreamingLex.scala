@@ -36,18 +36,11 @@ object StreamingLex {
       maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       onBatch: Long => Unit = _ => ()): (DataFrame, Long) => Unit =
-    StreamingAnn.ingestLoop[Unit](compactEvery)(
-      recover = s => Curation.recoverBm25Index(s, path),
+    StreamingAnn.ingestLoop[Unit](Curation.Bm25Family, path, compactEvery,
+        onAdvice, driftTripped = () => false, purgeWhenAdvised, maxTombstones)(
       load = _ => (),
       append = (batch, _, batchId) =>
         Curation.appendBm25IndexIdempotent(batch, idCol, textCol, path, batchId,
           metaCols = metaCols),
-      monitor = (_, batchId, _) => onBatch(batchId),
-      compact = (s, wm) => Curation.compactBm25Index(s, path, wm),
-      compactResident = s => Curation.compactBm25Resident(s, path),
-      advise = s => Curation.bm25MaintenanceAdvice(s, path,
-        maxTombstones = maxTombstones),
-      onAdvice = onAdvice,
-      purge = if (purgeWhenAdvised) Some(s => Curation.purgeBm25Deletes(s, path))
-        else None)
+      monitor = (_, batchId, _) => onBatch(batchId))
 }

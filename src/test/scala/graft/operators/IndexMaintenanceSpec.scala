@@ -281,6 +281,41 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(tmp.delete())
   }
 
+  test("IVF backfillMetaCols on a flat pre-r12 partitionBy(cell) corpus refuses with the rebuild remedy; the contract file is untouched") {
+    import org.apache.spark.sql.functions.{lit, pmod, udf}
+    val gen = udf((id: Long) => graft.tools.EmbedSynth.vector(id, 16, 4, 0.3))
+    val df = spark.range(100).select(col("id").as("vec_id"), gen(col("id")).as("e"),
+      pmod(col("id"), lit(3)).cast("int").as("category"))
+    val flatPath = Files.createTempDirectory("ivfflat").toString + "/idx"
+    Similarity.writeIvfIndex(df, "vec_id", "e", flatPath, nlist = 4,
+      metaCols = Seq("category"))
+    // flatten: rewrite the corpus in place as the OLD single-level layout
+    // (data files directly under cell= dirs, no ingest_batch) — the
+    // centroids and the `_meta_cols` contract stay valid
+    def rmr(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rmr); f.delete(); ()
+    }
+    spark.read.parquet(s"$flatPath/corpus").drop("ingest_batch")
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$flatPath/corpus_flat")
+    rmr(new java.io.File(s"$flatPath/corpus"))
+    assert(new java.io.File(s"$flatPath/corpus_flat")
+      .renameTo(new java.io.File(s"$flatPath/corpus")))
+    val fs = new org.apache.hadoop.fs.Path(flatPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(IndexMaintenance.readMetaColsFile(fs, flatPath) === Seq("category"))
+    Similarity.resetLayoutCheckCache()
+    val meta = spark.range(100)
+      .select(col("id"), pmod(col("id"), lit(2)).cast("int").as("lang"))
+    val e = intercept[IllegalStateException] {
+      Similarity.backfillMetaCols(spark, flatPath, meta, metaCols = Seq("lang"))
+    }
+    assert(e.getMessage.contains("Rebuild the index with writeIvfIndex"), e.getMessage)
+    // refused BEFORE any write: a `_meta_cols` union naming `lang` would
+    // make every later append demand a column no stored row carries
+    assert(IndexMaintenance.readMetaColsFile(fs, flatPath) === Seq("category"))
+    assert(!new java.io.File(s"$flatPath/_backfill_meta").exists())
+  }
+
   test("PQ append into a flat pre-r15 partitionBy(cell) layout fails with a rebuild message") {
     val s = spark
     import s.implicits._
@@ -533,10 +568,6 @@ class IndexMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       assert(e.getMessage.contains("exceeds 19 distinct rows"))
       assert(e.getMessage.contains("spark.graft.ledger.maxDriverRows"))
-      // the REMEDIATION paths (purge/rebuild/advice) read uncapped — an
-      // over-cap ledger must not wedge the index against its own fix
-      assert(IndexMaintenance.readDeletes(spark, idx, enforceCap = false)
-        .map(_.count()) === Some(20L))
     } finally spark.conf.unset(key)
   }
 }
