@@ -149,11 +149,8 @@ object Bench {
     val ws = time3(li.repartition(cpus.toInt).write.mode("overwrite").format("xlsx")
       .option("header", "true").option("singleFile", "true")
       .save("/tmp/graft_bench/x1s/book.xlsx"))
-    // one untimed warmup first: the univocity encode path has a steep
-    // JIT curve (PerfLab r14: 1.26 -> 0.83 s over five back-to-back
-    // runs), so a bare min-of-3 can land entirely on the curve's early
-    // side — the r14 local run drew 449 K rows/s against PerfLab's
-    // steady-state median of 668 K on the same box, same minute.
+    // one untimed warmup first: the univocity encode path has a steep JIT
+    // curve (1.26 -> 0.83 s over five back-to-back runs, measured in r14)
     li.coalesce(1).write.mode("overwrite")
       .option("header", "true").csv("/tmp/graft_bench/c1")
     val c1 = time3(li.coalesce(1).write.mode("overwrite")

@@ -510,18 +510,7 @@ object Curation {
   def charLmScore(df: DataFrame, idCol: String, textCol: String,
       smoothing: Int = 32): DataFrame = {
     val d = Dedup.spread(df)
-    // r20 re-adjudication (r19 verdict item 2): the r19 pin of the
-    // exploded trigram table is REMOVED and the r18 recompute restored.
-    // The r19 A/B that justified the pin was unfair — its "old" arm ran
-    // without spread, so the explodes ran on the scan's one partition
-    // (4.55 s) while the real r18 plan measures 1.03 s. The honest
-    // five-arm same-JVM A/B (AbLab lm, min-of-5 alternating): old-spread
-    // 1.03 s < r19 string pin 1.37 / int64 narrow pin 1.33. The pin
-    // also materializes one ~30-byte row PER CHARACTER of the corpus
-    // (10-30× the corpus at any scale) — the exact materialize-
-    // don't-rescan inversion this codebase refuses for dedup_substring.
-    // Three explode passes over spread partitions beat one explode +
-    // a corpus-multiple cache write, at bench scale and at 100 TB.
+    // No pinned trigram table: recompute wins, 1.03 s vs 1.37 s (OPTIMIZATION_r20.md).
     val tri = d.select(col(idCol).as("id"),
       explode(charGrams(col(textCol), 3)).as("g"))
     val triCounts = tri.groupBy("g").agg(count(lit(1)).as("c3"))
@@ -1239,10 +1228,13 @@ object Curation {
     // by construction, so its (count, sum dl) aggregate counts each
     // deleted doc exactly once — a re-delete (or a crash-retry whose
     // first attempt landed) can never double-subtract from the stats
-    // fold (r18 advice)
+    // fold (r18 advice). The distributed ledger is filtered to this
+    // batch before the collect, so the driver holds at most the batch and
+    // a ledger past the probes' driver-rows cap does not wedge deletes.
     val alreadyDeleted: Set[Long] =
-      IndexMaintenance.readDeletes(spark, path) match {
-        case Some(d) => d.select(col("id").cast("long")).collect()
+      IndexMaintenance.ledger(spark, path) match {
+        case Some(d) => d.select(col("id").cast("long").as("id"))
+          .filter(col("id").isin(batchIds.toSeq: _*)).collect()
           .map(_.getLong(0)).toSet
         case None => Set.empty
       }
@@ -1767,15 +1759,7 @@ object Curation {
       corpus: DataFrame, idCol: String, textCol: String,
       target: DataFrame, targetTextCol: String,
       vocab: Int = 4096, smoothing: Double = 1.0): DataFrame =
-    // r20 re-adjudication (r19 verdict item 2, second shape): the r19
-    // shared-explode pin is REMOVED and the documented two-pass shape
-    // restored. Same-JVM A/B (AbLab dsir, min-of-5 alternating):
-    // old-2pass 1.92 s vs pinned 2.01 s — the pin saves nothing even at
-    // bench scale, and its pinned (id, bigram-string) rows are a
-    // corpus-multiple materialization at 100 TB (the same
-    // materialize-don't-rescan inversion removed from charLmScore).
-    // "Corpus TEXT is read exactly TWICE, by construction" is again
-    // literally true.
+    // No shared-explode pin: it lost, 2.01 s vs 1.92 s (OPTIMIZATION_r20.md).
     dsirScore(corpus, idCol, textCol,
       trainDsirModel(corpus, textCol, target, targetTextCol, vocab, smoothing))
 

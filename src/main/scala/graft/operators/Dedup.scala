@@ -92,61 +92,6 @@ object Dedup {
     if (!postShuffle && df.rdd.getNumPartitions < p) df.repartition(p) else df
   }
 
-  /** Pin a sketch self-join input, optionally key-partitioned — the r20
-    * rung adjudication of the r19 verdict's item 3 ("a size threshold,
-    * not a global revert"), MEASURED and decided: **off by default**.
-    *
-    * The r19 experiment pre-partitioned these caches unconditionally and
-    * was reverted: at bench scale AQE broadcast-converts the self-joins
-    * at runtime, so the added exchange bought nothing (the static
-    * `explain` had shown SortMergeJoin — the planner estimate exceeds
-    * the broadcast threshold even where the runtime size is far under
-    * it, so estimates cannot be the gate). This hook re-ran the
-    * experiment in the regime the revert had not tested, gated on the
-    * TRUE materialized cache size (the first `count()` materializes the
-    * pin — work the first consumer pays anyway — and re-layout fires
-    * only when real bytes exceed `spark.sql.autoBroadcastJoinThreshold`,
-    * i.e. exactly when the join cannot broadcast). At the sf1 rung
-    * (50 K docs, 1.05 M answer pairs) the gate fires and the executed
-    * plan shows precisely the intended shape — SortMergeJoin reading
-    * ONE key-partitioned cache, no Exchange under either side
-    * (plans/r20/dedup_ngram_jaccard_sf1_*.txt) — and it still LOSES on
-    * wall: ngram 3.17→3.82 s, simhash 1.63→1.81 s, minhash 3.07→2.92 s
-    * (StageLab min-of-2 per arm, same session). The removed join
-    * exchange costs less than the extra cache-to-cache pass plus what
-    * the g-clustered layout does to the downstream pair aggregate's
-    * map-side combine (its exchange grew 44.2→61.5 MB: pair rows for
-    * one (id_a,id_b) spread across gram partitions instead of
-    * pre-combining). So the default stays the persist-only r19 form;
-    * `spark.graft.sketch.prepartition` = off (default) | auto
-    * (size-gated) | on keeps the decision re-measurable at any rung —
-    * at replica-density scale the r11 adjudications (broadcastVerify,
-    * df-cap) govern the verify tail, not this layout. Purely physical;
-    * layouts never change answers (sf1 row parity asserted in-run). */
-  private def pinForSelfJoin(raw: DataFrame, keys: Seq[String]): DataFrame = {
-    val spark = raw.sparkSession
-    val mode = spark.conf.getOption("spark.graft.sketch.prepartition")
-      .getOrElse("off")
-    val pinned = raw.trackedPersist()
-    // only the exact opt-in strings activate the hook: a typo ("Off",
-    // "false") must fall back to the measured default, not silently buy
-    // an extra cache pass and re-layout exchange
-    if (mode != "auto" && mode != "on") return pinned
-    val confV = spark.conf
-      .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-    val threshold: Long =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(confV)
-      catch { case _: NumberFormatException => confV.toLong } // "-1" = off
-    pinned.count() // materialize: the real size, not the planner estimate
-    val bytes = pinned.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (mode == "on" || threshold < 0 || bytes > BigInt(threshold)) {
-      val laid = pinned.repartition(keys.map(col): _*).trackedPersist()
-      laid.count()
-      pinned.unpersist(blocking = false)
-      laid
-    } else pinned
-  }
-
   /** Exact dedup: keep one row per distinct `cols` tuple (hash-aggregate,
     * map-side partial combine for free). */
   def exact(df: DataFrame, cols: Seq[String]): DataFrame =
@@ -257,13 +202,7 @@ object Dedup {
     // + hash UDF ran once per consumer. Pinned, the explode runs once and
     // the narrow (id, pos, line, h) rows are the materialize-don't-rescan
     // trade every Dedup intermediate already makes.
-    // r20 (verdict item 6): NO spread here — the per-row work (one split
-    // + fnv hash per line) is too light to pay for repartitioning the
-    // raw text, measured 2× (AbLab linededup: pin-nospread 0.65 s vs
-    // pinned+spread 1.28 s min-of-5 same-JVM; spread is a no-op at real
-    // split counts anyway, so this only ever affected small inputs).
-    // spread stays opt-in for the UDF-heavy sketch paths where it
-    // measured 3-4× the other way.
+    // No spread: too light per row to repay it, 2× slower (OPTIMIZATION_r20.md, lineDedup).
     val lines = pin(df.select(col(idCol).as("id"),
       posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep)))
         .as(Seq("pos", "line")))
@@ -312,20 +251,6 @@ object Dedup {
             i => concat_ws(" ", slice(words, i, lit(k))))))
         .otherwise(array().cast("array<string>"))
     }
-
-  /** MinHash signature: for each of `numHashes` seeded hash functions, the
-    * minimum xxhash64 over the shingle set — the classic permutation-free
-    * construction (Broder '97). Pure codegen'd expressions, no UDF.
-    *
-    * Kept as the expression-form reference; [[minhashNearDups]] uses the
-    * ~7× faster [[minhashBandBuckets]] (one base hash per shingle +
-    * Kirsch-Mitzenmacher derived family in a tight loop — Spark's
-    * higher-order array functions run interpreted, and this form hashes
-    * every shingle string numHashes times). */
-  def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingleCol, s => xxhash64(lit(seed), s)))
-    }: _*)
 
   /** splitmix64 finalizer — decorrelates the derived hash family. */
   private def fmix64(x0: Long): Long = {
@@ -472,12 +397,12 @@ object Dedup {
 
     // Banding: only (id, band, bucket) travels through the self-join —
     // never the shingle arrays (they'd dominate shuffle volume). Pinned
-    // key-partitioned when the self-join would shuffle (size-gated, see
-    // pinForSelfJoin).
-    val banded = pinForSelfJoin(sh
+    // as-is: key-partitioning the sketch self-join caches was measured
+    // and lost at sf1 (SCALE.md Round 20a, plans/r20/).
+    val banded = sh
       .select(col("id"),
-        posexplode(minhashBandBuckets(bands, rowsPerBand)(col("sh"))).as(Seq("band", "bucket"))),
-      Seq("band", "bucket"))
+        posexplode(minhashBandBuckets(bands, rowsPerBand)(col("sh"))).as(Seq("band", "bucket")))
+      .trackedPersist()
 
     val candidates = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
       .join(banded.select(col("band"), col("bucket"), col("id").as("id_b")),
@@ -621,12 +546,12 @@ object Dedup {
     // side. Pinned, it runs once and both sides read the cache (the
     // join itself stays whatever the planner picks — AQE broadcasts it
     // at bench scale).
-    val banded = pinForSelfJoin(withFp.select(col("id"), col("fp"),
+    val banded = withFp.select(col("id"), col("fp"),
       explode(array((0 until 4).map { c =>
         struct(lit(c).as("chunk"), shiftrightunsigned(col("fp"), c * 16).bitwiseAND(lit(0xFFFFL)).as("val"))
       }: _*)).as("cb"))
-      .select(col("id"), col("fp"), col("cb.chunk"), col("cb.val")),
-      Seq("chunk", "val"))
+      .select(col("id"), col("fp"), col("cb.chunk"), col("cb.val"))
+      .trackedPersist()
     val l = banded.select(col("chunk"), col("val"), col("id").as("id_a"), col("fp").as("fp_a"))
     val r = banded.select(col("chunk"), col("val"), col("id").as("id_b"), col("fp").as("fp_b"))
     val repPairs = l.join(r, Seq("chunk", "val"))
@@ -706,16 +631,14 @@ object Dedup {
     // total_shingles/dfCap entries, and real text has a short hot head), so
     // the full index never shuffles for the cap — the ≤cap list it would
     // otherwise inner-join is nearly every distinct gram. Measured 1.5-2×
-    // on the sf0.1 bench (PerfLab). Under pre-collapse the count is
+    // on the sf0.1 bench. Under pre-collapse the count is
     // weighted by group size, so the cap fires on exactly the same grams
     // as it would over the uncollapsed corpus — required for the
     // collapsed/direct parity contract.
     val hot = exploded.groupBy("g").agg(sum("gsize").as("gdf"))
       .filter(col("gdf") > dfCap).select("g")
-    // pinned key-partitioned when the gram self-join would shuffle
-    // (size-gated, see pinForSelfJoin)
-    val capped = pinForSelfJoin(
-      exploded.join(broadcast(hot), Seq("g"), "left_anti"), Seq("g"))
+    val capped = exploded.join(broadcast(hot), Seq("g"), "left_anti")
+      .trackedPersist()
     val a = capped.select(col("g"), col("id").as("id_a"), col("n").as("n_a"))
     val b = capped.select(col("g"), col("id").as("id_b"), col("n").as("n_b"))
     val repPairs = a.join(b, Seq("g"))
@@ -772,7 +695,7 @@ object Dedup {
     * (Σ_g count(g)²) dominates, i.e. dense duplication at large n.
     * Re-measured round 7 on a 10x-replicated corpus (sf1: 50K docs, every
     * doc x10 identical copies): all-token STILL wins, 15.0s vs 24.1s
-    * (NgramLab, parity green). THE CROSSOVER WAS FOUND at organic sf10
+    * (SCALE.md, Runtime scaling). THE CROSSOVER WAS FOUND at organic sf10
     * (r11, 500K docs in ~100-replica near-dup cliques): all-token's gram
     * join fans out to Σ_g count(g)² ≈ 10^10 rows and dies past 70 GB of
     * one-box spill, while this plan completes — 24.8M exact pairs in

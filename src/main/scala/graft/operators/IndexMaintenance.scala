@@ -371,9 +371,9 @@ private[graft] object IndexMaintenance {
   // index built without those docs); `purge*Deletes` later reclaims the
   // bytes by rewriting the resident layer through [[rewriteResident]]'s
   // marker protocol. Probes and appends read the ledger driver-side
-  // ([[readDeletes]], capped); the remediation paths — purge, advice,
-  // rebuild — read it distributed ([[ledger]]), so an over-cap ledger
-  // never blocks its own remedy.
+  // ([[readDeletes]], capped); deletes, backfill and the remediation
+  // paths — purge, advice, rebuild — read it distributed ([[ledger]]),
+  // so an over-cap ledger never blocks its own remedy.
   // ---------------------------------------------------------------------
 
   private[operators] def deletesDir(indexPath: String): String =
@@ -420,11 +420,12 @@ private[graft] object IndexMaintenance {
   private[operators] final class LedgerCapExceeded(msg: String)
       extends IllegalStateException(msg)
 
-  /** The [[ledger]] MATERIALIZED to the driver for probes and appends,
-    * refused loudly past [[maxLedgerDriverRows]]. The rows are
-    * re-created as a local frame: it holds no lazy file references, so
-    * a concurrent purge deleting the ledger files mid-query cannot fail
-    * a probe that already read it. */
+  /** The [[ledger]] MATERIALIZED to the driver, refused loudly past
+    * [[maxLedgerDriverRows]]. Probes and appends are its only callers;
+    * deletes, backfill, purge, advice and rebuild read [[ledger]]
+    * distributed. The rows are re-created as a local frame: it holds
+    * no lazy file references, so a concurrent purge deleting the ledger
+    * files mid-query cannot fail a probe that already read it. */
   private[operators] def readDeletes(spark: SparkSession,
       indexPath: String): Option[DataFrame] =
     ledger(spark, indexPath).map { stored =>
@@ -635,7 +636,7 @@ private[graft] object IndexMaintenance {
   private[operators] def backfillTableMetaCols(spark: SparkSession,
       indexRoot: String, table: String, meta: org.apache.spark.sql.DataFrame,
       joinCol: String, metaCols: Seq[String], level1: String = "cell"): Boolean = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val live = new Path(s"$indexRoot/$table")
     val fs = fsOf(spark, live)
     val aside = new Path(s"$indexRoot/${table}_backfill")
@@ -653,9 +654,10 @@ private[graft] object IndexMaintenance {
         s"the full requested set — a partial overlap cannot be joined cleanly; " +
         "backfill the missing columns alone")
     // live-row coverage: one NARROW id-column pass + join, before any
-    // destructive step
-    val ledgerIds = readDeletes(spark, indexRoot)
-      .map(d => broadcast(d.select(col("id").as(joinCol))))
+    // destructive step; the ledger is joined distributed, so an index
+    // past the probes' driver-rows cap can still be backfilled
+    val ledgerIds = ledger(spark, indexRoot)
+      .map(_.select(col("id").as(joinCol)))
     val liveIds = ledgerIds.foldLeft(current.select(joinCol))(
       (d, l) => d.join(l, Seq(joinCol), "left_anti"))
     val uncovered = liveIds

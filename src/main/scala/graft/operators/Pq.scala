@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * 256-dim × 8 B = 2 048 B becomes m = 16–32 B — a 64–128× payload cut
   * at 0.92–0.97 top-k recall even on the adversarial noise-4.0 synth
   * corpus, and recall 1.00 at 64× on the 64-dim fixture, once the ADC
-  * shortlist is exactly re-ranked (PqLab grid; floors in AnnRecallSpec).
+  * shortlist is exactly re-ranked (SCALE.md IVFPQ grid; floors in AnnRecallSpec).
   *
   * Search is asymmetric distance computation (ADC): the query stays
   * exact, each subspace contributes a table of `ksub` partial inner
@@ -253,7 +253,7 @@ object Pq {
     * scoring is m array lookups per pair inside one projection. The
     * only joins touching full vectors move `|queries|` and
     * `k·refine·|queries|` rows. Recall tunes with (nprobe, ksub,
-    * refine) — PqLab grid: at the FAISS-conventional ksub=256 (8-bit
+    * refine) — SCALE.md IVFPQ grid: at FAISS-conventional ksub=256 (8-bit
     * codes), m=8/refine=8 recovers recall 1.00 on the 64-dim fixture
     * (8 B/vec = 64× cut) and m=16/refine=16 recovers 0.92 on the
     * adversarial 256-dim noise-4.0 synth (16 B = 128× cut; m=32 buys
@@ -390,8 +390,8 @@ object Pq {
     * the prefilter. Equality law spec-pinned; the oracle replays the
     * exact answer at all four audit corpora.
     *
-    * **Measured verdict (PqLab A/B, SCALE.md): prefer the exact
-    * [[Similarity.semanticDedup]] at dim ≤ 256.** Three architectures
+    * **Measured verdict (SCALE.md, "Quantized SemDeDup pair scan"):
+    * prefer the exact [[Similarity.semanticDedup]] at dim ≤ 256.** Three architectures
     * were measured; this one (prefilter pipelined in the join) is the
     * best of them and still trails the exact scan ~2× at every
     * feasible shape, for two structural reasons worth recording:

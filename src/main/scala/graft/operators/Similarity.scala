@@ -202,8 +202,8 @@ object Similarity {
     * rather than partitions·n: a bare `orderBy.limit(n).collect()` plans
     * as TakeOrderedAndProject, whose executeCollect pulls EVERY
     * partition's top-n to the driver — at dim 1024 over 32 input splits
-    * that is ~1 GB of task results (it hit the maxResultSize wall in
-    * AnnBatchLab's synth mode; 2 000 cluster partitions would make it
+    * that is ~1 GB of task results (it hit the maxResultSize wall, SCALE.md
+    * "The ADC compute flip"; 2 000 cluster partitions would make it
     * 67 GB). Routing the limit through one exchange merges the
     * per-partition top-n on an EXECUTOR, so the driver fetches exactly
     * n rows no matter how the corpus is split. */
@@ -915,7 +915,7 @@ object Similarity {
     * probed — the guard against a selective predicate silently thinning
     * shortlists at a fixed nprobe (a 1 %-selective filter at nprobe 8
     * returns confidently wrong top-k with no signal otherwise; the
-    * FilterScaleLab recall sweep in SCALE.md quantifies the cliff).
+    * SCALE.md Round 19d recall sweep quantifies the cliff).
     * Each widening attempt costs one NARROW count over the pruned
     * cells — paid only when minCandidates > 0, and bounded by the
     * doubling (total pruned-scan work < 2× the final attempt's).

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Every input here is deterministic (seeded hyperplanes, sampled k-means,
   * fixed fixture), so recall is a reproducible constant — the floors sit a
-  * few points under the measured values (AnnLab, sf0.001: LSH 18x6 = 0.68,
+  * few points under the measured values (SCALE.md "Embedding family", sf0.001: LSH 18x6 = 0.68,
   * LSH 16x8 = 0.94, IVF nprobe=4/8 = 0.76) purely to absorb float
   * tie-breaks. A silent quality regression in the banding or probe logic
   * (the one failure mode the oracle gate cannot see, since approximate
@@ -94,8 +94,8 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
   // The driver fixture is 64-wide; real embeddings are 256-1024-wide and
   // every ANN cost scales with dim. Floors pinned on the deterministic
   // EmbedSynth clustered corpus at noise=4.0 — the hardness regime where
-  // the same geometries land near their 64-dim fixture values (AnnLab
-  // --synth 2000 --dim 256 --noise 4.0: LSH 18x6 = 0.67, 16x8 = 0.95,
+  // the same geometries land near their 64-dim fixture values (SCALE.md
+  // "Embedding family", dim 256, noise 4.0: LSH 18x6 = 0.67, 16x8 = 0.95,
   // IVF nprobe=4 = 0.71) — so a dim-dependent quality regression (plane
   // matrix, probe math, normalize) fails here even while the 64-dim
   // fixture stays green.

@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, udf}
+import org.apache.spark.sql.functions.{col, count, lit, max, pmod, sum, udf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -121,6 +121,81 @@ class LedgerRemediationSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(advice.reason.contains("40 tombstoned ids"), advice.reason)
         assert(f.purge(path) > 0)
         assert(f.probe(path) === f.oracle(), "the purged index answers like the live rows")
+      } finally spark.conf.unset(capKey)
+    }
+
+  test("BM25: past the driver-rows cap a fresh delete lands and a re-delete leaves (count, sum dl) unchanged") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("ledgercap-bm25-delete").toString + "/idx"
+    surfaces.toMap.apply("BM25").build(path)
+    def stats(): (Long, Long) = {
+      val r = spark.read.parquet(s"$path/stats").select("n_docs", "sum_dl").collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+    // one row per id (max dl), as the probes and the purge count it
+    def ledgerAgg(): (Long, Long) = {
+      val r = IndexMaintenance.ledger(spark, path).get
+        .groupBy("id").agg(max(col("dl")).as("dl"))
+        .agg(count(lit(1)), sum(col("dl"))).collect()(0)
+      (r.getLong(0), r.getLong(1))
+    }
+    spark.conf.set(capKey, "10")
+    try {
+      val built = stats()
+      Curation.deleteFromBm25Index(Seq(0L).toDF("id"), path)
+      val afterFresh = ledgerAgg()
+      assert(afterFresh._1 === 41L, "the fresh delete of a live doc lands past the cap")
+      // ids 0 and 2 are both tombstoned already: nothing may be appended
+      Curation.deleteFromBm25Index(Seq(0L, 2L).toDF("id"), path)
+      assert(ledgerAgg() === afterFresh)
+      assert(stats() === built)
+      assert(Curation.purgeBm25Deletes(spark, path) > 0)
+      assert(stats() === ((built._1 - afterFresh._1, built._2 - afterFresh._2)),
+        "the purge folds each deleted doc into the stats row exactly once")
+      assert(scored(Curation.bm25SearchIndexed(spark, path, queryTerms, topK = 15)) ===
+        scored(Curation.bm25Search(
+          docs.filter(!deleted(col("doc_id")) && col("doc_id") =!= 0L),
+          "doc_id", "text", queryTerms, topK = 15)))
+    } finally spark.conf.unset(capKey)
+  }
+
+  private def category(id: Column): Column = pmod(id, lit(3)).cast("int")
+
+  /** backfillMetaCols and the filtered probe of one vector family. */
+  private val backfills: Seq[(String, (String, DataFrame) => Boolean, String => Seq[Any])] = Seq(
+    ("IVF",
+      (p, m) => Similarity.backfillMetaCols(spark, p, m, idCol = "vec_id",
+        metaCols = Seq("category")),
+      p => ranked(Similarity.ivfTopKIndexed(
+        vectors.filter(col("vec_id") < 5), "vec_id", "e", p, k = 3, nprobe = 4,
+        filter = Some(col("category") === 1)))),
+    ("IVFPQ",
+      (p, m) => Pq.backfillMetaCols(spark, p, m, idCol = "vec_id",
+        metaCols = Seq("category")),
+      p => ranked(Pq.pqTopKIndexed(
+        vectors.filter(col("vec_id") < 5), "vec_id", "e", p, k = 3, nprobe = 4,
+        refine = 80, filter = Some(col("category") === 1)))))
+
+  for ((name, backfill, filteredProbe) <- backfills)
+    test(s"$name: past the driver-rows cap backfillMetaCols still checks live-row coverage and backfills") {
+      val path = Files.createTempDirectory(s"ledgercap-backfill-$name").toString + "/idx"
+      val f = surfaces.toMap.apply(name)
+      f.build(path)
+      // tombstoned ids are exempt from coverage: the meta holds live ids only
+      val meta = spark.range(200).filter(!deleted(col("id")))
+        .select(col("id").as("vec_id"), category(col("id")).as("category"))
+      spark.conf.set(capKey, "10")
+      try {
+        val e = intercept[IllegalArgumentException](
+          backfill(path, meta.filter(col("vec_id") =!= 0L)))
+        assert(e.getMessage.contains("does not cover every live row"), e.getMessage)
+        assert(backfill(path, meta))
+        assert(f.purge(path) > 0)
+        assert(filteredProbe(path) === ranked(Similarity.bruteForceTopK(
+          vectors.filter(col("vec_id") < 5), "vec_id", "e",
+          vectors.filter(!deleted(col("vec_id")) && category(col("vec_id")) === 1),
+          "vec_id", "e", k = 3)), "the backfilled index answers filtered probes exactly")
       } finally spark.conf.unset(capKey)
     }
 

@@ -283,7 +283,7 @@ class PqIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!r1, f"in-distribution batch tripped retrain: fit=$fit1%.4f/" +
       f"ref=$refFit%.4f err=$err1%.4f/ref=$refErr%.4f")
 
-    // spectral concentration (the AnnGrowthLab drift construction):
+    // spectral concentration (the SCALE.md Round-14 20 M rung's drift construction):
     // out-of-range subvectors must push pq_err past the tolerance
     val drifted = inDist.withColumn("e",
       expr("transform(e, (x, i) -> IF(i < 2, x * 6.0D, x * 0.25D))"))
