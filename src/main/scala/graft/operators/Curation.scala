@@ -648,28 +648,30 @@ object Curation {
     // a previous index here would double-subtract from the fresh stats
     // and hide rebuilt docs
     IndexMaintenance.clearDeletes(spark, path)
-    locally {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("_purged_through", "_ledger_fold", "._ledger_fold.tmp")
-        .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(s"$path/$f"), false))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/doclens_tmp"), true)
-      // the metadata contract every append must match (the ANN
-      // families' `_meta_cols` discipline, r19 on the lexical index)
-      IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
-    }
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("_purged_through", "_ledger_fold", "._ledger_fold.tmp")
+      .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(s"$path/$f"), false))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$path/doclens_tmp"), true)
+    // the metadata contract every append must match (the ANN
+    // families' `_meta_cols` discipline, r19 on the lexical index)
+    IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
     // one tokenize pass feeds both the postings write and the stats agg
     val toks = tokenized(df, idCol, textCol, metaCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      Bm25Family.spread(buckets, spreadFiles)(postingsOf(toks, buckets, metaCols))
+      val postings = Bm25Family.spread(buckets, spreadFiles)(postingsOf(toks, buckets, metaCols))
         .withColumn("ingest_batch", lit(-1L))
-        .write.mode("overwrite").partitionBy("bucket", "ingest_batch")
+      postings.write.mode("overwrite").partitionBy("bucket", "ingest_batch")
         .parquet(s"$path/postings")
       writeDoclens(toks, path, overwrite = true)
       val t = toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("s")).collect()(0)
+      // a probe that raced the build re-reads; the stats row and the
+      // postings schema are written through
+      IndexMaintenance.invalidateSnapshot(fs, path)
       writeStats(spark, path, t.getLong(0), if (t.isNullAt(1)) 0L else t.getLong(1),
         buckets, lastBatch = -1L, lastManual = ManualLaneFloor - 1)
+      Bm25Family.rememberSchemas(spark, path, Map("postings" -> postings.schema))
     } finally { toks.unpersist(false); () }
   }
 
@@ -736,7 +738,9 @@ object Curation {
     * before anything is deleted). Two watermarks, one per append lane:
     * `last_batch` for stream (foreachBatch) ids, `last_manual` for the
     * auto-assigned manual lane — each lane's replay/retry skips only
-    * its OWN already-applied deltas. */
+    * its OWN already-applied deltas. The row is written through to the
+    * index snapshot (single-writer contract), so the next probe or
+    * append reads it back at no Spark job. */
   private def writeStats(spark: org.apache.spark.sql.SparkSession,
       path: String, nDocs: Long, sumDl: Long, buckets: Int,
       lastBatch: Long, lastManual: Long): Unit = {
@@ -750,13 +754,23 @@ object Curation {
       .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     fs.delete(live, true)
     require(fs.rename(tmp, live), s"could not publish $live")
+    Bm25Family.rememberRouting(spark, path, (nDocs, sumDl, buckets, lastBatch, lastManual))
   }
 
+  /** The stats row `(n_docs, sum_dl, buckets, last_batch, last_manual)`,
+    * from the index snapshot: revalidated against the `stats` files on
+    * every call, so it is never stale, and read at no Spark job while
+    * they are unchanged (and after this JVM's own [[writeStats]]). */
   private def readStats(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Long, Long, Int, Long, Long) = {
-    val r = spark.read.parquet(s"$path/stats")
-      .select("n_docs", "sum_dl", "buckets", "last_batch", "last_manual").collect()(0)
-    (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4))
+      path: String): Bm25Stats = Bm25Family.routing(spark, path)
+
+  private[graft] type Bm25Stats = (Long, Long, Int, Long, Long)
+
+  private val StatsSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("n_docs", LongType), StructField("sum_dl", LongType),
+      StructField("buckets", IntegerType), StructField("last_batch", LongType),
+      StructField("last_manual", LongType)))
   }
 
   /** Heal a crashed [[writeStats]] rename window
@@ -775,10 +789,15 @@ object Curation {
     * ops — the stats row with its `last_manual` stats-watermark lane
     * (in place of the ANN watermark file), the doclen sidecar, and the
     * ledger fold inside the purge. */
-  private[graft] object Bm25Family extends IndexMaintenance.Family(
+  private[graft] object Bm25Family extends IndexMaintenance.Family[Bm25Stats](
       Seq("postings"), "bucket", "id", "Rebuild the index with writeBm25Index.") {
     def cells(spark: org.apache.spark.sql.SparkSession, path: String): Int =
       readStats(spark, path)._3
+    protected def routingDirs = Seq("stats" -> StatsSchema)
+    protected def decodeRouting(rows: Seq[Array[org.apache.spark.sql.Row]]) = {
+      val r = rows.head(0)
+      (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3), r.getLong(4))
+    }
 
     /** Heals an interrupted ledger fold (before any stats write, r18
       * review) and an unhealed manual-lane stats delta first — folding
@@ -881,8 +900,8 @@ object Curation {
       //    and subtract a doc the stats no longer count
       swapDoclens(spark, path)(_.join(ledger.select("id"), Seq("id"), "left_anti"))
       // 3. the ledger fold: marker -> stats -> file deletes -> marker off.
-      //    ONE row per id (max dl), as [[ledgerAgg]] counts it, as one
-      //    distributed aggregate row
+      //    ONE row per id (max dl), as the probes' Ledger.deletedDocs
+      //    counts it, as one distributed aggregate row
       val agg = ledger.groupBy("id").agg(max(col("dl")).as("dl"))
         .agg(count(lit(1)), coalesce(sum(col("dl")), lit(0L))).collect()(0)
       val (oldN, oldSum, buckets, lastBatch, lastManual) = readStats(spark, path)
@@ -1274,9 +1293,9 @@ object Curation {
       }
     val all = fromSidecar ++ fromPostings
     if (all.nonEmpty) {
-      all.toSeq.toDF("id", "dl")
-        .coalesce(1).write.mode("append")
-        .parquet(IndexMaintenance.deletesDir(path))
+      val rows = all.toSeq.toDF("id", "dl")
+      rows.coalesce(1).write.mode("append").parquet(IndexMaintenance.deletesDir(path))
+      IndexMaintenance.rememberLedgerSchema(spark, path, rows.schema)
     }
   }
 
@@ -1345,31 +1364,6 @@ object Curation {
       s"(stats pinned to n_docs=$expN, ${lines.tail.size} ledger file(s) retired)")
   }
 
-  /** The ledger's (deleted docs, deleted dl) aggregate, ONE row per id:
-    * [[deleteFromBm25Index]] keeps the ledger id-unique by construction
-    * (r19), but a ledger written before that fix can hold two differing
-    * (id, dl) rows for one doc (a retried manual append whose text
-    * changed between attempts) — counting both would subtract the doc
-    * from n_docs twice. max(dl) is the deterministic pick.
-    *
-    * The probes' form, computed in DRIVER memory: their ledger arrives
-    * as a capped local relation ([[IndexMaintenance.readDeletes]]), so a
-    * Spark groupBy here would cost a full shuffle stage per probe for
-    * rows already sitting on the driver — measured as part of the
-    * with-ledger probe tax at 21 M (19c). The purge computes the same
-    * aggregate distributed. */
-  private def ledgerAgg(ledger: DataFrame): (Long, Long) = {
-    val best = scala.collection.mutable.HashMap.empty[Long, Int]
-    ledger.select("id", "dl").collect().foreach { r =>
-      val id = r.getLong(0); val dl = r.getInt(1)
-      best.get(id) match {
-        case Some(c) if c >= dl => ()
-        case _ => best.update(id, dl)
-      }
-    }
-    (best.size.toLong, best.valuesIterator.foldLeft(0L)(_ + _))
-  }
-
   /** The ONE doclen-sidecar staged swap (aside + delete + rename —
     * [[doclensRecover]] heals the window) shared by the purge's
     * anti-join rewrite (idempotent while the ledger persists — removing
@@ -1430,13 +1424,16 @@ object Curation {
     // files, and the `_ledger_fold` marker — and reading them at
     // different phases double-subtracts (new stats + still-present
     // ledger) or overcounts (old stats + already-deleted ledger). So:
-    // sample (marker, stats) before and after the reads; equal samples
-    // prove no purge phase transitioned underneath (every phase changes
-    // one of the two), and the mid-fold guard below then decides from a
-    // consistent pair. A changed sample, a half-written marker, or a
-    // file vanishing mid-read retries — the purge that invalidated the
-    // snapshot finishes in bounded time. The same consistency the ANN
-    // probes get from consistentListing, stated over (stats, ledger).
+    // sample (marker, stats files, ledger files) before and after the
+    // reads; equal samples prove no purge phase transitioned underneath
+    // (every phase changes one of the three), and the mid-fold guard
+    // below then decides from a consistent pair. A changed sample, a
+    // half-written marker, or a file vanishing mid-read retries — the
+    // purge that invalidated the snapshot finishes in bounded time. The
+    // same consistency the ANN probes get from consistentListing,
+    // stated over (stats, ledger). Both reads come from the index
+    // snapshot, each from the exact files its key lists, so the second
+    // sample of each is a listing and no Spark job.
     val marker = new org.apache.hadoop.fs.Path(s"$path/_ledger_fold")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // None = unreadable (vanished/half-written mid-read: retry);
@@ -1445,45 +1442,25 @@ object Curation {
       if (!fs.exists(marker)) Some("")
       else scala.util.Try(
         IndexMaintenance.readMarker(fs, marker).head).toOption
-    // the ledger FILE set — the second axis the append-movement rule
-    // below needs: a fold deletes ledger files, an append never touches
-    // them, so an identical listing on both sides of the window rules
-    // the fold out even while the stats row moves
-    val deletesP = new org.apache.hadoop.fs.Path(IndexMaintenance.deletesDir(path))
-    val dFs = deletesP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def ledgerFileSet(): Set[String] =
-      if (!dFs.exists(deletesP)) Set.empty
-      else dFs.listStatus(deletesP)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath.getName).toSet
+    def stats() = Bm25Family.routingAndKey(spark, path)
     var attempt = 0
     while (attempt < 6) {
       val read = scala.util.Try {
-        if (ledgerFileSet().isEmpty)
-          // fast path (the ledger-free common case, ONE stats read + one
-          // ledger listing): any purge that emptied the ledger committed
-          // its stats fold BEFORE deleting the files, so a stats read
-          // taken AFTER the empty ledger listing is already the folded
-          // row — no snapshot sampling, no marker pinning needed
-          Left(readStats(spark, path))
+        val m0 = markerState()
+        // the ledger is listed BEFORE the stats: any purge that emptied
+        // the ledger committed its stats fold before deleting the files,
+        // so a stats listing taken after an empty ledger listing is
+        // already the folded row — the ledger-free common case needs no
+        // second sample
+        val l0 = IndexMaintenance.ledgerRows(spark, path)
+        val s0 = stats()
+        if (l0.isEmpty) Left(s0._2)
         else {
-          // a ledger exists: full snapshot — (marker, ledger files,
-          // stats) sampled on both sides of ONE ledger read. r18 read
-          // the ledger TWICE here (an emptiness pre-read plus the
-          // bracketed read) — each is a parquet read + distinct +
-          // driver collect, and the pair was most of the measured
-          // with-ledger probe tax at 21 M (19c); the file-set listing
-          // above decides emptiness for free, and an emptied-between
-          // race just lands in the Right branch with led = None.
-          val m0 = markerState()
-          val l0 = ledgerFileSet()
-          val s0 = readStats(spark, path)
-          val led = IndexMaintenance.readDeletes(spark, path)
-          val s1 = readStats(spark, path)
-          val l1 = ledgerFileSet()
+          val l1 = IndexMaintenance.ledgerRows(spark, path)
+          val s1 = stats()
           val m1 = markerState()
-          if (led.isEmpty) Left(s1) // raced an emptying purge: s1 is post-fold
-          else Right((m0, s0, led, s1, m1, l0, l1))
+          if (l1.isEmpty) Left(s1._2) // raced an emptying purge: s1 is post-fold
+          else Right((m0, s0, l0.get, s1, m1, l1.get))
         }
       } match {
         // the driver-rows cap's refusal is a verdict, not a purge race
@@ -1492,10 +1469,10 @@ object Curation {
       }
       read match {
         case Some(Left((nDocs, sumDl, nBuckets, _, _))) =>
-          return bm25EffectiveFrom(nDocs, sumDl, nBuckets, None, path)
-        case Some(Right((m0, s0, led, s1, m1, _, _)))
-            if m0.isDefined && m0 == m1 && s0 == s1 =>
-          val (nDocs, sumDl, nBuckets, _, _) = s0
+          return bm25EffectiveFrom(spark, nDocs, sumDl, nBuckets, None, path)
+        case Some(Right((m0, s0, led, s1, m1, l1)))
+            if m0.isDefined && m0 == m1 && s0._1 == s1._1 && led.key == l1.key =>
+          val (nDocs, sumDl, nBuckets, _, _) = s0._2
           // mid-fold guard: stats already at the marker's pinned values
           // means the subtraction lives in the stats row (and the purged
           // rows are gone) — the ledger must not apply AGAIN
@@ -1503,23 +1480,21 @@ object Curation {
             val head = m0.get.split(" ")
             head(0).toLong == nDocs && head(1).toLong == sumDl
           }
-          return bm25EffectiveFrom(nDocs, sumDl, nBuckets,
-            if (folded) None else led, path)
-        case Some(Right((m0, _, led, s1, m1, l0, l1)))
-            if m0.contains("") && m1.contains("") && l0 == l1 =>
+          return bm25EffectiveFrom(spark, nDocs, sumDl, nBuckets,
+            if (folded) None else Some(led), path)
+        case Some(Right((m0, _, led, s1, m1, l1)))
+            if m0.contains("") && m1.contains("") && led.key == l1.key =>
           // APPEND-ONLY movement (r18 advice): the stats row moved
           // between the samples, but the marker was absent on BOTH
           // sides and the ledger file set is IDENTICAL — a purge cannot
           // have transitioned in the window (its fold phase creates the
           // marker and then deletes ledger files; a whole purge fitting
           // inside the window would still change the listing). What
-          // moved is plain ingest traffic rewriting the stats row —
-          // r18 treated that as a failed snapshot and a read-only probe
-          // could throw under sustained concurrent appends. Appends
-          // never write the ledger, so the LATER stats row paired with
-          // the ledger read is a consistent (stats, ledger) view.
-          val (nDocs, sumDl, nBuckets, _, _) = s1
-          return bm25EffectiveFrom(nDocs, sumDl, nBuckets, led, path)
+          // moved is plain ingest traffic rewriting the stats row, and
+          // appends never write the ledger, so the LATER stats row
+          // paired with the ledger is a consistent (stats, ledger) view.
+          val (nDocs, sumDl, nBuckets, _, _) = s1._2
+          return bm25EffectiveFrom(spark, nDocs, sumDl, nBuckets, Some(led), path)
         case _ =>
           attempt += 1
           // bounded backoff (20/40/80/160/320 ms): a live fold's
@@ -1535,15 +1510,16 @@ object Curation {
         "maintenance or retry.")
   }
 
-  private def bm25EffectiveFrom(nDocs: Long, sumDl: Long, nBuckets: Int,
-      ledger: Option[DataFrame], path: String): (Long, Double, Int, Option[DataFrame]) = {
-    val (delN, delDl) = ledger.map(ledgerAgg).getOrElse((0L, 0L))
+  private def bm25EffectiveFrom(spark: org.apache.spark.sql.SparkSession,
+      nDocs: Long, sumDl: Long, nBuckets: Int,
+      ledger: Option[IndexMaintenance.Ledger], path: String): (Long, Double, Int, Option[DataFrame]) = {
+    val (delN, delDl) = ledger.map(_.deletedDocs).getOrElse((0L, 0L))
     val nEff = nDocs - delN
     require(nEff > 0, s"index at $path has no live documents " +
       s"(n_docs $nDocs, deleted $delN) — avgdl is undefined; rebuild with " +
       "writeBm25Index over a non-empty corpus")
     (nEff, (sumDl - delDl).toDouble / nEff, nBuckets,
-      ledger.map(d => broadcast(d.select("id"))))
+      ledger.map(d => broadcast(d.frame(spark).select("id"))))
   }
 
   /** [[bm25Search]] against a stored [[writeBm25Index]] — identical
@@ -1600,18 +1576,25 @@ object Curation {
       filter: Option[Column] = None): DataFrame = {
     import spark.implicits._
     val (nDocs, avgdl, nBuckets, tombstones) = bm25Effective(spark, path)
-    val qt = queries.select(col(qId).as("query_id"),
-      explode(array_distinct(col(qTerms))).as("term"))
-    val terms = qt.select("term").distinct().collect().map(_.getString(0)).toSeq
+    // the query frame is driver-small by contract (it broadcasts below):
+    // collected ONCE — a local frame collects with no job — and its
+    // (query, term) pairs and term set built here, term SETS per query
+    // exactly as explode(array_distinct(terms)) yields them
+    val q = queries.select(col(qId).as("query_id"), col(qTerms).as("terms"))
+    val pairs = q.collect().toSeq.flatMap { r =>
+      if (r.isNullAt(1)) Nil
+      else r.getSeq[String](1).distinct.map(t => org.apache.spark.sql.Row(r.get(0), t))
+    }
+    val terms = pairs.map(_.getString(1)).distinct
     require(terms.nonEmpty, "need at least one query term across the batch")
+    // Spark's own xxhash64 over a local frame (no job): the same bucket
+    // function the postings were written with
     val termBuckets = terms.toDF("term")
       .select(pmod(xxhash64(col("term")), lit(nBuckets)).cast("int").as("bucket"))
       .collect().map(_.getInt(0)).distinct.toSeq
-    val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val fs = postingsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tf0 = IndexMaintenance.consistentListing(fs, postingsPath) {
-      spark.read.parquet(s"$path/postings")
-    }.filter(col("bucket").isin(termBuckets: _*) && col("term").isin(terms: _*))
+    // the listing goes through the snapshot gate; the schema is known
+    val tf0 = Bm25Family.readTable(spark, path, "postings")
+      .filter(col("bucket").isin(termBuckets: _*) && col("term").isin(terms: _*))
     // tombstoned docs leave tf AND df, so scores equal a rebuilt index
     val tf = tombstones.map(t => tf0.join(t, Seq("id"), "left_anti")).getOrElse(tf0)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -1640,8 +1623,24 @@ object Curation {
     // implementation accident); the candidate branch's scan carries the
     // predicate. Composes with `allowed` (both restrict candidates).
     val tfF = filter.map(tfA.filter).getOrElse(tfA)
-    tfF.join(broadcast(dfreq), "term")
-      .join(broadcast(qt), "term") // fan out per query that asked for the term
+    val scored = tfF.join(broadcast(dfreq), "term")
+    // fan out per query that asked for the term; with ONE query every
+    // pruned row's term is one of its terms, so the fan-out is a
+    // constant column and needs no broadcast
+    val single = pairs.map(_.get(0)).distinct match {
+      case Seq(only) => Some(only)
+      case _ => None
+    }
+    val fanned = single match {
+      case Some(only) =>
+        scored.withColumn("query_id", lit(only).cast(q.schema("query_id").dataType))
+      case None =>
+        scored.join(broadcast(spark.createDataFrame(java.util.Arrays.asList(pairs: _*),
+          org.apache.spark.sql.types.StructType(Seq(q.schema("query_id"),
+            org.apache.spark.sql.types.StructField("term",
+              org.apache.spark.sql.types.StringType))))), "term")
+    }
+    val perDoc = fanned
       .withColumn("idf",
         log((lit(nDocs) - col("df") + lit(0.5d)) / (col("df") + lit(0.5d)) + lit(1.0d)))
       .withColumn("contrib",
@@ -1649,10 +1648,15 @@ object Curation {
           (col("tf") + lit(k1) * (lit(1.0d) - lit(b) + lit(b) * col("dl") / lit(avgdl))))
       .groupBy("query_id", "id")
       .agg(round(sum(col("contrib")), 4).as("score"), count(lit(1)).as("n_terms_hit"))
+    // the final sort runs in one partition: a batch's rank window runs
+    // per query in parallel and only its ≤ queries × topK survivors move
+    // there (no range-partitioning sample job); ONE query's window is a
+    // single partition anyway, so its docs move there once, before it
+    val ranked = (if (single.isDefined) perDoc.repartition(1) else perDoc)
       .withColumn("rank", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("score").desc, col("id"))))
       .filter(col("rank") <= topK)
-      .orderBy("query_id", "rank")
+    (if (single.isDefined) ranked else ranked.repartition(1)).orderBy("query_id", "rank")
   }
 
   /** Reciprocal-rank fusion (RRF — Cormack, Clarke & Buettcher, SIGIR

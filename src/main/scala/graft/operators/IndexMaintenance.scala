@@ -1,7 +1,8 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The ONE lifecycle of the three persisted index families, all laid out
   * with two-level `<level1>=<c>/ingest_batch=<b>` partitioning — IVF
@@ -371,9 +372,12 @@ private[graft] object IndexMaintenance {
   // index built without those docs); `purge*Deletes` later reclaims the
   // bytes by rewriting the resident layer through [[rewriteResident]]'s
   // marker protocol. Probes and appends read the ledger driver-side
-  // ([[readDeletes]], capped); deletes, backfill and the remediation
-  // paths — purge, advice, rebuild — read it distributed ([[ledger]]),
-  // so an over-cap ledger never blocks its own remedy.
+  // through the index snapshot ([[readDeletes]] / [[ledgerRows]],
+  // capped): an unchanged ledger costs one directory listing and no
+  // Spark job, a grown one one job over its new files only. Deletes,
+  // backfill and the remediation paths — purge, advice, rebuild — read
+  // it distributed ([[ledger]]), so an over-cap ledger never blocks its
+  // own remedy.
   // ---------------------------------------------------------------------
 
   private[operators] def deletesDir(indexPath: String): String =
@@ -420,34 +424,239 @@ private[graft] object IndexMaintenance {
   private[operators] final class LedgerCapExceeded(msg: String)
       extends IllegalStateException(msg)
 
-  /** The [[ledger]] MATERIALIZED to the driver, refused loudly past
-    * [[maxLedgerDriverRows]]. Probes and appends are its only callers;
-    * deletes, backfill, purge, advice and rebuild read [[ledger]]
-    * distributed. The rows are re-created as a local frame: it holds
-    * no lazy file references, so a concurrent purge deleting the ledger
-    * files mid-query cannot fail a probe that already read it. */
+  private def capExceeded(indexPath: String, cap: Int) = new LedgerCapExceeded(
+    s"tombstone ledger at ${deletesDir(indexPath)} exceeds " +
+      s"$cap distinct rows — the ledger is materialized to the driver " +
+      "and broadcast by every probe, so an unbounded ledger is a " +
+      "driver/executor OOM. Purge (purge advice has been firing since " +
+      "maxTombstones) or rebuild to retire it, or raise " +
+      "spark.graft.ledger.maxDriverRows if the driver truly has the memory.")
+
+  /** The [[ledger]] MATERIALIZED to the driver as a local frame, refused
+    * loudly past [[maxLedgerDriverRows]]. Probes and appends are its
+    * only callers; deletes, backfill, purge, advice and rebuild read
+    * [[ledger]] distributed. It is served from the index snapshot
+    * ([[ledgerRows]]): no Spark job while the ledger's files are
+    * unchanged, one job over the new files after a delete. The local
+    * frame holds no file references, so a concurrent purge deleting the
+    * ledger files mid-query cannot fail a probe that already read it. */
   private[operators] def readDeletes(spark: SparkSession,
       indexPath: String): Option[DataFrame] =
-    ledger(spark, indexPath).map { stored =>
-      val cap = maxLedgerDriverRows(spark)
-      // limit(cap+1) bounds driver memory even when the ledger is over
-      // the cap — the failure is a loud exception, not an OOM mid-collect
-      val rows = stored.limit(cap + 1).collect()
-      if (rows.length > cap)
-        throw new LedgerCapExceeded(
-          s"tombstone ledger at ${deletesDir(indexPath)} exceeds " +
-            s"$cap distinct rows — the ledger is materialized to the driver " +
-            "and broadcast by every probe, so an unbounded ledger is a " +
-            "driver/executor OOM. Purge (purge advice has been firing since " +
-            "maxTombstones) or rebuild to retire it, or raise " +
-            "spark.graft.ledger.maxDriverRows if the driver truly has the memory.")
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), stored.schema)
-    }
+    ledgerRows(spark, indexPath).map(_.frame(spark))
 
   private[operators] def clearDeletes(spark: SparkSession, indexPath: String): Unit = {
     val p = new Path(deletesDir(indexPath))
     fsOf(spark, p).delete(p, true)
     ()
+  }
+
+  // ---------------------------------------------------------------------
+  // The INDEX SNAPSHOT — the driver-side copy of what probes and appends
+  // read of an index besides its tables. Before it, every call re-read
+  // the same immutable metadata through fresh Spark jobs (an IVF probe
+  // ran 14 jobs, 10 of them for centroids, ledger, probe cells and
+  // schema inference). It holds plain driver data only — never a
+  // DataFrame, never session state — in three parts, each with its own
+  // key, revalidated on EVERY call by file-status reads alone:
+  //
+  //  - routing data (IVF centroids, IVFPQ centroids + codebooks, the
+  //    BM25 stats row), keyed on the (name, length, mtime) set of the
+  //    routing dirs' committed files. Spark names every written part
+  //    file with a fresh UUID, so any rewrite — build, stats write,
+  //    recovery — changes the key; unchanged key = zero Spark jobs,
+  //    changed key = one job per routing dir, read with its known schema;
+  //  - the tables' schemas, keyed on the `_meta_cols` contract file's
+  //    status (every build and backfill rewrites it), so probes read
+  //    their tables with `spark.read.schema(known)` — the listing stays
+  //    inside [[consistentListing]], only the schema-inference job goes;
+  //  - the deduplicated ledger rows with the files they came from, keyed
+  //    on the `deletes` dir's committed files: unchanged = reuse, grown
+  //    (new file set ⊇ old — deletes only ever add files) = one job over
+  //    the new files with the known schema, anything else (a purge, a
+  //    rebuild, a file vanishing mid-read) = full reload.
+  //
+  // Every part is read from the exact files its key lists, so what a
+  // call returns is the state at its own listing: a stale entry can
+  // only cost a reload, never serve old data. This JVM's writers write
+  // through what they just published — the BM25 stats row, a fresh
+  // ledger's schema — under the single-writer contract. Each part is a
+  // bounded LRU ([[SnapshotEntries]] entries). In-process builds and
+  // backfills also drop the path's entries when they start and finish
+  // (and a generation counter keeps a load that raced one from being
+  // cached), which covers the window where `_meta_cols` is already new
+  // and the tables are not.
+  // ---------------------------------------------------------------------
+
+  /** A committed file as the snapshot keys it: (name, length, mtime). */
+  private type FileKey = (String, Long, Long)
+
+  /** The snapshot's fixed bound: entries per part, least recently used
+    * evicted first. */
+  private val SnapshotEntries = 64
+
+  /** Test seams: how many snapshot parts were served unchanged (zero
+    * jobs), grown by their new files, or (re)loaded from scratch. */
+  private[graft] val snapshotReuses = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val snapshotGrowths = new java.util.concurrent.atomic.AtomicLong(0)
+  private[graft] val snapshotReloads = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private final class Lru[K, V] {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+        size() > SnapshotEntries
+    }
+    def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
+    def put(k: K, v: V): Unit = m.synchronized { m.put(k, v); () }
+    def removeIf(p: K => Boolean): Unit =
+      m.synchronized { m.keySet().removeIf(k => p(k)); () }
+    def clear(): Unit = m.synchronized(m.clear())
+  }
+
+  private final class Routing(val files: Seq[Set[FileKey]], val data: Any)
+  private final class Schemas(val metaCols: Option[FileKey],
+      val byTable: Map[String, StructType])
+
+  private val routings = new Lru[(AnyRef, String), Routing]
+  private val schemas = new Lru[(AnyRef, String), Schemas]
+  private val ledgers = new Lru[String, Ledger]
+  private val snapshotGeneration = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Drop every snapshot entry of the index at `indexPath` — called by
+    * in-process builds and backfills when they start and finish. */
+  private[operators] def invalidateSnapshot(fs: FileSystem, indexPath: String): Unit = {
+    val root = qualified(fs, indexPath)
+    snapshotGeneration.incrementAndGet()
+    routings.removeIf(_._2 == root)
+    schemas.removeIf(_._2 == root)
+    ledgers.removeIf(_ == root)
+  }
+
+  /** Test seam: empty the snapshot, so the next call reads cold. */
+  private[graft] def clearSnapshot(): Unit = {
+    snapshotGeneration.incrementAndGet()
+    routings.clear(); schemas.clear(); ledgers.clear()
+  }
+
+  private def qualified(fs: FileSystem, p: String): String =
+    fs.makeQualified(new Path(p)).toString
+
+  private def committedFiles(fs: FileSystem, dir: Path): Set[FileKey] =
+    try fs.listStatus(dir).iterator
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
+  private def fileKey(fs: FileSystem, f: Path): Option[FileKey] =
+    try {
+      val s = fs.getFileStatus(f)
+      Some((s.getPath.getName, s.getLen, s.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** Run a snapshot load, relisting up to three times when a file it
+    * read vanished underneath it (a concurrent rewrite or purge). */
+  private def withRelist[T](load: () => T): T = {
+    var attempt = 0
+    while (true) {
+      try return load()
+      catch {
+        case e: Throwable if scala.util.control.NonFatal(e) &&
+            !e.isInstanceOf[LedgerCapExceeded] && fnfInChain(e) && attempt < 3 =>
+          attempt += 1
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** The deduplicated tombstone ledger as plain driver rows, with the
+    * files they came from. */
+  private[operators] final class Ledger(private[IndexMaintenance] val files: Set[FileKey],
+      val schema: StructType, val rows: Array[Row]) {
+    def frame(spark: SparkSession): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+    /** (deleted docs, their summed `dl`) — the BM25 probes' stats
+      * adjustment, ONE row per id: a ledger written before deletes
+      * became id-unique can hold two differing (id, dl) rows for one doc
+      * (a retried manual append whose text changed), and counting both
+      * would subtract the doc twice; max(dl) is the deterministic pick.
+      * Computed once per ledger version, in driver memory. */
+    lazy val deletedDocs: (Long, Long) = {
+      val (i, d) = (schema.fieldIndex("id"), schema.fieldIndex("dl"))
+      val best = scala.collection.mutable.HashMap.empty[Long, Int]
+      rows.foreach { r =>
+        val id = r.getLong(i); val dl = r.getInt(d)
+        if (best.get(id).forall(_ < dl)) best.update(id, dl)
+      }
+      (best.size.toLong, best.valuesIterator.foldLeft(0L)(_ + _))
+    }
+
+    /** An opaque key: equal keys mean the same ledger files. */
+    def key: Any = files
+  }
+
+  /** Write-through after a delete appended a ledger file with `schema`:
+    * unless the snapshot holds a ledger the current files extend, it
+    * records an EMPTY ledger over no files with that schema — true of
+    * any file set — so the next read takes the growth path (one job
+    * over every file, known schema) instead of inference plus a
+    * distributed distinct. */
+  private[operators] def rememberLedgerSchema(spark: SparkSession, indexPath: String,
+      schema: StructType): Unit = {
+    val dir = new Path(deletesDir(indexPath))
+    val fs = fsOf(spark, dir)
+    val root = qualified(fs, indexPath)
+    val files = committedFiles(fs, dir)
+    if (ledgers.get(root).forall(c => !c.files.subsetOf(files)))
+      ledgers.put(root, new Ledger(Set.empty,
+        StructType(schema.map(_.copy(nullable = true))), Array.empty))
+  }
+
+  /** The ledger of the index at `indexPath` from the snapshot, None when
+    * it has no committed file. One listing of `deletes`; unchanged files
+    * cost no Spark job, new files one job (with the known schema), and
+    * anything else a full distributed-distinct reload. Refused past
+    * [[maxLedgerDriverRows]] with [[LedgerCapExceeded]]: every read is
+    * bounded by `cap + 1` rows, and an over-cap ledger is never cached
+    * incomplete. */
+  private[operators] def ledgerRows(spark: SparkSession,
+      indexPath: String): Option[Ledger] = {
+    val dir = new Path(deletesDir(indexPath))
+    val fs = fsOf(spark, dir)
+    val root = qualified(fs, indexPath)
+    val cap = maxLedgerDriverRows(spark)
+    def paths(files: Set[FileKey]) = files.toSeq.map(f => new Path(dir, f._1).toString)
+    def full(files: Set[FileKey]): Ledger = {
+      val stored = spark.read.parquet(paths(files): _*).distinct()
+      val rows = stored.limit(cap + 1).collect()
+      if (rows.length > cap) throw capExceeded(indexPath, cap)
+      new Ledger(files, stored.schema, rows)
+    }
+    withRelist { () =>
+      val gen = snapshotGeneration.get()
+      val files = committedFiles(fs, dir)
+      if (files.isEmpty) None
+      else {
+        val cached = ledgers.get(root)
+        val l = cached match {
+          case Some(c) if c.files == files =>
+            snapshotReuses.incrementAndGet(); c
+          case Some(c) if c.files.subsetOf(files) =>
+            val added = spark.read.schema(c.schema).parquet(paths(files -- c.files): _*)
+              .limit(cap + 1).collect()
+            if (added.length > cap) { snapshotReloads.incrementAndGet(); full(files) }
+            else {
+              snapshotGrowths.incrementAndGet()
+              val merged = new java.util.LinkedHashSet[Row](java.util.Arrays.asList(c.rows: _*))
+              added.foreach(merged.add)
+              new Ledger(files, c.schema, merged.toArray(new Array[Row](0)))
+            }
+          case _ => snapshotReloads.incrementAndGet(); full(files)
+        }
+        if (!cached.contains(l) && snapshotGeneration.get() == gen) ledgers.put(root, l)
+        if (l.rows.length > cap) throw capExceeded(indexPath, cap)
+        Some(l)
+      }
+    }
   }
 
   /** Tiny single-value counter file, published scratch+delete+rename
@@ -563,12 +772,15 @@ private[graft] object IndexMaintenance {
     * rebuild remedy. One tiny file read per append. */
   private def metaColsFile(indexRoot: Path) = new Path(indexRoot, "_meta_cols")
 
+  /** Written by every build and backfill — also for an empty column
+    * set, so each one changes the file's status, which is the index
+    * snapshot's schema key. Drops the path's snapshot entries. */
   private[operators] def writeMetaColsFile(fs: FileSystem, indexRoot: String,
       metaCols: Seq[String]): Unit = {
     val f = metaColsFile(new Path(indexRoot))
+    invalidateSnapshot(fs, indexRoot)
     fs.delete(f, false)
-    if (metaCols.nonEmpty)
-      writeMarker(fs, new Path(indexRoot, "._meta_cols.tmp"), f, metaCols)
+    writeMarker(fs, new Path(indexRoot, "._meta_cols.tmp"), f, metaCols)
   }
 
   private[operators] def readMetaColsFile(fs: FileSystem,
@@ -675,6 +887,7 @@ private[graft] object IndexMaintenance {
     require(fs.rename(aside, live), s"could not publish backfilled $live")
     bumpEpoch(fs, live)
     invalidateGuards(live.toString)
+    invalidateSnapshot(fs, indexRoot)
     true
   }
 
@@ -1126,12 +1339,127 @@ private[graft] object IndexMaintenance {
     * fold inside its purge — around these table ops. Single-writer
     * contract throughout: no concurrent append during maintenance
     * (in-stream maintenance runs on the ingest thread). */
-  private[graft] abstract class Family(val tables: Seq[String],
+  private[graft] abstract class Family[R](val tables: Seq[String],
       val level1: String, val idCol: String, rebuildRemedy: String) {
     import org.apache.spark.sql.functions.{col, count, count_distinct, lit}
 
     /** The first-level partition count (nlist, or BM25 buckets). */
     def cells(spark: SparkSession, path: String): Int
+
+    /** The routing data's dirs under the index path, each with the
+      * schema its rows are stored with, in the order [[decodeRouting]]
+      * takes their rows. */
+    protected def routingDirs: Seq[(String, StructType)]
+
+    /** The routing data from its dirs' rows (in [[routingDirs]] order). */
+    protected def decodeRouting(rows: Seq[Array[Row]]): R
+
+    /** The routing data of the index at `path` (IVF centroids, IVFPQ
+      * centroids + model, the BM25 stats row) from the index snapshot:
+      * revalidated against the routing files on every call, no Spark job
+      * while they are unchanged. Shared — callers must not mutate it. */
+    def routing(spark: SparkSession, path: String): R = routingAndKey(spark, path)._2
+
+    /** [[routing]] with an opaque key: equal keys mean the same files. */
+    private[operators] def routingAndKey(spark: SparkSession, path: String): (Any, R) = {
+      val root = new Path(path)
+      val fs = fsOf(spark, root)
+      val ck: (AnyRef, String) = (this, qualified(fs, path))
+      val dirs = routingDirs.map { case (d, s) => (new Path(root, d), s) }
+      withRelist { () =>
+        val gen = snapshotGeneration.get()
+        val files = dirs.map { case (d, _) => committedFiles(fs, d) }
+        routings.get(ck) match {
+          case Some(r) if r.files == files =>
+            snapshotReuses.incrementAndGet()
+            (files, r.data.asInstanceOf[R])
+          case _ =>
+            snapshotReloads.incrementAndGet()
+            val data = decodeRouting(dirs.zip(files).map { case ((d, s), fk) =>
+              // no committed file: read the dir itself, so a missing index
+              // fails the way a cold read of it always did
+              val src = if (fk.isEmpty) Seq(d.toString)
+                else fk.toSeq.map(f => new Path(d, f._1).toString)
+              spark.read.schema(s).parquet(src: _*).collect()
+            })
+            if (files.forall(_.nonEmpty) && snapshotGeneration.get() == gen)
+              routings.put(ck, new Routing(files, data))
+            (files, data)
+        }
+      }
+    }
+
+    /** Write-through: this writer just published `data` at the routing
+      * dirs (single-writer contract), so the next call reuses it instead
+      * of reading the files back. */
+    private[operators] final def rememberRouting(spark: SparkSession, path: String,
+        data: R): Unit = {
+      val root = new Path(path)
+      val fs = fsOf(spark, root)
+      val files = routingDirs.map { case (d, _) => committedFiles(fs, new Path(root, d)) }
+      if (files.forall(_.nonEmpty))
+        routings.put((this, qualified(fs, path)), new Routing(files, data))
+    }
+
+    /** Write-through at the end of a build, which just wrote each table
+      * from a frame with the `written` schema: the schema a read infers
+      * is its columns minus the partition columns, all nullable, then
+      * `level1` and `ingest_batch` as the integers partition discovery
+      * infers from their directory names — so the first probe after a
+      * build runs no inference job. */
+    private[operators] final def rememberSchemas(spark: SparkSession, path: String,
+        written: Map[String, StructType]): Unit = {
+      import org.apache.spark.sql.types._
+      def nullable(t: DataType): DataType = t match {
+        case s: StructType => StructType(s.fields.map(f =>
+          f.copy(dataType = nullable(f.dataType), nullable = true)))
+        case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+        case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
+        case other => other
+      }
+      val parts = Seq(level1, "ingest_batch")
+      val fs = fsOf(spark, new Path(path))
+      schemas.put((this, qualified(fs, path)), new Schemas(
+        fileKey(fs, metaColsFile(new Path(path))), written.map { case (t, w) =>
+          t -> StructType(w.fields.filterNot(f => parts.contains(f.name))
+            .map(f => f.copy(dataType = nullable(f.dataType), nullable = true)) ++
+            parts.map(StructField(_, IntegerType)))
+        }))
+    }
+
+    /** The stored schema of `table` at `path` from the index snapshot,
+      * keyed on the `_meta_cols` file's status: no Spark job while it is
+      * unchanged, one schema-inference job per table after a build or a
+      * backfill. */
+    def schemaOf(spark: SparkSession, path: String, table: String): StructType = {
+      val root = new Path(path)
+      val fs = fsOf(spark, root)
+      val ck: (AnyRef, String) = (this, qualified(fs, path))
+      val gen = snapshotGeneration.get()
+      val mc = fileKey(fs, metaColsFile(root))
+      schemas.get(ck) match {
+        case Some(s) if s.metaCols == mc =>
+          snapshotReuses.incrementAndGet()
+          s.byTable(table)
+        case _ =>
+          snapshotReloads.incrementAndGet()
+          val byTable = tablePaths(path).map { tp =>
+            tp.getName -> consistentListing(fs, tp)(spark.read.parquet(tp.toString).schema)
+          }.toMap
+          if (snapshotGeneration.get() == gen) schemas.put(ck, new Schemas(mc, byTable))
+          byTable(table)
+      }
+    }
+
+    /** `table` as a probe reads it: its file listing captured under the
+      * snapshot gate ([[consistentListing]] — a folded batch can never
+      * be visible twice), its schema known ([[schemaOf]]), so no
+      * inference job runs. */
+    def readTable(spark: SparkSession, path: String, table: String): DataFrame = {
+      val s = schemaOf(spark, path, table)
+      val tp = new Path(s"$path/$table")
+      consistentListing(fsOf(spark, tp), tp)(spark.read.schema(s).parquet(s"$path/$table"))
+    }
 
     /** Memoized layout + debris guard over every table; its counters are
       * the families' `layoutChecksCount` / `resetLayoutCheckCache`
@@ -1212,9 +1540,11 @@ private[graft] object IndexMaintenance {
       * index rewrite, crash-safe by construction (the append lands or it
       * doesn't; the ledger dedups a re-append). Probes anti-join the
       * ledger from the next query on; [[purge]] reclaims the bytes. */
-    def delete(ids: DataFrame, path: String, idColumn: String): Unit =
-      ids.select(col(idColumn).as("id")).distinct()
-        .coalesce(1).write.mode("append").parquet(deletesDir(path))
+    def delete(ids: DataFrame, path: String, idColumn: String): Unit = {
+      val d = ids.select(col(idColumn).as("id")).distinct()
+      d.coalesce(1).write.mode("append").parquet(deletesDir(path))
+      rememberLedgerSchema(ids.sparkSession, path, d.schema)
+    }
 
     /** Physically remove tombstoned rows from every table, then clear the
       * ledger. Probes stay correct throughout — before the rewrite the

@@ -498,27 +498,35 @@ object Pq {
   // 64–128× smaller than the corpus — the difference between an index
   // that fits in cluster memory and one that doesn't.
 
-  /** Load the immutable-between-rebuilds parts of a stored IVFPQ index
-    * (coarse centroids + PQ codebooks) once, for repeated callers — a
-    * streaming ingest passes these to the preloaded overloads of
-    * [[appendPqIndexIdempotent]] / [[indexDriftStats]] /
-    * [[shouldRetrain]] instead of re-reading two driver-side parquet
-    * tables every micro-batch. */
+  /** The routing data of a stored IVFPQ index — coarse centroids + PQ
+    * codebooks — on the driver: a private copy of the index snapshot's
+    * ([[IndexMaintenance]]), which every probe, append and drift call
+    * already reads through at no Spark job while the model files are
+    * unchanged. Callers that hold a model of their own pass it to the
+    * model-taking overloads of [[appendPqIndexIdempotent]] /
+    * [[indexDriftStats]] / [[shouldRetrain]]. */
   def loadPqIndexModel(spark: SparkSession,
-      path: String): (Array[Array[Double]], PqModel) = loadModel(spark, path)
+      path: String): (Array[Array[Double]], PqModel) = {
+    val (cents, model) = PqFamily.routing(spark, path)
+    (cents.map(_.clone()), model.copy(codebooks = model.codebooks.map(_.map(_.clone()))))
+  }
 
-  private def loadModel(spark: SparkSession, path: String): (Array[Array[Double]], PqModel) = {
-    val cents: Array[Array[Double]] = spark.read.parquet(s"$path/model/centroids")
-      .orderBy("cell").collect().map(r => r.getSeq[Double](1).toArray)
-    val cb = spark.read.parquet(s"$path/model/codebooks")
-      .orderBy("j", "c").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+  /** Codebook rows `(j, c, centroid)` → the model (ordered on the
+    * driver: m × ksub rows). */
+  private def decodeModel(rows: Array[org.apache.spark.sql.Row]): PqModel = {
+    val cb = rows.map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val m = cb.map(_._1).max + 1
     val ksub = cb.map(_._2).max + 1
     val dsub = cb(0)._3.length
     val books = Array.ofDim[Array[Double]](m, ksub)
     cb.foreach { case (j, c, v) => books(j)(c) = v }
-    (cents, PqModel(m, ksub, dsub, books.map(_.toArray)))
+    PqModel(m, ksub, dsub, books)
+  }
+
+  private val CodebookSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("j", IntegerType), StructField("c", IntegerType),
+      StructField("centroid", ArrayType(DoubleType))))
   }
 
   /** Build and persist an IVFPQ index: train the coarse quantizer and
@@ -573,17 +581,22 @@ object Pq {
     // a previous index here would hide freshly built vectors
     IndexMaintenance.clearDeletes(spark, path)
     // ... and records the metadata contract every append must match
-    IndexMaintenance.writeMetaColsFile(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), path, metaCols)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
     writeModel(spark, path, cents, model)
-    writeRows(corpus, cId, cVec, path, cents, model, "overwrite", -1L, spreadFiles,
-      metaCols)
+    val written = writeRows(corpus, cId, cVec, path, cents, model, "overwrite", -1L,
+      spreadFiles, metaCols)
     import spark.implicits._
     indexDriftStats(
       refVecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toSeq
         .toDF("vec_id", "v"), "vec_id", "v", cents, model)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/model/drift_ref")
+    // a probe that raced the build re-reads; what was just written is
+    // written through
+    IndexMaintenance.invalidateSnapshot(fs, path)
+    PqFamily.rememberRouting(spark, path, (cents, model))
+    PqFamily.rememberSchemas(spark, path, written)
   }
 
   /** Rebuild a stored IVFPQ index from its own vectors table — the major
@@ -618,7 +631,7 @@ object Pq {
     // that reads only vectors ([[IndexMaintenance.Family.liveRows]])
     val corpus = PqFamily.liveRows(spark, path, "vectors")
       .drop("cn", "cell", "ingest_batch")
-    val (oldCents, oldModel) = loadModel(spark, path)
+    val (oldCents, oldModel) = PqFamily.routing(spark, path)
     val nl = if (nlist > 0) nlist else oldCents.length
     val mm = if (m > 0) m else oldModel.m
     val ks = if (ksub > 0) ksub else oldModel.ksub
@@ -713,7 +726,7 @@ object Pq {
     * before r14 carry no reference row → fails with the remedy. */
   def shouldRetrain(batch: DataFrame, idCol: String, vecCol: String, path: String,
       fitDropTol: Double = 0.05, errRiseFrac: Double = 0.15): (Boolean, Double, Double, Double, Double) = {
-    val (cents, model) = loadModel(batch.sparkSession, path)
+    val (cents, model) = PqFamily.routing(batch.sparkSession, path)
     val (refFit, refErr) = loadPqDriftRef(batch.sparkSession, path)
     shouldRetrain(batch, idCol, vecCol, cents, model, refFit, refErr,
       fitDropTol, errRiseFrac)
@@ -729,10 +742,9 @@ object Pq {
     Similarity.ivfRetrainRule(fit, refFit, fitDropTol) ||
       err > refErr * (1.0 + errRiseFrac)
 
-  /** [[shouldRetrain]] against a pre-loaded model and reference — the
-    * streaming form (load once per stream via [[loadPqIndexModel]] +
-    * [[loadPqDriftRef]]; the per-batch cost is then one narrow pass
-    * over the BATCH). */
+  /** [[shouldRetrain]] against a caller-held model ([[loadPqIndexModel]])
+    * and reference ([[loadPqDriftRef]]) — the per-batch cost is one
+    * narrow pass over the BATCH. */
   def shouldRetrain(batch: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]], model: PqModel, refFit: Double, refErr: Double,
       fitDropTol: Double, errRiseFrac: Double): (Boolean, Double, Double, Double, Double) = {
@@ -767,9 +779,11 @@ object Pq {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/model/codebooks")
   }
 
+  /** Returns each table's written schema. */
   private def writeRows(batch: DataFrame, cId: String, cVec: String, path: String,
       cents: Array[Array[Double]], model: PqModel, mode: String,
-      batchId: Long, spreadFiles: Int, metaCols: Seq[String] = Nil): Unit = {
+      batchId: Long, spreadFiles: Int,
+      metaCols: Seq[String] = Nil): Map[String, org.apache.spark.sql.types.StructType] = {
     Similarity.requireMetaCols(metaCols)
     requirePqMetaCols(metaCols)
     // ONE fused pass computes cell + codes + norm per row. The previous
@@ -813,20 +827,21 @@ object Pq {
     // batchId-keyed + replay-idempotent and compaction can fold ONLY
     // committed leaves — the [[Similarity.writeIvfIndex]] discipline.
     // Readers filter on `cell` only; the static IN-prune is unaffected.
-    def write(df: DataFrame, table: String): Unit = {
+    def write(df: DataFrame, table: String) = {
       val keyed = df.withColumn("ingest_batch", lit(batchId))
       val w =
         if (mode == "dynamic")
           keyed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         else keyed.write.mode(mode)
       w.partitionBy("cell", "ingest_batch").parquet(s"$path/$table")
+      table -> keyed.schema
     }
-    try {
+    try Map(
       write(b.select(col("s._1").as("cell") +: col("corpus_id") +:
-        col("s._2").as("codes") +: metaCols.map(col): _*), "codes")
+        col("s._2").as("codes") +: metaCols.map(col): _*), "codes"),
       write(b.select(col("s._1").as("cell") +: col("corpus_id") +: col("cv") +:
-        col("s._3").as("cn") +: metaCols.map(col): _*), "vectors")
-    } finally b.unpersist()
+        col("s._3").as("cn") +: metaCols.map(col): _*), "vectors"))
+    finally b.unpersist()
   }
 
   private def requirePqMetaCols(metaCols: Seq[String]): Unit =
@@ -838,10 +853,14 @@ object Pq {
     * stored layout from `partitionBy(cell)` to `partitionBy(cell,
     * ingest_batch)`, so the layout guard refuses a flat pre-r15 index
     * with the rebuild remedy. */
-  private[graft] object PqFamily extends IndexMaintenance.Family(
+  private[graft] object PqFamily
+      extends IndexMaintenance.Family[(Array[Array[Double]], PqModel)](
       Seq("codes", "vectors"), "cell", "corpus_id", "Rebuild the index with writePqIndex.") {
-    def cells(spark: SparkSession, path: String): Int =
-      spark.read.parquet(s"$path/model/centroids").count().toInt
+    def cells(spark: SparkSession, path: String): Int = routing(spark, path)._1.length
+    protected def routingDirs = Seq("model/centroids" -> Similarity.CentroidSchema,
+      "model/codebooks" -> CodebookSchema)
+    protected def decodeRouting(rows: Seq[Array[org.apache.spark.sql.Row]]) =
+      (Similarity.decodeCentroids(rows(0)), decodeModel(rows(1)))
   }
 
   private def pair[T](s: Seq[T]): (T, T) = (s(0), s(1))
@@ -864,7 +883,7 @@ object Pq {
   def appendPqIndex(batch: DataFrame, cId: String, cVec: String, path: String,
       spreadFiles: Int = 0, metaCols: Seq[String] = Nil): Unit =
     PqFamily.appendManual(batch.select(col(cId).as("id")), path, metaCols) { lane =>
-      val (cents, model) = loadModel(batch.sparkSession, path)
+      val (cents, model) = PqFamily.routing(batch.sparkSession, path)
       writeRows(batch, cId, cVec, path, cents, model, "dynamic", lane, spreadFiles,
         metaCols)
     }
@@ -879,14 +898,14 @@ object Pq {
   def appendPqIndexIdempotent(batch: DataFrame, cId: String, cVec: String,
       path: String, batchId: Long, spreadFiles: Int = 0,
       metaCols: Seq[String] = Nil): Unit = {
-    val (cents, model) = loadModel(batch.sparkSession, path)
+    val (cents, model) = PqFamily.routing(batch.sparkSession, path)
     appendPqIndexIdempotent(batch, cId, cVec, path, cents, model, batchId,
       spreadFiles, metaCols)
   }
 
-  /** [[appendPqIndexIdempotent]] with a pre-loaded model — the streaming
-    * form (one [[loadPqIndexModel]] per stream instead of two driver-side
-    * parquet reads per micro-batch). */
+  /** [[appendPqIndexIdempotent]] with a caller-held model
+    * ([[loadPqIndexModel]]); the overload above reads the stored one
+    * from the index snapshot at no Spark job. */
   def appendPqIndexIdempotent(batch: DataFrame, cId: String, cVec: String,
       path: String, cents: Array[Array[Double]], model: PqModel, batchId: Long,
       spreadFiles: Int, metaCols: Seq[String]): Unit = {
@@ -906,13 +925,11 @@ object Pq {
     * aggregates — cost is independent of the resident index. */
   def indexDriftStats(batch: DataFrame, idCol: String, vecCol: String,
       path: String): DataFrame = {
-    val (cents, model) = loadModel(batch.sparkSession, path)
+    val (cents, model) = PqFamily.routing(batch.sparkSession, path)
     indexDriftStats(batch, idCol, vecCol, cents, model)
   }
 
-  /** [[indexDriftStats]] against a pre-loaded model ([[loadPqIndexModel]])
-    * — the streaming-monitor form (one model load per stream, not two
-    * driver-side parquet reads per trigger). */
+  /** [[indexDriftStats]] against a caller-held model ([[loadPqIndexModel]]). */
   def indexDriftStats(batch: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]], model: PqModel): DataFrame = {
     val statsUdf = udf { (v0: Seq[Double]) =>
@@ -954,10 +971,27 @@ object Pq {
       filter: Option[Column] = None, minCandidates: Int = 0): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
     val spark = queries.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val (cents, model) = loadModel(spark, path)
-    val lutUdf = udf { (v: Seq[Double]) =>
-      val x = Similarity.normalize(v.toArray)
+    val (cents, model) = PqFamily.routing(spark, path)
+    // tombstoned ids vanish from BOTH stages immediately (the ledger is
+    // driver-small by contract, so the anti-joins broadcast); filtering
+    // codes keeps deleted docs out of the ADC shortlist budget too
+    val tombstones = IndexMaintenance.readDeletes(spark, path)
+      .map(d => broadcast(d.select(col("id").as("corpus_id"))))
+    def live(df: DataFrame) = tombstones
+      .map(t => df.join(t, Seq("corpus_id"), "left_anti")).getOrElse(df)
+    // the metadata predicate (r18 filtered search — columns stored by
+    // writePqIndex(metaCols)) applies to BOTH stages like the
+    // tombstones: at the ADC stage so filtered-out rows never consume
+    // shortlist budget, and on the vectors side so the saturation path
+    // (which never reads codes) filters too — pushdown in each scan
+    def flt(df: DataFrame) = filter.map(df.filter).getOrElse(df)
+    // the query side is small by contract (the `qv` broadcast below):
+    // collected ONCE — a local frame collects with no job — and each
+    // query's normalized vector and m×ksub ADC lookup table computed
+    // here on the driver, once per query rather than per probe attempt
+    val qs = Similarity.localQueries(queries, qId, qVec)
+    val prepped = qs.rows.map { r =>
+      val x = Similarity.normalize(r.getSeq[Double](1).toArray)
       require(x.length == model.dim,
         s"query dimension ${x.length} != model dimension ${model.dim}")
       val lut = new Array[Double](model.m * model.ksub)
@@ -973,7 +1007,7 @@ object Pq {
         }
         j += 1
       }
-      lut
+      (r, x, lut.toSeq)
     }
     // each table's file listing is captured under the snapshot gate
     // (marker + epoch validated on both sides, retry on a concurrent
@@ -982,26 +1016,7 @@ object Pq {
     // pair captured ACROSS a fold boundary (one table folded, the other
     // not) is benign — a fold moves rows between leaves of one table,
     // never changes them, and the ADC join keys on (cell, corpus_id).
-    def snapshotRead(t: String) = {
-      val tp = new org.apache.hadoop.fs.Path(s"$path/$t")
-      IndexMaintenance.consistentListing(tp.getFileSystem(hconf), tp) {
-        spark.read.parquet(s"$path/$t")
-      }
-    }
-    // tombstoned ids vanish from BOTH stages immediately (the ledger is
-    // driver-small by contract, so the anti-joins broadcast); filtering
-    // codes keeps deleted docs out of the ADC shortlist budget too
-    val tombstones = IndexMaintenance.readDeletes(spark, path)
-      .map(d => broadcast(d.select(col("id").as("corpus_id"))))
-    def live(df: DataFrame) = tombstones
-      .map(t => df.join(t, Seq("corpus_id"), "left_anti")).getOrElse(df)
-    // the metadata predicate (r18 filtered search — columns stored by
-    // writePqIndex(metaCols)) applies to BOTH stages like the
-    // tombstones: at the ADC stage so filtered-out rows never consume
-    // shortlist budget, and on the vectors side so the saturation path
-    // (which never reads codes) filters too — pushdown in each scan
-    def flt(df: DataFrame) = filter.map(df.filter).getOrElse(df)
-    // the probe frame + filtered live codes at one nprobe setting —
+    // The probe frame + filtered live codes at one nprobe setting —
     // built per widening attempt and once for the final plan. Same
     // load-bearing exchange as ivfPqTopK: materialize each query row's
     // lut ONCE (codegen otherwise re-evaluates it per candidate inside
@@ -1009,34 +1024,30 @@ object Pq {
     // the ADC stage across partitions even when the caller's query
     // frame arrives as one.
     def at(np: Int): (DataFrame, DataFrame, Array[Int]) = {
-      val probeUdf = udf { (v: Seq[Double]) =>
-        val x = Similarity.normalize(v.toArray)
+      val probes = prepped.flatMap { case (r, x, lut) =>
         val scored = Array.tabulate(cents.length) { c =>
           var acc = 0.0d; var j = 0
           while (j < x.length) { acc += x(j) * cents(c)(j); j += 1 }
           (acc, c)
         }
-        scored.sortBy(-_._1).take(np).map(_._2)
+        scored.sortBy(-_._1).take(np)
+          .map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), c._2, lut))
       }
-      val q = queries.select(col(qId).as("query_id"), col(qVec).cast("array<double>").as("qv"))
-        .withColumn("cell", explode(probeUdf(col("qv"))))
-        .withColumn("lut", lutUdf(col("qv")))
+      import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+      val q = qs.frame(probes, "cell" -> IntegerType, "lut" -> ArrayType(DoubleType))
         .select("query_id", "cell", "lut")
         .repartition(col("query_id"), col("cell"))
       // literal IN on the partition column -> static directory pruning
       // on both index scans (same discipline as ivfTopKIndexed); the
-      // collected cell set is RETURNED so the vectors scan and the
-      // census reuse it instead of re-running the probe plan (r19
-      // review — the duplicate collect was one extra Spark job on
-      // every probe)
-      val probedCells = q.select("cell").distinct().collect().map(_.getInt(0))
-      (q, live(flt(snapshotRead("codes")
+      // cell set is RETURNED so the vectors scan and the census reuse it
+      val probedCells = probes.map(_.getInt(2)).distinct
+      (q, live(flt(PqFamily.readTable(spark, path, "codes")
         .filter(col("cell").isin(probedCells.toSeq: _*)))), probedCells)
     }
     var np = math.min(math.max(nprobe, 1), cents.length)
     var cur = at(np)
     if (minCandidates > 0) {
-      val nq = queries.select(col(qId)).distinct().count()
+      val nq = qs.distinctIds
       var done = false
       while (!done) {
         val (q, c, _) = cur
@@ -1060,7 +1071,7 @@ object Pq {
       }
     }
     val (q, codes, probedCells) = cur
-    val vectors = live(flt(snapshotRead("vectors")
+    val vectors = live(flt(PqFamily.readTable(spark, path, "vectors")
       .filter(col("cell").isin(probedCells.toSeq: _*))))
     // Shortlist-saturation skip: when k·refine covers every candidate
     // row in the probed cells, the ADC rank-and-truncate provably keeps
@@ -1091,8 +1102,7 @@ object Pq {
         // (cell-pruned), the id-width shortlist broadcasts
         broadcast(shortlist).join(vectors.select("corpus_id", "cv", "cn"), Seq("corpus_id"))
       }
-    val qv = broadcast(queries
-      .select(col(qId).as("query_id"), col(qVec).cast("array<double>").as("qv"))
+    val qv = broadcast(qs.frame(qs.rows.toSeq)
       .withColumn("qn", Similarity.l2norm(col("qv"))))
     Similarity.rankTopK(candidates
       .join(qv, Seq("query_id"))

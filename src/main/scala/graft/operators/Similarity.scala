@@ -384,9 +384,9 @@ object Similarity {
     // a previous index here would hide freshly built vectors
     IndexMaintenance.clearDeletes(spark, path)
     // ... and records the metadata contract every append must match
-    IndexMaintenance.writeMetaColsFile(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration), path, metaCols)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
     val assignUdf = udf { (v: Seq[Double]) => nearestCell(normalize(v.toArray), cents) }
     // the layout carries a second partition column, ingest_batch (-1 =
     // build-time rows), purely so streaming appends can be batchId-keyed
@@ -395,7 +395,7 @@ object Similarity {
     // `metaCols` (r18) are stored INLINE with every row — what makes
     // [[ivfTopKIndexed]]'s `filter` a parquet-pushed predicate inside
     // the pruned cells instead of a corpus-sized join at probe time
-    corpus.select(col(cId).as("corpus_id") +:
+    val rows = corpus.select(col(cId).as("corpus_id") +:
         col(cVec).cast("array<double>").as("cv") +: metaCols.map(col): _*)
       .withColumn("cell", assignUdf(col("cv")))
       .withColumn("cn", l2norm(col("cv")))
@@ -403,7 +403,7 @@ object Similarity {
       // cell-aligned exchange before the partitionBy write (see
       // [[cellSpread]] for the two failure modes this brackets)
       .transform(cellSpread(_, cents.length, spreadFiles = spreadFiles))
-      .write.mode("overwrite").partitionBy("cell", "ingest_batch")
+    rows.write.mode("overwrite").partitionBy("cell", "ingest_batch")
       .parquet(s"$path/corpus")
     import spark.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -413,6 +413,11 @@ object Similarity {
       refVecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toSeq
         .toDF("vec_id", "v"), "vec_id", "v", cents)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/drift_ref")
+    // a probe that raced the build re-reads; what was just written is
+    // written through
+    IndexMaintenance.invalidateSnapshot(fs, path)
+    IvfFamily.rememberRouting(spark, path, cents)
+    IvfFamily.rememberSchemas(spark, path, Map("corpus" -> rows.schema))
   }
 
   /** Rebuild a stored IVF index from its own corpus — the MAJOR
@@ -460,7 +465,7 @@ object Similarity {
     // probes) are kept — only the derived layout columns are recomputed
     val corpus = IvfFamily.liveRows(spark, path, "corpus")
       .drop("cn", "cell", "ingest_batch")
-    val nl = if (nlist > 0) nlist else loadIvfCentroids(spark, path).length
+    val nl = if (nlist > 0) nlist else IvfFamily.cells(spark, path)
     val both = hashSpreadVecsById(corpus, "corpus_id", "cv", 2 * maxSample)
     val (train, ref) = heldOutSplit(both, maxSample)
     val cents = trainIvfCentroidsFromSample(train, nl, iters)
@@ -507,13 +512,13 @@ object Similarity {
   def shouldRetrain(batch: DataFrame, idCol: String, vecCol: String, path: String,
       fitDropTol: Double = 0.05): (Boolean, Double, Double) =
     shouldRetrain(batch, idCol, vecCol,
-      loadIvfCentroids(batch.sparkSession, path),
+      IvfFamily.routing(batch.sparkSession, path),
       loadIvfDriftRef(batch.sparkSession, path), fitDropTol)
 
-  /** [[shouldRetrain]] against a pre-loaded quantizer and reference fit
-    * — the streaming form ([[graft.streaming.StreamingAnn]] loads both
-    * once per stream; the per-batch cost is then one narrow pass over
-    * the BATCH). */
+  /** [[shouldRetrain]] against caller-held centroids and reference fit
+    * — the streaming form ([[graft.streaming.StreamingAnn]] reads the
+    * centroids from the index snapshot and the reference once per
+    * stream); the per-batch cost is one narrow pass over the BATCH. */
   def shouldRetrain(batch: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]], refFit: Double,
       fitDropTol: Double): (Boolean, Double, Double) = {
@@ -553,12 +558,12 @@ object Similarity {
     * drift monitor ([[ivfDriftStats]]; PQ twin [[Pq.indexDriftStats]])
     * degrades vs the build-time reference row. */
   def appendIvfIndex(batch: DataFrame, cId: String, cVec: String, path: String): Unit =
-    appendIvfIndex(batch, cId, cVec, path, loadIvfCentroids(batch.sparkSession, path))
+    appendIvfIndex(batch, cId, cVec, path, IvfFamily.routing(batch.sparkSession, path))
 
-  /** [[appendIvfIndex]] with pre-loaded centroids ([[loadIvfCentroids]]) —
-    * for repeated callers (a streaming ingest appends every trigger; the
-    * quantizer is immutable between rebuilds, so one load serves the whole
-    * stream instead of one driver-side parquet read per micro-batch).
+  /** [[appendIvfIndex]] with caller-held centroids ([[loadIvfCentroids]]).
+    * The path overload reads them from the index snapshot at no Spark
+    * job, so this form is only needed to assign against centroids other
+    * than the stored ones' current state.
     *
     * RETRY-IDEMPOTENT (r17 — the lexical family's manual-lane shape,
     * closing the adjudicated asymmetry): the batch is auto-assigned the
@@ -604,11 +609,25 @@ object Similarity {
     * went from `partitionBy(cell)` to `partitionBy(cell, ingest_batch)`
     * in r12 (for replay-idempotent streaming appends), so the layout
     * guard refuses a pre-r12 corpus with the rebuild remedy. */
-  private[graft] object IvfFamily extends IndexMaintenance.Family(
+  private[graft] object IvfFamily extends IndexMaintenance.Family[Array[Array[Double]]](
       Seq("corpus"), "cell", "corpus_id", "Rebuild the index with writeIvfIndex.") {
     def cells(spark: org.apache.spark.sql.SparkSession, path: String): Int =
-      spark.read.parquet(s"$path/centroids").count().toInt
+      routing(spark, path).length
+    protected def routingDirs = Seq("centroids" -> CentroidSchema)
+    protected def decodeRouting(rows: Seq[Array[org.apache.spark.sql.Row]]) =
+      decodeCentroids(rows.head)
   }
+
+  /** How [[writeIvfIndex]] (and the IVFPQ model) store centroids. */
+  private[operators] val CentroidSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.IntegerType),
+    org.apache.spark.sql.types.StructField("centroid",
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
+
+  /** Centroid rows → the cell-ordered centroid array (sorted on the
+    * driver: nlist rows). */
+  private[operators] def decodeCentroids(rows: Array[org.apache.spark.sql.Row]): Array[Array[Double]] =
+    rows.sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
 
   /** Test seam: count of FS-listing layout checks actually performed —
     * lets a spec prove a multi-batch stream listed the layout once. */
@@ -846,10 +865,10 @@ object Similarity {
     * of the resident index. */
   def ivfDriftStats(batch: DataFrame, idCol: String, vecCol: String,
       path: String): DataFrame =
-    ivfDriftStats(batch, idCol, vecCol, loadIvfCentroids(batch.sparkSession, path))
+    ivfDriftStats(batch, idCol, vecCol, IvfFamily.routing(batch.sparkSession, path))
 
-  /** [[ivfDriftStats]] against pre-loaded centroids — the streaming-monitor
-    * form (one load per stream, not per trigger). */
+  /** [[ivfDriftStats]] against caller-held centroids — the
+    * streaming-monitor form. */
   def ivfDriftStats(batch: DataFrame, idCol: String, vecCol: String,
       cents: Array[Array[Double]]): DataFrame = {
     val fitUdf = udf { (v0: Seq[Double]) =>
@@ -864,33 +883,35 @@ object Similarity {
       .agg(count(lit(1)).as("n_vectors"), round(avg(col("fit")), 6).as("coarse_fit"))
   }
 
-  /** Load a stored index's centroid table ([[writeIvfIndex]] layout) into
-    * the driver: nlist×dim doubles, cell-ordered. The immutable-between-
-    * rebuilds part of the index — load once, reuse across queries/batches
-    * via the centroid-taking overloads below. */
+  /** A stored index's centroids ([[writeIvfIndex]] layout) on the
+    * driver: nlist×dim doubles, cell-ordered — a private copy of the
+    * index snapshot's ([[IndexMaintenance]]), which every probe, append
+    * and drift call already reads through at no Spark job while the
+    * centroid files are unchanged. Callers that hold centroids of their
+    * own pass them to the centroid-taking overloads below. */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect()
-      .map(r => r.getSeq[Double](1).toArray)
+    IvfFamily.routing(spark, path).map(_.clone())
 
   /** Query a stored IVF index ([[writeIvfIndex]]). The probed-cell set
     * is pushed as a literal IN filter on the partition column, so the
     * scan prunes to those directories statically — visible as
     * PartitionFilters in the plan. Results are identical to [[ivfTopK]]
-    * with the same parameters. */
+    * with the same parameters. Centroids, the tombstone ledger and the
+    * corpus schema come from the index snapshot: a repeat probe runs
+    * only its scoring jobs. */
   def ivfTopKIndexed(
       queries: DataFrame, qId: String, qVec: String,
       path: String, k: Int, nprobe: Int,
       filter: Option[Column] = None,
       minCandidates: Int = 0): DataFrame =
     ivfTopKIndexed(queries, qId, qVec, path, k, nprobe,
-      loadIvfCentroids(queries.sparkSession, path), filter, minCandidates)
+      IvfFamily.routing(queries.sparkSession, path), filter, minCandidates)
 
-  /** [[ivfTopKIndexed]] with pre-loaded centroids — the streaming-retrieval
-    * form ([[graft.streaming.StreamingAnn]] loads once per stream; each
-    * trigger still re-reads only its probed CELLS of the corpus, which is
-    * the part that must stay fresh across appends).
+  /** [[ivfTopKIndexed]] with caller-held centroids: each call still reads
+    * the ledger and the corpus schema from the index snapshot and only
+    * its probed CELLS of the corpus, the part that must stay fresh
+    * across appends.
     *
     * `filter` (r18) is FILTERED vector search — the production
     * "nearest neighbors WHERE metadata predicate" shape (language = en,
@@ -929,40 +950,34 @@ object Similarity {
       cents: Array[Array[Double]], filter: Option[Column],
       minCandidates: Int): DataFrame = {
     val spark = queries.sparkSession
-    val corpusPath = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val corpusFs = corpusPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // tombstoned ids vanish from answers immediately; the ledger is
     // driver-small by contract, so the anti-join broadcasts
     val tombstones = IndexMaintenance.readDeletes(spark, path)
       .map(d => broadcast(d.select(col("id").as("corpus_id"))))
+    // the query side is small by contract (it's the probe set, not the
+    // corpus): collected ONCE — a local frame collects with no job — and
+    // the probe cells are picked here on the driver, so no job runs to
+    // learn which cells to prune to
+    val qs = localQueries(queries, qId, qVec)
     // the probe frame + candidate frame at one nprobe setting — built
-    // per widening attempt (the probe UDF closes over np) and once for
-    // the final scoring join. No persist: the query side is small by
-    // contract (it's the probe set, not the corpus), so recomputing the
-    // probe UDF once for the cell list and once in the join is cheaper
-    // than leaking a session cache entry.
+    // per widening attempt and once for the final scoring join
     def at(np: Int): (DataFrame, DataFrame) = {
-      val probeUdf = udf { (v: Seq[Double]) =>
-        val x = normalize(v.toArray)
+      val probes = qs.rows.flatMap { r =>
+        val x = normalize(r.getSeq[Double](1).toArray)
         val scored = Array.tabulate(cents.length)(c => (dotStrict(x, cents(c)), c))
-        scored.sortBy(-_._1).take(np).map(_._2)
+        scored.sortBy(-_._1).take(np).map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), c._2))
       }
-      val q = queries.select(col(qId).as("query_id"), col(qVec).cast("array<double>").as("qv"))
-        .withColumn("cell", explode(probeUdf(col("qv"))))
+      val q = qs.frame(probes, "cell" -> org.apache.spark.sql.types.IntegerType)
         .withColumn("qn", l2norm(col("qv")))
-      // literal IN on the partition column -> static directory pruning
-      val probedCells = q.select("cell").distinct().collect().map(_.getInt(0))
-      // spark.read.parquet lists the table's files EAGERLY here, and that
-      // captured listing is what the scan executes against — so taking it
-      // through the snapshot gate (marker + epoch validated on both sides,
-      // retry on overlap; a live fold's marker window just delays it)
-      // guarantees a folded batch is never visible twice, even when a fold
-      // runs concurrently with this probe. Remaining anomaly is loud-only:
-      // a file deleted after the snapshot fails the task with
-      // FileNotFoundException — retry the query.
-      val c0 = IndexMaintenance.consistentListing(corpusFs, corpusPath) {
-        spark.read.parquet(s"$path/corpus")
-      }.filter(col("cell").isin(probedCells.toSeq: _*))
+      // literal IN on the partition column -> static directory pruning.
+      // The corpus listing is taken through the snapshot gate (marker +
+      // epoch validated on both sides, retry on overlap; a live fold's
+      // marker window just delays it), so a folded batch is never visible
+      // twice, even when a fold runs concurrently with this probe.
+      // Remaining anomaly is loud-only: a file deleted after the snapshot
+      // fails the task with FileNotFoundException — retry the query.
+      val c0 = IvfFamily.readTable(spark, path, "corpus")
+        .filter(col("cell").isin(probes.map(_.getInt(2)).distinct.toSeq: _*))
       // the metadata predicate rides the same scan the cell IN-filter
       // prunes — Catalyst pushes it into the parquet read, so filtered
       // search costs a narrower scan, not a join
@@ -972,7 +987,7 @@ object Similarity {
     var np = math.min(math.max(nprobe, 1), cents.length)
     var cur = at(np)
     if (minCandidates > 0) {
-      val nq = queries.select(col(qId)).distinct().count()
+      val nq = qs.distinctIds
       var done = false
       while (!done) {
         val (q, c) = cur
@@ -1007,11 +1022,37 @@ object Similarity {
       }
     }
     // the final loop iteration's frames ARE the scoring inputs — no
-    // rebuilt probe plan, no second probedCells collect (r19 review)
+    // rebuilt probe plan (r19 review)
     val (q, c) = cur
     rankTopK(q.join(c, Seq("cell"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn"))), k)
+  }
+
+  /** A probe's query side on the driver: `(query_id, qv array<double>)`
+    * rows collected once — a local frame collects with no Spark job —
+    * from which probe cells, lookup tables and census counts are
+    * computed here, and local frames rebuilt for the scoring join. The
+    * probe contract already makes the query set driver-small (it is
+    * broadcast into the scoring join). */
+  private[operators] final class LocalQueries(val rows: Array[org.apache.spark.sql.Row],
+      idField: org.apache.spark.sql.types.StructField, spark: org.apache.spark.sql.SparkSession) {
+    /** Rows `(query_id, qv, extra...)` as a local frame. */
+    def frame(rows: Seq[org.apache.spark.sql.Row],
+        extra: (String, org.apache.spark.sql.types.DataType)*): DataFrame = {
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(
+        Seq(idField.copy(name = "query_id"), StructField("qv", ArrayType(DoubleType))) ++
+          extra.map { case (n, t) => StructField(n, t) }))
+    }
+    /** The distinct query ids, as `select(qId).distinct().count()`. */
+    def distinctIds: Long = rows.map(_.get(0)).distinct.length.toLong
+  }
+
+  private[operators] def localQueries(queries: DataFrame, qId: String,
+      qVec: String): LocalQueries = {
+    val q = queries.select(col(qId).as("query_id"), col(qVec).cast("array<double>").as("qv"))
+    new LocalQueries(q.collect(), q.schema("query_id"), queries.sparkSession)
   }
 
   /** LSH-bucketed approximate top-k: candidates share at least one

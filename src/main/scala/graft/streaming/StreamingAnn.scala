@@ -19,8 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * FULL index — the difference between touching 1/16th of 100 TB and
   * all of it, every trigger. Per-query top-k ranking (a rank window)
   * is also batch-only; inside foreachBatch both come for free, and the
-  * per-batch driver work stays bounded (centroid load + one cell-id
-  * collect).
+  * per-batch driver work stays bounded (the query batch's collect and
+  * the index snapshot's revalidation listing).
   *
   * State: none — scoring is stateless per batch, so there is no state
   * store, no watermark requirement, and exactly-once lands on the
@@ -45,22 +45,20 @@ object StreamingAnn {
     * [[graft.operators.Similarity.ivfTopKIndexed]]; at nprobe = nlist
     * the per-batch answer is exact (every cell probed).
     *
-    * The centroid table (the immutable-between-rebuilds part of the
-    * index) loads lazily ONCE per stream, not per trigger; each trigger
-    * re-reads only its probed corpus cells — the part concurrent
-    * [[appendBatches]] appends must keep fresh. */
+    * Centroids, ledger and corpus schema come from the index snapshot
+    * ([[graft.operators.IndexMaintenance]]), revalidated every trigger
+    * at no Spark job while unchanged; each trigger re-reads only its
+    * probed corpus cells — the part concurrent [[appendBatches]] appends
+    * must keep fresh. */
   def topKIndexedBatches(
       path: String, qId: String, qVec: String, k: Int, nprobe: Int)(
-      sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val cents = loadCents(path)
+      sink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     (batch, batchId) => {
       // an empty trigger has no probed cells and nothing to rank — skip
       // the index read entirely instead of planning a no-op scan
       if (!batch.isEmpty)
-        sink(Similarity.ivfTopKIndexed(batch, qId, qVec, path, k, nprobe,
-          cents(batch), filter = None, minCandidates = 0), batchId)
+        sink(Similarity.ivfTopKIndexed(batch, qId, qVec, path, k, nprobe), batchId)
     }
-  }
 
   /** The ingest side of the lifecycle: a `foreachBatch` function that
     * appends each micro-batch of `(id, vec)` rows into the stored index
@@ -72,8 +70,8 @@ object StreamingAnn {
     * monitoring job. ([[appendBatchesWithRetrain]] goes one step
     * further and evaluates the retrain TRIGGER per batch.) When the
     * verdict says retrain, rebuild the index and restart the stream
-    * (the stream holds the quantizer, so a rebuild is a new stream by
-    * design — centroids must not change under a running assigner).
+    * (a rebuild lands at a new path, so it is a new stream by design —
+    * centroids must not change under a running assigner).
     *
     * Exactly-once: ingestion is batchId-keyed
     * ([[graft.operators.Similarity.appendIvfIndexIdempotent]] — each
@@ -140,9 +138,9 @@ object StreamingAnn {
 
   /** [[appendBatches]] with the drift-retrain loop CLOSED in-stream:
     * after each non-empty batch is appended, the retrain trigger runs
-    * against the index's build-time `drift_ref` row (quantizer and
-    * reference both loaded once per stream — the per-batch cost is one
-    * narrow pass over the batch) and the [[RetrainVerdict]] goes to the
+    * against the index's build-time `drift_ref` row (the reference
+    * loaded once per stream, the quantizer read from the index snapshot
+    * — the per-batch cost is one narrow pass over the batch) and the [[RetrainVerdict]] goes to the
     * caller's sink. The verdict is monitoring, at-least-once on replay
     * like `onDrift`. On `retrain = true` the operational move is:
     * finish/stop the stream, run
@@ -161,7 +159,7 @@ object StreamingAnn {
       purgeWhenAdvised: Boolean = false, maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       onVerdict: (RetrainVerdict, Long) => Unit): (DataFrame, Long) => Unit = {
-    var refFit = Double.NaN // loaded once per stream, alongside the centroids
+    var refFit = Double.NaN // loaded once per stream
     @volatile var drifted = false // the advice's drift axis = the last verdict
     ingest(path, idCol, vecCol, compactEvery, onAdvice, () => drifted,
         purgeWhenAdvised, maxTombstones, metaCols) {
@@ -195,7 +193,8 @@ object StreamingAnn {
     * in-stream incremental fold every `compactEvery` non-empty batches
     * ([[graft.operators.Pq.compactPqIndex]] at `batchId - 1` — safe by
     * the same committed-before-delivery construction as the IVF twin).
-    * The model (centroids + codebooks) loads once per STREAM; fold
+    * The model (centroids + codebooks) comes from the index snapshot
+    * (no Spark job per trigger while unchanged); fold
     * debris from a crashed previous run self-heals on the first batch
     * ([[graft.operators.Pq.recoverPqFold]], logged). Drift rows are
     * monitoring — at-least-once on replay, key on batchId to dedup. */
@@ -215,7 +214,7 @@ object StreamingAnn {
   /** [[appendPqBatches]] with the retrain loop closed in-stream —
     * [[appendBatchesWithRetrain]]'s PQ twin, with both drift axes: the
     * trigger fires on coarse-fit collapse OR reconstruction-error rise
-    * vs the build-time reference (both loaded once per stream). Same
+    * vs the build-time reference (loaded once per stream). Same
     * operational contract: the verdict is advisory; on `retrain = true`
     * stop the stream, run [[graft.operators.Pq.rebuildPqIndex]]
     * (build-aside at a new path, both models retrained hash-spread,
@@ -251,9 +250,8 @@ object StreamingAnn {
       purgeWhenAdvised: Boolean = false, maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       monitor: (DataFrame, Long, Array[Array[Double]], Pq.PqModel) => Unit): (DataFrame, Long) => Unit =
-    ingestLoop[(Array[Array[Double]], Pq.PqModel)](Pq.PqFamily, path, compactEvery,
+    ingestLoop(Pq.PqFamily, path, compactEvery,
         onAdvice, driftTripped, purgeWhenAdvised, maxTombstones)(
-      load = s => Pq.loadPqIndexModel(s, path),
       append = (batch, m, batchId) => Pq.appendPqIndexIdempotent(
         batch, idCol, vecCol, path, m._1, m._2, batchId, spreadFiles = 0,
         metaCols = metaCols),
@@ -266,21 +264,21 @@ object StreamingAnn {
       purgeWhenAdvised: Boolean = false, maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       monitor: (DataFrame, Long, Array[Array[Double]]) => Unit): (DataFrame, Long) => Unit =
-    ingestLoop[Array[Array[Double]]](Similarity.IvfFamily, path, compactEvery,
+    ingestLoop(Similarity.IvfFamily, path, compactEvery,
         onAdvice, driftTripped, purgeWhenAdvised, maxTombstones)(
-      load = s => Similarity.loadIvfCentroids(s, path),
       append = (batch, cents, batchId) => Similarity.appendIvfIndexIdempotent(
         batch, idCol, vecCol, path, cents, batchId, metaCols = metaCols),
       monitor = monitor)
 
   /** The ONE ingest skeleton every index family rides — any change to
-    * the ordering (recover before first append, model loaded once per
-    * stream, fold watermark `batchId - 1`, skip-empty) lands in all of
-    * them by construction. The family's own maintenance ops
-    * ([[IndexMaintenance.Family]]: recover, fold, resident compaction,
-    * advice, purge) run against `path`; the caller passes only what is
-    * family-specific per batch — `load` (the immutable-between-rebuilds
-    * model `M`), `append` and `monitor`.
+    * the ordering (recover before first append, fold watermark
+    * `batchId - 1`, skip-empty) lands in all of them by construction.
+    * The family's own maintenance ops ([[IndexMaintenance.Family]]:
+    * recover, fold, resident compaction, advice, purge) run against
+    * `path`, and its routing data `M` (centroids, model, stats row) is
+    * read per batch through the index snapshot — no Spark job while
+    * unchanged, and never stale; the caller passes only what is
+    * family-specific per batch — `append` and `monitor`.
     *
     * After each in-stream fold the RESIDENT layer self-maintains (r16):
     * the family's resident compaction rewrites any cell whose `-1` file
@@ -311,13 +309,11 @@ object StreamingAnn {
     * (single-writer holds, like the fold). The post-fold advice is
     * handed to `onAdvice` too, so the monitor sees the purge-deletes
     * transition and then its disappearance. */
-  private[streaming] def ingestLoop[M](family: IndexMaintenance.Family,
+  private[streaming] def ingestLoop[M](family: IndexMaintenance.Family[M],
       path: String, compactEvery: Int, onAdvice: (MaintenanceAdvice, Long) => Unit,
       driftTripped: () => Boolean, purgeWhenAdvised: Boolean, maxTombstones: Long)(
-      load: SparkSession => M,
       append: (DataFrame, M, Long) => Unit,
       monitor: (DataFrame, Long, M) => Unit): (DataFrame, Long) => Unit = {
-    var loaded: Option[M] = None
     var appended = 0L
     var recovered = false
     def advise(spark: SparkSession) =
@@ -331,7 +327,7 @@ object StreamingAnn {
               .warn(s"StreamingAnn: recovered interrupted compaction — $msg"))
           recovered = true
         }
-        val m = loaded.getOrElse { val x = load(spark); loaded = Some(x); x }
+        val m = family.routing(spark, path)
         append(batch, m, batchId)
         monitor(batch, batchId, m)
         appended += 1
@@ -363,14 +359,4 @@ object StreamingAnn {
     }
   }
 
-  // one driver-side centroid read per STREAM: the quantizer is immutable
-  // between rebuilds, so re-reading it every trigger buys nothing
-  private def loadCents(path: String): DataFrame => Array[Array[Double]] = {
-    var loaded: Array[Array[Double]] = null
-    batch => {
-      if (loaded == null)
-        loaded = Similarity.loadIvfCentroids(batch.sparkSession, path)
-      loaded
-    }
-  }
 }

@@ -36,9 +36,8 @@ object StreamingLex {
       maxTombstones: Long = 100000L,
       metaCols: Seq[String] = Nil)(
       onBatch: Long => Unit = _ => ()): (DataFrame, Long) => Unit =
-    StreamingAnn.ingestLoop[Unit](Curation.Bm25Family, path, compactEvery,
+    StreamingAnn.ingestLoop(Curation.Bm25Family, path, compactEvery,
         onAdvice, driftTripped = () => false, purgeWhenAdvised, maxTombstones)(
-      load = _ => (),
       append = (batch, _, batchId) =>
         Curation.appendBm25IndexIdempotent(batch, idCol, textCol, path, batchId,
           metaCols = metaCols),
