@@ -660,18 +660,17 @@ object Curation {
     val toks = tokenized(df, idCol, textCol, metaCols)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val postings = Bm25Family.spread(buckets, spreadFiles)(postingsOf(toks, buckets, metaCols))
+      Bm25Family.spread(buckets, spreadFiles)(postingsOf(toks, buckets, metaCols))
         .withColumn("ingest_batch", lit(-1L))
-      postings.write.mode("overwrite").partitionBy("bucket", "ingest_batch")
+        .write.mode("overwrite").partitionBy("bucket", "ingest_batch")
         .parquet(s"$path/postings")
       writeDoclens(toks, path, overwrite = true)
       val t = toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("s")).collect()(0)
-      // a probe that raced the build re-reads; the stats row and the
-      // postings schema are written through
-      IndexMaintenance.invalidateSnapshot(fs, path)
+      // again after the postings: moves the snapshot's schema key past any
+      // schema a probe read while they were being rewritten
+      IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
       writeStats(spark, path, t.getLong(0), if (t.isNullAt(1)) 0L else t.getLong(1),
         buckets, lastBatch = -1L, lastManual = ManualLaneFloor - 1)
-      Bm25Family.rememberSchemas(spark, path, Map("postings" -> postings.schema))
     } finally { toks.unpersist(false); () }
   }
 
@@ -1623,24 +1622,11 @@ object Curation {
     // implementation accident); the candidate branch's scan carries the
     // predicate. Composes with `allowed` (both restrict candidates).
     val tfF = filter.map(tfA.filter).getOrElse(tfA)
-    val scored = tfF.join(broadcast(dfreq), "term")
-    // fan out per query that asked for the term; with ONE query every
-    // pruned row's term is one of its terms, so the fan-out is a
-    // constant column and needs no broadcast
-    val single = pairs.map(_.get(0)).distinct match {
-      case Seq(only) => Some(only)
-      case _ => None
-    }
-    val fanned = single match {
-      case Some(only) =>
-        scored.withColumn("query_id", lit(only).cast(q.schema("query_id").dataType))
-      case None =>
-        scored.join(broadcast(spark.createDataFrame(java.util.Arrays.asList(pairs: _*),
-          org.apache.spark.sql.types.StructType(Seq(q.schema("query_id"),
-            org.apache.spark.sql.types.StructField("term",
-              org.apache.spark.sql.types.StringType))))), "term")
-    }
-    val perDoc = fanned
+    val qt = spark.createDataFrame(java.util.Arrays.asList(pairs: _*),
+      org.apache.spark.sql.types.StructType(Seq(q.schema("query_id"),
+        org.apache.spark.sql.types.StructField("term", org.apache.spark.sql.types.StringType))))
+    tfF.join(broadcast(dfreq), "term")
+      .join(broadcast(qt), "term") // fan out per query that asked for the term
       .withColumn("idf",
         log((lit(nDocs) - col("df") + lit(0.5d)) / (col("df") + lit(0.5d)) + lit(1.0d)))
       .withColumn("contrib",
@@ -1648,15 +1634,10 @@ object Curation {
           (col("tf") + lit(k1) * (lit(1.0d) - lit(b) + lit(b) * col("dl") / lit(avgdl))))
       .groupBy("query_id", "id")
       .agg(round(sum(col("contrib")), 4).as("score"), count(lit(1)).as("n_terms_hit"))
-    // the final sort runs in one partition: a batch's rank window runs
-    // per query in parallel and only its ≤ queries × topK survivors move
-    // there (no range-partitioning sample job); ONE query's window is a
-    // single partition anyway, so its docs move there once, before it
-    val ranked = (if (single.isDefined) perDoc.repartition(1) else perDoc)
       .withColumn("rank", row_number().over(Window.partitionBy("query_id")
         .orderBy(col("score").desc, col("id"))))
       .filter(col("rank") <= topK)
-    (if (single.isDefined) ranked else ranked.repartition(1)).orderBy("query_id", "rank")
+      .orderBy("query_id", "rank")
   }
 
   /** Reciprocal-rank fusion (RRF — Cormack, Clarke & Buettcher, SIGIR

@@ -466,7 +466,8 @@ private[graft] object IndexMaintenance {
   //    recovery — changes the key; unchanged key = zero Spark jobs,
   //    changed key = one job per routing dir, read with its known schema;
   //  - the tables' schemas, keyed on the `_meta_cols` contract file's
-  //    status (every build and backfill rewrites it), so probes read
+  //    status (every build and backfill rewrites it before AND after
+  //    its tables, so a mid-rewrite read is keyed stale), so probes read
   //    their tables with `spark.read.schema(known)` — the listing stays
   //    inside [[consistentListing]], only the schema-inference job goes;
   //  - the deduplicated ledger rows with the files they came from, keyed
@@ -480,11 +481,9 @@ private[graft] object IndexMaintenance {
   // only cost a reload, never serve old data. This JVM's writers write
   // through what they just published — the BM25 stats row, a fresh
   // ledger's schema — under the single-writer contract. Each part is a
-  // bounded LRU ([[SnapshotEntries]] entries). In-process builds and
-  // backfills also drop the path's entries when they start and finish
-  // (and a generation counter keeps a load that raced one from being
-  // cached), which covers the window where `_meta_cols` is already new
-  // and the tables are not.
+  // bounded LRU ([[SnapshotEntries]] entries). Every `_meta_cols` write
+  // also drops the path's entries (and a generation counter keeps a
+  // load that raced it from being cached).
   // ---------------------------------------------------------------------
 
   /** A committed file as the snapshot keys it: (name, length, mtime). */
@@ -522,13 +521,20 @@ private[graft] object IndexMaintenance {
   private val snapshotGeneration = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Drop every snapshot entry of the index at `indexPath` — called by
-    * in-process builds and backfills when they start and finish. */
-  private[operators] def invalidateSnapshot(fs: FileSystem, indexPath: String): Unit = {
+    * every `_meta_cols` write and after each backfilled table. */
+  private def invalidateSnapshot(fs: FileSystem, indexPath: String): Unit = {
     val root = qualified(fs, indexPath)
     snapshotGeneration.incrementAndGet()
     routings.removeIf(_._2 == root)
     schemas.removeIf(_._2 == root)
     ledgers.removeIf(_ == root)
+  }
+
+  /** Test seam: the row count of the snapshot's ledger entry for the
+    * index at `indexPath`, None when it holds none. */
+  private[graft] def snapshotLedgerRows(spark: SparkSession, indexPath: String): Option[Int] = {
+    val p = new Path(indexPath)
+    ledgers.get(qualified(fsOf(spark, p), indexPath)).map(_.rows.length)
   }
 
   /** Test seam: empty the snapshot, so the next call reads cold. */
@@ -616,8 +622,8 @@ private[graft] object IndexMaintenance {
     * cost no Spark job, new files one job (with the known schema), and
     * anything else a full distributed-distinct reload. Refused past
     * [[maxLedgerDriverRows]] with [[LedgerCapExceeded]]: every read is
-    * bounded by `cap + 1` rows, and an over-cap ledger is never cached
-    * incomplete. */
+    * bounded by `cap + 1` rows, and a ledger past the cap is never
+    * cached — the snapshot keeps at most the last entry within it. */
   private[operators] def ledgerRows(spark: SparkSession,
       indexPath: String): Option[Ledger] = {
     val dir = new Path(deletesDir(indexPath))
@@ -652,8 +658,10 @@ private[graft] object IndexMaintenance {
             }
           case _ => snapshotReloads.incrementAndGet(); full(files)
         }
-        if (!cached.contains(l) && snapshotGeneration.get() == gen) ledgers.put(root, l)
+        // refused BEFORE it is cached: an over-cap ledger never grows the
+        // snapshot, whatever the deletes past the cap add
         if (l.rows.length > cap) throw capExceeded(indexPath, cap)
+        if (!cached.contains(l) && snapshotGeneration.get() == gen) ledgers.put(root, l)
         Some(l)
       }
     }
@@ -772,9 +780,12 @@ private[graft] object IndexMaintenance {
     * rebuild remedy. One tiny file read per append. */
   private def metaColsFile(indexRoot: Path) = new Path(indexRoot, "_meta_cols")
 
-  /** Written by every build and backfill — also for an empty column
-    * set, so each one changes the file's status, which is the index
-    * snapshot's schema key. Drops the path's snapshot entries. */
+  /** Written by every build and backfill before its tables (the
+    * contract every append checks) and again after them — also for an
+    * empty column set, so each write changes the file's status, which
+    * is the index snapshot's schema key: a schema read while the tables
+    * were being rewritten can never match the key the rewrite ends
+    * with. Drops the path's snapshot entries. */
   private[operators] def writeMetaColsFile(fs: FileSystem, indexRoot: String,
       metaCols: Seq[String]): Unit = {
     val f = metaColsFile(new Path(indexRoot))
@@ -1401,36 +1412,13 @@ private[graft] object IndexMaintenance {
         routings.put((this, qualified(fs, path)), new Routing(files, data))
     }
 
-    /** Write-through at the end of a build, which just wrote each table
-      * from a frame with the `written` schema: the schema a read infers
-      * is its columns minus the partition columns, all nullable, then
-      * `level1` and `ingest_batch` as the integers partition discovery
-      * infers from their directory names — so the first probe after a
-      * build runs no inference job. */
-    private[operators] final def rememberSchemas(spark: SparkSession, path: String,
-        written: Map[String, StructType]): Unit = {
-      import org.apache.spark.sql.types._
-      def nullable(t: DataType): DataType = t match {
-        case s: StructType => StructType(s.fields.map(f =>
-          f.copy(dataType = nullable(f.dataType), nullable = true)))
-        case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-        case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
-        case other => other
-      }
-      val parts = Seq(level1, "ingest_batch")
-      val fs = fsOf(spark, new Path(path))
-      schemas.put((this, qualified(fs, path)), new Schemas(
-        fileKey(fs, metaColsFile(new Path(path))), written.map { case (t, w) =>
-          t -> StructType(w.fields.filterNot(f => parts.contains(f.name))
-            .map(f => f.copy(dataType = nullable(f.dataType), nullable = true)) ++
-            parts.map(StructField(_, IntegerType)))
-        }))
-    }
-
     /** The stored schema of `table` at `path` from the index snapshot,
       * keyed on the `_meta_cols` file's status: no Spark job while it is
       * unchanged, one schema-inference job per table after a build or a
-      * backfill. */
+      * backfill. Builds and backfills write `_meta_cols` both before and
+      * after their tables, so a schema inferred mid-rewrite — by this
+      * driver or another one reading the same index — is cached under a
+      * key that the finished rewrite replaces. */
     def schemaOf(spark: SparkSession, path: String, table: String): StructType = {
       val root = new Path(path)
       val fs = fsOf(spark, root)
@@ -1809,10 +1797,15 @@ private[graft] object IndexMaintenance {
           s"metadata frame must hold ONE row per id: ${mAgg.getLong(0)} rows over " +
             s"${mAgg.getLong(1)} distinct ids — a duplicated id would multiply " +
             "index rows through the join")
-        writeMetaColsFile(fs, path, (stored ++ metaCols).distinct)
-        tables.map(t =>
+        val union = (stored ++ metaCols).distinct
+        writeMetaColsFile(fs, path, union)
+        val rewritten = tables.map(t =>
           backfillTableMetaCols(spark, path, t, m, idCol, metaCols, level1))
           .reduce(_ || _)
+        // again after the tables: the snapshot's schema key moves past
+        // any schema read while they were rewritten
+        writeMetaColsFile(fs, path, union)
+        rewritten
       } finally { fs.delete(scratch, true); () }
     }
   }

@@ -585,18 +585,16 @@ object Pq {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
     writeModel(spark, path, cents, model)
-    val written = writeRows(corpus, cId, cVec, path, cents, model, "overwrite", -1L,
-      spreadFiles, metaCols)
+    writeRows(corpus, cId, cVec, path, cents, model, "overwrite", -1L, spreadFiles,
+      metaCols)
     import spark.implicits._
     indexDriftStats(
       refVecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toSeq
         .toDF("vec_id", "v"), "vec_id", "v", cents, model)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/model/drift_ref")
-    // a probe that raced the build re-reads; what was just written is
-    // written through
-    IndexMaintenance.invalidateSnapshot(fs, path)
-    PqFamily.rememberRouting(spark, path, (cents, model))
-    PqFamily.rememberSchemas(spark, path, written)
+    // again after the tables: moves the snapshot's schema key past any
+    // schema a probe read while they were being rewritten
+    IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
   }
 
   /** Rebuild a stored IVFPQ index from its own vectors table — the major
@@ -779,11 +777,9 @@ object Pq {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/model/codebooks")
   }
 
-  /** Returns each table's written schema. */
   private def writeRows(batch: DataFrame, cId: String, cVec: String, path: String,
       cents: Array[Array[Double]], model: PqModel, mode: String,
-      batchId: Long, spreadFiles: Int,
-      metaCols: Seq[String] = Nil): Map[String, org.apache.spark.sql.types.StructType] = {
+      batchId: Long, spreadFiles: Int, metaCols: Seq[String] = Nil): Unit = {
     Similarity.requireMetaCols(metaCols)
     requirePqMetaCols(metaCols)
     // ONE fused pass computes cell + codes + norm per row. The previous
@@ -827,21 +823,20 @@ object Pq {
     // batchId-keyed + replay-idempotent and compaction can fold ONLY
     // committed leaves — the [[Similarity.writeIvfIndex]] discipline.
     // Readers filter on `cell` only; the static IN-prune is unaffected.
-    def write(df: DataFrame, table: String) = {
+    def write(df: DataFrame, table: String): Unit = {
       val keyed = df.withColumn("ingest_batch", lit(batchId))
       val w =
         if (mode == "dynamic")
           keyed.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         else keyed.write.mode(mode)
       w.partitionBy("cell", "ingest_batch").parquet(s"$path/$table")
-      table -> keyed.schema
     }
-    try Map(
+    try {
       write(b.select(col("s._1").as("cell") +: col("corpus_id") +:
-        col("s._2").as("codes") +: metaCols.map(col): _*), "codes"),
+        col("s._2").as("codes") +: metaCols.map(col): _*), "codes")
       write(b.select(col("s._1").as("cell") +: col("corpus_id") +: col("cv") +:
-        col("s._3").as("cn") +: metaCols.map(col): _*), "vectors"))
-    finally b.unpersist()
+        col("s._3").as("cn") +: metaCols.map(col): _*), "vectors")
+    } finally b.unpersist()
   }
 
   private def requirePqMetaCols(metaCols: Seq[String]): Unit =

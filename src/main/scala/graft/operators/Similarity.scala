@@ -395,7 +395,7 @@ object Similarity {
     // `metaCols` (r18) are stored INLINE with every row — what makes
     // [[ivfTopKIndexed]]'s `filter` a parquet-pushed predicate inside
     // the pruned cells instead of a corpus-sized join at probe time
-    val rows = corpus.select(col(cId).as("corpus_id") +:
+    corpus.select(col(cId).as("corpus_id") +:
         col(cVec).cast("array<double>").as("cv") +: metaCols.map(col): _*)
       .withColumn("cell", assignUdf(col("cv")))
       .withColumn("cn", l2norm(col("cv")))
@@ -403,7 +403,7 @@ object Similarity {
       // cell-aligned exchange before the partitionBy write (see
       // [[cellSpread]] for the two failure modes this brackets)
       .transform(cellSpread(_, cents.length, spreadFiles = spreadFiles))
-    rows.write.mode("overwrite").partitionBy("cell", "ingest_batch")
+      .write.mode("overwrite").partitionBy("cell", "ingest_batch")
       .parquet(s"$path/corpus")
     import spark.implicits._
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
@@ -413,11 +413,9 @@ object Similarity {
       refVecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }.toSeq
         .toDF("vec_id", "v"), "vec_id", "v", cents)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/drift_ref")
-    // a probe that raced the build re-reads; what was just written is
-    // written through
-    IndexMaintenance.invalidateSnapshot(fs, path)
-    IvfFamily.rememberRouting(spark, path, cents)
-    IvfFamily.rememberSchemas(spark, path, Map("corpus" -> rows.schema))
+    // again after the tables: moves the snapshot's schema key past any
+    // schema a probe read while they were being rewritten
+    IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
   }
 
   /** Rebuild a stored IVF index from its own corpus — the MAJOR

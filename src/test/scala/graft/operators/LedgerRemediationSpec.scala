@@ -213,4 +213,26 @@ class LedgerRemediationSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(IndexMaintenance.ledger(spark, idx).map(_.count()) === Some(20L))
     } finally spark.conf.unset(capKey)
   }
+
+  test("a ledger that grows past the cap is refused and never cached") {
+    val s = spark
+    import s.implicits._
+    val idx = Files.createTempDirectory("ledgercapgrow").toString + "/idx"
+    def deleteIds(ids: Seq[Long]): Unit = ids.map(i => (i, 10)).toDF("id", "dl")
+      .coalesce(1).write.mode("append").parquet(IndexMaintenance.deletesDir(idx))
+    spark.conf.set(capKey, "19")
+    try {
+      deleteIds(0L until 10L)
+      // warm: a ledger within the cap is served and cached
+      assert(IndexMaintenance.readDeletes(spark, idx).map(_.count()) === Some(10L))
+      assert(IndexMaintenance.snapshotLedgerRows(spark, idx) === Some(10))
+      // each later delete stays under the cap on its own, the ledger does not
+      deleteIds(10L until 25L)
+      intercept[IndexMaintenance.LedgerCapExceeded](IndexMaintenance.readDeletes(spark, idx))
+      deleteIds(25L until 40L)
+      intercept[IndexMaintenance.LedgerCapExceeded](IndexMaintenance.readDeletes(spark, idx))
+      assert(IndexMaintenance.snapshotLedgerRows(spark, idx).forall(_ <= 19),
+        "a ledger past the cap was cached")
+    } finally spark.conf.unset(capKey)
+  }
 }
