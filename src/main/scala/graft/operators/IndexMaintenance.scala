@@ -521,7 +521,7 @@ private[graft] object IndexMaintenance {
   private val snapshotGeneration = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Drop every snapshot entry of the index at `indexPath` — called by
-    * every `_meta_cols` write and after each backfilled table. */
+    * every `_meta_cols` write. */
   private def invalidateSnapshot(fs: FileSystem, indexPath: String): Unit = {
     val root = qualified(fs, indexPath)
     snapshotGeneration.incrementAndGet()
@@ -898,7 +898,6 @@ private[graft] object IndexMaintenance {
     require(fs.rename(aside, live), s"could not publish backfilled $live")
     bumpEpoch(fs, live)
     invalidateGuards(live.toString)
-    invalidateSnapshot(fs, indexRoot)
     true
   }
 
