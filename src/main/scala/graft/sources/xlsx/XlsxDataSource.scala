@@ -97,28 +97,20 @@ object XlsxTable {
   def listFiles(paths: Seq[String], conf: Configuration): Seq[String] =
     listFilesWithSize(paths, conf).map(_._1)
 
+  /** One ZIP reader on every scheme; the only choice is the byte source:
+    * a local file read in place, or ranged reads over the seekable Hadoop
+    * stream. A file whose central directory does not parse fails the read
+    * (or is skipped under `ignoreCorruptFiles`) whatever its scheme. */
   def openReader(file: String, conf: Configuration): XlsxReader = {
     val path = new Path(file)
     val uri = path.toUri
-    // Local files get ZIP central-directory random access (no per-entry
-    // archive rescan); remote filesystems get the same via ranged reads
-    // over the seekable Hadoop stream (ZipRandom), falling back to a
-    // sequential archive scan only if the central directory won't parse.
     if (uri.getScheme == null || uri.getScheme == "file")
       XlsxReader.forFile(uri.getPath, useSstCache = true)
     else {
       val fs = path.getFileSystem(conf)
       val status = fs.getFileStatus(path)
-      val seekable = hadoopSeekable(fs, path, status.getLen)
-      val meta = scala.util.Try(
-        ZipRandom.entries(seekable).map(e => e.name -> e).toMap).toOption
-      val opener = meta.map(byName =>
-        (name: String) => byName.get(name).map(e => ZipRandom.openEntry(seekable, e)))
-      // SST CRC from the central directory pins content: a same-length
-      // rewrite within mtime granularity (1 s on S3) can't serve stale text
-      val sstCrc = meta.flatMap(_.get("xl/sharedStrings.xml")).map(_.crc).getOrElse(-1L)
-      new XlsxReader(() => fs.open(path), opener,
-        Some(s"$file:${status.getLen}:${status.getModificationTime}:$sstCrc"))
+      new XlsxReader(hadoopSeekable(fs, path, status.getLen),
+        Some(s"$file:${status.getLen}:${status.getModificationTime}"))
     }
   }
 
@@ -138,26 +130,6 @@ object XlsxTable {
         in
       }
     }
-
-  /** Decompressed sizes of the ZIP entries of one xlsx — the planning input
-    * for sheet splitting. Central-directory read only (cheap). */
-  def entrySizes(file: String, conf: Configuration): Map[String, Long] = {
-    val path = new Path(file)
-    val uri = path.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val zf = new java.util.zip.ZipFile(uri.getPath)
-      try {
-        val it = zf.entries()
-        val b = Map.newBuilder[String, Long]
-        while (it.hasMoreElements) { val e = it.nextElement(); b += (e.getName -> e.getSize) }
-        b.result()
-      } finally zf.close()
-    } else {
-      val fs = path.getFileSystem(conf)
-      ZipRandom.entries(hadoopSeekable(fs, path, fs.getFileStatus(path).getLen))
-        .map(e => e.name -> e.uncompressedSize).toMap
-    }
-  }
 
   /** Select sheet names for one file per options (default: first sheet,
     * like the reference's rows_by_index(0) common path — PLUS any rollover

@@ -133,9 +133,8 @@ final class XlsxScan(
     val reader = XlsxTable.openReader(f, conf.value)
     val sheets = XlsxTable.selectSheets(reader, opts.sheet, opts.sheetIndex, opts.allSheets)
     val byName = reader.sheetCatalog.toMap
-    val sizes = XlsxTable.entrySizes(f, conf.value)
     sheets.flatMap { s =>
-      val entryBytes = byName.get(s).flatMap(sizes.get).getOrElse(0L)
+      val entryBytes = byName.get(s).flatMap(reader.entrySize).getOrElse(0L)
       val nSplits =
         if (!opts.splitSheets) 1 else math.min(entryBytes / opts.splitBytes + 1, 4096L).toInt
       val estRows = if (nSplits > 1) reader.estimateRows(s, entryBytes).getOrElse(0L) else 0L

@@ -204,19 +204,10 @@ private[xlsx] object XlsxSingleFile {
         } finally in.close()
       }
     }
-    val sheetNames = names.result()
-    def part(name: String, content: String): Unit =
+    XlsxWriter.packageParts(names.result(), continuations.result()).foreach { case (name, content) =>
       zw.addDeflated(name, content.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         opts.compression)
-    part("[Content_Types].xml", XlsxWriter.contentTypes(sheetNames.size))
-    part("_rels/.rels", XlsxWriter.RootRels)
-    part("xl/workbook.xml", XlsxWriter.workbookXml(sheetNames))
-    part("xl/_rels/workbook.xml.rels", XlsxWriter.workbookRels(sheetNames.size))
-    part("xl/styles.xml", XlsxWriter.StylesXml)
-    part("xl/sharedStrings.xml", XlsxWriter.EmptySst)
-    part("docProps/app.xml", XlsxWriter.AppProps)
-    part("docProps/core.xml", XlsxWriter.CoreProps)
-    part("docProps/custom.xml", XlsxWriter.customProps(continuations.result()))
+    }
     zw.finish()
     zw.close()
     cleanup(fs, ordered)

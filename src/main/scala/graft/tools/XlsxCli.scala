@@ -8,9 +8,6 @@ import graft.xlsx._
   * Usage:
   *   XlsxCli demo <out.xlsx>          write a typed multi-sheet demo file
   *   XlsxCli dump <in.xlsx> [sheet]   print sheets, dimensions and rows
-  *   XlsxCli zipcheck <in.zip>        open every entry via ZipRandom (the
-  *                                    ranged remote-read path) and verify
-  *                                    sizes + CRCs against the directory
   *   XlsxCli bench [rows] [cols]      single-thread write+read throughput
   *                                    (default 1M x 30 — the reference's
   *                                    own benchmark config,
@@ -70,30 +67,6 @@ object XlsxCli {
       w.writeRowTyped(Seq(Formula("=A1+B1"), Error("#N/A")))
       w.close()
       println(s"wrote $out (${new java.io.File(out).length()} bytes)")
-    case "zipcheck" :: path :: Nil =>
-      // independent validation of the ZipRandom path (remote xlsx reads):
-      // every entry is opened via central-directory ranged access, fully
-      // inflated, and checked against the directory's size and CRC-32
-      val in = ZipRandom.SeekableInput.forFile(path)
-      val es = ZipRandom.entries(in)
-      var total = 0L
-      es.foreach { e =>
-        val s = ZipRandom.openEntry(in, e)
-        val bytes = try s.readAllBytes() finally s.close()
-        require(bytes.length.toLong == e.uncompressedSize,
-          s"${e.name}: inflated ${bytes.length} bytes, directory says ${e.uncompressedSize}")
-        val crc = new java.util.zip.CRC32(); crc.update(bytes)
-        require(crc.getValue == e.crc, s"${e.name}: CRC mismatch")
-        total += bytes.length
-      }
-      // the one-byte read() path crosses the pad byte differently — check it
-      es.find(_.method == 8).foreach { e =>
-        val s = ZipRandom.openEntry(in, e)
-        var n = 0L
-        try { while (s.read() >= 0) n += 1 } finally s.close()
-        require(n == e.uncompressedSize, s"${e.name}: single-byte reads got $n")
-      }
-      println(s"zipcheck OK: ${es.size} entries, $total bytes, all CRCs match")
     case "dump" :: in :: rest =>
       val r = XlsxReader.forFile(in)
       println(s"sheets: ${r.sheetNames.mkString(", ")}")
@@ -109,7 +82,7 @@ object XlsxCli {
         }
       }
     case _ =>
-      System.err.println("usage: XlsxCli demo <out.xlsx> | dump <in.xlsx> [sheet]")
+      System.err.println("usage: XlsxCli demo <out.xlsx> | dump <in.xlsx> [sheet] | bench [rows] [cols]")
       sys.exit(2)
   }
 }

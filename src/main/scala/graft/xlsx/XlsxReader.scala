@@ -1,7 +1,6 @@
 package graft.xlsx
 
-import java.io.{BufferedInputStream, InputStream}
-import java.util.zip.ZipInputStream
+import java.io.InputStream
 import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import scala.collection.mutable.ArrayBuffer
 
@@ -16,21 +15,18 @@ import scala.collection.mutable.ArrayBuffer
   * prefixes, entities and CDATA. The small metadata parts (workbook, rels,
   * styles, shared strings) use the JDK's StAX pull parser.
   *
-  * `openStream` must produce a fresh stream over the whole .xlsx ZIP on
-  * every call; this makes the reader work identically over local files and
-  * Hadoop filesystem streams (s3a/gs/hdfs), replacing the reference's
-  * bespoke S3 download path (ref: src/cloud/s3_reader.rs:131-199).
+  * Every part is opened by name from the ZIP central directory of `input`
+  * through [[ZipRandom]], parsed once on first use: local files, Hadoop
+  * streams (s3a/gs/hdfs) and in-memory bytes share this one reader,
+  * replacing the reference's bespoke S3 download path
+  * (ref: src/cloud/s3_reader.rs:131-199). An input whose central
+  * directory does not parse fails on first use.
   *
-  * `entryOpener`, when provided, opens one named ZIP entry directly
-  * (random access via the central directory) instead of scanning the
-  * archive from the start — [[XlsxReader.forFile]] wires this with
-  * `java.util.zip.ZipFile`, making repeated sheet access O(entry) rather
-  * than O(archive).
+  * `sstCacheId`, when given, names the file's content (path, length,
+  * modification time); with the shared-strings entry's CRC-32 appended it
+  * keys the process-wide shared-strings cache.
   */
-final class XlsxReader(
-    openStream: () => InputStream,
-    entryOpener: Option[String => Option[InputStream]] = None,
-    sstCacheKey: Option[String] = None) {
+final class XlsxReader(input: ZipRandom.SeekableInput, sstCacheId: Option[String] = None) {
   import XlsxReader._
 
   /** Sheet names in workbook order, resolved to their part paths
@@ -144,12 +140,16 @@ final class XlsxReader(
 
   /** Full SST load including rich-text runs — every <t> inside an <si> is
     * concatenated (ref: src/streaming_reader.rs:363-416). With an
-    * `sstCacheKey`, the parsed table is shared process-wide (soft refs) so
+    * `sstCacheId`, the parsed table is shared process-wide (soft refs) so
     * N split tasks of one foreign file parse its SST once per executor JVM
     * instead of once per task — our own writer emits inline strings (no
     * SST), so this only matters for foreign-authored files. */
-  lazy val sharedStrings: Vector[String] = sstCacheKey match {
-    case Some(key) => SstCache.getOrLoad(key, loadSharedStrings())
+  lazy val sharedStrings: Vector[String] = sstCacheId match {
+    // the CRC-32 pins content: a same-length rewrite within the mtime
+    // granularity (1 s on S3) can never serve a stale string table
+    case Some(id) =>
+      val crc = entries.get("xl/sharedStrings.xml").fold(-1L)(_.crc)
+      SstCache.getOrLoad(s"$id:$crc", loadSharedStrings())
     case None => loadSharedStrings()
   }
 
@@ -242,20 +242,15 @@ final class XlsxReader(
 
   // --- ZIP plumbing -------------------------------------------------------
 
-  /** Open one named entry: random access when an entryOpener exists,
-    * scan-from-start otherwise (streaming sources can't seek). */
-  private def openEntry(name: String): Option[InputStream] = entryOpener match {
-    case Some(open) => open(name)
-    case None =>
-      val zis = new ZipInputStream(new BufferedInputStream(openStream(), 64 * 1024))
-      var e = zis.getNextEntry
-      while (e != null) {
-        if (e.getName == name) return Some(zis)
-        e = zis.getNextEntry
-      }
-      zis.close()
-      None
-  }
+  private lazy val entries: Map[String, ZipRandom.Entry] =
+    ZipRandom.entries(input).map(e => e.name -> e).toMap
+
+  /** Decompressed size of one part, from the central directory. */
+  private[graft] def entrySize(part: String): Option[Long] =
+    entries.get(part).map(_.uncompressedSize)
+
+  private def openEntry(name: String): Option[InputStream] =
+    entries.get(name).map(ZipRandom.openEntry(input, _))
 
   private def withEntry[T](name: String)(f: XMLStreamReader => T): Option[T] =
     openEntry(name).map { in =>
@@ -322,36 +317,13 @@ object XlsxReader {
   def forFile(path: String): XlsxReader = forFile(path, useSstCache = false)
 
   def forFile(path: String, useSstCache: Boolean): XlsxReader = {
-    // Random access through the ZIP central directory: each entry opens a
-    // fresh ZipFile (cheap — directory read only) whose lifetime is tied
-    // to the returned stream.
-    val opener: String => Option[InputStream] = { name =>
-      val zf = new java.util.zip.ZipFile(path)
-      Option(zf.getEntry(name)) match {
-        case None => zf.close(); None
-        case Some(e) =>
-          Some(new java.io.FilterInputStream(zf.getInputStream(e)) {
-            override def close(): Unit = try super.close() finally zf.close()
-          })
-      }
-    }
-    // key carries the SST entry's CRC-32 (free from the central directory)
-    // so a same-length rewrite inside the mtime granularity window can
-    // never serve a stale string table
-    val key = if (useSstCache) {
-      val f = new java.io.File(path)
-      val crc = {
-        val zf = new java.util.zip.ZipFile(path)
-        try Option(zf.getEntry("xl/sharedStrings.xml")).map(_.getCrc).getOrElse(-1L)
-        finally zf.close()
-      }
-      Some(s"$path:${f.length}:${f.lastModified}:$crc")
-    } else None
-    new XlsxReader(() => new java.io.FileInputStream(path), Some(opener), key)
+    val f = new java.io.File(path)
+    new XlsxReader(ZipRandom.SeekableInput.forFile(path),
+      if (useSstCache) Some(s"$path:${f.length}:${f.lastModified}") else None)
   }
 
   def forBytes(bytes: Array[Byte]): XlsxReader =
-    new XlsxReader(() => new java.io.ByteArrayInputStream(bytes))
+    new XlsxReader(ZipRandom.SeekableInput.forBytes(bytes))
 
   private val factory: XMLInputFactory = {
     val f = XMLInputFactory.newInstance()

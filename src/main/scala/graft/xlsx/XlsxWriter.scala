@@ -244,24 +244,28 @@ object XlsxWriter {
     override def write(b: Array[Byte], off: Int, len: Int): Unit = zip.write(b, off, len)
     override def endSheet(rows: Int): Unit = zip.closeEntry()
     override def finishPackage(sheetNames: Seq[String], continuations: Seq[Int]): Unit = {
-      def entry(name: String, content: String): Unit = {
+      packageParts(sheetNames, continuations).foreach { case (name, content) =>
         zip.putNextEntry(new ZipEntry(name))
         zip.write(content.getBytes(UTF_8))
         zip.closeEntry()
       }
-      entry("[Content_Types].xml", contentTypes(sheetNames.size))
-      entry("_rels/.rels", RootRels)
-      entry("xl/workbook.xml", workbookXml(sheetNames))
-      entry("xl/_rels/workbook.xml.rels", workbookRels(sheetNames.size))
-      entry("xl/styles.xml", StylesXml)
-      entry("xl/sharedStrings.xml", EmptySst)
-      entry("docProps/app.xml", AppProps)
-      entry("docProps/core.xml", CoreProps)
-      entry("docProps/custom.xml", customProps(continuations))
       zip.finish()
       zip.close()
     }
   }
+
+  /** The package parts written after the sheets, as (entry name, content),
+    * for a workbook with these sheets and rollover continuations. */
+  def packageParts(sheetNames: Seq[String], continuations: Seq[Int]): Seq[(String, String)] = Seq(
+    "[Content_Types].xml" -> contentTypes(sheetNames.size),
+    "_rels/.rels" -> RootRels,
+    "xl/workbook.xml" -> workbookXml(sheetNames),
+    "xl/_rels/workbook.xml.rels" -> workbookRels(sheetNames.size),
+    "xl/styles.xml" -> StylesXml,
+    "xl/sharedStrings.xml" -> EmptySst,
+    "docProps/app.xml" -> AppProps,
+    "docProps/core.xml" -> CoreProps,
+    "docProps/custom.xml" -> customProps(continuations))
 
   def contentTypes(nSheets: Int): String = {
     val sb = new java.lang.StringBuilder(

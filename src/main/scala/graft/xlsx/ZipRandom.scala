@@ -1,21 +1,23 @@
 package graft.xlsx
 
 import java.io.{IOException, InputStream}
-import java.util.zip.{Inflater, InflaterInputStream}
+import java.util.zip.{CRC32, Inflater, InflaterInputStream, ZipException}
 
-/** Random access into a ZIP archive through its central directory, over any
-  * seekable byte source — the missing piece for remote (s3a/gs/hdfs) xlsx
-  * reads, where `java.util.zip.ZipFile` can't be used and the previous
-  * fallback re-scanned (and re-inflated) the archive from byte 0 for every
-  * entry. With this, a remote entry open is: one bounded tail read (EOCD +
-  * central directory), then one ranged read per entry — the same access
-  * pattern Parquet readers use for footers.
+/** The one ZIP reader of the xlsx read path: random access through the
+  * central directory, over any seekable byte source — a local file, a
+  * Hadoop stream (s3a/gs/hdfs) or bytes in memory. An entry open is one
+  * bounded tail read (EOCD + central directory), then one ranged read per
+  * entry — the same access pattern Parquet readers use for footers. The
+  * central directory is the authority: an input without a parseable one
+  * is refused, whatever its scheme.
   *
   * Layout parsed per the public PKWARE APPNOTE / ISO 21320: End-Of-Central-
   * Directory record (with the ZIP64 locator + record when present), central
   * file headers including the 0x0001 ZIP64 extended-information extra, and
   * local file headers (whose name/extra lengths may differ from the central
-  * copy — the data offset always comes from the LOCAL header).
+  * copy — the data offset always comes from the LOCAL header). Every entry
+  * stream read to its end is checked against the directory's size and
+  * CRC-32.
   *
   * The reference has no equivalent: its S3 reader downloads the entire
   * object to memory before opening it (ref: src/cloud/s3_reader.rs:131-199).
@@ -41,8 +43,7 @@ object ZipRandom {
   }
 
   object SeekableInput {
-    /** Local-file implementation (used by specs and the CLI; Spark's local
-      * path keeps `ZipFile`, which shares kernel page cache better). */
+    /** A local file; every access opens its own `RandomAccessFile`. */
     def forFile(path: String): SeekableInput = new SeekableInput {
       override val length: Long = new java.io.File(path).length()
       override def readFully(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
@@ -59,6 +60,18 @@ object ZipRandom {
         }
       }
     }
+
+    /** Bytes in memory (a workbook built or fetched whole). */
+    def forBytes(bytes: Array[Byte]): SeekableInput = new SeekableInput {
+      override val length: Long = bytes.length.toLong
+      override def readFully(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
+        if (pos < 0 || pos + len > length)
+          throw new java.io.EOFException(s"read of $len bytes at $pos past the end ($length)")
+        System.arraycopy(bytes, pos.toInt, buf, off, len)
+      }
+      override def openAt(pos: Long): InputStream =
+        new java.io.ByteArrayInputStream(bytes, pos.toInt, (length - pos).toInt)
+    }
   }
 
   private val EocdSig = 0x06054b50
@@ -70,8 +83,7 @@ object ZipRandom {
   private val MaxEocdScan = 22 + 0xFFFF
 
   /** Parse the central directory. Throws [[IOException]] on a malformed or
-    * non-ZIP input — callers that must tolerate foreign junk should wrap in
-    * Try and fall back to a streaming scan. */
+    * non-ZIP input, a truncated upload included. */
   def entries(in: SeekableInput): Seq[Entry] = {
     val fileLen = in.length
     val scanLen = math.min(fileLen, MaxEocdScan.toLong).toInt
@@ -108,6 +120,8 @@ object ZipRandom {
     // read the whole central directory in one ranged read: it ends where the
     // (ZIP64) EOCD chain begins, and is small (46 + name bytes per entry)
     val cdEnd = fileLen - scanLen + eocd
+    if (cdOffset < 0 || cdOffset > cdEnd)
+      throw new IOException(s"central directory offset $cdOffset lies outside the archive")
     val cdLen = (cdEnd - cdOffset).toInt
     val cd = new Array[Byte](cdLen)
     in.readFully(cdOffset, cd, 0, cdLen)
@@ -142,19 +156,24 @@ object ZipRandom {
       p += 46 + nameLen + extraLen + commentLen
       n += 1
     }
+    if (n < totalEntries)
+      throw new IOException(s"central directory lists $totalEntries entries but only $n parse")
     out.result()
   }
 
   /** Open one entry as a decompressed stream: seek to its local header, skip
     * it (local name/extra lengths are authoritative here), bound the raw
-    * stream to compressedSize, inflate if deflated. */
+    * stream to compressedSize, inflate if deflated. Reaching the end of the
+    * stream checks the inflated size and CRC-32 against the directory, as
+    * `ZipInputStream` does, so a flipped byte or a short entry fails the
+    * read instead of yielding altered data. */
   def openEntry(in: SeekableInput, e: Entry): InputStream = {
     val lh = new Array[Byte](30)
     in.readFully(e.localHeaderOffset, lh, 0, 30)
     if (u32(lh, 0) != LocSig)
       throw new IOException(s"bad local header signature for ZIP entry ${e.name}")
     val dataStart = e.localHeaderOffset + 30 + u16(lh, 26) + u16(lh, 28)
-    e.method match {
+    val data = e.method match {
       case 0 => new BoundedStream(in.openAt(dataStart), e.compressedSize, padByte = false)
       case 8 =>
         // nowrap Inflaters need one extra dummy byte after the compressed
@@ -168,6 +187,34 @@ object ZipRandom {
       }
       case m => throw new IOException(s"unsupported ZIP method $m for entry ${e.name}")
     }
+    new CheckedStream(data, e)
+  }
+
+  /** Counts and CRC-32s the bytes read; at end of stream both must match
+    * the entry's directory record. `skip` goes through `read` (the
+    * `InputStream` default), so skipped bytes are checked too. */
+  private final class CheckedStream(in: InputStream, e: Entry) extends InputStream {
+    private val crc = new CRC32
+    private var size = 0L
+    private def verify(): Unit =
+      if (size != e.uncompressedSize)
+        throw new ZipException(s"ZIP entry ${e.name}: read $size bytes, " +
+          s"the central directory says ${e.uncompressedSize}")
+      else if (crc.getValue != e.crc)
+        throw new ZipException(f"invalid entry CRC for ZIP entry ${e.name}: " +
+          f"0x${crc.getValue}%08x, the central directory says 0x${e.crc}%08x")
+    override def read(): Int = {
+      val b = in.read()
+      if (b >= 0) { crc.update(b); size += 1 } else verify()
+      b
+    }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val n = in.read(b, off, len)
+      if (n > 0) { crc.update(b, off, n); size += n } else if (n < 0) verify()
+      n
+    }
+    override def available(): Int = in.available()
+    override def close(): Unit = in.close()
   }
 
   /** Reads at most `limit` bytes from `in`, closing it with this stream.

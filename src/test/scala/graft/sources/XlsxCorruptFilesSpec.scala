@@ -122,4 +122,38 @@ class XlsxCorruptFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length >= 1 && got.length < 5, s"got ${got.toSeq}")
     assert(got.head === "v1")
   }
+
+  test("truncated uploads on a remote scheme: strict reads fail, the flag skips them") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.mockfs.impl", classOf[MockFs].getName)
+    val dir = tmp() + "/cut"
+    spark.range(20).coalesce(1).write.mode("overwrite").format("xlsx")
+      .option("header", "true").save(dir)
+    val good = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).head.toPath
+    val bytes = Files.readAllBytes(good)
+    val firstPart = graft.xlsx.ZipRandom.entries(graft.xlsx.ZipRandom.SeekableInput.forFile(good.toString))
+      .filterNot(_.name.startsWith("xl/worksheets/")).map(_.localHeaderOffset).min
+    // (a) cut at the first package part: the sheet survives, the workbook
+    // catalog and the central directory do not
+    Files.write(Paths.get(s"$dir/a_cut_at_parts.xlsx"), java.util.Arrays.copyOf(bytes, firstPart.toInt))
+    // (b) the last 200 bytes gone: every entry survives, the directory does not
+    Files.write(Paths.get(s"$dir/a_cut_in_directory.xlsx"),
+      java.util.Arrays.copyOf(bytes, bytes.length - 200))
+    def msgs(t: Throwable): String = if (t == null) "" else t.getMessage + " " + msgs(t.getCause)
+    Seq("a_cut_at_parts.xlsx", "a_cut_in_directory.xlsx").foreach { name =>
+      val ex = intercept[Exception] {
+        spark.read.format("xlsx").schema(schema).option("header", "true")
+          .load(s"mockfs:$dir/$name").count()
+      }
+      assert(msgs(ex).contains("end-of-central-directory"), s"$name: ${msgs(ex)}")
+    }
+    val tolerant = spark.read.format("xlsx").schema(schema).option("header", "true")
+      .option("ignoreCorruptFiles", "true").load(s"mockfs:$dir")
+    assert(tolerant.collect().map(_.getLong(0)).sorted.toSeq === (0L until 20L))
+    // inference meets the cut copies first and skips them as well
+    val inferred = spark.read.format("xlsx").option("header", "true")
+      .option("ignoreCorruptFiles", "true").load(s"mockfs:$dir")
+    assert(inferred.count() === 20L)
+  }
 }

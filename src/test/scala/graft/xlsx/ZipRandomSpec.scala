@@ -1,13 +1,16 @@
 package graft.xlsx
 
 import java.io.FileOutputStream
-import java.nio.file.Files
-import java.util.zip.{CRC32, ZipEntry, ZipFile, ZipOutputStream}
+import java.nio.file.{Files, Paths}
+import java.util.zip.{CRC32, ZipEntry, ZipException, ZipFile, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Central-directory random access vs. the JDK's ZipFile as ground truth,
-  * over both DEFLATE and STORED entries. */
+  * over both DEFLATE and STORED entries, and the size/CRC-32 check at the
+  * end of every entry stream. */
 class ZipRandomSpec extends AnyFunSuite {
 
   private def readAll(in: java.io.InputStream): Array[Byte] =
@@ -79,5 +82,83 @@ class ZipRandomSpec extends AnyFunSuite {
       ZipRandom.entries(ZipRandom.SeekableInput.forFile(f.toString))
     }
     assert(ex.getMessage.contains("central-directory"))
+  }
+
+  test("a damaged central directory is refused, not read in part") {
+    val f = Files.createTempFile("ziprand-cd", ".xlsx").toString
+    writeWorkbook(f, 10)
+    val good = Files.readAllBytes(Paths.get(f))
+    val eocd = good.length - 22 // no archive comment
+    val cdOffset = java.nio.ByteBuffer.wrap(good, eocd + 16, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    def refused(damage: Array[Byte] => Unit): String = {
+      val bytes = good.clone()
+      damage(bytes)
+      intercept[java.io.IOException](ZipRandom.entries(ZipRandom.SeekableInput.forBytes(bytes))).getMessage
+    }
+    // the first central header's signature broken: no entry parses
+    assert(refused(b => b(cdOffset) = 0).contains("only 0 parse"))
+    // the directory offset pointing past the end-of-central-directory record
+    assert(refused(b => b(eocd + 19) = 0x7f).contains("outside the archive"))
+  }
+
+  /** `src` rewritten with every entry STORED (uncompressed), as some ZIP
+    * tools write workbooks. */
+  private def storedCopy(src: String, dst: String): Unit = {
+    val zf = new ZipFile(src)
+    val zos = new ZipOutputStream(new FileOutputStream(dst))
+    try zf.entries().asScala.foreach { e =>
+      val bytes = readAll(zf.getInputStream(e))
+      val s = new ZipEntry(e.getName)
+      s.setMethod(ZipEntry.STORED)
+      s.setSize(bytes.length)
+      s.setCompressedSize(bytes.length)
+      val crc = new CRC32; crc.update(bytes); s.setCrc(crc.getValue)
+      zos.putNextEntry(s); zos.write(bytes); zos.closeEntry()
+    } finally { zos.close(); zf.close() }
+  }
+
+  test("a flipped byte inside a STORED sheet entry fails the read with a CRC error") {
+    val good = Files.createTempFile("ziprand-good", ".xlsx").toString
+    writeWorkbook(good, 50)
+    val f = Files.createTempFile("ziprand-flipped", ".xlsx").toString
+    storedCopy(good, f)
+    val bytes = Files.readAllBytes(Paths.get(f))
+    // sheets are written first, so the first "r42" is the sheet's inline
+    // string; r42 -> r52 keeps the XML well formed and the row count whole
+    val at = new String(bytes, "ISO-8859-1").indexOf("r42")
+    assert(at > 0)
+    bytes(at + 1) = '5'
+    Files.write(Paths.get(f), bytes)
+    val ex = intercept[ZipException](XlsxReader.forFile(f).rows("S").toVector)
+    assert(ex.getMessage.contains("CRC"), ex.getMessage)
+    // the single-byte read() path checks too
+    val in = ZipRandom.SeekableInput.forFile(f)
+    val sheet = ZipRandom.entries(in).find(_.name == "xl/worksheets/sheet1.xml").get
+    assert(sheet.method === 0)
+    val s = ZipRandom.openEntry(in, sheet)
+    val ex2 = intercept[ZipException] { try while (s.read() >= 0) () finally s.close() }
+    assert(ex2.getMessage.contains("CRC"), ex2.getMessage)
+    // the untouched copy reads every row
+    assert(XlsxReader.forFile(good).rows("S").size === 50)
+  }
+
+  test("a clean entry reads the same bytes through read() and read(buf)") {
+    val deflated = Files.createTempFile("ziprand-bytes", ".xlsx").toString
+    writeWorkbook(deflated, 300)
+    val stored = Files.createTempFile("ziprand-bytes-stored", ".xlsx").toString
+    storedCopy(deflated, stored)
+    Seq(deflated, stored).foreach { f =>
+      val in = ZipRandom.SeekableInput.forFile(f)
+      ZipRandom.entries(in).foreach { e =>
+        val bulk = readAll(ZipRandom.openEntry(in, e))
+        // one byte at a time crosses the inflater's pad byte differently
+        val s = ZipRandom.openEntry(in, e)
+        val single = new java.io.ByteArrayOutputStream
+        try { var b = s.read(); while (b >= 0) { single.write(b); b = s.read() } } finally s.close()
+        assert(bulk.length.toLong === e.uncompressedSize, e.name)
+        assert(java.util.Arrays.equals(single.toByteArray, bulk), s"${e.name} in $f")
+      }
+    }
   }
 }
