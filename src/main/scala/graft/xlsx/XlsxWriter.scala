@@ -256,7 +256,8 @@ object XlsxWriter {
 
   /** The package parts written after the sheets, as (entry name, content),
     * for a workbook with these sheets and rollover continuations. */
-  def packageParts(sheetNames: Seq[String], continuations: Seq[Int]): Seq[(String, String)] = Seq(
+  private[graft] def packageParts(
+      sheetNames: Seq[String], continuations: Seq[Int]): Seq[(String, String)] = Seq(
     "[Content_Types].xml" -> contentTypes(sheetNames.size),
     "_rels/.rels" -> RootRels,
     "xl/workbook.xml" -> workbookXml(sheetNames),

@@ -165,8 +165,8 @@ object ZipRandom {
     * it (local name/extra lengths are authoritative here), bound the raw
     * stream to compressedSize, inflate if deflated. Reaching the end of the
     * stream checks the inflated size and CRC-32 against the directory, as
-    * `ZipInputStream` does, so a flipped byte or a short entry fails the
-    * read instead of yielding altered data. */
+    * the JDK's streaming ZIP reader does, so a flipped byte or a short entry
+    * fails the read instead of yielding altered data. */
   def openEntry(in: SeekableInput, e: Entry): InputStream = {
     val lh = new Array[Byte](30)
     in.readFully(e.localHeaderOffset, lh, 0, 30)
@@ -177,8 +177,8 @@ object ZipRandom {
       case 0 => new BoundedStream(in.openAt(dataStart), e.compressedSize, padByte = false)
       case 8 =>
         // nowrap Inflaters need one extra dummy byte after the compressed
-        // data (Inflater javadoc; java.util.zip.ZipFile injects buf[0]=0 in
-        // fill() for the same reason) or InflaterInputStream can throw
+        // data (Inflater javadoc; the JDK's random-access ZIP reader injects
+        // buf[0]=0 in fill() for the same reason) or InflaterInputStream can throw
         // "Unexpected end of ZLIB input stream" on valid entries
         val raw = new BoundedStream(in.openAt(dataStart), e.compressedSize, padByte = true)
         new InflaterInputStream(raw, new Inflater(true), 64 * 1024) {
