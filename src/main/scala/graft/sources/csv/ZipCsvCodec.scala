@@ -1,9 +1,9 @@
 package graft.sources.csv
 
 import java.io.{InputStream, OutputStream}
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+import java.util.zip.{ZipEntry, ZipInputStream}
 
-import org.apache.hadoop.conf.{Configurable, Configuration}
+import graft.xlsx.RawZipWriter
 import org.apache.hadoop.io.compress._
 
 /** `.csv.zip` container parity with the reference (ref:
@@ -15,7 +15,8 @@ import org.apache.hadoop.io.compress._
   *
   * The entry is named `data.csv`: a Hadoop codec sees only the byte
   * stream, never the output path, so the reference's name-derived entry
-  * (`<stem>.csv`) is not reproducible here.
+  * (`<stem>.csv`) is not reproducible here. It is written by the library's
+  * one ZIP writer ([[graft.xlsx.RawZipWriter]]) at deflate level 6.
   *
   * Register once per session:
   * {{{
@@ -23,28 +24,26 @@ import org.apache.hadoop.io.compress._
   *   df.write.option("compression", ZipCsvCodec.Name).csv(path)  // .csv.zip
   * }}}
   */
-final class ZipCsvCodec extends CompressionCodec with Configurable {
-
-  private var conf: Configuration = new Configuration(false)
-  override def setConf(c: Configuration): Unit = conf = c
-  override def getConf: Configuration = conf
-
-  private def level: Int = if (conf == null) 6 else conf.getInt("graft.zip.level", 6)
+final class ZipCsvCodec extends CompressionCodec {
 
   override def getDefaultExtension: String = ".zip"
 
   override def createOutputStream(out: OutputStream): CompressionOutputStream = {
-    val zos = new ZipOutputStream(out)
-    zos.setLevel(level)
-    zos.putNextEntry(new ZipEntry("data.csv"))
-    new CompressionOutputStream(zos) {
-      override def write(b: Array[Byte], off: Int, len: Int): Unit = zos.write(b, off, len)
-      override def write(b: Int): Unit = zos.write(b)
+    val zip = new RawZipWriter(out)
+    val entry = zip.openEntry("data.csv", 6)
+    new CompressionOutputStream(out) {
+      private var done = false
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = entry.write(b, off, len)
+      override def write(b: Int): Unit = entry.write(b)
       // finish() must seal the archive (entry + central directory) without
       // closing the underlying file stream — Hadoop closes that itself.
-      override def finish(): Unit = zos.finish()
+      override def finish(): Unit = if (!done) {
+        entry.close()
+        zip.finish()
+        done = true
+      }
       override def resetState(): Unit = ()
-      override def close(): Unit = zos.close()
+      override def close(): Unit = try finish() finally zip.close()
     }
   }
 
@@ -109,7 +108,7 @@ final class ZipCsvCodec extends CompressionCodec with Configurable {
   override def createInputStream(in: InputStream, d: Decompressor): CompressionInputStream =
     createInputStream(in)
 
-  // java.util.zip streams don't use the Hadoop (de)compressor pooling protocol.
+  // The ZIP streams don't use the Hadoop (de)compressor pooling protocol.
   override def createCompressor(): Compressor = null
   override def getCompressorType: Class[_ <: Compressor] = null
   override def createDecompressor(): Decompressor = null

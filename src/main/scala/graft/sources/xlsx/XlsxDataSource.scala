@@ -117,7 +117,7 @@ object XlsxTable {
   /** Positional-read adapter over a Hadoop file: every access is an
     * independent ranged read (the S3A GET-with-Range pattern), so one
     * instance may back many concurrent entry streams. */
-  private def hadoopSeekable(fs: FileSystem, path: Path, len: Long): ZipRandom.SeekableInput =
+  private[xlsx] def hadoopSeekable(fs: FileSystem, path: Path, len: Long): ZipRandom.SeekableInput =
     new ZipRandom.SeekableInput {
       override val length: Long = len
       override def readFully(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit = {

@@ -2,7 +2,7 @@ package graft.sources.xlsx
 
 import java.util.UUID
 
-import graft.xlsx.{CellStyle, CellValue, ExcelDate, XlsxWriter}
+import graft.xlsx.{CellStyle, CellValue, ExcelDate, RawZipWriter, XlsxWriter, ZipRandom}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -120,27 +120,30 @@ final class XlsxBatchWrite(
 
 final case class XlsxCommitMessage(file: String) extends WriterCommitMessage
 
-/** Commit metadata of one singleFile fragment: where the task's payload
-  * bytes live plus the per-sheet catalog needed to stitch them. */
+/** Commit metadata of one singleFile fragment: the task's workbook and
+  * its sheet catalog as (name, rollover continuation) pairs, in sheet order. */
 final case class XlsxFragMessage(
     file: String,
     partitionId: Int,
-    sheets: Seq[graft.xlsx.FragmentSheet]) extends WriterCommitMessage
+    sheets: Seq[(String, Boolean)]) extends WriterCommitMessage
 
-/** Driver-side stitch of the parallel single-workbook write: tasks have
-  * already deflated their worksheet XML into fragment files
-  * ([[graft.xlsx.XlsxFragmentSink]]); the commit copies those raw byte
-  * ranges into ONE .xlsx as independent ZIP entries ([[graft.xlsx.RawZipWriter]]),
-  * generates the package parts for the final sheet catalog, and writes the
-  * central directory. O(bytes copied) driver work, zero recompression —
-  * the compression cost (the expensive part) stayed on the executors.
+/** Driver-side stitch of the parallel single-workbook write: each task has
+  * written an ordinary workbook (a dot-prefixed fragment); the commit reads
+  * each fragment's central directory ([[graft.xlsx.ZipRandom]]) and copies
+  * its compressed `xl/worksheets/sheetN.xml` byte ranges into ONE .xlsx as
+  * independent ZIP entries ([[graft.xlsx.RawZipWriter]]), generates the
+  * package parts for the final sheet catalog, and writes the central
+  * directory. O(bytes copied) driver work, zero recompression — the
+  * compression cost (the expensive part) stayed on the executors.
   *
   * Sheet layout: without `sheetColumn`, every partition's sheets chain
   * into one logical sheet — named `base, base_2, …` and stamped as
   * rollover continuations (docProps/custom.xml), so the default read
   * reassembles exactly the written row order across partitions. With
   * `sheetColumn`, sheets keep their task-assigned key names (uniquified
-  * across tasks) and only task-internal rollovers are stamped. */
+  * across tasks) and only task-internal rollovers are stamped. Every sheet
+  * of a fragment holds at least one data row: a task opens a sheet only
+  * for a row (or at start), and a task without rows leaves no fragment. */
 private[xlsx] object XlsxSingleFile {
 
   /** The one output workbook: `path` itself when it names a .xlsx file,
@@ -156,52 +159,43 @@ private[xlsx] object XlsxSingleFile {
       frags: Array[XlsxFragMessage], conf: SerializableConfiguration): Unit = {
     val out = target(path)
     val fs = out.getFileSystem(conf.value)
-    val ordered = frags.sortBy(_.partitionId)
-    val headerRows = if (opts.header) 1 else 0
-    // sheets with no data rows (an idle partition's base sheet) are dropped
-    val kept = ordered.flatMap(f => f.sheets.filter(_.rows > headerRows).map((f.file, _)))
-    if (kept.isEmpty) {
+    val base = opts.sheet.getOrElse("Sheet1")
+    if (frags.isEmpty) {
       // still produce a valid workbook: one empty sheet (header row only,
       // matching what a coalesce(1) write of an empty frame produces)
       val w = new XlsxWriter(fs.create(out, true), opts.compression)
-      w.addSheet(sanitize(opts.sheet.getOrElse("Sheet1")))
+      w.addSheet(new SheetNames().take(base))
       if (opts.header) w.writeHeaderBold(schema.fieldNames)
       w.close()
-      cleanup(fs, ordered); return
+      return
     }
+    val ordered = frags.sortBy(_.partitionId)
     val defaultMode = opts.sheetColumn.isEmpty
-    val base = sanitize(opts.sheet.getOrElse("Sheet1"))
-    val used = scala.collection.mutable.Set.empty[String]
+    val sheetNames = new SheetNames
     val names = Seq.newBuilder[String]
     val continuations = Seq.newBuilder[Int]
-    val zw = new graft.xlsx.RawZipWriter(fs.create(out, true))
+    val zw = new RawZipWriter(fs.create(out, true))
     var idx = 0
     val buf = new Array[Byte](256 * 1024)
     ordered.foreach { frag =>
-      val sheets = frag.sheets.filter(_.rows > headerRows)
-      if (sheets.nonEmpty) {
-        val in = fs.open(new Path(frag.file))
-        try sheets.foreach { s =>
-          val name =
-            if (defaultMode) uniquify(used, if (idx == 0) base else withSuffix(base, idx + 1))
-            else uniquify(used, s.name)
-          names += name
-          // default mode: the whole file is one logical sheet, so every
-          // sheet after the first continues the chain; sheetColumn mode:
-          // only task-internal rollovers do
-          if (if (defaultMode) idx > 0 else s.continuation) continuations += idx
-          zw.addRawEntry(s"xl/worksheets/sheet${idx + 1}.xml", 8,
-            s.crc, s.compressedSize, s.uncompressedSize)
-          in.seek(s.offset)
-          var left = s.compressedSize
-          while (left > 0) {
-            val n = in.read(buf, 0, math.min(buf.length.toLong, left).toInt)
-            require(n > 0, s"fragment ${frag.file} truncated at ${s.offset + s.compressedSize - left}")
-            zw.writePayload(buf, 0, n)
-            left -= n
-          }
-          idx += 1
-        } finally in.close()
+      val file = new Path(frag.file)
+      val in = XlsxTable.hadoopSeekable(fs, file, fs.getFileStatus(file).getLen)
+      val entries = ZipRandom.entries(in).map(e => e.name -> e).toMap
+      frag.sheets.zipWithIndex.foreach { case ((name, continuation), k) =>
+        names += sheetNames.take(if (defaultMode) base else name)
+        // default mode: the whole file is one logical sheet, so every
+        // sheet after the first continues the chain; sheetColumn mode:
+        // only task-internal rollovers do
+        if (if (defaultMode) idx > 0 else continuation) continuations += idx
+        val e = entries(s"xl/worksheets/sheet${k + 1}.xml")
+        zw.addRawEntry(s"xl/worksheets/sheet${idx + 1}.xml", e.method,
+          e.crc, e.compressedSize, e.uncompressedSize)
+        val raw = ZipRandom.openRaw(in, e)
+        try {
+          var n = raw.read(buf)
+          while (n >= 0) { zw.writePayload(buf, 0, n); n = raw.read(buf) }
+        } finally raw.close()
+        idx += 1
       }
     }
     XlsxWriter.packageParts(names.result(), continuations.result()).foreach { case (name, content) =>
@@ -210,30 +204,32 @@ private[xlsx] object XlsxSingleFile {
     }
     zw.finish()
     zw.close()
-    cleanup(fs, ordered)
+    ordered.foreach(f => fs.delete(new Path(f.file), false))
   }
+}
 
-  private def cleanup(fs: org.apache.hadoop.fs.FileSystem, frags: Array[XlsxFragMessage]): Unit =
-    frags.foreach(f => if (f.file != null) fs.delete(new Path(f.file), false))
+/** Excel's sheet-name rule, one instance per workbook: `[]:*?/\` become
+  * `_`, at most 31 characters, and unique case-insensitively — a clash
+  * takes the first free `_k` suffix (k = 2, 3, …), the name cut to fit.
+  * Rollover continuations are named by the same suffixing. */
+private[xlsx] final class SheetNames {
+  private val used = scala.collection.mutable.Set.empty[String]
+  // next suffix to try per cleaned name: every smaller one is already taken
+  private val nextSuffix = scala.collection.mutable.Map.empty[String, Int]
 
-  /** Same sanitation rule as the task-side writer. */
-  private def sanitize(name: String): String = {
-    val c = name.replaceAll("""[\[\]:*?/\\]""", "_").take(31)
-    if (c.isEmpty) "Sheet" else c
-  }
-
-  private def withSuffix(base: String, k: Int): String = {
-    val suffix = s"_$k"
-    base.take(31 - suffix.length) + suffix
-  }
-
-  private def uniquify(used: scala.collection.mutable.Set[String], requested: String): String = {
-    var candidate = requested
-    var n = 2
+  def take(requested: String): String = {
+    val cleaned = {
+      val c = requested.replaceAll("""[\[\]:*?/\\]""", "_").take(31)
+      if (c.isEmpty) "Sheet" else c
+    }
+    var candidate = cleaned
+    var n = nextSuffix.getOrElse(cleaned, 2)
     while (used.contains(candidate.toLowerCase)) {
-      candidate = withSuffix(requested, n)
+      val suffix = s"_$n"
+      candidate = cleaned.take(31 - suffix.length) + suffix
       n += 1
     }
+    nextSuffix(cleaned) = n
     used += candidate.toLowerCase
     candidate
   }
@@ -258,9 +254,9 @@ final class XlsxDataWriter(
     taskId: Long
 ) extends DataWriter[InternalRow] {
 
-  // singleFile: this task emits a FRAGMENT (bare deflated sheet payloads,
-  // dot-prefixed so directory listings and globs skip it) that the
-  // driver's commit stitches into the one target workbook.
+  // singleFile: this task's workbook is a FRAGMENT (dot-prefixed so
+  // directory listings and globs skip it) whose sheets the driver's
+  // commit stitches into the one target workbook.
   private val file =
     if (opts.singleFile) {
       val target = XlsxSingleFile.target(path)
@@ -269,13 +265,7 @@ final class XlsxDataWriter(
     } else
       new Path(path, f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.xlsx")
   private val fs = file.getFileSystem(conf.value)
-  private val fragSink: Option[graft.xlsx.XlsxFragmentSink] =
-    if (opts.singleFile) Some(new graft.xlsx.XlsxFragmentSink(fs.create(file, true), opts.compression))
-    else None
-  private val writer = fragSink match {
-    case Some(sink) => new XlsxWriter(sink)
-    case None       => new XlsxWriter(fs.create(file, true), opts.compression)
-  }
+  private val writer = new XlsxWriter(fs.create(file, true), opts.compression)
   private val baseSheet = opts.sheet.getOrElse("Sheet1")
   private var rowsInSheet = 0L
   private var rowsTotal = 0L
@@ -291,8 +281,9 @@ final class XlsxDataWriter(
     r => if (r.isNullAt(i)) "null" else String.valueOf(r.get(i, dt))
   }
   private var currentKey: String = null
-  // Workbook-unique sheet names (Excel compares case-insensitively).
-  private val usedNames = scala.collection.mutable.Set.empty[String]
+  private val sheetNames = new SheetNames
+  // (name, continuation) of every sheet opened: the singleFile commit catalog
+  private var catalog = Vector.empty[(String, Boolean)]
   private val getters: Array[InternalRow => (CellValue, Int)] =
     fields.zipWithIndex.map { case (f, i) =>
       val base0 = XlsxDataWriter.getter(f.dataType, i)
@@ -323,26 +314,14 @@ final class XlsxDataWriter(
   // immediately (an empty partition still yields a valid empty workbook).
   if (sheetKeyOf.isEmpty) newSheet(baseSheet)
 
-  /** Open a sheet named `name`, sanitized to Excel's rules (<=31 chars, no
-    * []:*?/\) and uniquified within the workbook (`x`, `x_2`, `x_3`, …) —
-    * the same suffixing names rollover continuation sheets. Rollover
-    * sheets are additionally stamped into docProps/custom.xml (via
+  /** Open a sheet named `name` under Excel's naming rule ([[SheetNames]]).
+    * Rollover sheets are additionally stamped into docProps/custom.xml (via
     * `continuation = true`) so the read side keys on the stamp, not the
     * reconstructed naming rule. */
   private def newSheet(name: String, continuation: Boolean = false): Unit = {
-    val cleaned = {
-      val c = name.replaceAll("""[\[\]:*?/\\]""", "_").take(31)
-      if (c.isEmpty) "Sheet" else c
-    }
-    var candidate = cleaned
-    var n = 2
-    while (usedNames.contains(candidate.toLowerCase)) {
-      val suffix = s"_$n"
-      candidate = cleaned.take(31 - suffix.length) + suffix
-      n += 1
-    }
-    usedNames += candidate.toLowerCase
-    writer.addSheet(candidate,
+    val unique = sheetNames.take(name)
+    catalog :+= (unique -> continuation)
+    writer.addSheet(unique,
       opts.columnWidths.zipWithIndex.map { case (w, i) => (i + 1, w) },
       opts.rowHeight, continuation)
     opts.protection.foreach(writer.protectSheet)
@@ -366,21 +345,15 @@ final class XlsxDataWriter(
 
   override def commit(): WriterCommitMessage = {
     writer.close()
-    fragSink match {
-      case Some(sink) =>
-        if (rowsTotal == 0) { // empty fragments carry nothing to stitch
-          fs.delete(file, false)
-          XlsxFragMessage(null, partitionId, Nil)
-        } else XlsxFragMessage(file.toString, partitionId, sink.result())
-      case None =>
-        // Clustered distribution can leave a task with zero rows; in
-        // sheetColumn mode that file would be a meaningless empty "Sheet1" —
-        // drop it rather than pollute the named-sheet layout.
-        if (rowsTotal == 0 && sheetKeyOf.isDefined) {
-          fs.delete(file, false)
-          XlsxCommitMessage(null)
-        } else XlsxCommitMessage(file.toString)
-    }
+    // An empty fragment has nothing to stitch. Clustered distribution can
+    // leave a task with zero rows; in sheetColumn mode that file would be a
+    // meaningless empty "Sheet1" — drop it rather than pollute the
+    // named-sheet layout.
+    val drop = rowsTotal == 0 && (opts.singleFile || sheetKeyOf.isDefined)
+    if (drop) fs.delete(file, false)
+    val committed = if (drop) null else file.toString
+    if (opts.singleFile) XlsxFragMessage(committed, partitionId, catalog)
+    else XlsxCommitMessage(committed)
   }
 
   override def abort(): Unit = {

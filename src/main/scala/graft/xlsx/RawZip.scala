@@ -3,24 +3,28 @@ package graft.xlsx
 import java.io.OutputStream
 import java.util.zip.{CRC32, Deflater}
 
-/** Hand-written ZIP container writer whose defining ability is adding
-  * entries from ALREADY-COMPRESSED raw-deflate payloads — the driver-side
-  * half of the parallel single-workbook write: partition tasks deflate
-  * their own worksheet XML independently (ZIP entries are independent
-  * deflate streams), and the commit concatenates the raw bytes here
-  * without recompressing, then writes the central directory.
-  *
-  * `java.util.zip.ZipOutputStream` cannot do this (it owns the Deflater),
-  * which is why this exists. Layout per the public PKWARE APPNOTE /
-  * ISO 21320, the same structures [[ZipRandom]] parses on the read side:
-  * local headers, central directory, EOCD, with the ZIP64 record/locator
-  * and 0x0001 extras emitted whenever a size/offset/count saturates its
+/** The library's one ZIP writer, per the public PKWARE APPNOTE / ISO 21320
+  * — the same structures [[ZipRandom]] parses on the read side: local
+  * headers, central directory, EOCD, with the ZIP64 record/locator and
+  * 0x0001 extras emitted whenever a size/offset/count saturates its
   * 32/16-bit field. Timestamps are pinned to the DOS epoch (1980-01-01)
   * so identical data produces identical bytes — reruns of a deterministic
   * pipeline yield checksummable artifacts.
   *
-  * The reference has no equivalent: its single-workbook writer is one
-  * sequential `ZipWriter` stream (ref: src/fast_writer/zero_temp_workbook.rs:77-130).
+  * Two ways to add an entry:
+  *  - [[openEntry]] streams one: the bytes written to it are deflated here
+  *    (method 8, raw), and the CRC-32 and both sizes follow the data in a
+  *    data descriptor (flag bit 3). Every workbook entry and every
+  *    `.csv.zip` entry is written this way.
+  *  - [[addRawEntry]] + [[writePayload]] copy an entry whose payload is
+  *    ALREADY compressed — the driver-side half of the parallel
+  *    single-workbook write: partition tasks deflate their own worksheet
+  *    XML independently (ZIP entries are independent deflate streams), and
+  *    the commit concatenates the raw bytes here without recompressing,
+  *    then writes the central directory.
+  *
+  * The reference writes each workbook through one sequential `ZipWriter`
+  * stream (ref: src/fast_writer/zero_temp_workbook.rs:77-130).
   *
   * The ZIP64 switch-over points are injectable (`zip64SizeThreshold`,
   * `zip64CountThreshold`) so tests can drive the >4 GiB / >65 535-entry
@@ -37,36 +41,22 @@ final class RawZipWriter(out: OutputStream,
 
   private val dir = scala.collection.mutable.ArrayBuffer.empty[Cen]
   private var pos = 0L
-  private var pendingPayload = 0L // bytes the caller still owes for the open entry
+  private var pendingPayload = 0L // bytes the caller still owes for the open raw entry
+  private var streaming = false // a streaming entry is open
   private var finished = false
+  private val buf = new Array[Byte](64 * 1024) // deflate output of streaming entries
 
   private val Max32 = 0xFFFFFFFFL
   private val Max16 = 0xFFFF
 
   /** Open an entry whose payload the caller will stream via [[writePayload]]
     * — exactly `csize` bytes of raw-deflate data (method 8) or stored data
-    * (method 0). Sizes and CRC must be known up front (no data descriptor),
-    * which the stitching use-case always has: fragments are finished files. */
+    * (method 0), with the sizes and CRC known up front: the stitch copies
+    * entries of finished files. */
   def addRawEntry(name: String, method: Int, crc: Long, csize: Long, usize: Long): Unit = {
-    require(!finished, "ZIP already finished")
-    require(pendingPayload == 0, s"previous entry short by $pendingPayload payload bytes")
-    val nameB = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val zip64 = csize >= zip64SizeThreshold || usize >= zip64SizeThreshold
-    dir += Cen(nameB, method, crc, csize, usize, pos)
-    w32(0x04034b50L)
-    w16(if (zip64) 45 else 20) // version needed
-    w16(0) // flags: sizes known, no descriptor
-    w16(method)
-    w16(0); w16(0x21) // DOS time/date pinned to 1980-01-01
-    w32(crc)
-    w32(if (zip64) Max32 else csize)
-    w32(if (zip64) Max32 else usize)
-    w16(nameB.length)
-    w16(if (zip64) 20 else 0) // extra length
-    raw(nameB, 0, nameB.length)
-    if (zip64) { // 0x0001 extra: in the LOCAL header both sizes, usize first
-      w16(0x0001); w16(16); w64(usize); w64(csize)
-    }
+    val offset = pos
+    val nameB = localHeader(name, flags = 0, method, crc, csize, usize)
+    dir += Cen(nameB, flags = 0, method, crc, csize, usize, offset)
     pendingPayload = csize
   }
 
@@ -78,28 +68,90 @@ final class RawZipWriter(out: OutputStream,
     pendingPayload -= len
   }
 
-  /** Convenience: add a small entry by deflating `content` now (package
-    * parts — workbook.xml, styles, props — are driver-generated). */
+  /** Add a small entry deflated now (package parts — workbook.xml, styles,
+    * props — are generated whole). */
   def addDeflated(name: String, content: Array[Byte], level: Int): Unit = {
-    val d = new Deflater(level, true)
-    d.setInput(content); d.finish()
-    val buf = new Array[Byte](math.max(64, content.length / 2 + 64))
-    val bos = new java.io.ByteArrayOutputStream()
-    while (!d.finished()) {
-      val n = d.deflate(buf)
-      bos.write(buf, 0, n)
-    }
-    d.end()
-    val crc = new CRC32; crc.update(content)
-    val payload = bos.toByteArray
-    addRawEntry(name, 8, crc.getValue, payload.length.toLong, content.length.toLong)
-    writePayload(payload, 0, payload.length)
+    val e = openEntry(name, level)
+    e.write(content, 0, content.length)
+    e.close()
   }
+
+  /** Open a streaming entry deflated at `level`. Closing the returned stream
+    * ends the deflate stream and writes the data descriptor — with 8-byte
+    * sizes once either size reaches the ZIP64 threshold, the JDK's
+    * streaming writer's rule — but leaves the archive open for the next
+    * entry. */
+  private[graft] def openEntry(name: String, level: Int): OutputStream = {
+    require(level >= 0 && level <= 9, "compression level 0-9")
+    val offset = pos
+    val nameB = localHeader(name, flags = 8, method = 8, crc = 0L, csize = 0L, usize = 0L)
+    streaming = true
+    new EntryStream(nameB, offset, new Deflater(level, true))
+  }
+
+  private final class EntryStream(nameB: Array[Byte], offset: Long, deflater: Deflater)
+      extends OutputStream {
+    private val crc = new CRC32
+    private val dataStart = pos
+    private var closed = false
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      require(!closed, "ZIP entry already closed")
+      crc.update(b, off, len)
+      deflater.setInput(b, off, len)
+      while (!deflater.needsInput()) drain()
+    }
+    private def drain(): Unit = raw(buf, 0, deflater.deflate(buf))
+    override def close(): Unit = if (!closed) {
+      closed = true
+      val usize = try {
+        deflater.finish()
+        while (!deflater.finished()) drain()
+        deflater.getBytesRead
+      } finally deflater.end()
+      val csize = pos - dataStart
+      w32(0x08074b50L) // data descriptor
+      w32(crc.getValue)
+      if (isZip64(csize, usize)) { w64(csize); w64(usize) } else { w32(csize); w32(usize) }
+      dir += Cen(nameB, flags = 8, method = 8, crc.getValue, csize, usize, offset)
+      streaming = false
+    }
+  }
+
+  /** Write a local header; returns the name's UTF-8 bytes. A streaming
+    * entry (flag bit 3) writes zero CRC and sizes: they follow the data. */
+  private def localHeader(name: String, flags: Int, method: Int,
+      crc: Long, csize: Long, usize: Long): Array[Byte] = {
+    require(!finished, "ZIP already finished")
+    require(pendingPayload == 0, s"previous entry short by $pendingPayload payload bytes")
+    require(!streaming, "previous streaming entry not closed")
+    val nameB = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val zip64 = isZip64(csize, usize)
+    w32(0x04034b50L)
+    w16(if (zip64) 45 else 20) // version needed
+    w16(flags)
+    w16(method)
+    w16(0); w16(0x21) // DOS time/date pinned to 1980-01-01
+    w32(crc)
+    w32(if (zip64) Max32 else csize)
+    w32(if (zip64) Max32 else usize)
+    w16(nameB.length)
+    w16(if (zip64) 20 else 0) // extra length
+    raw(nameB, 0, nameB.length)
+    if (zip64) { // 0x0001 extra: in the LOCAL header both sizes, usize first
+      w16(0x0001); w16(16); w64(usize); w64(csize)
+    }
+    nameB
+  }
+
+  private def isZip64(csize: Long, usize: Long): Boolean =
+    csize >= zip64SizeThreshold || usize >= zip64SizeThreshold
 
   /** Central directory + EOCD (+ ZIP64 chain when any field saturates). */
   def finish(): Unit = {
     require(!finished, "ZIP already finished")
     require(pendingPayload == 0, s"open entry short by $pendingPayload payload bytes")
+    require(!streaming, "streaming entry not closed")
     val cdStart = pos
     dir.foreach { e =>
       val needU = e.usize >= zip64SizeThreshold
@@ -109,7 +161,7 @@ final class RawZipWriter(out: OutputStream,
       w32(0x02014b50L)
       w16(if (extraLen > 0) 45 else 20) // version made by
       w16(if (extraLen > 0) 45 else 20) // version needed
-      w16(0)
+      w16(e.flags)
       w16(e.method)
       w16(0); w16(0x21)
       w32(e.crc)
@@ -175,6 +227,6 @@ final class RawZipWriter(out: OutputStream,
 
 object RawZipWriter {
   private final case class Cen(
-      name: Array[Byte], method: Int, crc: Long,
+      name: Array[Byte], flags: Int, method: Int, crc: Long,
       csize: Long, usize: Long, offset: Long)
 }

@@ -1,12 +1,12 @@
 package graft.xlsx
 
 import java.io.OutputStream
-import java.util.zip.{ZipEntry, ZipOutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Streaming XLSX workbook writer: rows are serialized to worksheet XML in a
-  * reused buffer and pushed straight into a `ZipOutputStream` — constant
-  * memory regardless of row count, no temp files.
+  * reused buffer and deflated straight into the workbook's ZIP entry through
+  * [[RawZipWriter]] — constant memory regardless of row count, no temp
+  * files, and identical bytes for identical rows (pinned ZIP timestamps).
   *
   * Behavior mirrors the reference's zero-temp writer
   * (ref: src/fast_writer/zero_temp_workbook.rs): inline strings instead of a
@@ -23,15 +23,11 @@ import java.nio.charset.StandardCharsets.UTF_8
   * FSDataOutputStream (s3a/gs/hdfs — multipart streaming handled by the
   * filesystem layer, replacing ref: src/cloud/s3_writer.rs).
   */
-final class XlsxWriter private[graft] (sink: XlsxWriter.WorkbookSink) {
+final class XlsxWriter(out: OutputStream, compressionLevel: Int = 6) {
+  require(compressionLevel >= 0 && compressionLevel <= 9, "compression level 0-9")
 
-  /** Standard form: a complete .xlsx package streamed to `out`. The sink
-    * indirection exists for the parallel single-workbook write, where each
-    * partition streams bare pre-compressed sheet payloads instead
-    * ([[XlsxFragmentSink]]) and the driver stitches the package at commit. */
-  def this(out: OutputStream, compressionLevel: Int = 6) =
-    this(new XlsxWriter.ZipStreamSink(out, compressionLevel))
-
+  private val zip = new RawZipWriter(out)
+  private var entry: OutputStream = _ // the open sheet's ZIP entry
   private val sb = new java.lang.StringBuilder(4096) // reused row buffer
   // Column letters repeat every row — compute each once per writer.
   private val letterCache = new scala.collection.mutable.ArrayBuffer[String](64)
@@ -67,7 +63,7 @@ final class XlsxWriter private[graft] (sink: XlsxWriter.WorkbookSink) {
       require(sheetNames.size > 1, "first sheet cannot be a rollover continuation")
       continuations :+= sheetNames.size - 1
     }
-    sink.startSheet(sheetNames.size)
+    entry = zip.openEntry(s"xl/worksheets/sheet${sheetNames.size}.xml", compressionLevel)
     write("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
 <worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""")
     // schema order: sheetFormatPr precedes cols precedes sheetData
@@ -196,7 +192,7 @@ final class XlsxWriter private[graft] (sink: XlsxWriter.WorkbookSink) {
       write("</sheetData>")
       protection.foreach(p => write(p.toXml))
       write("</worksheet>")
-      sink.endSheet(currentRow)
+      entry.close()
       inSheet = false
     }
   }
@@ -207,7 +203,11 @@ final class XlsxWriter private[graft] (sink: XlsxWriter.WorkbookSink) {
     if (closed) return
     if (sheetNames.isEmpty) addSheet("Sheet1")
     finishSheet()
-    sink.finishPackage(sheetNames, continuations)
+    XlsxWriter.packageParts(sheetNames, continuations).foreach { case (name, content) =>
+      zip.addDeflated(name, content.getBytes(UTF_8), compressionLevel)
+    }
+    zip.finish()
+    zip.close()
     closed = true
   }
 
@@ -215,44 +215,11 @@ final class XlsxWriter private[graft] (sink: XlsxWriter.WorkbookSink) {
   // measured as fast as hand-rolled encoder chains here, and simpler.
   private def write(s: String): Unit = {
     val b = s.getBytes(UTF_8)
-    sink.write(b, 0, b.length)
+    entry.write(b, 0, b.length)
   }
 }
 
 object XlsxWriter {
-
-  /** Where a workbook's bytes go. [[ZipStreamSink]] = the normal complete
-    * .xlsx package; [[XlsxFragmentSink]] = bare pre-compressed sheet
-    * payloads for the parallel single-file stitch. */
-  private[graft] trait WorkbookSink {
-    def startSheet(oneBasedIndex: Int): Unit
-    def write(b: Array[Byte], off: Int, len: Int): Unit
-    /** `rows` = rows written to the sheet being closed (headers included). */
-    def endSheet(rows: Int): Unit
-    /** Called once at workbook close with the final sheet catalog. */
-    def finishPackage(sheetNames: Seq[String], continuations: Seq[Int]): Unit
-  }
-
-  /** The standard sink: a complete OOXML package through ZipOutputStream. */
-  private[graft] final class ZipStreamSink(out: OutputStream, level: Int)
-      extends WorkbookSink {
-    require(level >= 0 && level <= 9, "compression level 0-9")
-    private val zip = new ZipOutputStream(out, UTF_8)
-    zip.setLevel(level)
-    override def startSheet(i: Int): Unit =
-      zip.putNextEntry(new ZipEntry(s"xl/worksheets/sheet$i.xml"))
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = zip.write(b, off, len)
-    override def endSheet(rows: Int): Unit = zip.closeEntry()
-    override def finishPackage(sheetNames: Seq[String], continuations: Seq[Int]): Unit = {
-      packageParts(sheetNames, continuations).foreach { case (name, content) =>
-        zip.putNextEntry(new ZipEntry(name))
-        zip.write(content.getBytes(UTF_8))
-        zip.closeEntry()
-      }
-      zip.finish()
-      zip.close()
-    }
-  }
 
   /** The package parts written after the sheets, as (entry name, content),
     * for a workbook with these sheets and rollover continuations. */

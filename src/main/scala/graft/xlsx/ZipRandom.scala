@@ -161,33 +161,45 @@ object ZipRandom {
     out.result()
   }
 
-  /** Open one entry as a decompressed stream: seek to its local header, skip
-    * it (local name/extra lengths are authoritative here), bound the raw
-    * stream to compressedSize, inflate if deflated. Reaching the end of the
-    * stream checks the inflated size and CRC-32 against the directory, as
-    * the JDK's streaming ZIP reader does, so a flipped byte or a short entry
-    * fails the read instead of yielding altered data. */
+  /** Open one entry as a decompressed stream: its stored bytes
+    * ([[openRaw]]), inflated if deflated. Reaching the end of the stream
+    * checks the inflated size and CRC-32 against the directory, as the JDK's
+    * streaming ZIP reader does, so a flipped byte or a short entry fails the
+    * read instead of yielding altered data. */
   def openEntry(in: SeekableInput, e: Entry): InputStream = {
-    val lh = new Array[Byte](30)
-    in.readFully(e.localHeaderOffset, lh, 0, 30)
-    if (u32(lh, 0) != LocSig)
-      throw new IOException(s"bad local header signature for ZIP entry ${e.name}")
-    val dataStart = e.localHeaderOffset + 30 + u16(lh, 26) + u16(lh, 28)
     val data = e.method match {
-      case 0 => new BoundedStream(in.openAt(dataStart), e.compressedSize, padByte = false)
+      case 0 => openRaw(in, e)
       case 8 =>
         // nowrap Inflaters need one extra dummy byte after the compressed
         // data (Inflater javadoc; the JDK's random-access ZIP reader injects
         // buf[0]=0 in fill() for the same reason) or InflaterInputStream can throw
         // "Unexpected end of ZLIB input stream" on valid entries
-        val raw = new BoundedStream(in.openAt(dataStart), e.compressedSize, padByte = true)
-        new InflaterInputStream(raw, new Inflater(true), 64 * 1024) {
+        new InflaterInputStream(openBounded(in, e, padByte = true), new Inflater(true), 64 * 1024) {
         // release the Inflater's native buffers deterministically
         override def close(): Unit = try super.close() finally inf.end()
       }
       case m => throw new IOException(s"unsupported ZIP method $m for entry ${e.name}")
     }
     new CheckedStream(data, e)
+  }
+
+  /** The entry's stored bytes as written — compressed for method 8 —
+    * bounded to `compressedSize`, for copying into another archive. */
+  private[graft] def openRaw(in: SeekableInput, e: Entry): InputStream =
+    openBounded(in, e, padByte = false)
+
+  /** One stream per entry open: it starts at the local header, which is
+    * read and skipped on the same stream (local name/extra lengths are
+    * authoritative here — they may differ from the central copy). */
+  private def openBounded(in: SeekableInput, e: Entry, padByte: Boolean): InputStream = {
+    val s = in.openAt(e.localHeaderOffset)
+    try {
+      val lh = s.readNBytes(30)
+      if (lh.length < 30 || u32(lh, 0) != LocSig)
+        throw new IOException(s"bad local header for ZIP entry ${e.name}")
+      s.skipNBytes(u16(lh, 26).toLong + u16(lh, 28))
+      new BoundedStream(s, e.compressedSize, padByte)
+    } catch { case t: Throwable => s.close(); throw t }
   }
 
   /** Counts and CRC-32s the bytes read; at end of stream both must match

@@ -146,4 +146,19 @@ class XlsxSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll {
     val back = spark.read.format("xlsx").option("header", "true").load(f)
     assert(back.count() === 5)
   }
+
+  test("singleFile with more partitions than rows: one sheet per non-empty partition") {
+    val dir = tmp()
+    val f = s"$dir/sparse.xlsx"
+    val df = spark.range(3).repartition(8)
+    // the written order: partition by partition
+    val parts = df.rdd.glom().collect().map(_.map(_.longValue).toSeq).filter(_.nonEmpty)
+    df.write.mode("overwrite").format("xlsx")
+      .option("header", "true").option("singleFile", "true").save(f)
+    zipValid(f)
+    val back = spark.read.format("xlsx").option("header", "true").load(f)
+      .collect().map(_.getLong(0)).toSeq
+    assert(back === parts.flatten.toSeq)
+    assert(graft.xlsx.XlsxReader.forFile(f).sheetNames.size === parts.length)
+  }
 }

@@ -161,4 +161,26 @@ class ZipRandomSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("each entry open is one openAt and no positional read") {
+    val f = Files.createTempFile("ziprand-opens", ".xlsx").toString
+    writeWorkbook(f, 200)
+    val file = ZipRandom.SeekableInput.forFile(f)
+    var opens = 0
+    var reads = 0
+    val counting = new ZipRandom.SeekableInput {
+      override def length: Long = file.length
+      override def readFully(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
+        reads += 1; file.readFully(pos, buf, off, len)
+      }
+      override def openAt(pos: Long): java.io.InputStream = { opens += 1; file.openAt(pos) }
+    }
+    val es = ZipRandom.entries(counting)
+    opens = 0; reads = 0
+    es.foreach { e =>
+      val expect = readAll(ZipRandom.openEntry(file, e))
+      assert(java.util.Arrays.equals(readAll(ZipRandom.openEntry(counting, e)), expect), e.name)
+    }
+    assert((opens, reads) === ((es.size, 0)))
+  }
 }
