@@ -8,9 +8,10 @@ import graft.xlsx._
   * Usage:
   *   XlsxCli demo <out.xlsx>          write a typed multi-sheet demo file
   *   XlsxCli dump <in.xlsx> [sheet]   print sheets, dimensions and rows
-  *   XlsxCli bench [rows] [cols]      single-thread write+read throughput
-  *                                    (default 1M x 30 — the reference's
-  *                                    own benchmark config,
+  *   XlsxCli bench [rows] [cols]      single-writer (up to 4 deflate
+  *                                    threads) write+read throughput at
+  *                                    level 6 (default 1M x 30 — the
+  *                                    reference's own benchmark config,
   *                                    ref: QUICKSTART.md:187-193)
   */
 object XlsxCli {

@@ -1,6 +1,8 @@
 package graft.xlsx
 
-import java.io.OutputStream
+import java.io.{InterruptedIOException, OutputStream}
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors, Future}
+import java.util.concurrent.atomic.AtomicInteger
 import java.util.zip.{CRC32, Deflater}
 
 /** The library's one ZIP writer, per the public PKWARE APPNOTE / ISO 21320
@@ -23,6 +25,23 @@ import java.util.zip.{CRC32, Deflater}
   *    the commit concatenates the raw bytes here without recompressing,
   *    then writes the central directory.
   *
+  * A streaming entry opened outside a Spark task at level ≥ 1 deflates in
+  * blocks on a shared pool of min(4, cores) daemon threads — pigz's method
+  * (https://zlib.net/pigz/). The caller's thread computes the CRC-32 in
+  * order and fills 128 KiB input blocks; each full block is deflated by
+  * its own `Deflater`, primed with the previous block's last 32 KiB as its
+  * dictionary and ended with a sync flush, so the blocks concatenate into
+  * one ordinary deflate stream. The last, partial block is deflated with
+  * `finish()` on the caller's thread: an entry under 128 KiB never touches
+  * the pool. Blocks reach `out` in order, on the caller's thread, and at
+  * most 2 × threads are in flight (the caller waits when the window is
+  * full); blocks are reused, so an open entry holds about 2.5 MB (2 ×
+  * threads + 2 blocks of input and output) whatever its size. The bytes
+  * depend only on the input and the level, never on scheduling. Inside a
+  * Spark task (whose sibling tasks already hold the other cores), at
+  * level 0 (no compression work) or on one core, the entry is one
+  * sequential `Deflater` stream.
+  *
   * The reference writes each workbook through one sequential `ZipWriter`
   * stream (ref: src/fast_writer/zero_temp_workbook.rs:77-130).
   *
@@ -37,7 +56,7 @@ import java.util.zip.{CRC32, Deflater}
 final class RawZipWriter(out: OutputStream,
     zip64SizeThreshold: Long = 0xFFFFFFFFL,
     zip64CountThreshold: Int = 0xFFFF) {
-  import RawZipWriter.Cen
+  import RawZipWriter._
 
   private val dir = scala.collection.mutable.ArrayBuffer.empty[Cen]
   private var pos = 0L
@@ -80,15 +99,18 @@ final class RawZipWriter(out: OutputStream,
     * ends the deflate stream and writes the data descriptor — with 8-byte
     * sizes once either size reaches the ZIP64 threshold, the JDK's
     * streaming writer's rule — but leaves the archive open for the next
-    * entry. */
+    * entry. Outside a Spark task at level ≥ 1 the entry deflates in blocks
+    * on the shared pool (see the class header). */
   private[graft] def openEntry(name: String, level: Int): OutputStream = {
     require(level >= 0 && level <= 9, "compression level 0-9")
     val offset = pos
     val nameB = localHeader(name, flags = 8, method = 8, crc = 0L, csize = 0L, usize = 0L)
     streaming = true
-    new EntryStream(nameB, offset, new Deflater(level, true))
+    if (level >= 1 && Threads > 1 && !inSparkTask) new BlockEntryStream(nameB, offset, level)
+    else new EntryStream(nameB, offset, newDeflater(level))
   }
 
+  /** One sequential `Deflater` stream. */
   private final class EntryStream(nameB: Array[Byte], offset: Long, deflater: Deflater)
       extends OutputStream {
     private val crc = new CRC32
@@ -108,14 +130,97 @@ final class RawZipWriter(out: OutputStream,
         deflater.finish()
         while (!deflater.finished()) drain()
         deflater.getBytesRead
-      } finally deflater.end()
-      val csize = pos - dataStart
-      w32(0x08074b50L) // data descriptor
-      w32(crc.getValue)
-      if (isZip64(csize, usize)) { w64(csize); w64(usize) } else { w32(csize); w32(usize) }
-      dir += Cen(nameB, flags = 8, method = 8, crc.getValue, csize, usize, offset)
-      streaming = false
+      } finally endDeflater(deflater)
+      endEntry(nameB, offset, crc.getValue, pos - dataStart, usize)
     }
+  }
+
+  /** The block-parallel entry (see the class header). A failure — `out`
+    * throwing, or the caller's thread interrupted — waits for this entry's
+    * blocks still in flight before it propagates, so none is left holding
+    * the pool or a `Deflater`; the entry is then closed and the archive
+    * unfinishable. */
+  private final class BlockEntryStream(nameB: Array[Byte], offset: Long, level: Int)
+      extends OutputStream {
+    private val crc = new CRC32
+    private val dataStart = pos
+    private var usize = 0L
+    private var block = new Block
+    private var fill = 0
+    private var prev: Block = null // the last full block: the next one's dictionary
+    private var written: Block = null // the last block written: free once its successor is
+    private val spare = new java.util.ArrayDeque[Block]() // blocks free for reuse
+    private val inFlight = new java.util.ArrayDeque[Future[Block]]()
+    private var closed = false
+    override def write(b: Int): Unit = write(Array(b.toByte), 0, 1)
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      require(!closed, "ZIP entry already closed")
+      crc.update(b, off, len)
+      usize += len
+      var o = off
+      val end = off + len
+      while (o < end) {
+        val k = math.min(end - o, BlockSize - fill)
+        System.arraycopy(b, o, block.data, fill, k)
+        fill += k
+        o += k
+        if (fill == BlockSize) submit()
+      }
+    }
+    private def submit(): Unit = orAbandon {
+      val (full, dict) = (block, prev)
+      while (inFlight.size >= MaxInFlight) writeHead()
+      val task: Callable[Block] = () => deflateBlock(level, dict, full, BlockSize, last = false)
+      inFlight.add(pool.submit(task))
+      while (!inFlight.isEmpty && inFlight.peek.isDone) writeHead()
+      prev = full
+      block = if (spare.isEmpty) new Block else spare.pop()
+      fill = 0
+    }
+    private def writeHead(): Unit = {
+      val b = try inFlight.peek.get() catch {
+        case e: ExecutionException => throw e.getCause
+        case _: InterruptedException =>
+          Thread.currentThread.interrupt()
+          throw new InterruptedIOException("interrupted while deflating a ZIP entry")
+      }
+      inFlight.poll()
+      raw(b.out, 0, b.outLen)
+      // the block written before b was b's dictionary: now nothing reads it
+      if (written != null) spare.push(written)
+      written = b
+    }
+    private def orAbandon(body: => Unit): Unit =
+      try body catch { case t: Throwable => abandon(); throw t }
+    private def abandon(): Unit = {
+      closed = true
+      var interrupted = false
+      while (!inFlight.isEmpty) {
+        try { inFlight.peek.get(); inFlight.poll() } catch {
+          case _: InterruptedException => interrupted = true // keep waiting
+          case _: ExecutionException => inFlight.poll()
+        }
+      }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
+    override def close(): Unit = if (!closed) {
+      orAbandon {
+        deflateBlock(level, prev, block, fill, last = true)
+        while (!inFlight.isEmpty) writeHead()
+        raw(block.out, 0, block.outLen)
+      }
+      closed = true
+      endEntry(nameB, offset, crc.getValue, pos - dataStart, usize)
+    }
+  }
+
+  /** Close a streaming entry: data descriptor, then its directory record. */
+  private def endEntry(nameB: Array[Byte], offset: Long, crc: Long, csize: Long, usize: Long): Unit = {
+    w32(0x08074b50L) // data descriptor
+    w32(crc)
+    if (isZip64(csize, usize)) { w64(csize); w64(usize) } else { w32(csize); w32(usize) }
+    dir += Cen(nameB, flags = 8, method = 8, crc, csize, usize, offset)
+    streaming = false
   }
 
   /** Write a local header; returns the name's UTF-8 bytes. A streaming
@@ -229,4 +334,72 @@ object RawZipWriter {
   private final case class Cen(
       name: Array[Byte], flags: Int, method: Int, crc: Long,
       csize: Long, usize: Long, offset: Long)
+
+  private val BlockSize = 128 * 1024
+  private val DictSize = 32 * 1024 // deflate's whole window
+
+  /** Deflate threads: more than 4 would wait on the one encoding thread,
+    * whose work is about a third of the deflate work at level 6. */
+  private[xlsx] val Threads: Int = math.min(4, Runtime.getRuntime.availableProcessors)
+  private val MaxInFlight = 2 * Threads
+
+  private lazy val pool: ExecutorService = {
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(Threads, { r =>
+      val t = new Thread(r, s"graft-deflate-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** `Deflater`s created and not yet ended, by every entry of every writer. */
+  private[xlsx] val liveDeflaters = new AtomicInteger
+
+  private def newDeflater(level: Int): Deflater = {
+    val d = new Deflater(level, true)
+    liveDeflaters.incrementAndGet()
+    d
+  }
+
+  private def endDeflater(d: Deflater): Unit = {
+    d.end()
+    liveDeflaters.decrementAndGet()
+  }
+
+  /** The codec needs no Spark: without it on the classpath there is no task. */
+  private def inSparkTask: Boolean =
+    try org.apache.spark.TaskContext.get() != null
+    catch { case _: NoClassDefFoundError => false }
+
+  /** One input block and its deflated bytes. An entry reuses a block once
+    * it is written and the block after it, which it primed, is written too. */
+  private final class Block {
+    val data = new Array[Byte](BlockSize)
+    // zlib's deflateBound plus a sync flush's 5 bytes: one deflate call fits
+    var out = new Array[Byte](BlockSize + (BlockSize >>> 12) + (BlockSize >>> 14) + 32)
+    var outLen = 0
+  }
+
+  /** Deflate `block.data(0 until len)` into `block.out` as one piece of a raw
+    * deflate stream, primed with `dict`'s last 32 KiB when there is a
+    * previous block: a middle piece ends with a sync flush (byte-aligned,
+    * not final), the `last` one finishes the stream. */
+  private def deflateBlock(level: Int, dict: Block, block: Block, len: Int, last: Boolean): Block = {
+    val d = newDeflater(level)
+    try {
+      if (dict != null) d.setDictionary(dict.data, BlockSize - DictSize, DictSize)
+      d.setInput(block.data, 0, len)
+      if (last) d.finish()
+      var n = 0
+      var done = false
+      while (!done) {
+        if (n == block.out.length) block.out = java.util.Arrays.copyOf(block.out, 2 * block.out.length)
+        n += d.deflate(block.out, n, block.out.length - n,
+          if (last) Deflater.NO_FLUSH else Deflater.SYNC_FLUSH)
+        done = if (last) d.finished() else n < block.out.length
+      }
+      block.outLen = n
+      block
+    } finally endDeflater(d)
+  }
 }

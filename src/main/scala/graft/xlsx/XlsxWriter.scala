@@ -7,6 +7,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * reused buffer and deflated straight into the workbook's ZIP entry through
   * [[RawZipWriter]] — constant memory regardless of row count, no temp
   * files, and identical bytes for identical rows (pinned ZIP timestamps).
+  * Outside a Spark task, at level ≥ 1, the calling thread encodes rows
+  * while the sheet deflates in 128 KiB blocks on up to 4 shared threads
+  * (the block entry in [[RawZipWriter]]); inside a task it is one
+  * sequential deflate stream.
   *
   * Behavior mirrors the reference's zero-temp writer
   * (ref: src/fast_writer/zero_temp_workbook.rs): inline strings instead of a

@@ -5,11 +5,12 @@ import java.util.zip.{CRC32, Inflater, InflaterInputStream, ZipException}
 
 /** The one ZIP reader of the xlsx read path: random access through the
   * central directory, over any seekable byte source — a local file, a
-  * Hadoop stream (s3a/gs/hdfs) or bytes in memory. An entry open is one
-  * bounded tail read (EOCD + central directory), then one ranged read per
-  * entry — the same access pattern Parquet readers use for footers. The
-  * central directory is the authority: an input without a parseable one
-  * is refused, whatever its scheme.
+  * Hadoop stream (s3a/gs/hdfs) or bytes in memory. Listing the entries is
+  * one bounded tail read (EOCD + central directory; a second ranged read
+  * only for a directory larger than the tail, or a ZIP64 archive), then
+  * one ranged read per entry — the access pattern Parquet readers use for
+  * footers. The central directory is the authority: an input without a
+  * parseable one is refused, whatever its scheme.
   *
   * Layout parsed per the public PKWARE APPNOTE / ISO 21320: End-Of-Central-
   * Directory record (with the ZIP64 locator + record when present), central
@@ -102,10 +103,12 @@ object ZipRandom {
     if (eocd < 0) throw new IOException("not a ZIP archive: no end-of-central-directory record")
     var totalEntries: Long = u16(tail, eocd + 10)
     var cdOffset: Long = u32(tail, eocd + 16)
+    val tailStart = fileLen - scanLen
     // ZIP64: any saturated field sends us to the ZIP64 EOCD via its locator,
     // which sits immediately before the EOCD record
-    if (totalEntries == 0xFFFF || cdOffset == 0xFFFFFFFFL) {
-      val locPos = fileLen - scanLen + eocd - 20
+    val zip64 = totalEntries == 0xFFFF || cdOffset == 0xFFFFFFFFL
+    if (zip64) {
+      val locPos = tailStart + eocd - 20
       val loc = new Array[Byte](20)
       in.readFully(locPos, loc, 0, 20)
       if (u32(loc, 0) != Zip64LocatorSig)
@@ -117,18 +120,25 @@ object ZipRandom {
       totalEntries = u64(z64, 32)
       cdOffset = u64(z64, 48)
     }
-    // read the whole central directory in one ranged read: it ends where the
-    // (ZIP64) EOCD chain begins, and is small (46 + name bytes per entry)
-    val cdEnd = fileLen - scanLen + eocd
+    // the central directory ends where the (ZIP64) EOCD chain begins, and is
+    // small (46 + name bytes per entry): it is parsed from the tail already
+    // read when it lies inside it, else read whole in one ranged read
+    val cdEnd = tailStart + eocd
     if (cdOffset < 0 || cdOffset > cdEnd)
       throw new IOException(s"central directory offset $cdOffset lies outside the archive")
     val cdLen = (cdEnd - cdOffset).toInt
-    val cd = new Array[Byte](cdLen)
-    in.readFully(cdOffset, cd, 0, cdLen)
+    val (cd, cdStart) =
+      if (!zip64 && cdOffset >= tailStart) (tail, (cdOffset - tailStart).toInt)
+      else {
+        val b = new Array[Byte](cdLen)
+        in.readFully(cdOffset, b, 0, cdLen)
+        (b, 0)
+      }
+    val cdLimit = cdStart + cdLen
     val out = Seq.newBuilder[Entry]
-    var p = 0
+    var p = cdStart
     var n = 0L
-    while (n < totalEntries && p + 46 <= cdLen && u32(cd, p) == CenSig) {
+    while (n < totalEntries && p + 46 <= cdLimit && u32(cd, p) == CenSig) {
       val method = u16(cd, p + 10)
       val crc = u32(cd, p + 16)
       var csize: Long = u32(cd, p + 20)

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One ZIP reader and one ZIP writer: [[RawZipWriter]] writes every ZIP the
-  * library produces, and [[ZipRandom]] reads every workbook. This scans the
-  * main sources so that neither rule erodes silently. */
+  * library produces, and [[ZipRandom]] reads every workbook; and one thread
+  * pool in the codec and the data sources, the writer's shared deflate pool.
+  * This scans the main sources so that none of these rules erodes silently. */
 class ZipAccessGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src", "main", "scala")
@@ -37,5 +38,13 @@ class ZipAccessGuardSpec extends AnyFunSuite {
     val found = Seq("graft/xlsx", "graft/sources/xlsx")
       .flatMap(d => hits(main.resolve(d), """\b(ZipFile|ZipInputStream)\b"""))
     assert(found === Nil)
+  }
+
+  test("no thread or pool in the xlsx codec or the data sources but RawZipWriter's deflate pool") {
+    val rawZip = main.resolve("graft/xlsx/RawZip.scala").toString + ":"
+    val found = Seq("graft/xlsx", "graft/sources")
+      .flatMap(d => hits(main.resolve(d), """\b(Executors|ForkJoinPool)\b|\bnew Thread\b"""))
+    assert(found.exists(_.startsWith(rawZip)), "the deflate pool moved out of RawZip.scala")
+    assert(found.filterNot(_.startsWith(rawZip)) === Nil)
   }
 }

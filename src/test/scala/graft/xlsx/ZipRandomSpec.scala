@@ -183,4 +183,42 @@ class ZipRandomSpec extends AnyFunSuite {
     }
     assert((opens, reads) === ((es.size, 0)))
   }
+
+  /** `file` with every positional read counted. */
+  private final class CountingInput(file: ZipRandom.SeekableInput) extends ZipRandom.SeekableInput {
+    var reads = 0
+    override def length: Long = file.length
+    override def readFully(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
+      reads += 1; file.readFully(pos, buf, off, len)
+    }
+    override def openAt(pos: Long): java.io.InputStream = file.openAt(pos)
+  }
+
+  test("a workbook's central directory is parsed from the one tail read") {
+    val f = Files.createTempFile("ziprand-tail", ".xlsx").toString
+    writeWorkbook(f, 500)
+    val counting = new CountingInput(ZipRandom.SeekableInput.forFile(f))
+    val names = ZipRandom.entries(counting).map(_.name)
+    assert(counting.reads === 1)
+    val zf = new ZipFile(f)
+    try assert(names === zf.entries().asScala.map(_.getName).toSeq) finally zf.close()
+  }
+
+  test("a central directory that starts before the tail is read whole and lists every entry") {
+    val bos = new java.io.ByteArrayOutputStream
+    val zw = new RawZipWriter(bos)
+    val names = (0 until 2000).map(i => f"dir/entry-$i%06d-" + "x" * 23) // 40-byte names
+    names.foreach(n => zw.addDeflated(n, n.getBytes("UTF-8"), 6))
+    zw.finish()
+    val zip = bos.toByteArray
+    val cdOffset = java.nio.ByteBuffer.wrap(zip, zip.length - 22 + 16, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    assert(cdOffset < zip.length - (22 + 0xFFFF), "the directory must outgrow the tail")
+    val counting = new CountingInput(ZipRandom.SeekableInput.forBytes(zip))
+    val es = ZipRandom.entries(counting)
+    assert(counting.reads === 2)
+    assert(es.map(_.name) === names)
+    val e = es.last
+    assert(new String(readAll(ZipRandom.openEntry(counting, e)), "UTF-8") === e.name)
+  }
 }
