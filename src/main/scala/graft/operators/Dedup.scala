@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.SessionShim
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -40,18 +41,6 @@ object Dedup {
   /** [[TrackedPersist.trackedPersist]] for sibling operators (Curation's
     * span scrub shares this registry so one `unpersistAll` drains both). */
   private[graft] def pin(df: DataFrame): DataFrame = df.trackedPersist()
-
-  /** Per-session lock for [[connectedComponents]]' scoped shuffle-conf
-    * mutation — weakly keyed so a retired session's entry is collectable. */
-  private val ccLocks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, Object]())
-  private def ccConfLock(s: org.apache.spark.sql.SparkSession): Object =
-    ccLocks.synchronized {
-      val cur = ccLocks.get(s)
-      if (cur != null) cur
-      else { val o = new Object; ccLocks.put(s, o); o }
-    }
 
   /** Release every intermediate this object pinned for `spark`. Call AFTER
     * the consuming action (count/write/collect) — the returned frames are
@@ -581,12 +570,11 @@ object Dedup {
     * The shingled index is persisted — it feeds the df-count, both join
     * sides, nothing is computed three times (measured 2.4× on the sf0.1
     * bench; at 100 TB it becomes a materialized intermediate table). As
-    * with [[minhashNearDups]], the cache lifecycle is session-owned:
-    * LRU-evicted under pressure, `spark.catalog.clearCache()` drops it
-    * eagerly. The
-    * length-ratio prefilter inside the join condition (J ≥ t forces
-    * min(n_a,n_b)/max(n_a,n_b) ≥ t) drops size-mismatched pairs before the
-    * shuffle-heavy groupBy.
+    * with [[minhashNearDups]], the pin is tracked: it stays cached (LRU-
+    * evicted under pressure) until the caller's [[unpersistAll]] after
+    * the consuming action releases it. The length-ratio prefilter inside
+    * the join condition (J ≥ t forces min(n_a,n_b)/max(n_a,n_b) ≥ t)
+    * drops size-mismatched pairs before the shuffle-heavy groupBy.
     *
     * This all-token variant wins up to mid-size corpora (head-to-head at
     * sf0.1: 1.6s vs 4.4s for the prefix-filtered plan — the prefix plan
@@ -780,6 +768,12 @@ object Dedup {
     * must outlive the call; delete `checkpointDir` after consuming the
     * result.
     *
+    * The loop plans on its own session: a clone of the caller's (every
+    * runtime SQL setting kept) that differs only in the shuffle width,
+    * sized to the edge count. The caller's session conf is never written,
+    * so concurrent queries on it keep their own width; the returned frame
+    * belongs to the caller's session.
+    *
     * Input: (id_a, id_b) pairs. Output: (id, component) for every id
     * that appears in any pair; component = min id reachable. */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 20,
@@ -799,13 +793,6 @@ object Dedup {
       val p = new org.apache.hadoop.fs.Path(roundPath(i))
       if (f.exists(p)) f.delete(p, true)
     }
-    def cut(df: DataFrame, round: Int): DataFrame =
-      if (checkpointDir.isDefined) {
-        df.write.mode("overwrite").parquet(roundPath(round))
-        val back = spark.read.parquet(roundPath(round))
-        dropRound(round - 1) // the new round is durable; its parent is dead weight
-        back
-      } else df.localCheckpoint()
     // Both edge directions from ONE scan of `pairs`: a union of two
     // selects would execute the (expensive, possibly unpersisted) pair
     // pipeline twice before this cache populates.
@@ -825,32 +812,12 @@ object Dedup {
     // r19). ~2 M edges per partition ≈ 32 MB rows — the guide's
     // 100 MB-1 GB post-shuffle band after join fan-out — and the count
     // is free: it materializes the edge cache the first round would
-    // have materialized anyway. The conf is scoped to the loop (the
-    // actions below all run inside it) and restored after; label values
-    // are partitioning-independent, so answers are unchanged.
+    // have materialized anyway. The width applies to the loop's own
+    // session (below), never to the caller's; label values are
+    // partitioning-independent, so answers are unchanged.
     val nEdges = edges.count()
-    val shuffleKey = "spark.sql.shuffle.partitions"
-    // ADVICE r19 hazard fix: this mutates the SESSION-global shuffle
-    // partition conf for the duration of the loop (the DataFrame API has
-    // no per-operator partition count for groupBy/join, and an explicit
-    // repartition per round would add a real exchange at every scale to
-    // dodge a local-mode hazard). Unsynchronized, two overlapping calls
-    // on one session could interleave save/restore and leave the conf
-    // permanently clobbered — the loop is serialized on a PRIVATE
-    // per-session lock (not the session's own monitor, which Scala also
-    // takes for the session's lazy-val initialization — hijacking it
-    // would block unrelated threads for the whole loop) so save/restore
-    // pairs nest correctly. Residual documented hazard: OTHER queries
-    // submitted concurrently on the same session while a loop runs plan
-    // with ccParts (their results are unaffected, only their shuffle
-    // width); callers sharing a session with latency-sensitive
-    // concurrent work should scope this call to a quiet window.
-    ccConfLock(spark).synchronized {
-    val savedShuffle = spark.conf.get(shuffleKey)
     val ccParts = math.max(1L, math.min(nEdges / 2000000L + 1L,
       spark.sparkContext.defaultParallelism.toLong * 4L)).toInt
-    spark.conf.set(shuffleKey, ccParts.toString)
-    try {
     // The edge cache inherits the PAIR pipeline's partitioning (at bench
     // scale a 64-partition union), and every round's propagate join
     // streams over it — re-laying it out once at ccParts keeps each
@@ -864,13 +831,25 @@ object Dedup {
         edges.unpersist(blocking = false)
         e
       }
-    var labels = edgesCc.groupBy(col("src").as("id"))
+    // The loop's own session (see above): it shares the cache manager, so
+    // the rebound edges read the cache above, and the reliable cut reads
+    // back through it, so no round joins two sessions' frames.
+    val loop = SessionShim.cloneWithShufflePartitions(spark, ccParts)
+    def cut(df: DataFrame, round: Int): DataFrame =
+      if (checkpointDir.isDefined) {
+        df.write.mode("overwrite").parquet(roundPath(round))
+        val back = loop.read.parquet(roundPath(round))
+        dropRound(round - 1) // the new round is durable; its parent is dead weight
+        back
+      } else df.localCheckpoint()
+    val loopEdges = SessionShim.rebind(edgesCc, loop)
+    var labels = loopEdges.groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), first(col("src"))).as("component"))
     var iter = 0
     var converged = false
     while (iter < maxIters && !converged) {
       // propagate: my new label = min(my label, labels of my neighbors)
-      val viaNeighbor = edgesCc
+      val viaNeighbor = loopEdges
         .join(labels.withColumnRenamed("id", "dst_id"), col("dst") === col("dst_id"))
         .groupBy(col("src").as("id"))
         .agg(min(col("component")).as("n_comp"))
@@ -905,9 +884,7 @@ object Dedup {
         s"connectedComponents did not converge in $maxIters iterations — " +
           "raise maxIters; refusing to return split components")
     }
-    labels
-    } finally spark.conf.set(shuffleKey, savedShuffle)
-    }
+    SessionShim.rebind(labels, spark)
   }
 
   /** Survivors after near-dup removal: every id in `df` minus non-minimal

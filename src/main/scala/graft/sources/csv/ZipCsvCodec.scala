@@ -122,22 +122,6 @@ object ZipCsvCodec {
   /** Make `.zip` files readable by extension (spark.read.csv on a
     * directory of .zip) by appending this codec to the session's Hadoop
     * codec list. Write-side needs only the `compression` option. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val key = "io.compression.codecs"
-    // When the key is UNSET Hadoop discovers codecs via ServiceLoader;
-    // once set, the listed codecs REPLACE that discovery — so seed the
-    // list with the discovered codecs or a bare custom entry would make
-    // .gz/.bz2/... unreadable for the whole session.
-    val existing = Option(conf.get(key)).filter(_.nonEmpty) match {
-      case Some(list) => list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      case None =>
-        import scala.jdk.CollectionConverters._
-        java.util.ServiceLoader
-          .load(classOf[org.apache.hadoop.io.compress.CompressionCodec])
-          .iterator().asScala.map(_.getClass.getName).toSeq
-    }
-    if (!existing.contains(Name))
-      conf.set(key, (existing :+ Name).mkString(","))
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    CodecList.register(spark, Name)
 }

@@ -45,14 +45,14 @@ object XlsxCli {
       }
       w.close()
       val writeSec = (System.nanoTime() - t0) / 1e9
-      val memAfterWrite = usedMb
+      System.gc(); val memAfterWrite = usedMb
       val t1 = System.nanoTime()
       var readRows = 0L
       XlsxReader.forFile(out.getPath).rowsByIndex(0).foreach(_ => readRows += 1)
       val readSec = (System.nanoTime() - t1) / 1e9
       println(f"write: $rows rows x $cols cols in $writeSec%.2f s = ${rows / writeSec}%.0f rows/s")
       println(f"read:  $readRows rows in $readSec%.2f s = ${readRows / readSec}%.0f rows/s")
-      println(f"file:  ${out.length() / 1048576.0}%.1f MB; heap delta during write ~${memAfterWrite - memBefore} MB")
+      println(f"file:  ${out.length() / 1048576.0}%.1f MB; heap retained after write ~${memAfterWrite - memBefore} MB")
       out.delete()
     case "demo" :: out :: Nil =>
       import CellValue._

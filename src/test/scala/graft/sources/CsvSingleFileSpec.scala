@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.csv.{CsvSingleFile, ZstdCodec}
+import graft.sources.csv.{CsvSingleFile, ZipCsvCodec, ZstdCodec}
 
 /** Parallel single-file CSV write: partitions encode/compress their own
   * parts through Spark's built-in writer, the driver byte-concatenates
@@ -80,6 +80,31 @@ class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll {
       .schema("id BIGINT, name STRING, score DOUBLE").csv(p)
     assert(back.count() == 400)
     assert(back.agg(sum("id")).head.getLong(0) == 400L * 401 / 2)
+  }
+
+  test("codec registration: each codec listed once beside the discovered ones, in either order") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val key = "io.compression.codecs"
+    val saved = Option(conf.get(key))
+    val discovered = scala.jdk.CollectionConverters.IteratorHasAsScala(
+      java.util.ServiceLoader.load(classOf[org.apache.hadoop.io.compress.CompressionCodec])
+        .iterator()).asScala.map(_.getClass.getName).toSeq
+    val register = Map[String, () => Unit](
+      ZstdCodec.Name -> (() => ZstdCodec.register(spark)),
+      ZipCsvCodec.Name -> (() => ZipCsvCodec.register(spark)))
+    try for (order <- Seq(Seq(ZstdCodec.Name, ZipCsvCodec.Name), Seq(ZipCsvCodec.Name, ZstdCodec.Name))) {
+      conf.unset(key)
+      (order ++ order).foreach(register(_)())
+      assert(conf.get(key).split(",").toSeq === discovered ++ order)
+      val p = tmp() + "/out.csv.gz"
+      CsvSingleFile.write(sample(50), p, Map("header" -> "true", "compression" -> "gzip"))
+      val back = spark.read.option("header", "true")
+        .schema("id BIGINT, name STRING, score DOUBLE").csv(p)
+      assert(back.count() == 50, s"a .csv.gz no longer reads after registering $order")
+    } finally saved match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.unset(key)
+    }
   }
 
   test("bzip2: ONE file out, and the read back SPLITS across tasks") {

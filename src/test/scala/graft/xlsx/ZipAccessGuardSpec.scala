@@ -6,10 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One ZIP reader and one ZIP writer: [[RawZipWriter]] writes every ZIP the
-  * library produces, and [[ZipRandom]] reads every workbook; and one thread
-  * pool in the codec and the data sources, the writer's shared deflate pool.
-  * This scans the main sources so that none of these rules erodes silently. */
+/** Source guards: rules about the main sources that no behaviour test
+  * would notice eroding, checked by scanning the sources' lines.
+  *  - One ZIP reader and one ZIP writer: [[RawZipWriter]] writes every ZIP
+  *    the library produces, and [[ZipRandom]] reads every workbook.
+  *  - One thread pool in the codec and the data sources, the writer's
+  *    shared deflate pool.
+  *  - No operator mutates session-global state: operator and streaming
+  *    code never writes the session conf (an operator that needs other
+  *    planning settings plans on a session of its own). */
 class ZipAccessGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src", "main", "scala")
@@ -46,5 +51,11 @@ class ZipAccessGuardSpec extends AnyFunSuite {
       .flatMap(d => hits(main.resolve(d), """\b(Executors|ForkJoinPool)\b|\bnew Thread\b"""))
     assert(found.exists(_.startsWith(rawZip)), "the deflate pool moved out of RawZip.scala")
     assert(found.filterNot(_.startsWith(rawZip)) === Nil)
+  }
+
+  test("no session-conf write in the operators or the streaming pipelines") {
+    val found = Seq("graft/operators", "graft/streaming")
+      .flatMap(d => hits(main.resolve(d), """\.conf\.(set|unset)\("""))
+    assert(found === Nil)
   }
 }
