@@ -3,7 +3,6 @@ package graft.sources.csv
 import java.io.{InputStream, OutputStream}
 
 import com.github.luben.zstd.{ZstdInputStreamNoFinalizer, ZstdOutputStreamNoFinalizer}
-import org.apache.hadoop.conf.{Configurable, Configuration}
 import org.apache.hadoop.io.compress._
 
 /** Pure-JVM zstd codec for Hadoop text formats, giving `.csv.zst` parity
@@ -18,18 +17,12 @@ import org.apache.hadoop.io.compress._
   *   df.write.option("compression", ZstdCodec.Name).csv(path)  // .csv.zst
   * }}}
   */
-final class ZstdCodec extends CompressionCodec with Configurable {
-
-  private var conf: Configuration = new Configuration(false)
-  override def setConf(c: Configuration): Unit = conf = c
-  override def getConf: Configuration = conf
-
-  private def level: Int = if (conf == null) 3 else conf.getInt("graft.zstd.level", 3)
+final class ZstdCodec extends CompressionCodec {
 
   override def getDefaultExtension: String = ".zst"
 
   override def createOutputStream(out: OutputStream): CompressionOutputStream =
-    new CompressionOutputStream(new ZstdOutputStreamNoFinalizer(out, level)) {
+    new CompressionOutputStream(new ZstdOutputStreamNoFinalizer(out, 3)) {
       override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
       override def write(b: Int): Unit = out.write(b)
       override def finish(): Unit = {

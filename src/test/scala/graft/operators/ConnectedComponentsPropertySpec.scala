@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver-side union-find on generated pair lists over at most 60 nodes:
   * long chains in shuffled id order, cliques, duplicate and reversed
   * pairs, self-pairs and isolated pairs. Each case runs both lineage cuts
-  * (`localCheckpoint` and a `checkpointDir`). Seeded — reruns are
-  * deterministic, and a failure names its seed. */
+  * (`localCheckpoint` and a `checkpointDir`), and `keepOnePerComponent`
+  * runs both its driver path and its loop, with Long and String ids.
+  * Seeded — reruns are deterministic, and a failure names its seed. */
 class ConnectedComponentsPropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -63,17 +64,26 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite with BeforeAndAfterAll
   } yield new scala.util.Random(order).shuffle(base ++ extra.flatten)
 
   /** Minimum id of each node's component, for every node in a pair. */
-  private def unionFind(ps: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
+  private def unionFind[T](ps: Seq[(T, T)])(implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
       val p = parent.getOrElseUpdate(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
     for ((a, b) <- ps) {
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
     }
     parent.keys.toSeq.map(x => x -> find(x)).toMap
+  }
+
+  /** A String id for node id `x` whose order is not the numeric order. */
+  private def stringId(x: Long): String = s"${x * 7919 % 1009}-$x"
+
+  private def deleteTree(dir: java.nio.file.Path): Unit = {
+    val tree = java.nio.file.Files.walk(dir)
+    try tree.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    finally tree.close()
   }
 
   private def forEachCase(body: (Long, Seq[(Long, Long)]) => Unit): Unit =
@@ -114,6 +124,48 @@ class ConnectedComponentsPropertySpec extends AnyFunSuite with BeforeAndAfterAll
         .collect().map(_.getLong(0))
       Dedup.unpersistAll(spark)
       assert(kept.sorted.toSeq === corpus.filterNot(dropped))
+    }
+  }
+
+  test("keepOnePerComponent: cap and cap + 1 pairs take the driver path and the loop, same survivors") {
+    val s = spark
+    import s.implicits._
+    val corpus = (0 until MaxNodes + 5).map(k => node(k))
+    forEachCase { (seed, ps) =>
+      val dropped = unionFind(ps).collect { case (id, c) if id != c => id }.toSet
+      for ((cap, loop) <- Seq(ps.size.toLong -> false, ps.size - 1L -> true)) {
+        val dir = java.nio.file.Files.createTempDirectory(s"cc-keep-$seed")
+        try {
+          val kept = Dedup.keepOnePerComponent(corpus.toDF("id"), "id", ps.toDF("id_a", "id_b"),
+            Some(dir.toString), cap).collect().map(_.getLong(0))
+          Dedup.unpersistAll(spark)
+          withClue(s"cap $cap: ") {
+            assert(kept.sorted.toSeq === corpus.filterNot(dropped))
+            // only the loop writes round tables under checkpointDir
+            assert(dir.toFile.list().exists(_.startsWith("graft_cc_")) === loop)
+          }
+        } finally deleteTree(dir)
+      }
+    }
+  }
+
+  test("keepOnePerComponent keeps the least String id of each component on both paths") {
+    val s = spark
+    import s.implicits._
+    val corpus = (0 until MaxNodes + 5).map(k => stringId(node(k)))
+    forEachCase { (_, ps) =>
+      val sps = ps.map { case (a, b) => (stringId(a), stringId(b)) }
+      val dropped = unionFind(sps).collect { case (id, c) if id != c => id }.toSet
+      for (cap <- Seq(sps.size.toLong, 0L)) {
+        val kept = Dedup.keepOnePerComponent(corpus.toDF("id"), "id", sps.toDF("id_a", "id_b"),
+          None, cap)
+        val got = kept.collect().map(_.getString(0))
+        Dedup.unpersistAll(spark)
+        withClue(s"cap $cap: ") {
+          assert(kept.schema("id").dataType === org.apache.spark.sql.types.StringType)
+          assert(got.sorted.toSeq === corpus.filterNot(dropped).sorted)
+        }
+      }
     }
   }
 }

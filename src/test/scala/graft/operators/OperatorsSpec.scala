@@ -23,6 +23,12 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
+  private def deleteTree(dir: String): Unit = {
+    val tree = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try tree.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    finally tree.close()
+  }
+
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._
@@ -461,57 +467,63 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
-    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(chain, checkpointDir = Some(dir))
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(comps.length === 51 && comps.forall(_._2 === 0L))
-    // the lineage cuts must actually have landed in fault-tolerant
-    // storage (that is the entire point of the option); rounds live under
-    // a per-call unique graft_cc_<token> subdir (shared-dir safety)
-    val callDirs = Option(new java.io.File(dir).listFiles).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("graft_cc_"))
-    assert(callDirs.length === 1, s"expected one per-call dir under $dir")
-    val rounds = Option(callDirs.head.listFiles).toSeq.flatten
-      .filter(_.getName.startsWith("round_"))
-    assert(rounds.nonEmpty, s"no reliable round tables under $dir")
-    // retention: converged rounds are deleted as the iteration advances;
-    // ONLY the final round's table (which the returned frame reads from)
-    // may remain — long runs must not accumulate one table per round
-    assert(rounds.length === 1,
-      s"stale round tables left behind: ${rounds.map(_.getName).sorted}")
-    // nothing session-wide was repointed by the reliable path
-    assert(spark.sparkContext.getCheckpointDir.isEmpty,
-      "connectedComponents set the SparkContext-wide checkpoint dir")
+    try {
+      val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val comps = Dedup.connectedComponents(chain, checkpointDir = Some(dir))
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(comps.length === 51 && comps.forall(_._2 === 0L))
+      // the lineage cuts must actually have landed in fault-tolerant
+      // storage (that is the entire point of the option); rounds live under
+      // a per-call unique graft_cc_<token> subdir (shared-dir safety)
+      val callDirs = Option(new java.io.File(dir).listFiles).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith("graft_cc_"))
+      assert(callDirs.length === 1, s"expected one per-call dir under $dir")
+      val rounds = Option(callDirs.head.listFiles).toSeq.flatten
+        .filter(_.getName.startsWith("round_"))
+      assert(rounds.nonEmpty, s"no reliable round tables under $dir")
+      // retention: converged rounds are deleted as the iteration advances;
+      // ONLY the final round's table (which the returned frame reads from)
+      // may remain — long runs must not accumulate one table per round
+      assert(rounds.length === 1,
+        s"stale round tables left behind: ${rounds.map(_.getName).sorted}")
+      // nothing session-wide was repointed by the reliable path
+      assert(spark.sparkContext.getCheckpointDir.isEmpty,
+        "connectedComponents set the SparkContext-wide checkpoint dir")
+    } finally deleteTree(dir)
   }
 
   test("connected components: two calls safely share one checkpointDir") {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-shared").toString
-    val chainA = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val chainB = (100L until 140L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // second call runs while the first call's lazy result is still
-    // unconsumed — with fixed round names it would clobber/delete the
-    // first call's final table out from under the returned frame
-    val a = Dedup.connectedComponents(chainA, checkpointDir = Some(dir))
-    val b = Dedup.connectedComponents(chainB, checkpointDir = Some(dir))
-    val aRows = a.collect().map(r => r.getLong(0) -> r.getLong(1))
-    val bRows = b.collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(aRows.length === 31 && aRows.forall(_._2 === 0L))
-    assert(bRows.length === 41 && bRows.forall(_._2 === 100L))
+    try {
+      val chainA = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      val chainB = (100L until 140L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      // second call runs while the first call's lazy result is still
+      // unconsumed — with fixed round names it would clobber/delete the
+      // first call's final table out from under the returned frame
+      val a = Dedup.connectedComponents(chainA, checkpointDir = Some(dir))
+      val b = Dedup.connectedComponents(chainB, checkpointDir = Some(dir))
+      val aRows = a.collect().map(r => r.getLong(0) -> r.getLong(1))
+      val bRows = b.collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(aRows.length === 31 && aRows.forall(_._2 === 0L))
+      assert(bRows.length === 41 && bRows.forall(_._2 === 100L))
+    } finally deleteTree(dir)
   }
 
   test("connected components: non-convergence deletes every reliable round table") {
     val s = spark
     import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt-nc").toString
-    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    assertThrows[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIters = 2, checkpointDir = Some(dir)).collect()
-    }
-    val left = Option(new java.io.File(dir).listFiles).toSeq.flatten
-      .filter(_.getName.startsWith("graft_cc_"))
-    assert(left.isEmpty, s"non-convergence left round tables: ${left.map(_.getName).sorted}")
+    try {
+      val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      assertThrows[IllegalStateException] {
+        Dedup.connectedComponents(chain, maxIters = 2, checkpointDir = Some(dir)).collect()
+      }
+      val left = Option(new java.io.File(dir).listFiles).toSeq.flatten
+        .filter(_.getName.startsWith("graft_cc_"))
+      assert(left.isEmpty, s"non-convergence left round tables: ${left.map(_.getName).sorted}")
+    } finally deleteTree(dir)
   }
 
   test("connected components: non-convergence throws, never splits silently") {
