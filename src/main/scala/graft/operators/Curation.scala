@@ -1413,11 +1413,13 @@ object Curation {
       new org.apache.hadoop.fs.Path(s"$path/doclens_tmp"), live)
   }
 
-  /** Effective corpus stats + tombstone set for the stored-postings
+  /** Effective corpus stats + tombstone filter for the stored-postings
     * probes: the stored SUMS minus the delete ledger's aggregate, so
-    * idf/avgdl match an index built without the deleted docs. */
+    * idf/avgdl match an index built without the deleted docs, and the
+    * filter ([[IndexMaintenance.dropTombstoned]]) drops that same
+    * ledger's docs. */
   private def bm25Effective(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Long, Double, Int, Option[DataFrame]) = {
+      path: String): (Long, Double, Int, DataFrame => DataFrame) = {
     // OPTIMISTIC SNAPSHOT vs a concurrent purge (r18): the purge
     // mutates three things a probe reads — the stats row, the ledger
     // files, and the `_ledger_fold` marker — and reading them at
@@ -1511,14 +1513,14 @@ object Curation {
 
   private def bm25EffectiveFrom(spark: org.apache.spark.sql.SparkSession,
       nDocs: Long, sumDl: Long, nBuckets: Int,
-      ledger: Option[IndexMaintenance.Ledger], path: String): (Long, Double, Int, Option[DataFrame]) = {
+      ledger: Option[IndexMaintenance.Ledger], path: String): (Long, Double, Int, DataFrame => DataFrame) = {
     val (delN, delDl) = ledger.map(_.deletedDocs).getOrElse((0L, 0L))
     val nEff = nDocs - delN
     require(nEff > 0, s"index at $path has no live documents " +
       s"(n_docs $nDocs, deleted $delN) — avgdl is undefined; rebuild with " +
       "writeBm25Index over a non-empty corpus")
     (nEff, (sumDl - delDl).toDouble / nEff, nBuckets,
-      ledger.map(d => broadcast(d.frame(spark).select("id"))))
+      IndexMaintenance.dropTombstoned(spark, ledger, "id"))
   }
 
   /** [[bm25Search]] against a stored [[writeBm25Index]] — identical
@@ -1574,7 +1576,7 @@ object Curation {
       allowed: Option[DataFrame] = None,
       filter: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    val (nDocs, avgdl, nBuckets, tombstones) = bm25Effective(spark, path)
+    val (nDocs, avgdl, nBuckets, live) = bm25Effective(spark, path)
     // the query frame is driver-small by contract (it broadcasts below):
     // collected ONCE — a local frame collects with no job — and its
     // (query, term) pairs and term set built here, term SETS per query
@@ -1595,7 +1597,7 @@ object Curation {
     val tf0 = Bm25Family.readTable(spark, path, "postings")
       .filter(col("bucket").isin(termBuckets: _*) && col("term").isin(terms: _*))
     // tombstoned docs leave tf AND df, so scores equal a rebuilt index
-    val tf = tombstones.map(t => tf0.join(t, Seq("id"), "left_anti")).getOrElse(tf0)
+    val tf = live(tf0)
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     // FILTERED retrieval (r18): `allowed` restricts the CANDIDATES while
     // df/idf/avgdl stay corpus-global — the Lucene filter-query contract

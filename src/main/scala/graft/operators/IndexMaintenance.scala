@@ -372,9 +372,10 @@ private[graft] object IndexMaintenance {
   // index built without those docs); `purge*Deletes` later reclaims the
   // bytes by rewriting the resident layer through [[rewriteResident]]'s
   // marker protocol. Probes and appends read the ledger driver-side
-  // through the index snapshot ([[readDeletes]] / [[ledgerRows]],
-  // capped): an unchanged ledger costs one directory listing and no
-  // Spark job, a grown one one job over its new files only. Deletes,
+  // through the index snapshot ([[ledgerRows]], capped; probes apply it
+  // with [[dropTombstoned]], appends check it with [[readDeletes]]): an
+  // unchanged ledger costs one directory listing and no Spark job, a
+  // grown one one job over its new files only. Deletes,
   // backfill and the remediation paths — purge, advice, rebuild — read
   // it distributed ([[ledger]]), so an over-cap ledger never blocks its
   // own remedy.
@@ -433,9 +434,10 @@ private[graft] object IndexMaintenance {
       "spark.graft.ledger.maxDriverRows if the driver truly has the memory.")
 
   /** The [[ledger]] MATERIALIZED to the driver as a local frame, refused
-    * loudly past [[maxLedgerDriverRows]]. Probes and appends are its
-    * only callers; deletes, backfill, purge, advice and rebuild read
-    * [[ledger]] distributed. It is served from the index snapshot
+    * loudly past [[maxLedgerDriverRows]]. The append check
+    * ([[requireNotTombstoned]]) is its only caller; probes go through
+    * [[dropTombstoned]], and deletes, backfill, purge, advice and rebuild
+    * read [[ledger]] distributed. It is served from the index snapshot
     * ([[ledgerRows]]): no Spark job while the ledger's files are
     * unchanged, one job over the new files after a delete. The local
     * frame holds no file references, so a concurrent purge deleting the
@@ -443,6 +445,21 @@ private[graft] object IndexMaintenance {
   private[operators] def readDeletes(spark: SparkSession,
       indexPath: String): Option[DataFrame] =
     ledgerRows(spark, indexPath).map(_.frame(spark))
+
+  /** The one tombstone rule of every probe: drop each row whose `idCol`
+    * the ledger lists, by a left anti-join against the ledger's ids,
+    * broadcast (the ledger is driver-small, [[maxLedgerDriverRows]]).
+    * It applies exactly the ledger the caller read ([[ledgerRows]]), so
+    * a probe that pairs the ledger with other state — BM25's stats row —
+    * keeps its consistent pair; None leaves every frame as it is. */
+  private[operators] def dropTombstoned(spark: SparkSession, ledger: Option[Ledger],
+      idCol: String): DataFrame => DataFrame = ledger match {
+    case None => identity
+    case Some(l) =>
+      import org.apache.spark.sql.functions.{broadcast, col}
+      val ids = broadcast(l.frame(spark).select(col("id").as(idCol)))
+      _.join(ids, Seq(idCol), "left_anti")
+  }
 
   private[operators] def clearDeletes(spark: SparkSession, indexPath: String): Unit = {
     val p = new Path(deletesDir(indexPath))

@@ -278,38 +278,10 @@ object Pq {
     val model = trainPq(corpus, cId, cVec, m, ksub, iters, maxSample)
     val np = math.min(nprobe, cents.length)
 
-    val assignUdf = udf { (v: Seq[Double]) =>
-      Similarity.nearestCell(Similarity.normalize(v.toArray), cents)
-    }
     val probeUdf = udf { (v: Seq[Double]) =>
-      val x = Similarity.normalize(v.toArray)
-      val scored = Array.tabulate(cents.length) { c =>
-        var acc = 0.0d; var j = 0
-        while (j < x.length) { acc += x(j) * cents(c)(j); j += 1 }
-        (acc, c)
-      }
-      scored.sortBy(-_._1).take(np).map(_._2)
+      Similarity.probeCells(Similarity.normalize(v.toArray), cents, np)
     }
-    // flattened ADC table: lut(j*ksub + c) = <q_sub_j, codebook_j(c)>
-    val lutUdf = udf { (v: Seq[Double]) =>
-      val x = Similarity.normalize(v.toArray)
-      require(x.length == model.dim,
-        s"query dimension ${x.length} != model dimension ${model.dim}")
-      val lut = new Array[Double](model.m * model.ksub)
-      var j = 0
-      while (j < model.m) {
-        val cb = model.codebooks(j); val base = j * model.dsub
-        var c = 0
-        while (c < model.ksub) {
-          val ct = cb(c); var acc = 0.0d; var d = 0
-          while (d < model.dsub) { acc += x(base + d) * ct(d); d += 1 }
-          lut(j * model.ksub + c) = acc
-          c += 1
-        }
-        j += 1
-      }
-      lut
-    }
+    val lutUdf = udf { (v: Seq[Double]) => adcTable(model, Similarity.normalize(v.toArray)) }
     // fused assign+encode: deserialize and normalize each corpus vector
     // once (two separate UDFs would each pay the per-element boxing and
     // the normalize pass — at corpus scale that IS the encode cost)
@@ -352,7 +324,7 @@ object Pq {
     val candidates =
       if (saturated)
         broadcast(q.select("query_id", "cell"))
-          .join(c0.withColumn("cell", assignUdf(col("cv")))
+          .join(c0.withColumn("cell", Similarity.cellUdf(cents)(col("cv")))
             .withColumn("cn", Similarity.l2norm(col("cv"))), Seq("cell"))
           .filter(col("query_id") =!= col("corpus_id"))
       else {
@@ -375,6 +347,28 @@ object Pq {
       .join(qv, Seq("query_id"))
       .withColumn("cosine",
         Similarity.dot(col("qv"), col("cv")) / (col("qn") * col("cn"))), k)
+  }
+
+  /** The ADC lookup table of one normalized query, flattened:
+    * `lut(j*ksub + c)` = <q_sub_j, codebook_j(c)>. A query whose
+    * dimension is not the model's fails here, loudly. */
+  private def adcTable(model: PqModel, x: Array[Double]): Array[Double] = {
+    require(x.length == model.dim,
+      s"query dimension ${x.length} != model dimension ${model.dim}")
+    val lut = new Array[Double](model.m * model.ksub)
+    var j = 0
+    while (j < model.m) {
+      val cb = model.codebooks(j); val base = j * model.dsub
+      var c = 0
+      while (c < model.ksub) {
+        val ct = cb(c); var acc = 0.0d; var d = 0
+        while (d < model.dsub) { acc += x(base + d) * ct(d); d += 1 }
+        lut(j * model.ksub + c) = acc
+        c += 1
+      }
+      j += 1
+    }
+    lut
   }
 
   /** SemDeDup with an SDC-prefiltered pair scan — PROVABLY the same
@@ -954,12 +948,12 @@ object Pq {
     * is 3.8×: SCALE.md r13).
     *
     * `minCandidates` (r19) is [[Similarity.ivfTopKIndexed]]'s
-    * nprobe-widening contract, applied to the CODES census: when > 0,
-    * nprobe doubles until every query's probed cells hold at least this
-    * many filtered, non-tombstoned candidates (or every cell is probed)
-    * — the guard against a selective `filter` silently thinning the ADC
-    * shortlist. Each attempt is one narrow count over the pruned codes;
-    * see the IVF twin's doc for cost and tuning. */
+    * nprobe-widening contract, through the same loop
+    * ([[Similarity.widenProbe]]) applied to the CODES census: nprobe
+    * widens until every query's probed cells hold at least this many
+    * filtered, non-tombstoned candidates (or every cell is probed) —
+    * the guard against a selective `filter` silently thinning the ADC
+    * shortlist. */
   def pqTopKIndexed(
       queries: DataFrame, qId: String, qVec: String,
       path: String, k: Int, nprobe: Int, refine: Int = 8,
@@ -967,13 +961,10 @@ object Pq {
     require(refine >= 1, "refine must be >= 1")
     val spark = queries.sparkSession
     val (cents, model) = PqFamily.routing(spark, path)
-    // tombstoned ids vanish from BOTH stages immediately (the ledger is
-    // driver-small by contract, so the anti-joins broadcast); filtering
+    // tombstoned ids vanish from BOTH stages immediately; filtering
     // codes keeps deleted docs out of the ADC shortlist budget too
-    val tombstones = IndexMaintenance.readDeletes(spark, path)
-      .map(d => broadcast(d.select(col("id").as("corpus_id"))))
-    def live(df: DataFrame) = tombstones
-      .map(t => df.join(t, Seq("corpus_id"), "left_anti")).getOrElse(df)
+    val live = IndexMaintenance.dropTombstoned(spark,
+      IndexMaintenance.ledgerRows(spark, path), "corpus_id")
     // the metadata predicate (r18 filtered search — columns stored by
     // writePqIndex(metaCols)) applies to BOTH stages like the
     // tombstones: at the ADC stage so filtered-out rows never consume
@@ -987,22 +978,7 @@ object Pq {
     val qs = Similarity.localQueries(queries, qId, qVec)
     val prepped = qs.rows.map { r =>
       val x = Similarity.normalize(r.getSeq[Double](1).toArray)
-      require(x.length == model.dim,
-        s"query dimension ${x.length} != model dimension ${model.dim}")
-      val lut = new Array[Double](model.m * model.ksub)
-      var j = 0
-      while (j < model.m) {
-        val cb = model.codebooks(j); val base = j * model.dsub
-        var c = 0
-        while (c < model.ksub) {
-          val ct = cb(c); var acc = 0.0d; var d = 0
-          while (d < model.dsub) { acc += x(base + d) * ct(d); d += 1 }
-          lut(j * model.ksub + c) = acc
-          c += 1
-        }
-        j += 1
-      }
-      (r, x, lut.toSeq)
+      (r, x, adcTable(model, x).toSeq)
     }
     // each table's file listing is captured under the snapshot gate
     // (marker + epoch validated on both sides, retry on a concurrent
@@ -1020,52 +996,22 @@ object Pq {
     // frame arrives as one.
     def at(np: Int): (DataFrame, DataFrame, Array[Int]) = {
       val probes = prepped.flatMap { case (r, x, lut) =>
-        val scored = Array.tabulate(cents.length) { c =>
-          var acc = 0.0d; var j = 0
-          while (j < x.length) { acc += x(j) * cents(c)(j); j += 1 }
-          (acc, c)
-        }
-        scored.sortBy(-_._1).take(np)
-          .map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), c._2, lut))
+        Similarity.probeCells(x, cents, np)
+          .map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), c, lut))
       }
       import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
       val q = qs.frame(probes, "cell" -> IntegerType, "lut" -> ArrayType(DoubleType))
         .select("query_id", "cell", "lut")
         .repartition(col("query_id"), col("cell"))
       // literal IN on the partition column -> static directory pruning
-      // on both index scans (same discipline as ivfTopKIndexed); the
-      // cell set is RETURNED so the vectors scan and the census reuse it
+      // on both index scans; the cell set is RETURNED so the vectors
+      // scan reuses it
       val probedCells = probes.map(_.getInt(2)).distinct
       (q, live(flt(PqFamily.readTable(spark, path, "codes")
         .filter(col("cell").isin(probedCells.toSeq: _*)))), probedCells)
     }
-    var np = math.min(math.max(nprobe, 1), cents.length)
-    var cur = at(np)
-    if (minCandidates > 0) {
-      val nq = qs.distinctIds
-      var done = false
-      while (!done) {
-        val (q, c, _) = cur
-        val per = q.select("query_id", "cell")
-          .join(c.groupBy("cell").agg(count(lit(1)).as("n")), Seq("cell"))
-          .groupBy("query_id").agg(sum(col("n")).as("n"))
-          .select("n").collect().map(_.getLong(0))
-        val minGot = if (per.length < nq || per.isEmpty) 0L else per.min
-        // + 1: the census can include a corpus-member query's own row,
-        // which the answers exclude; proportional jump with a doubling
-        // floor — the IVF twin's shape (see its widening note)
-        if (minGot >= minCandidates.toLong + 1 || np >= cents.length) done = true
-        else {
-          val want = (minCandidates.toLong + 1) * 2
-          val scaled = if (minGot <= 0) cents.length.toLong
-            else math.min(cents.length.toLong,
-              np.toLong * want / math.max(1L, minGot))
-          np = math.min(cents.length.toLong, math.max(np.toLong * 2, scaled)).toInt
-          cur = at(np)
-        }
-      }
-    }
-    val (q, codes, probedCells) = cur
+    val (q, codes, probedCells) = Similarity.widenProbe(nprobe, cents.length,
+      minCandidates, qs)(at)(a => (a._1, a._2))
     val vectors = live(flt(PqFamily.readTable(spark, path, "vectors")
       .filter(col("cell").isin(probedCells.toSeq: _*))))
     // Shortlist-saturation skip: when k·refine covers every candidate

@@ -312,6 +312,21 @@ object Similarity {
     best
   }
 
+  /** The cells a normalized query probes: the top `np` by dot with the
+    * centroids, ties to the lower cell (the sort is stable). Every probe
+    * picks its cells here, so a query whose dimension differs from the
+    * centroids' fails loudly in all of them. */
+  private[operators] def probeCells(x: Array[Double], cents: Array[Array[Double]],
+      np: Int): Array[Int] =
+    Array.tabulate(cents.length)(c => (dotStrict(x, cents(c)), c))
+      .sortBy(-_._1).take(np).map(_._2)
+
+  /** The corpus-side cell assignment: each vector's nearest centroid,
+    * after normalizing. nlist×dim doubles ride the task closure — a few
+    * KB, no broadcast needed. */
+  private[operators] def cellUdf(cents: Array[Array[Double]]) =
+    udf { (v: Seq[Double]) => nearestCell(normalize(v.toArray), cents) }
+
   /** IVF (inverted-file) approximate top-k — the second scale path next
     * to LSH: a coarse quantizer (spherical k-means, trained on a bounded
     * sample) partitions the corpus into `nlist` cells ONCE (write-side
@@ -326,15 +341,9 @@ object Similarity {
       k: Int, nlist: Int = 16, nprobe: Int = 4,
       iters: Int = 8, maxSample: Int = 4096): DataFrame = {
     val cents = trainIvfCentroids(corpus, cId, cVec, nlist, iters, maxSample)
-    // nlist×dim doubles ride the task closure — a few KB, no broadcast needed.
-    val assignUdf = udf { (v: Seq[Double]) => nearestCell(normalize(v.toArray), cents) }
-    val probeUdf = udf { (v: Seq[Double]) =>
-      val x = normalize(v.toArray)
-      val scored = Array.tabulate(cents.length)(c => (dotStrict(x, cents(c)), c))
-      scored.sortBy(-_._1).take(nprobe).map(_._2)
-    }
+    val probeUdf = udf { (v: Seq[Double]) => probeCells(normalize(v.toArray), cents, nprobe) }
     val c = corpus.select(col(cId).as("corpus_id"), col(cVec).as("cv"))
-      .withColumn("cell", assignUdf(col("cv")))
+      .withColumn("cell", cellUdf(cents)(col("cv")))
       .withColumn("cn", l2norm(col("cv")))
     val q = queries.select(col(qId).as("query_id"), col(qVec).as("qv"))
       .withColumn("cell", explode(probeUdf(col("qv"))))
@@ -387,7 +396,6 @@ object Similarity {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     IndexMaintenance.writeMetaColsFile(fs, path, metaCols)
-    val assignUdf = udf { (v: Seq[Double]) => nearestCell(normalize(v.toArray), cents) }
     // the layout carries a second partition column, ingest_batch (-1 =
     // build-time rows), purely so streaming appends can be batchId-keyed
     // and replay-idempotent ([[appendIvfIndexIdempotent]]); readers
@@ -397,7 +405,7 @@ object Similarity {
     // the pruned cells instead of a corpus-sized join at probe time
     corpus.select(col(cId).as("corpus_id") +:
         col(cVec).cast("array<double>").as("cv") +: metaCols.map(col): _*)
-      .withColumn("cell", assignUdf(col("cv")))
+      .withColumn("cell", cellUdf(cents)(col("cv")))
       .withColumn("cn", l2norm(col("cv")))
       .withColumn("ingest_batch", lit(-1L))
       // cell-aligned exchange before the partitionBy write (see
@@ -794,10 +802,9 @@ object Similarity {
   private def assigned(batch: DataFrame, cId: String, cVec: String,
       cents: Array[Array[Double]], metaCols: Seq[String] = Nil): DataFrame = {
     requireMetaCols(metaCols)
-    val assignUdf = udf { (v: Seq[Double]) => nearestCell(normalize(v.toArray), cents) }
     batch.select(col(cId).as("corpus_id") +:
         col(cVec).cast("array<double>").as("cv") +: metaCols.map(col): _*)
-      .withColumn("cell", assignUdf(col("cv")))
+      .withColumn("cell", cellUdf(cents)(col("cv")))
       .withColumn("cn", l2norm(col("cv")))
   }
 
@@ -927,31 +934,24 @@ object Similarity {
     * of the filter.
     *
     * `minCandidates` (r19) ENCODES the nprobe-widening remedy: when
-    * > 0, the probe checks how many filtered (and non-tombstoned)
-    * candidates each query's probed cells actually hold, and WIDENS
-    * nprobe (proportionally to the shortfall, doubling at minimum)
-    * until every query sees at least this many or every cell is
+    * > 0, nprobe widens until every query's probed cells hold at least
+    * this many filtered, non-tombstoned candidates, or every cell is
     * probed — the guard against a selective predicate silently thinning
     * shortlists at a fixed nprobe (a 1 %-selective filter at nprobe 8
     * returns confidently wrong top-k with no signal otherwise; the
     * SCALE.md Round 19d recall sweep quantifies the cliff).
-    * Each widening attempt costs one NARROW count over the pruned
-    * cells — paid only when minCandidates > 0, and bounded by the
-    * doubling (total pruned-scan work < 2× the final attempt's).
-    * `minCandidates = k` guarantees k-deep answers (the census allows
-    * for one self-match, so a corpus-member query cannot come up one
-    * short); raise it toward 10-30× k when recall@k matters more than
-    * latency. */
+    * [[widenProbe]] has the census, the jump and their cost.
+    * `minCandidates = k` guarantees k-deep answers; raise it toward
+    * 10-30× k when recall@k matters more than latency. */
   def ivfTopKIndexed(
       queries: DataFrame, qId: String, qVec: String,
       path: String, k: Int, nprobe: Int,
       cents: Array[Array[Double]], filter: Option[Column],
       minCandidates: Int): DataFrame = {
     val spark = queries.sparkSession
-    // tombstoned ids vanish from answers immediately; the ledger is
-    // driver-small by contract, so the anti-join broadcasts
-    val tombstones = IndexMaintenance.readDeletes(spark, path)
-      .map(d => broadcast(d.select(col("id").as("corpus_id"))))
+    // tombstoned ids vanish from answers immediately
+    val live = IndexMaintenance.dropTombstoned(spark,
+      IndexMaintenance.ledgerRows(spark, path), "corpus_id")
     // the query side is small by contract (it's the probe set, not the
     // corpus): collected ONCE — a local frame collects with no job — and
     // the probe cells are picked here on the driver, so no job runs to
@@ -961,9 +961,8 @@ object Similarity {
     // per widening attempt and once for the final scoring join
     def at(np: Int): (DataFrame, DataFrame) = {
       val probes = qs.rows.flatMap { r =>
-        val x = normalize(r.getSeq[Double](1).toArray)
-        val scored = Array.tabulate(cents.length)(c => (dotStrict(x, cents(c)), c))
-        scored.sortBy(-_._1).take(np).map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), c._2))
+        probeCells(normalize(r.getSeq[Double](1).toArray), cents, np)
+          .map(c => org.apache.spark.sql.Row(r.get(0), r.get(1), c))
       }
       val q = qs.frame(probes, "cell" -> org.apache.spark.sql.types.IntegerType)
         .withColumn("qn", l2norm(col("qv")))
@@ -979,52 +978,66 @@ object Similarity {
       // the metadata predicate rides the same scan the cell IN-filter
       // prunes — Catalyst pushes it into the parquet read, so filtered
       // search costs a narrower scan, not a join
-      val cf = filter.map(c0.filter).getOrElse(c0)
-      (q, tombstones.map(t => cf.join(t, Seq("corpus_id"), "left_anti")).getOrElse(cf))
+      (q, live(filter.map(c0.filter).getOrElse(c0)))
     }
-    var np = math.min(math.max(nprobe, 1), cents.length)
-    var cur = at(np)
-    if (minCandidates > 0) {
-      val nq = qs.distinctIds
-      var done = false
-      while (!done) {
-        val (q, c) = cur
-        // narrow census: per-cell candidate counts joined back onto the
-        // tiny (query_id, cell) frame — never the scoring join. The
-        // threshold allows for ONE self-match (the census cannot cheaply
-        // exclude a corpus-member query's own row, but the answers do —
-        // without the allowance, "minCandidates = k" could stop one
-        // short and return k-1 answers with no signal); the cost is at
-        // most one unnecessary doubling in exact-boundary corpora.
-        val per = q.select("query_id", "cell")
-          .join(c.groupBy("cell").agg(count(lit(1)).as("n")), Seq("cell"))
-          .groupBy("query_id").agg(sum(col("n")).as("n"))
-          .select("n").collect().map(_.getLong(0))
-        val minGot = if (per.length < nq) 0L else if (per.isEmpty) 0L else per.min
-        if (minGot >= minCandidates.toLong + 1 || np >= cents.length) done = true
-        else {
-          // PROPORTIONAL jump, not blind doubling (r19 review of the
-          // 19d ultra-selective arm, which paid 5 census ladders from
-          // nprobe 8): candidate density per probed cell is roughly
-          // uniform, so scale the probe set by the shortfall ratio
-          // with 2× headroom for uneven cells, floored at a doubling;
-          // zero candidates seen means the density is unknowable —
-          // go straight to the full probe and let one census decide
-          val want = (minCandidates.toLong + 1) * 2
-          val scaled = if (minGot <= 0) cents.length.toLong
-            else math.min(cents.length.toLong,
-              np.toLong * want / math.max(1L, minGot))
-          np = math.min(cents.length.toLong, math.max(np.toLong * 2, scaled)).toInt
-          cur = at(np)
-        }
-      }
-    }
-    // the final loop iteration's frames ARE the scoring inputs — no
-    // rebuilt probe plan (r19 review)
-    val (q, c) = cur
+    val (q, c) = widenProbe(nprobe, cents.length, minCandidates, qs)(at)(identity)
     rankTopK(q.join(c, Seq("cell"))
       .filter(col("query_id") =!= col("corpus_id"))
       .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn"))), k)
+  }
+
+  /** The nprobe-widening loop of the stored probes ([[ivfTopKIndexed]],
+    * [[Pq.pqTopKIndexed]]). `at(np)` builds one probe attempt; `frames`
+    * picks its (query_id, cell) probe frame and its candidate frame. From
+    * `nprobe` (clamped to [1, nlist]), while `minCandidates > 0`, each
+    * attempt runs one NARROW census — per-cell candidate counts over the
+    * pruned cells, joined back onto the tiny probe frame, never the
+    * scoring join — and widens ([[widenedNprobe]]) until every query sees
+    * `minCandidates + 1` candidates or every cell is probed. The `+ 1`
+    * allows for ONE self-match: the census cannot cheaply exclude a
+    * corpus-member query's own row, but the answers do, so without it
+    * `minCandidates = k` could stop one short and return k-1 answers with
+    * no signal; it costs at most one unnecessary widening in
+    * exact-boundary corpora. The widening is bounded by its doubling
+    * floor (total pruned-scan work < 2× the final attempt's). Returns the
+    * LAST attempt, whose frames are the scoring inputs — no probe plan is
+    * rebuilt (r19 review). */
+  private[operators] def widenProbe[A](nprobe: Int, nlist: Int, minCandidates: Int,
+      qs: LocalQueries)(at: Int => A)(frames: A => (DataFrame, DataFrame)): A = {
+    lazy val nq = qs.distinctIds
+    @annotation.tailrec
+    def settle(np: Int, cur: A): A = {
+      val (q, c) = frames(cur)
+      val per = q.select("query_id", "cell")
+        .join(c.groupBy("cell").agg(count(lit(1)).as("n")), Seq("cell"))
+        .groupBy("query_id").agg(sum(col("n")).as("n"))
+        .select("n").collect().map(_.getLong(0))
+      val minGot = if (per.length < nq || per.isEmpty) 0L else per.min
+      if (minGot >= minCandidates.toLong + 1 || np >= nlist) cur
+      else {
+        val next = widenedNprobe(np, nlist, minGot, minCandidates)
+        settle(next, at(next))
+      }
+    }
+    val np = math.min(math.max(nprobe, 1), nlist)
+    if (minCandidates > 0) settle(np, at(np)) else at(np)
+  }
+
+  /** One step of [[widenProbe]]'s ladder: the nprobe after an attempt at
+    * `np` whose poorest query saw `minGot` candidates. A PROPORTIONAL
+    * jump, not blind doubling (r19 review of the 19d ultra-selective arm,
+    * which paid 5 census ladders from nprobe 8): candidate density per
+    * probed cell is roughly uniform, so the probe set scales by the
+    * shortfall ratio with 2× headroom for uneven cells, floored at a
+    * doubling and capped at `nlist`; zero candidates seen means the
+    * density is unknowable — go straight to the full probe and let one
+    * census decide. */
+  private[operators] def widenedNprobe(np: Int, nlist: Int, minGot: Long,
+      minCandidates: Int): Int = {
+    val want = (minCandidates.toLong + 1) * 2
+    val scaled = if (minGot <= 0) nlist.toLong
+      else math.min(nlist.toLong, np.toLong * want / minGot)
+    math.min(nlist.toLong, math.max(np.toLong * 2, scaled)).toInt
   }
 
   /** A probe's query side on the driver: `(query_id, qv array<double>)`
@@ -1157,9 +1170,8 @@ object Similarity {
       centroids: Option[Array[Array[Double]]]): DataFrame = centroids match {
     case Some(cents) =>
       // trained quantizer (e.g. [[trainIvfCentroids]] output): assign
-      // in one narrow pass, the centroid table rides the task closure
-      val assignUdf = udf { (v: Seq[Double]) => nearestCell(normalize(v.toArray), cents) }
-      c.select(col("id"), assignUdf(col("v")).as("cluster"))
+      // in one narrow pass
+      c.select(col("id"), cellUdf(cents)(col("v")).as("cluster"))
     case None =>
       // seed centroids = the k lowest-id vectors; argmax cosine, ties
       // break to the lowest centroid id via min_by on (-cos, cid) —

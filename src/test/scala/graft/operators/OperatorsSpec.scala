@@ -332,6 +332,45 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(msgs.contains("dimension"), s"unexpected failure: $msgs")
   }
 
+  test("ivfPq topk: a query longer than the centroids fails naming the dimension") {
+    val s = spark
+    import s.implicits._
+    val corpus = (0 until 40).map { i =>
+      val v = Array.fill(8)(0.05 * ((i * 7 + 3) % 5))
+      v(i % 4) = 1.0
+      (i.toLong, v)
+    }.toDF("vec_id", "e")
+    val longer = Seq((0L, Array.fill(9)(1.0))).toDF("vec_id", "e")
+    val ex = intercept[Exception] {
+      Pq.ivfPqTopK(longer, "vec_id", "e", corpus, "vec_id", "e",
+        k = 3, nlist = 4, nprobe = 2, m = 2, ksub = 4).collect()
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("dimension"), s"unexpected failure: $msgs")
+  }
+
+  test("the nprobe-widening ladder stays within [min(nlist, 2·np), nlist] and jumps to nlist on no candidates") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val step = for {
+      nlist <- Gen.chooseNum(1, Int.MaxValue)
+      np <- Gen.chooseNum(1, nlist)
+      minGot <- Gen.frequency(1 -> Gen.const(0L), 4 -> Gen.chooseNum(0L, Long.MaxValue))
+      minCandidates <- Gen.chooseNum(1, Int.MaxValue)
+    } yield (nlist, np, minGot, minCandidates)
+    (0 until 500).foreach { i =>
+      val (nlist, np, minGot, minCandidates) =
+        step.apply(Gen.Parameters.default, Seed(20261020L + i)).get
+      val next = Similarity.widenedNprobe(np, nlist, minGot, minCandidates)
+      withClue(s"case $i: nlist $nlist, np $np, minGot $minGot, minCandidates $minCandidates: ") {
+        assert(next <= nlist)
+        assert(next >= math.min(nlist.toLong, 2L * np))
+        if (minGot == 0L) assert(next === nlist)
+      }
+    }
+  }
+
   test("as-of join: latest at-or-before match, ties match, no-match yields nulls") {
     val s = spark
     import s.implicits._

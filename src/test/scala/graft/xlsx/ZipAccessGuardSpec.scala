@@ -14,7 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    shared deflate pool.
   *  - No operator mutates session-global state: operator and streaming
   *    code never writes the session conf (an operator that needs other
-  *    planning settings plans on a session of its own). */
+  *    planning settings plans on a session of its own).
+  *  - One tombstone rule: probes apply the ledger through
+  *    `IndexMaintenance.dropTombstoned`, so no other operator reads it
+  *    with `readDeletes`. */
 class ZipAccessGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src", "main", "scala")
@@ -57,5 +60,12 @@ class ZipAccessGuardSpec extends AnyFunSuite {
     val found = Seq("graft/operators", "graft/streaming")
       .flatMap(d => hits(main.resolve(d), """\.conf\.(set|unset)\("""))
     assert(found === Nil)
+  }
+
+  test("only IndexMaintenance reads the tombstone ledger as a frame in the operators") {
+    val own = main.resolve("graft/operators/IndexMaintenance.scala").toString + ":"
+    val found = hits(main.resolve("graft/operators"), """\breadDeletes\(""")
+    assert(found.exists(_.startsWith(own)), "readDeletes moved out of IndexMaintenance.scala")
+    assert(found.filterNot(_.startsWith(own)) === Nil)
   }
 }
