@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.xlsx.{A1, CellValue, ExcelDate, PasswordHash, Xml}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
 /** The reference's cell-level conversion library (SURVEY §2.4 F1-F11) as
   * registered Spark SQL functions. All are pure, null-tolerant scalar
@@ -35,22 +36,25 @@ object GraftFunctions {
           if (serial == null) null
           else ExcelDate.toDate(serial).map(java.sql.Date.valueOf).orNull)
 
-      // F1 variant: serial -> TIMESTAMP.
+      // F1 variant: serial -> TIMESTAMP. The serial is read as a UTC wall
+      // clock, the xlsx sink's rule (ExcelDate.toEpochMicros), whatever the
+      // JVM or session zone.
       udf.register("graft_excel_serial_to_ts",
         (serial: java.lang.Double) =>
           if (serial == null) null
-          else ExcelDate.toDateTime(serial).map(java.sql.Timestamp.valueOf).orNull)
+          else ExcelDate.toEpochMicros(serial).map(DateTimeUtils.microsToInstant).orNull)
 
       // F2: DATE -> integral serial (ref: zero_temp_workbook.rs:203-207).
       udf.register("graft_excel_date_encode",
         (d: java.sql.Date) =>
           if (d == null) null else java.lang.Long.valueOf(ExcelDate.fromDate(d.toLocalDate)))
 
-      // F2 variant: TIMESTAMP -> fractional serial.
+      // F2 variant: TIMESTAMP -> fractional serial of its UTC wall clock,
+      // the serial the xlsx sink writes (ExcelDate.fromEpochMicros).
       udf.register("graft_excel_ts_encode",
-        (t: java.sql.Timestamp) =>
+        (t: java.time.Instant) =>
           if (t == null) null
-          else java.lang.Double.valueOf(ExcelDate.fromDateTime(t.toLocalDateTime)))
+          else java.lang.Double.valueOf(ExcelDate.fromEpochMicros(DateTimeUtils.instantToMicros(t))))
 
       // F3: Gregorian leap-year rule (ref: src/streaming_reader.rs:129-131).
       udf.register("graft_is_leap_year",

@@ -138,17 +138,10 @@ object XlsxTable {
     * The writer silently rolls rows past `maxRowsPerSheet` into
     * continuation sheets; a default read that stopped at the first sheet
     * would silently drop everything past sheet 1 (caught by the sf1 scale
-    * audit, round 7). Continuation detection, in preference order:
-    *
-    *  1. The explicit write-time stamp (docProps/custom.xml property
-    *     `graftRollover`, round 8): the default read is sheet 0 plus the
-    *     unbroken run of sheets stamped as continuations. Exact — a user
-    *     sheet literally named "X_2" cannot spoof a chain, and a
-    *     uniquifier-skipped "_3" continuation is still followed.
-    *  2. Legacy fallback for pre-stamp graft files only (stamped
-    *     `<Application>graft</Application>` but no custom part): probe
-    *     names with the writer's naming rule — `cleaned.take(31 -
-    *     "_k".length)` + `"_k"` for k = 2, 3, … in an unbroken run.
+    * audit, round 7). The chain is [[XlsxReader.firstSheetChain]]: the
+    * write-time stamp (docProps/custom.xml `graftRollover`) when present —
+    * exact, a user sheet literally named "X_2" cannot spoof it — else the
+    * writer's `_k` naming rule for pre-stamp graft files.
     *
     * Foreign workbooks always read exactly their first sheet, whatever
     * their second sheet is named. sheetColumn datasets should be read
@@ -169,23 +162,7 @@ object XlsxTable {
           throw new IllegalArgumentException(s"sheet '$s' not found; sheets: ${names.mkString(", ")}")
         Seq(s)
       case None if sheetIndex.isDefined => Seq(names(sheetIndex.get))
-      case None =>
-        val base = names.head
-        if (!reader.application.contains("graft")) Seq(base)
-        else reader.rolloverContinuations match {
-          case Some(stamped) =>
-            // sheet 0's chain = the unbroken run of stamped continuations
-            // immediately after it (a non-stamped sheet ends the chain)
-            val run = Iterator.from(1).takeWhile(i => i < names.size && stamped(i))
-              .map(names).toSeq
-            base +: run
-          case None =>
-            val present = names.toSet
-            val continuations = Iterator.from(2)
-              .map { k => val suffix = s"_$k"; base.take(31 - suffix.length) + suffix }
-              .takeWhile(present.contains).toSeq
-            base +: continuations
-        }
+      case None => reader.firstSheetChain
     }
   }
 
@@ -258,6 +235,8 @@ final class XlsxTable(tableSchema: StructType, opts: XlsxOptions, tablePaths: Se
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    // a field no cell maps to fails here, at planning, not in a task
+    tableSchema.fields.foreach(XlsxPartitionReader.converter)
     val conf = XlsxTable.hadoopConf()
     new XlsxScanBuilder(tableSchema, XlsxOptions(options), tablePaths, new SerializableConfiguration(conf))
   }

@@ -2,9 +2,13 @@ package graft.sources.xlsx
 
 import java.io.ByteArrayOutputStream
 
-import graft.xlsx.{CellStyle, CellValue, ExcelDate, XlsxWriter}
+import scala.jdk.CollectionConverters._
+
+import graft.sources.csv.CsvSingleFile
+import graft.xlsx.XlsxWriter
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.functions.{col, struct, to_csv}
 
 /** Whole-workbook-as-bytes builder — the reference's HTTP writer pattern
   * (ref: src/cloud/http_writer.rs:44-241 xlsx, src/http_csv_writer.rs:177-342
@@ -15,6 +19,9 @@ import org.apache.spark.sql.types._
   * time, so driver memory is bounded by one partition + the (compressed)
   * output buffer — the use case is "serve a query result as a download",
   * not bulk export (use `df.write.format("xlsx")` for that).
+  *
+  * Neither builder has an encoding of its own: cells come from the xlsx
+  * sink's [[XlsxDataWriter.getter]], CSV lines from Spark's CSV generator.
   */
 object XlsxInMemory {
 
@@ -28,74 +35,29 @@ object XlsxInMemory {
     w.addSheet(sheet)
     val fields = df.schema.fields
     if (header) w.writeHeaderBold(fields.map(_.name))
+    val zone = df.sparkSession.sessionState.conf.sessionLocalTimeZone
+    val getters = fields.indices.map(i => XlsxDataWriter.getter(fields(i).dataType, i, zone))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
     val it = df.toLocalIterator()
     while (it.hasNext) {
-      val row = it.next()
-      w.writeRowStyled(fields.iterator.zipWithIndex.map { case (f, i) =>
-        cellOf(row, i, f.dataType)
-      })
+      val row = toInternal(it.next()).asInstanceOf[InternalRow]
+      w.writeRowStyled(getters.iterator.map(_(row)))
     }
     w.close()
     bos.toByteArray
   }
 
-  /** CSV counterpart (ref: src/http_csv_writer.rs): RFC-4180 quoting. */
+  /** CSV counterpart (ref: src/http_csv_writer.rs): the lines
+    * `df.write.csv` would write, with the reference encoder's RFC-4180
+    * quoting — a quote inside a field is doubled, and an empty string is
+    * an empty field, like a null (ref: src/csv/encoder.rs:57-122). */
   def csvBytes(df: DataFrame, sep: Char = ',', header: Boolean = true): Array[Byte] = {
-    val sb = new java.lang.StringBuilder(64 * 1024)
-    def field(s: String): Unit = {
-      val needsQuote = s.exists(c => c == sep || c == '"' || c == '\n' || c == '\r')
-      if (needsQuote) { sb.append('"').append(s.replace("\"", "\"\"")).append('"') }
-      else sb.append(s)
-    }
-    val fields = df.schema.fields
-    if (header) {
-      fields.zipWithIndex.foreach { case (f, i) =>
-        if (i > 0) sb.append(sep); field(f.name)
-      }
-      sb.append('\n')
-    }
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
-      var i = 0
-      while (i < fields.length) {
-        if (i > 0) sb.append(sep)
-        if (!row.isNullAt(i)) field(String.valueOf(row.get(i)))
-        i += 1
-      }
-      sb.append('\n')
-    }
-    sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** External Row → (CellValue, style), mirroring the executor-side
-    * encoding in [[XlsxDataWriter.getter]]. */
-  private def cellOf(row: org.apache.spark.sql.Row, i: Int, dt: DataType): (CellValue, Int) = {
-    if (row.isNullAt(i)) return (CellValue.Empty, 0)
-    dt match {
-      case StringType  => (CellValue.Str(row.getString(i)), 0)
-      case LongType    => (CellValue.IntVal(row.getLong(i)), 0)
-      case IntegerType => (CellValue.IntVal(row.getInt(i).toLong), 0)
-      case ShortType   => (CellValue.IntVal(row.getShort(i).toLong), 0)
-      case ByteType    => (CellValue.IntVal(row.getByte(i).toLong), 0)
-      case DoubleType  => (CellValue.FloatVal(row.getDouble(i)), 0)
-      case FloatType   => (CellValue.FloatVal(row.getFloat(i).toDouble), 0)
-      case BooleanType => (CellValue.BoolVal(row.getBoolean(i)), 0)
-      case _: DecimalType => (CellValue.FloatVal(row.getDecimal(i).doubleValue()), 0)
-      case DateType =>
-        (CellValue.DateTime(ExcelDate.fromDate(row.getDate(i).toLocalDate).toDouble),
-          CellStyle.DateDefault)
-      case TimestampType =>
-        // render the UTC wall-clock, matching the DSv2 writer
-        // (XlsxWrite uses microsToLocalDateTime = UTC) — Timestamp
-        // .toLocalDateTime would use the JVM default zone, making the
-        // two write paths emit different serials for the same instant
-        (CellValue.DateTime(ExcelDate.fromDateTime(
-          row.getTimestamp(i).toInstant.atOffset(java.time.ZoneOffset.UTC).toLocalDateTime)),
-          CellStyle.DateTimestamp)
-      case BinaryType =>
-        (CellValue.Str(java.util.Base64.getEncoder.encodeToString(row.getAs[Array[Byte]](i))), 0)
-      case _ => (CellValue.Str(String.valueOf(row.get(i))), 0)
-    }
+    val options =
+      Map("sep" -> sep.toString, "escape" -> "\"", "emptyValue" -> "", "lineSep" -> "\n")
+    val out = new ByteArrayOutputStream(64 * 1024)
+    if (header) out.write(CsvSingleFile.headerLine(df.sparkSession, df.columns.toSeq, options))
+    val it = df.select(to_csv(struct(col("*")), options.asJava)).toLocalIterator()
+    while (it.hasNext) out.write((it.next().getString(0) + "\n").getBytes("UTF-8"))
+    out.toByteArray
   }
 }

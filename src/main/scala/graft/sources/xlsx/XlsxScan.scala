@@ -274,7 +274,7 @@ final class XlsxPartitionReader(
   private var current: InternalRow = _
   private val width = srcIdx.length
   private val converters: Array[CellValue => Any] =
-    required.fields.map(f => XlsxPartitionReader.converter(f.dataType))
+    required.fields.map(XlsxPartitionReader.converter)
   // pushed-filter predicate trees over converted values; rows failing one
   // are skipped BEFORE the remaining columns convert and the row allocates
   private val compiled: Array[XlsxFilters.Pred] =
@@ -378,9 +378,14 @@ object XlsxPartitionReader {
 
   private[xlsx] val log = org.slf4j.LoggerFactory.getLogger(classOf[XlsxPartitionReader])
 
-  /** CellValue → Catalyst *internal* value for one Spark type; lenient
-    * coercion per the reference (ref: src/types.rs:101-152), mismatch → null. */
-  def converter(dt: DataType): CellValue => Any = dt match {
+  /** CellValue → Catalyst *internal* value for one read-schema field;
+    * lenient coercion per the reference (ref: src/types.rs:101-152),
+    * mismatch → null. The only cell → Spark mapping: the batch scan's
+    * reader and `graft.streaming.StreamingXlsx.readWorkbooks` both convert
+    * through it. A field of a type no cell maps to (array, map, struct, …)
+    * throws, naming the field; callers build their converters on the
+    * driver, so such a read fails before any task runs. */
+  def converter(field: StructField): CellValue => Any = field.dataType match {
     case StringType => {
       case CellValue.Empty       => null
       case CellValue.DateTime(s) => UTF8String.fromString(ExcelDate.format(s).getOrElse(CellValue.formatDouble(s)))
@@ -399,15 +404,10 @@ object XlsxPartitionReader {
         d.precision, d.scale)).orNull
     case DateType    => c => serialOf(c).flatMap(ExcelDate.toDate).map(d => DateTimeUtils.localDateToDays(d)).orNull
     // NTZ and instant timestamps share the serial representation: xlsx
-    // stores wall-clock; the session-zone interpretation happens upstream
+    // stores the UTC wall clock (ExcelDate's one timestamp rule)
     case TimestampType | TimestampNTZType => c =>
-      serialOf(c).flatMap(ExcelDate.toDateTime)
-        .map(ldt => DateTimeUtils.localDateTimeToMicros(ldt)).orNull
-    // every supported write-side type must have an internal-format read
-    // converter: the stringly fallback is ONLY valid for string-ish
-    // schemas — returning UTF8String into e.g. a BinaryType slot would
-    // CCE in generated code, so map what we can and null the rest
-    // the write path (XlsxWrite/XlsxInMemory) Base64-encodes binary cells,
+      serialOf(c).flatMap(ExcelDate.toEpochMicros).orNull
+    // the write path (XlsxDataWriter.getter) Base64-encodes binary cells,
     // so decode here for a lossless roundtrip; foreign files with arbitrary
     // non-base64 text fall back to the raw UTF-8 bytes of the cell text.
     // Inherent ambiguity, accepted: foreign text that happens to BE valid
@@ -423,7 +423,10 @@ object XlsxPartitionReader {
           s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         }
       }
-    case _ => c => if (c == CellValue.Empty) null else UTF8String.fromString(c.asString)
+    case NullType => _ => null
+    case other => throw new IllegalArgumentException(
+      s"xlsx cannot read field `${field.name}` as ${other.sql}: no cell maps to that type; " +
+        "read it as STRING")
   }
 
   private def serialOf(c: CellValue): Option[Double] = c match {

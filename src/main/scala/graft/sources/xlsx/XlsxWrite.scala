@@ -5,10 +5,12 @@ import java.util.UUID
 import graft.xlsx.{CellStyle, CellValue, ExcelDate, RawZipWriter, XlsxWriter, ZipRandom}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -100,7 +102,8 @@ final class XlsxBatchWrite(
       }
       fs.mkdirs(dir)
     }
-    XlsxWriterFactory(schema, opts, path, conf)
+    // the session zone renders timestamps nested in complex-typed cells
+    XlsxWriterFactory(schema, opts, path, conf, SQLConf.get.sessionLocalTimeZone)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
@@ -239,10 +242,11 @@ final case class XlsxWriterFactory(
     schema: StructType,
     opts: XlsxOptions,
     path: String,
-    conf: SerializableConfiguration
+    conf: SerializableConfiguration,
+    zoneId: String
 ) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new XlsxDataWriter(schema, opts, path, conf, partitionId, taskId)
+    new XlsxDataWriter(schema, opts, path, conf, partitionId, taskId, zoneId)
 }
 
 final class XlsxDataWriter(
@@ -251,7 +255,8 @@ final class XlsxDataWriter(
     path: String,
     conf: SerializableConfiguration,
     partitionId: Int,
-    taskId: Long
+    taskId: Long,
+    zoneId: String
 ) extends DataWriter[InternalRow] {
 
   // singleFile: this task's workbook is a FRAGMENT (dot-prefixed so
@@ -286,7 +291,7 @@ final class XlsxDataWriter(
   private var catalog = Vector.empty[(String, Boolean)]
   private val getters: Array[InternalRow => (CellValue, Int)] =
     fields.zipWithIndex.map { case (f, i) =>
-      val base0 = XlsxDataWriter.getter(f.dataType, i)
+      val base0 = XlsxDataWriter.getter(f.dataType, i, zoneId)
       // formulaPrefix: string cells starting with the prefix are written
       // as formula cells (prefix stripped — OOXML stores formulas without
       // the leading "="), covering the reference's CellValue::Formula
@@ -366,11 +371,16 @@ final class XlsxDataWriter(
 
 object XlsxDataWriter {
 
-  /** Spark internal value at ordinal i → (CellValue, styleId). Dates and
+  /** Spark internal value at ordinal i → (CellValue, styleId): the only
+    * Spark → cell mapping. The DSv2 sink's tasks (plain and `singleFile`)
+    * and `XlsxInMemory.workbookBytes` all write through it. Dates and
     * timestamps are written as Excel serials with the matching date style
     * so the read side's style heuristic recovers the type (write encoding
-    * per ref: src/fast_writer/zero_temp_workbook.rs:171-213). */
-  def getter(dt: DataType, i: Int): InternalRow => (CellValue, Int) = dt match {
+    * per ref: src/fast_writer/zero_temp_workbook.rs:171-213); a timestamp's
+    * serial is its UTC wall clock ([[ExcelDate.fromEpochMicros]]). Complex
+    * types (array, map, struct, …) become the string `CAST(col AS STRING)`
+    * gives, nested timestamps rendered in `zoneId`, the session zone. */
+  def getter(dt: DataType, i: Int, zoneId: String): InternalRow => (CellValue, Int) = dt match {
     case StringType => r =>
       if (r.isNullAt(i)) EmptyCell else (CellValue.Str(r.getUTF8String(i).toString), 0)
     case LongType    => r => if (r.isNullAt(i)) EmptyCell else (CellValue.IntVal(r.getLong(i)), 0)
@@ -391,16 +401,14 @@ object XlsxDataWriter {
       }
     case TimestampType | TimestampNTZType => r =>
       if (r.isNullAt(i)) EmptyCell
-      else {
-        val ldt = DateTimeUtils.microsToLocalDateTime(r.getLong(i))
-        (CellValue.DateTime(ExcelDate.fromDateTime(ldt)), CellStyle.DateTimestamp)
-      }
+      else (CellValue.DateTime(ExcelDate.fromEpochMicros(r.getLong(i))), CellStyle.DateTimestamp)
     case BinaryType => r =>
       if (r.isNullAt(i)) EmptyCell
       else (CellValue.Str(java.util.Base64.getEncoder.encodeToString(r.getBinary(i))), 0)
     case NullType => _ => EmptyCell
-    case other => r => // complex types: render through Catalyst's string form
-      if (r.isNullAt(i)) EmptyCell else (CellValue.Str(r.get(i, other).toString), 0)
+    case other =>
+      val asString = Cast(BoundReference(i, other, nullable = true), StringType, Some(zoneId))
+      r => if (r.isNullAt(i)) EmptyCell else (CellValue.Str(asString.eval(r).toString), 0)
   }
 
   private val EmptyCell: (CellValue, Int) = (CellValue.Empty, 0)

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import graft.xlsx.{CellValue, ExcelDate}
-import graft.sources.xlsx.XlsxTable
+import graft.sources.xlsx.{XlsxPartitionReader, XlsxTable}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,8 +29,11 @@ import org.apache.spark.sql.types._
   * Parsing is partition-parallel across files; nothing shuffles until the
   * downstream aggregation.
   *
-  * Supported schema field types: string, long, int, double, boolean,
-  * date, timestamp — the cell-model types the write side emits. */
+  * Supported schema field types: every type the batch scan reads. Cells
+  * convert through the scan's own converter
+  * ([[graft.sources.xlsx.XlsxPartitionReader.converter]]), so a workbook
+  * streams in as the same values a batch read gives, in any JVM zone; a
+  * field no cell maps to fails here, before the stream starts. */
 object StreamingXlsx {
 
   def readWorkbooks(
@@ -38,10 +42,12 @@ object StreamingXlsx {
       schema: StructType,
       header: Boolean = true,
       sheet: Option[String] = None): DataFrame = {
-    val convs: Array[CellValue => Any] = schema.fields.map(f => external(f.dataType))
+    val convs = schema.fields.map(XlsxPartitionReader.converter)
     val width = schema.fields.length
     val sheetOpt = sheet // avoid capturing `this`-adjacent state in the closure
     val parse = (content: Array[Byte]) => {
+      // internal values → the external Row the row encoder expects
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
       val reader = graft.xlsx.XlsxReader.forBytes(content)
       val sheets = XlsxTable.selectSheets(reader, sheetOpt, sheetIndex = None, allSheets = false)
       sheets.iterator.flatMap { s =>
@@ -54,7 +60,7 @@ object StreamingXlsx {
             values(i) = if (i < cells.size) convs(i)(cells(i)) else null
             i += 1
           }
-          Row.fromSeq(values.toIndexedSeq)
+          toRow(new GenericInternalRow(values)).asInstanceOf[Row]
         }
       }.toSeq
     }
@@ -71,35 +77,6 @@ object StreamingXlsx {
       .select(col("content"))
     import spark.implicits._
     bin.as[Array[Byte]].flatMap(parse)(Encoders.row(schema))
-  }
-
-  /** CellValue → external JVM value for one Spark type — the Row-facing
-    * twin of the batch scan's internal converter
-    * (XlsxPartitionReader.converter), same lenient coercions. */
-  private def external(dt: DataType): CellValue => Any = dt match {
-    case StringType => {
-      case CellValue.Empty       => null
-      case CellValue.DateTime(s) => ExcelDate.format(s).getOrElse(CellValue.formatDouble(s))
-      case c                     => c.asString
-    }
-    case LongType    => c => c.asLong.map(java.lang.Long.valueOf(_)).orNull
-    case IntegerType => c => c.asLong.map(l => java.lang.Integer.valueOf(l.toInt)).orNull
-    case DoubleType  => c => c.asDouble.map(java.lang.Double.valueOf(_)).orNull
-    case BooleanType => c => c.asBool.map(java.lang.Boolean.valueOf(_)).orNull
-    case DateType => c =>
-      serialOf(c).flatMap(ExcelDate.toDate).map(java.sql.Date.valueOf).orNull
-    case TimestampType | TimestampNTZType => c =>
-      serialOf(c).flatMap(ExcelDate.toDateTime).map(java.sql.Timestamp.valueOf).orNull
-    case other => throw new IllegalArgumentException(
-      s"streaming xlsx supports string/long/int/double/boolean/date/timestamp fields, got $other")
-  }
-
-  private def serialOf(c: CellValue): Option[Double] = c match {
-    case CellValue.DateTime(s) => Some(s)
-    case CellValue.IntVal(i)   => Some(i.toDouble)
-    case CellValue.FloatVal(f) => Some(f)
-    case CellValue.Str(s)      => s.toDoubleOption
-    case _                     => None
   }
 
   /** The demo pipeline from SURVEY §2.6: workbooks dropped in `dir` carry

@@ -1,6 +1,6 @@
 package graft.xlsx
 
-import java.time.{LocalDate, LocalDateTime}
+import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.time.temporal.ChronoUnit
 
 /** Excel date-serial codec, preserving the deliberate 1900 leap-year bug:
@@ -66,6 +66,20 @@ object ExcelDate {
   /** LocalDateTime -> fractional serial. */
   def fromDateTime(dt: LocalDateTime): Double =
     fromDate(dt.toLocalDate).toDouble + dt.toLocalTime.toSecondOfDay / 86400.0
+
+  /** The one timestamp rule: a timestamp (microseconds since the epoch, as
+    * Spark holds `TIMESTAMP` and `TIMESTAMP_NTZ` alike) is stored as the
+    * serial of its UTC wall clock, so neither the JVM's nor the session's
+    * zone moves it. Sub-second precision is dropped, as in [[fromDateTime]]. */
+  def fromEpochMicros(micros: Long): Double =
+    fromDateTime(LocalDateTime.ofEpochSecond(Math.floorDiv(micros, 1000000L),
+      (Math.floorMod(micros, 1000000L) * 1000L).toInt, ZoneOffset.UTC))
+
+  /** Serial -> microseconds since the epoch, reading the serial as a UTC
+    * wall clock: the inverse of [[fromEpochMicros]] at [[toDateTime]]'s
+    * whole-second resolution. None outside the valid range. */
+  def toEpochMicros(serial: Double): Option[Long] =
+    toDateTime(serial).map(_.toEpochSecond(ZoneOffset.UTC) * 1000000L)
 
   /** Serial plausibly a date when the cell carries a style: integral value
     * in [1, 2958465] (ref: src/streaming_reader.rs:693-699). */

@@ -50,20 +50,12 @@ object XlsxAppend {
 
     // Carry the rollover-continuation stamp through the rewrite (the new
     // package always gets a stamp, so losing it here would silently break
-    // the default read's chain reassembly). Pre-stamp graft files get
-    // their sheet-0 chain reconstructed from the writer's naming rule —
-    // the last place that rule is consulted; from then on the file is
-    // stamped explicitly.
+    // the default read's chain reassembly). An unstamped graft file gets
+    // sheet 0's chain from the reader's one chain rule, and from then on
+    // the file is stamped explicitly.
     val stamped: Set[Int] = reader.rolloverContinuations.getOrElse {
-      if (!reader.application.contains("graft")) Set.empty
-      else {
-        val base = sheetNames.head
-        val present = sheetNames.toSet
-        val chainNames = Iterator.from(2)
-          .map { k => val suffix = s"_$k"; base.take(31 - suffix.length) + suffix }
-          .takeWhile(present.contains).toSet
-        sheetNames.indices.filter(i => chainNames.contains(sheetNames(i))).toSet
-      }
+      val chain = reader.firstSheetChain.tail.toSet
+      sheetNames.indices.filter(i => chain.contains(sheetNames(i))).toSet
     }
 
     val tmp = File.createTempFile("xlsx_append", ".xlsx", src.getParentFile)

@@ -130,6 +130,32 @@ final class XlsxReader(input: ZipRandom.SeekableInput, sstCacheId: Option[String
         .map(_.toInt).toSet
     }
 
+  /** Sheet 0 and the rollover continuations chained to it, in read order:
+    * the one rule for that chain, shared by the default read
+    * (`XlsxTable.selectSheets`) and [[XlsxAppend]].
+    *  1. A stamped graft workbook: the unbroken run of sheets after sheet 0
+    *     that [[rolloverContinuations]] marks.
+    *  2. An unstamped graft workbook (written before the stamp existed):
+    *     the names the writer's naming rule gives sheet 0's continuations,
+    *     `base.take(31 - "_k".length) + "_k"` for k = 2, 3, …, in an
+    *     unbroken run.
+    *  3. Any other workbook: sheet 0 alone, whatever its other sheets are
+    *     named. Empty for a workbook without sheets. */
+  def firstSheetChain: Seq[String] = {
+    val names = sheetNames
+    if (names.isEmpty || !application.contains("graft")) names.take(1)
+    else rolloverContinuations match {
+      case Some(stamped) =>
+        names.head +: Iterator.from(1).takeWhile(i => i < names.size && stamped(i))
+          .map(names).toSeq
+      case None =>
+        val present = names.toSet
+        names.head +: Iterator.from(2)
+          .map { k => val suffix = s"_$k"; names.head.take(31 - suffix.length) + suffix }
+          .takeWhile(present.contains).toSeq
+    }
+  }
+
   /** Mac-legacy 1904 date system (`<workbookPr date1904="1"/>`). Serials
     * in such workbooks count from 1904-01-01; we normalize them to the
     * 1900 system at parse time (+1462 days) so every downstream consumer

@@ -15,7 +15,7 @@ import graft.sources.csv.{CsvSingleFile, ZipCsvCodec, ZstdCodec}
   * multi-stream bzip2 / plain text — all valid by the container format).
   * Read-back goes through Spark's normal CSV reader on the ONE file, plus
   * an independent JDK GZIPInputStream decode for the gzip container. */
-class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -31,7 +31,7 @@ class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def tmp(): String = Files.createTempDirectory("csf").toString
+  private def tmp(): String = tempDir("csf")
 
   private def sample(n: Int): DataFrame = {
     val sp = spark; import sp.implicits._
@@ -186,7 +186,7 @@ class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fs.delete tmp all go through the Hadoop FileSystem API
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockfs.impl", classOf[MockFs].getName)
-    val dir = Files.createTempDirectory("mockcsv").toString
+    val dir = tempDir("mockcsv")
     val p = s"mockfs:$dir/out.csv.gz"
     CsvSingleFile.write(sample(300).repartition(4), p,
       Map("header" -> "true", "compression" -> "gzip"))
@@ -212,5 +212,30 @@ class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll {
       .flatMap(f => scala.jdk.CollectionConverters.ListHasAsScala(
         Files.readAllLines(Paths.get(f))).asScala).toSeq
     assert(single == partsOrdered)
+  }
+
+  test("the header is encoded on the driver: a header adds no Spark job") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(options: Map[String, String]): Int = {
+      org.apache.spark.TestListenerBus.drain(sc)
+      val j0 = jobs.get
+      CsvSingleFile.write(sample(100).repartition(2), tmp() + "/out.csv", options)
+      org.apache.spark.TestListenerBus.drain(sc)
+      jobs.get - j0
+    }
+    sc.addSparkListener(listener)
+    try {
+      for (comp <- Seq("none", "gzip")) {
+        val without = jobsOf(Map("header" -> "false", "compression" -> comp))
+        assert(without > 0)
+        assert(jobsOf(Map("header" -> "true", "compression" -> comp)) === without, comp)
+      }
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -25,8 +25,31 @@ object MockFs {
   val opens = new java.util.concurrent.atomic.AtomicInteger
 }
 
+/** Temp directories made through `tempDir` are deleted when their test
+  * ends, in a `finally` after its assertions, whether it passed or not. */
+trait TempDirs extends org.scalatest.TestSuite {
+  private val made = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
+
+  protected def tempDir(prefix: String): String = made.synchronized {
+    val d = Files.createTempDirectory(prefix)
+    made += d
+    d.toString
+  }
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally made.synchronized {
+      made.foreach { d =>
+        val all = Files.walk(d)
+        try all.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p))
+        finally all.close()
+      }
+      made.clear()
+    }
+}
+
 /** Column widths (<cols>) and in-memory workbook/CSV builders. */
-class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
+class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -43,7 +66,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("columnWidths option emits a real <cols> element") {
-    val dir = Files.createTempDirectory("xw").toString + "/w"
+    val dir = tempDir("xw") + "/w"
     spark.range(5).selectExpr("id", "concat('v', id) AS s").coalesce(1)
       .write.mode("overwrite").format("xlsx")
       .option("header", "true").option("columnWidths", "22.5, 8").save(dir)
@@ -61,7 +84,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rowHeight option emits sheetFormatPr; setNextRowHeight emits per-row ht") {
-    val dir = Files.createTempDirectory("xh").toString + "/h"
+    val dir = tempDir("xh") + "/h"
     spark.range(3).coalesce(1)
       .write.mode("overwrite").format("xlsx")
       .option("header", "true").option("rowHeight", "25.5").save(dir)
@@ -93,7 +116,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("columnStyles option applies reference style presets per column") {
-    val dir = Files.createTempDirectory("xs").toString + "/s"
+    val dir = tempDir("xs") + "/s"
     spark.range(3).selectExpr("id", "id * 0.5 AS pct").coalesce(1)
       .write.mode("overwrite").format("xlsx")
       .option("header", "true")
@@ -116,7 +139,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sheetNameColumn carries per-row sheet provenance through allSheets") {
-    val dir = Files.createTempDirectory("xsn").toString + "/sn"
+    val dir = tempDir("xsn") + "/sn"
     spark.range(100).selectExpr("id", "CASE WHEN id < 40 THEN 'us' ELSE 'eu' END AS region")
       .coalesce(1).write.mode("overwrite").format("xlsx")
       .option("header", "true").option("sheetColumn", "region").save(dir)
@@ -140,7 +163,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("formulaPrefix writes '='-strings as real formula cells") {
-    val dir = Files.createTempDirectory("xf").toString + "/f"
+    val dir = tempDir("xf") + "/f"
     spark.range(1, 4).selectExpr("id", "concat('=A', id, '*2') AS calc", "'=notouch' AS plainCol")
       .selectExpr("id", "calc", "substring(plainCol, 2) AS plain")
       .coalesce(1).write.mode("overwrite").format("xlsx")
@@ -167,7 +190,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("full sheet-protection flag surface via DSv2 protect.* options") {
-    val dir = Files.createTempDirectory("xp").toString + "/p"
+    val dir = tempDir("xp") + "/p"
     spark.range(4).coalesce(1).write.mode("overwrite").format("xlsx")
       .option("header", "true")
       .option("protect.password", "pw123")
@@ -201,7 +224,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sheetColumn routes rows to one named sheet per distinct value") {
     import graft.xlsx.CellValue._
-    val dir = Files.createTempDirectory("sc").toString + "/s"
+    val dir = tempDir("sc") + "/s"
     val df = spark.createDataFrame(Seq(
       (1L, "east", 10.0), (2L, "west", 20.0), (3L, "east", 30.0),
       (4L, "north", 40.0), (5L, "west", 50.0), (6L, "east", 60.0)
@@ -239,7 +262,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sheet names are sanitized, truncated and uniquified; rollover is base_2") {
     import graft.xlsx.CellValue._
-    val dir = Files.createTempDirectory("sn").toString + "/n"
+    val dir = tempDir("sn") + "/n"
     val longName = "x" * 40
     val df = spark.createDataFrame(Seq(
       (1L, "a/b:c*d?"), (2L, "a_b_c_d_"), (3L, longName)
@@ -265,7 +288,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("XlsxAppend: rewrite-based file append preserves sheets, types and date styles") {
     import graft.xlsx._
     import CellValue._
-    val f = Files.createTempDirectory("xa").toString + "/wb.xlsx"
+    val f = tempDir("xa") + "/wb.xlsx"
     val w = new XlsxWriter(new java.io.FileOutputStream(f))
     w.addSheet("data")
     w.writeRowStyled(Seq((Str("start"), 0), (DateTime(44562.0), CellStyle.DateDefault)))
@@ -292,7 +315,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("XlsxAppend: the rollover-continuation stamp survives the rewrite") {
     import graft.xlsx._
     import CellValue._
-    val f = Files.createTempDirectory("xa2").toString + "/wb.xlsx"
+    val f = tempDir("xa2") + "/wb.xlsx"
     val w = new XlsxWriter(new java.io.FileOutputStream(f))
     w.addSheet("big"); w.writeRowTyped(Seq(IntVal(1)))
     w.addSheet("big_2", continuation = true); w.writeRowTyped(Seq(IntVal(2)))
@@ -311,7 +334,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("DSv2 sheet-name selection on a multi-sheet workbook (FIXTURES B3)") {
     import graft.xlsx._
     import CellValue._
-    val dir = Files.createTempDirectory("ms").toString
+    val dir = tempDir("ms")
     val f = s"$dir/book.xlsx"
     val w = new XlsxWriter(new java.io.FileOutputStream(f))
     w.addSheet("Sales")
@@ -349,7 +372,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the same integration shape as s3a:// / gs:// without network.
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockfs.impl", classOf[MockFs].getName)
-    val dir = Files.createTempDirectory("mockfs").toString + "/d"
+    val dir = tempDir("mockfs") + "/d"
     spark.range(100).selectExpr("id", "concat('v', id) AS s").repartition(2)
       .write.mode("overwrite").format("xlsx").option("header", "true")
       .save(s"mockfs:$dir")
@@ -362,7 +385,7 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("remote-scheme split planning: row-range tasks through ZipRandom ranged reads") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.mockfs.impl", classOf[MockFs].getName)
-    val dir = Files.createTempDirectory("mockfs-split").toString + "/d"
+    val dir = tempDir("mockfs-split") + "/d"
     spark.range(20000).selectExpr("id", "concat('name-', id) AS s").coalesce(1)
       .write.mode("overwrite").format("xlsx").option("header", "true")
       .save(s"mockfs:$dir")
@@ -393,5 +416,129 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lines(0) === "id,s")
     assert(lines.contains("2,\"with,comma\""))
     assert(lines.contains("3,\"with \"\"quote\"\"\""))
+  }
+
+  /** Every exception message down the cause chain. */
+  private def msgs(t: Throwable): String = if (t == null) "" else t.getMessage + " " + msgs(t.getCause)
+
+  test("complex-typed cells: the sink and the in-memory workbook write what CAST(... AS STRING) gives") {
+    val df = spark.sql("""SELECT array(1, 2) AS a, map('k', 3) AS m,
+      named_struct('x', 1, 'y', 'z') AS s, array(TIMESTAMP'2024-01-02 12:00:00') AS t""")
+    val cast = df.selectExpr(df.columns.map(c => s"CAST($c AS STRING)"): _*)
+      .collect().map(_.toSeq).toSeq
+    val dir = tempDir("xcx")
+    df.coalesce(1).write.mode("overwrite").format("xlsx").option("header", "true").save(s"$dir/sink")
+    val sink = spark.read.format("xlsx").option("header", "true")
+      .schema("a STRING, m STRING, s STRING, t STRING").load(s"$dir/sink")
+      .collect().map(_.toSeq).toSeq
+    assert(sink === cast)
+    val inMemory = XlsxReader.forBytes(XlsxInMemory.workbookBytes(df)).rows("Sheet1")
+      .drop(1).map(_.map(_.asString)).toSeq
+    assert(inMemory === cast)
+  }
+
+  test("reading a field no cell maps to fails at planning, naming the field and its type") {
+    val dir = tempDir("xcr")
+    spark.range(2).selectExpr("id", "CAST(id AS STRING) AS a").coalesce(1)
+      .write.mode("overwrite").format("xlsx").option("header", "true").save(s"$dir/t")
+    val df = spark.read.format("xlsx").option("header", "true")
+      .schema("id LONG, a ARRAY<INT>").load(s"$dir/t")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[Exception](df.collect())
+      org.apache.spark.TestListenerBus.drain(sc)
+      assert(msgs(e).contains("`a`") && msgs(e).contains("ARRAY<INT>"), msgs(e))
+      assert(jobs.get === 0, "the read must fail before any job runs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one timestamp rule: every path agrees on serial 45293.5 and 12:00 in a New York JVM") {
+    import graft.xlsx.CellValue.DateTime
+    val saved = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/New_York"))
+    try {
+      graft.functions.GraftFunctions.register(spark)
+      val noon = java.time.Instant.parse("2024-01-02T12:00:00Z")
+      val noonNtz = java.time.LocalDateTime.parse("2024-01-02T12:00:00")
+      val df = spark.sql(
+        "SELECT TIMESTAMP'2024-01-02 12:00:00' AS ts, TIMESTAMP_NTZ'2024-01-02 12:00:00' AS ntz")
+      val dir = tempDir("xtz")
+      // the sink writes the serial; the batch read gives 12:00 back
+      df.coalesce(1).write.mode("overwrite").format("xlsx").option("header", "true").save(s"$dir/sink")
+      val part = new java.io.File(s"$dir/sink").listFiles().filter(_.getName.endsWith(".xlsx")).head
+      assert(XlsxReader.forFile(part.getPath).rows("Sheet1").toVector(1) ===
+        Vector(DateTime(45293.5), DateTime(45293.5)))
+      val batch = spark.read.format("xlsx").option("header", "true")
+        .schema("ts TIMESTAMP, ntz TIMESTAMP_NTZ").load(s"$dir/sink").collect()
+      assert(batch.map(r => (r.getTimestamp(0).toInstant, r.getAs[java.time.LocalDateTime](1))).toSeq ===
+        Seq((noon, noonNtz)))
+      // the streaming read, TIMESTAMP and TIMESTAMP_NTZ fields
+      new java.io.File(s"$dir/landing").mkdirs()
+      Files.copy(part.toPath, java.nio.file.Paths.get(s"$dir/landing/a.xlsx"))
+      val schema = org.apache.spark.sql.types.StructType.fromDDL("ts TIMESTAMP, ntz TIMESTAMP_NTZ")
+      val q = graft.streaming.StreamingXlsx.readWorkbooks(spark, s"$dir/landing", schema)
+        .writeStream.format("memory").queryName("tzstream").outputMode("append").start()
+      val streamed = try { q.processAllAvailable(); spark.table("tzstream").collect() } finally q.stop()
+      assert(streamed.map(r => (r.getTimestamp(0).toInstant, r.getAs[java.time.LocalDateTime](1))).toSeq ===
+        Seq((noon, noonNtz)))
+      // the in-memory workbook writes the sink's serials
+      assert(XlsxReader.forBytes(XlsxInMemory.workbookBytes(df)).rows("Sheet1").toVector(1) ===
+        Vector(DateTime(45293.5), DateTime(45293.5)))
+      // the SQL functions use the same rule
+      val f = spark.sql("""SELECT graft_excel_ts_encode(TIMESTAMP'2024-01-02 12:00:00'),
+                                  graft_excel_serial_to_ts(45293.5)""").collect()(0)
+      assert(f.getDouble(0) === 45293.5)
+      assert(f.getTimestamp(1).toInstant === noon)
+      // csvBytes renders the values as df.write.csv does
+      df.coalesce(1).write.csv(s"$dir/csv")
+      val written = new java.io.File(s"$dir/csv").listFiles().filter(_.getName.startsWith("part-"))
+        .flatMap(p => scala.io.Source.fromFile(p).getLines().toSeq).toSeq
+      assert(new String(XlsxInMemory.csvBytes(df, header = false), "UTF-8").split("\n").toSeq === written)
+    } finally java.util.TimeZone.setDefault(saved)
+  }
+
+  test("an unstamped graft workbook reads the same chain before and after XlsxAppend") {
+    import graft.xlsx._
+    import CellValue._
+    val dir = tempDir("xlegacy")
+    val stamped = s"$dir/stamped.xlsx"
+    val w = new XlsxWriter(new java.io.FileOutputStream(stamped))
+    Seq("Data" -> 1L, "Data_2" -> 2L, "Other" -> 3L).foreach { case (name, v) =>
+      w.addSheet(name); w.writeRow(Seq("id")); w.writeRowTyped(Seq(IntVal(v)))
+    }
+    w.close()
+    // the same workbook without docProps/custom.xml: a graft file from
+    // before the rollover stamp existed
+    val f = s"$dir/legacy.xlsx"
+    val in = new java.util.zip.ZipInputStream(new java.io.FileInputStream(stamped))
+    val out = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(f))
+    try {
+      var e = in.getNextEntry
+      while (e != null) {
+        if (e.getName != "docProps/custom.xml") {
+          out.putNextEntry(new java.util.zip.ZipEntry(e.getName))
+          in.transferTo(out)
+          out.closeEntry()
+        }
+        e = in.getNextEntry
+      }
+    } finally { in.close(); out.close() }
+    val r = XlsxReader.forFile(f)
+    assert(r.application === Some("graft") && r.rolloverContinuations === None)
+
+    def defaultRead(): Seq[Long] = spark.read.format("xlsx").option("header", "true").load(f)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(defaultRead() === Seq(1L, 2L))
+    XlsxAppend.appendRows(f, Seq(Seq(IntVal(9L))))
+    assert(defaultRead() === Seq(1L, 2L, 9L))
+    assert(XlsxReader.forFile(f).rolloverContinuations === Some(Set(1)))
   }
 }

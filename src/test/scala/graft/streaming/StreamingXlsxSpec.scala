@@ -1,8 +1,8 @@
 package graft.streaming
 
 import java.io.FileOutputStream
-import java.nio.file.Files
 
+import graft.sources.TempDirs
 import graft.xlsx.{CellStyle, CellValue, ExcelDate, XlsxWriter}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * into a landing directory mid-stream appear EXACTLY ONCE in the windowed
   * output — the Spark-idiomatic form of the reference's S3-triggered
   * Excel pipeline. */
-class StreamingXlsxSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingXlsxSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -46,7 +46,7 @@ class StreamingXlsxSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("workbooks dropped mid-stream appear exactly once in the windowed output") {
-    val base = Files.createTempDirectory("sxlsx").toString
+    val base = tempDir("sxlsx")
     val in = s"$base/landing"
     new java.io.File(in).mkdirs()
 
@@ -91,7 +91,7 @@ class StreamingXlsxSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("typed schema read: dates, numerics and rollover chains stream through") {
-    val base = Files.createTempDirectory("sxlsx2").toString
+    val base = tempDir("sxlsx2")
     val in = s"$base/landing"
     new java.io.File(in).mkdirs()
     // a workbook with a rollover chain (maxRowsPerSheet via the DSv2 would

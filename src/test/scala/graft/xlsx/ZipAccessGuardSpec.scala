@@ -17,7 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *    planning settings plans on a session of its own).
   *  - One tombstone rule: probes apply the ledger through
   *    `IndexMaintenance.dropTombstoned`, so no other operator reads it
-  *    with `readDeletes`. */
+  *    with `readDeletes`.
+  *  - One timestamp rule: a timestamp's serial is its UTC wall clock
+  *    (`ExcelDate.fromEpochMicros` / `toEpochMicros`), so no main source
+  *    converts through the JVM's default zone with `Timestamp.valueOf` or
+  *    `.toLocalDateTime`. */
 class ZipAccessGuardSpec extends AnyFunSuite {
 
   private val main = Paths.get("src", "main", "scala")
@@ -67,5 +71,9 @@ class ZipAccessGuardSpec extends AnyFunSuite {
     val found = hits(main.resolve("graft/operators"), """\breadDeletes\(""")
     assert(found.exists(_.startsWith(own)), "readDeletes moved out of IndexMaintenance.scala")
     assert(found.filterNot(_.startsWith(own)) === Nil)
+  }
+
+  test("no JVM-zone timestamp conversion anywhere in the main sources") {
+    assert(hits(main.resolve("graft"), """\bTimestamp\.valueOf\b|\.toLocalDateTime\b""") === Nil)
   }
 }
