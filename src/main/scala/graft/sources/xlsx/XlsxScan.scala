@@ -383,8 +383,9 @@ object XlsxPartitionReader {
     * mismatch → null. The only cell → Spark mapping: the batch scan's
     * reader and `graft.streaming.StreamingXlsx.readWorkbooks` both convert
     * through it. A field of a type no cell maps to (array, map, struct, …)
-    * throws, naming the field; callers build their converters on the
-    * driver, so such a read fails before any task runs. */
+    * throws, naming the field; `XlsxTable.newScanBuilder` and
+    * `readWorkbooks` build every field's converter on the driver first, so
+    * such a read fails before any task runs. */
   def converter(field: StructField): CellValue => Any = field.dataType match {
     case StringType => {
       case CellValue.Empty       => null
