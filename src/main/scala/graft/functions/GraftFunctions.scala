@@ -38,7 +38,7 @@ object GraftFunctions {
 
       // F1 variant: serial -> TIMESTAMP. The serial is read as a UTC wall
       // clock, the xlsx sink's rule (ExcelDate.toEpochMicros), whatever the
-      // JVM or session zone.
+      // JVM or session zone; a non-UTC session shows it moved by its offset.
       udf.register("graft_excel_serial_to_ts",
         (serial: java.lang.Double) =>
           if (serial == null) null

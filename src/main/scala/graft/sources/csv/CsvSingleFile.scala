@@ -1,15 +1,7 @@
 package graft.sources.csv
 
-import java.io.ByteArrayOutputStream
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.compress.{BZip2Codec, CompressionCodec, GzipCodec}
-import org.apache.hadoop.util.ReflectionUtils
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.csv.CSVOptions
-import org.apache.spark.sql.functions.{col, struct, to_csv}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Parallel write of ONE `.csv` / `.csv.gz` / `.csv.zst` / `.csv.bz2` file.
@@ -34,9 +26,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *  - bzip2: multi-stream files are the basis of Hadoop's splittable bz2.
   * ZIP and block codecs (snappy/lz4) have central state and are rejected.
   *
-  * The header (when asked for) is encoded on the driver by the SAME CSV
-  * generator and options as the rows (`to_csv` over a local one-row frame,
-  * which runs no Spark job), compressed with the parts' codec, and placed
+  * The header (when asked for) is encoded by writing the column names as a
+  * one-row all-string DataFrame through the SAME writer and options, so
+  * header quoting/separator behavior is exactly the engine's, then placed
   * first in the stitch. Row order = partition order, matching what a
   * directory read would reassemble from part file names.
   *
@@ -48,25 +40,11 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object CsvSingleFile {
 
-  /** Codecs whose outputs concatenate into a valid single stream (None:
-    * uncompressed). */
-  private val Concatenable: Map[String, Option[Class[_ <: CompressionCodec]]] = Map(
-    "none" -> None, "" -> None, "uncompressed" -> None,
-    "gzip" -> Some(classOf[GzipCodec]), "bzip2" -> Some(classOf[BZip2Codec]),
-    "zstd" -> Some(classOf[ZstdCodec]), ZstdCodec.Name.toLowerCase -> Some(classOf[ZstdCodec]))
-
-  /** `names` as one CSV record with its line separator, in the options'
-    * charset: encoded on the driver by Spark's CSV generator (`to_csv`)
-    * with `options`, so quoting and separators are exactly what the CSV
-    * writer gives a row. The frame is local, so no Spark job runs. */
-  private[sources] def headerLine(
-      spark: SparkSession, names: Seq[String], options: Map[String, String]): Array[Byte] = {
-    val schema = StructType(names.map(StructField(_, StringType, nullable = false)))
-    val line = spark.createDataFrame(java.util.List.of(Row.fromSeq(names)), schema)
-      .select(to_csv(struct(col("*")), options.asJava)).collect()(0).getString(0)
-    val csv = new CSVOptions(options, false, spark.sessionState.conf.sessionLocalTimeZone)
-    (line + csv.asWriterSettings.getFormat.getLineSeparatorString).getBytes(csv.charset)
-  }
+  /** Codecs whose outputs concatenate into a valid single stream. */
+  private val Concatenable: Map[String, String] = Map(
+    "none" -> "none", "" -> "none", "uncompressed" -> "none",
+    "gzip" -> "gzip", "bzip2" -> "bzip2",
+    "zstd" -> "zstd", ZstdCodec.Name.toLowerCase -> "zstd")
 
   /** Write `df` as exactly one CSV file at `path`.
     *
@@ -82,26 +60,17 @@ object CsvSingleFile {
     require(overwrite || !fs.exists(target), s"target exists: $path")
 
     val compRaw = options.getOrElse("compression", "none")
-    val codec = Concatenable.getOrElse(compRaw.toLowerCase,
+    val comp = Concatenable.getOrElse(compRaw.toLowerCase,
       sys.error(s"compression '$compRaw' is not stitchable into one file " +
         "(members don't concatenate); use none/gzip/bzip2/zstd"))
-    if (codec.contains(classOf[ZstdCodec])) ZstdCodec.register(spark)
-    val compOpt = Map("compression" -> codec.fold("none")(_.getName))
+    if (comp == "zstd") ZstdCodec.register(spark)
+    val compOpt = comp match {
+      case "none" => Map("compression" -> "none")
+      case "zstd" => Map("compression" -> ZstdCodec.Name)
+      case c      => Map("compression" -> c)
+    }
     val passThrough = options - "header" - "compression" - "path"
-    // the header as the stitch's first member, compressed like the parts
-    val header: Array[Byte] =
-      if (!options.get("header").exists(_.toBoolean)) Array.emptyByteArray
-      else {
-        val line = headerLine(spark, df.columns.toSeq, passThrough)
-        codec.fold(line) { c =>
-          val bos = new ByteArrayOutputStream()
-          val z = ReflectionUtils.newInstance(c, spark.sparkContext.hadoopConfiguration)
-            .createOutputStream(bos)
-          z.write(line)
-          z.close()
-          bos.toByteArray
-        }
-      }
+    val wantHeader = options.get("header").exists(_.toBoolean)
 
     val tmp = new Path(target.getParent,
       s".${target.getName}.__graft_stitch_${java.util.UUID.randomUUID().toString.take(8)}__")
@@ -111,13 +80,25 @@ object CsvSingleFile {
       df.write.mode("overwrite").options(passThrough).options(compOpt)
         .option("header", "false").csv(new Path(tmp, "data").toString)
 
-      // 2. Commit: the header, then a raw byte concat of the parts in part
-      //    order (no decode, no recompress).
-      val data = new Path(tmp, "data")
-      val ordered =
-        if (!fs.exists(data)) Seq.empty
-        else fs.listStatus(data).map(_.getPath)
+      // 2. Header as a one-row frame through the same writer/options, so
+      //    its quoting is exactly what the engine would have emitted.
+      if (wantHeader) {
+        val names = df.schema.fieldNames
+        val hdr = spark.createDataFrame(
+          java.util.Collections.singletonList(Row.fromSeq(names.toSeq)),
+          StructType(names.map(StructField(_, StringType, nullable = false))))
+        hdr.coalesce(1).write.mode("overwrite").options(passThrough).options(compOpt)
+          .option("header", "false").csv(new Path(tmp, "header").toString)
+      }
+
+      // 3. Commit: raw byte concat in part order (no decode, no recompress).
+      def parts(sub: String): Seq[Path] = {
+        val d = new Path(tmp, sub)
+        if (!fs.exists(d)) Seq.empty
+        else fs.listStatus(d).map(_.getPath)
           .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+      }
+      val ordered = parts("header") ++ parts("data")
       // stitch into the tmp dir first, rename into place last: a driver
       // failure mid-copy leaves no partial target (rename is atomic on
       // HDFS/local; on object stores it degrades to copy — same as any
@@ -125,7 +106,6 @@ object CsvSingleFile {
       val staged = new Path(tmp, "stitched")
       val out = fs.create(staged, true)
       try {
-        out.write(header)
         val buf = new Array[Byte](1 << 20)
         ordered.foreach { p =>
           val in = fs.open(p)

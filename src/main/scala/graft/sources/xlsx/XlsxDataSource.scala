@@ -235,8 +235,6 @@ final class XlsxTable(tableSchema: StructType, opts: XlsxOptions, tablePaths: Se
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // a field no cell maps to fails here, at planning, not in a task
-    tableSchema.fields.foreach(XlsxPartitionReader.converter)
     val conf = XlsxTable.hadoopConf()
     new XlsxScanBuilder(tableSchema, XlsxOptions(options), tablePaths, new SerializableConfiguration(conf))
   }

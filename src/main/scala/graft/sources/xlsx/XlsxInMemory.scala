@@ -1,14 +1,15 @@
 package graft.sources.xlsx
 
 import java.io.ByteArrayOutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
 
-import graft.sources.csv.CsvSingleFile
 import graft.xlsx.XlsxWriter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions.{col, struct, to_csv}
+import org.apache.spark.sql.types._
 
 /** Whole-workbook-as-bytes builder — the reference's HTTP writer pattern
   * (ref: src/cloud/http_writer.rs:44-241 xlsx, src/http_csv_writer.rs:177-342
@@ -47,17 +48,35 @@ object XlsxInMemory {
     bos.toByteArray
   }
 
-  /** CSV counterpart (ref: src/http_csv_writer.rs): the lines
-    * `df.write.csv` would write, with the reference encoder's RFC-4180
-    * quoting — a quote inside a field is doubled, and an empty string is
-    * an empty field, like a null (ref: src/csv/encoder.rs:57-122). */
+  /** CSV counterpart (ref: src/http_csv_writer.rs): Spark's CSV encoding
+    * of each row, the one `df.write.csv` uses, with the reference
+    * encoder's RFC-4180 quoting — a quote inside a field is doubled, an
+    * empty string is an empty field, like a null, and leading and trailing
+    * whitespace is kept (ref: src/csv/encoder.rs:57-122). */
   def csvBytes(df: DataFrame, sep: Char = ',', header: Boolean = true): Array[Byte] = {
-    val options =
-      Map("sep" -> sep.toString, "escape" -> "\"", "emptyValue" -> "", "lineSep" -> "\n")
+    val options = Map("sep" -> sep.toString, "escape" -> "\"", "emptyValue" -> "",
+      "ignoreLeadingWhiteSpace" -> "false", "ignoreTrailingWhiteSpace" -> "false").asJava
     val out = new ByteArrayOutputStream(64 * 1024)
-    if (header) out.write(CsvSingleFile.headerLine(df.sparkSession, df.columns.toSeq, options))
-    val it = df.select(to_csv(struct(col("*")), options.asJava)).toLocalIterator()
-    while (it.hasNext) out.write((it.next().getString(0) + "\n").getBytes("UTF-8"))
+    def writeLines(frame: DataFrame): Unit = {
+      // array, map, struct and variant columns go as CAST(col AS STRING),
+      // the string the workbook builder writes for them (to_csv's own
+      // rendering differs: a nested timestamp comes out in ISO form)
+      val cells = frame.schema.fields.indices.map { i =>
+        frame.schema(i).dataType match {
+          case _: ArrayType | _: MapType | _: StructType | _: VariantType => col(s"_$i").cast(StringType)
+          case _ => col(s"_$i")
+        }
+      }
+      val it = frame.toDF(cells.indices.map(i => s"_$i"): _*)
+        .select(to_csv(struct(cells: _*), options)).toLocalIterator()
+      while (it.hasNext) out.write((it.next().getString(0) + "\n").getBytes(UTF_8))
+    }
+    if (header) {
+      val names = df.columns.toSeq
+      writeLines(df.sparkSession.createDataFrame(java.util.List.of(Row.fromSeq(names)),
+        StructType(names.map(StructField(_, StringType)))))
+    }
+    writeLines(df)
     out.toByteArray
   }
 }

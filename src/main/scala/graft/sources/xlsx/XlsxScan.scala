@@ -50,7 +50,11 @@ final class XlsxScanBuilder(
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  override def build(): Scan = new XlsxScan(fullSchema, required, opts, paths, conf, pushed)
+  override def build(): Scan = {
+    // a read field no cell maps to fails here, at planning, not in a task
+    required.fields.foreach(XlsxPartitionReader.converter)
+    new XlsxScan(fullSchema, required, opts, paths, conf, pushed)
+  }
 }
 
 final class XlsxScan(
@@ -383,11 +387,11 @@ object XlsxPartitionReader {
     * mismatch → null. The only cell → Spark mapping: the batch scan's
     * reader and `graft.streaming.StreamingXlsx.readWorkbooks` both convert
     * through it. A field of a type no cell maps to (array, map, struct, …)
-    * throws, naming the field; `XlsxTable.newScanBuilder` and
-    * `readWorkbooks` build every field's converter on the driver first, so
-    * such a read fails before any task runs. */
+    * throws, naming the field; `XlsxScanBuilder.build` (for the pruned
+    * read schema) and `readWorkbooks` build every read field's converter
+    * on the driver first, so such a read fails before any task runs. */
   def converter(field: StructField): CellValue => Any = field.dataType match {
-    case StringType => {
+    case _: StringType => { // collated strings too
       case CellValue.Empty       => null
       case CellValue.DateTime(s) => UTF8String.fromString(ExcelDate.format(s).getOrElse(CellValue.formatDouble(s)))
       case c                     => UTF8String.fromString(c.asString)

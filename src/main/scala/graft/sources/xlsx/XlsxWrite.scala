@@ -381,7 +381,7 @@ object XlsxDataWriter {
     * types (array, map, struct, …) become the string `CAST(col AS STRING)`
     * gives, nested timestamps rendered in `zoneId`, the session zone. */
   def getter(dt: DataType, i: Int, zoneId: String): InternalRow => (CellValue, Int) = dt match {
-    case StringType => r =>
+    case _: StringType => r =>
       if (r.isNullAt(i)) EmptyCell else (CellValue.Str(r.getUTF8String(i).toString), 0)
     case LongType    => r => if (r.isNullAt(i)) EmptyCell else (CellValue.IntVal(r.getLong(i)), 0)
     case IntegerType => r => if (r.isNullAt(i)) EmptyCell else (CellValue.IntVal(r.getInt(i).toLong), 0)

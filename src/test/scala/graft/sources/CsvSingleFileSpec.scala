@@ -213,29 +213,4 @@ class CsvSingleFileSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs
         Files.readAllLines(Paths.get(f))).asScala).toSeq
     assert(single == partsOrdered)
   }
-
-  test("the header is encoded on the driver: a header adds no Spark job") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def jobsOf(options: Map[String, String]): Int = {
-      org.apache.spark.TestListenerBus.drain(sc)
-      val j0 = jobs.get
-      CsvSingleFile.write(sample(100).repartition(2), tmp() + "/out.csv", options)
-      org.apache.spark.TestListenerBus.drain(sc)
-      jobs.get - j0
-    }
-    sc.addSparkListener(listener)
-    try {
-      for (comp <- Seq("none", "gzip")) {
-        val without = jobsOf(Map("header" -> "false", "compression" -> comp))
-        assert(without > 0)
-        assert(jobsOf(Map("header" -> "true", "compression" -> comp)) === without, comp)
-      }
-    } finally sc.removeSparkListener(listener)
-  }
 }

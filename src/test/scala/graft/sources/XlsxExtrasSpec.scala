@@ -418,6 +418,11 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     assert(lines.contains("3,\"with \"\"quote\"\"\""))
   }
 
+  test("in-memory csv bytes keep leading and trailing whitespace, in values and column names") {
+    val df = spark.sql("SELECT ' a ' AS ` id `, 'b  ' AS s")
+    assert(new String(XlsxInMemory.csvBytes(df), "UTF-8") === " id ,s\n a ,b  \n")
+  }
+
   /** Every exception message down the cause chain. */
   private def msgs(t: Throwable): String = if (t == null) "" else t.getMessage + " " + msgs(t.getCause)
 
@@ -435,6 +440,9 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
     val inMemory = XlsxReader.forBytes(XlsxInMemory.workbookBytes(df)).rows("Sheet1")
       .drop(1).map(_.map(_.asString)).toSeq
     assert(inMemory === cast)
+    // csvBytes writes the same strings, quoted where they hold the separator
+    val csv = new String(XlsxInMemory.csvBytes(df, header = false), "UTF-8")
+    assert(csv === "\"[1, 2]\",{k -> 3},\"{1, z}\",[2024-01-02 12:00:00]\n")
   }
 
   test("reading a field no cell maps to fails at planning, naming the field and its type") {
@@ -458,6 +466,12 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
       assert(msgs(e).contains("`a`") && msgs(e).contains("ARRAY<INT>"), msgs(e))
       assert(jobs.get === 0, "the read must fail before any job runs")
     } finally sc.removeSparkListener(listener)
+    // the check covers the pruned read schema only: a complex field that is
+    // not read does not fail the read
+    assert(df.select("id").collect().map(_.getLong(0)).toSeq === Seq(0L, 1L))
+    val collated = spark.read.format("xlsx").option("header", "true")
+      .schema("id LONG, a STRING COLLATE UTF8_LCASE").load(s"$dir/t")
+    assert(collated.collect().map(_.getString(1)).toSeq === Seq("0", "1"))
   }
 
   test("one timestamp rule: every path agrees on serial 45293.5 and 12:00 in a New York JVM") {
@@ -503,6 +517,27 @@ class XlsxExtrasSpec extends AnyFunSuite with BeforeAndAfterAll with TempDirs {
         .flatMap(p => scala.io.Source.fromFile(p).getLines().toSeq).toSeq
       assert(new String(XlsxInMemory.csvBytes(df, header = false), "UTF-8").split("\n").toSeq === written)
     } finally java.util.TimeZone.setDefault(saved)
+  }
+
+  test("in a New York session the timestamp functions and the sink move by the session offset alike") {
+    import graft.xlsx.CellValue.DateTime
+    val key = "spark.sql.session.timeZone"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try {
+      graft.functions.GraftFunctions.register(spark)
+      // 12:00 in New York is 17:00 UTC, and the serial is the UTC wall clock
+      val serial = 45293 + 17 / 24.0
+      val df = spark.sql("SELECT TIMESTAMP'2024-01-02 12:00:00' AS ts")
+      val dir = tempDir("xsz")
+      df.coalesce(1).write.mode("overwrite").format("xlsx").option("header", "true").save(s"$dir/sink")
+      val part = new java.io.File(s"$dir/sink").listFiles().filter(_.getName.endsWith(".xlsx")).head
+      assert(XlsxReader.forFile(part.getPath).rows("Sheet1").toVector(1) === Vector(DateTime(serial)))
+      val f = spark.sql("""SELECT graft_excel_ts_encode(TIMESTAMP'2024-01-02 12:00:00'),
+        CAST(graft_excel_serial_to_ts(45293.5) AS STRING)""").collect()(0)
+      assert(f.getDouble(0) === serial)
+      assert(f.getString(1) === "2024-01-02 07:00:00")
+    } finally spark.conf.set(key, saved)
   }
 
   test("an unstamped graft workbook reads the same chain before and after XlsxAppend") {
